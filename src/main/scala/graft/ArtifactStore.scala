@@ -1,20 +1,20 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Disk-backed, corpus-fingerprinted artifact store — the cross-JVM layer
-  * under the in-memory artifact caches (TextQueries.cachedTextFrame,
-  * VectorQueries.cachedIndexFrame/cachedIndexTable, the BPE merge table).
-  *
-  * The "build once per corpus snapshot" families (dedup pair graph +
-  * component labels, corpus bigram LM, lexical index, NB-labeled corpus,
-  * BPE merges, IVF centroids + inverted file, PQ codebook + code table,
-  * SRP band tables) previously lived only in SparkContext-keyed TrieMaps
-  * over localCheckpoint frames: a fresh JVM rebuilt everything. At 100 TB
-  * these artifacts ARE persisted tables next to the corpus (the index's
-  * data files, the dedup pipeline's staged pair graph); this store is
-  * that layer — each artifact written once as parquet under a path keyed
+/** Disk-backed, corpus-fingerprinted artifact store — the ONLY
+  * materialization path of the "build once per corpus snapshot" families
+  * (dedup pair graph + component labels, corpus bigram LM, lexical index,
+  * NB-labeled corpus, BPE merges, IVF centroids + inverted file, PQ
+  * codebook + code table, SRP band tables). The one in-memory (L1) cache
+  * over it lives in [[Artifacts]] (`Artifacts.frame` for partitioned
+  * tables, `Artifacts.rows`/`table` for driver-row index tables); this
+  * object keeps no in-memory state. At 100 TB these artifacts ARE
+  * persisted tables next to the corpus (the index's data files, the
+  * dedup pipeline's staged pair graph); this store is that layer — each
+  * artifact written once as parquet under a path keyed
   * by (family tag, schema version, corpus fingerprint), read by any later
   * session whose corpus fingerprint matches. Every build is deterministic
   * given the corpus (md5-seeded hashing throughout), so a store hit is
@@ -37,12 +37,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Root resolution, in order: the `spark.graft.artifacts.path` session
   * conf, the `SPARK_GRAFT_ARTIFACTS` env var, then
-  * `<java.io.tmpdir>/graft-artifacts`. Set the conf to `off` to disable
-  * the disk layer entirely (the in-memory caches still apply). Bench
-  * points it at a fresh temp dir per run so its `build` map always
-  * prices COLD builds, comparably across rounds.
+  * `<java.io.tmpdir>/graft-artifacts`. The store is always on: an empty
+  * value or `off` is a misconfiguration and fails loudly. Bench points
+  * it at a fresh temp dir per run so its `build` map always prices COLD
+  * builds, comparably across rounds. Store events (disk hit, built,
+  * unreadable entry removed) go to this object's log4j logger.
   */
 object ArtifactStore {
+  private val log = LogManager.getLogger(getClass)
 
   /** Manual escape hatch for semantic bumps that [[codeFingerprint]]
     * cannot see (a changed option DEFAULT read from outside the compiled
@@ -96,11 +98,20 @@ object ArtifactStore {
   private[graft] val WaitBuildMs = 20 * 60 * 1000L
   private val PollMs = 100L
 
-  def rootOf(s: SparkSession): Option[Path] = {
+  /** The session's store root. Always defined (the store cannot be
+    * disabled); the Option shape is kept for existing callers. */
+  def rootOf(s: SparkSession): Option[Path] = Some(root(s))
+
+  private def root(s: SparkSession): Path = {
     val conf = s.conf.getOption("spark.graft.artifacts.path")
       .orElse(sys.env.get("SPARK_GRAFT_ARTIFACTS"))
       .getOrElse(sys.props("java.io.tmpdir") + "/graft-artifacts")
-    if (conf.isEmpty || conf == "off") None else Some(Paths.get(conf))
+    if (conf.trim.isEmpty || conf == "off")
+      throw new IllegalArgumentException(
+        s"artifact store root '$conf' (spark.graft.artifacts.path / " +
+          "SPARK_GRAFT_ARTIFACTS) is not a directory: the store cannot be " +
+          "disabled — set a path, or unset both for <tmpdir>/graft-artifacts")
+    Paths.get(conf)
   }
 
   private def md5(s: String): String =
@@ -118,9 +129,6 @@ object ArtifactStore {
       Files.readString(dir.resolve("_MANIFEST")) == versioned(fingerprint)
     catch { case _: java.io.IOException => false }
 
-  /** The published artifact for (tag, fingerprint) as a parquet scan, if
-    * the disk layer is on and the entry exists.
-    */
   /** Mark an entry as used: gc ages by LAST USE (manifest mtime), not
     * build time — a hot entry of an unchanged corpus must survive any
     * maxAgeMs as long as sessions keep reading it.
@@ -143,110 +151,103 @@ object ArtifactStore {
       Some(df)
     } catch {
       case e: Exception =>
-        System.err.println(
-          s"[artifacts] unreadable entry for $tag (${e.getClass.getSimpleName}) — removing")
+        log.warn(s"unreadable entry for $tag (${e.getClass.getSimpleName}) — removing")
         deleteRecursively(dir)
         None
     }
 
-  /** Liveness check for the in-memory caches above this store
-    * (TextQueries.textFrames, VectorQueries.annFrames): true iff the
-    * published entry still exists on disk under THIS session's store
-    * root. Touches the manifest when it does — an L1 cache hit is a USE,
-    * and [[gc]] ages by last use, so a frame a long-lived session keeps
-    * reading must keep its backing entry alive. When the entry is gone
-    * (gc'd, or the session's store root changed), the caller drops its
-    * cached frame and re-reads through — instead of serving a parquet
-    * scan whose files vanished (FileNotFoundException with no self-heal,
-    * since nothing would ever re-check the L1 key). Disk layer off →
-    * trivially true: the cached frame has no disk backing to lose.
+  /** Liveness check for the L1 frame cache above this store
+    * (`Artifacts.frame`): true iff the published entry still exists on
+    * disk under THIS session's store root. Touches the manifest when it
+    * does — an L1 cache hit is a USE, and [[gc]] ages by last use, so a
+    * frame a long-lived session keeps reading must keep its backing entry
+    * alive. When the entry is gone (gc'd, or the session's store root
+    * changed), the caller drops its cached frame and re-reads through —
+    * instead of serving a parquet scan whose files vanished
+    * (FileNotFoundException with no self-heal, since nothing would ever
+    * re-check the L1 key).
     */
   private[graft] def stillLive(s: SparkSession, tag: String,
-      fingerprint: String): Boolean = rootOf(s) match {
-    case None => true
-    case Some(root) =>
-      val dir = entryDir(root, tag, fingerprint)
-      val ok = manifestOk(dir, fingerprint)
-      if (ok) touch(dir)
-      ok
+      fingerprint: String): Boolean = {
+    val dir = entryDir(root(s), tag, fingerprint)
+    val ok = manifestOk(dir, fingerprint)
+    if (ok) touch(dir)
+    ok
   }
 
+  /** The published artifact for (tag, fingerprint) as a parquet scan, if
+    * the entry exists. */
   def readIfPresent(s: SparkSession, tag: String, fingerprint: String)
-      : Option[DataFrame] = rootOf(s).flatMap { root =>
-    val dir = entryDir(root, tag, fingerprint)
+      : Option[DataFrame] = {
+    val dir = entryDir(root(s), tag, fingerprint)
     if (manifestOk(dir, fingerprint)) {
       val out = readData(s, dir, tag)
-      if (out.isDefined) System.err.println(s"[artifacts] disk hit: $tag")
+      if (out.isDefined) log.info(s"disk hit: $tag")
       out
     } else None
   }
 
   /** Read the artifact from disk, or elect a builder, run `build`,
-    * publish, and return a reader over the published copy. Falls back to
-    * the raw build frame only when the disk layer is disabled. The
-    * returned frame is otherwise always a plain parquet scan — column
-    * pruning and predicate pushdown apply to artifact readers exactly as
-    * to any staged table.
+    * publish, and return a reader over the published copy. The returned
+    * frame is always a plain parquet scan — column pruning and predicate
+    * pushdown apply to artifact readers exactly as to any staged table.
     */
   def readThrough(s: SparkSession, tag: String, fingerprint: String)
-      (build: => DataFrame): DataFrame = rootOf(s) match {
-    case None => build
-    case Some(root) =>
-      val dir = entryDir(root, tag, fingerprint)
-      val deadline = System.currentTimeMillis() + WaitBuildMs
-      var out: Option[DataFrame] = None
-      var built = false
-      while (out.isEmpty) {
-        if (manifestOk(dir, fingerprint)) {
-          out = readData(s, dir, tag) // None self-heals → loop rebuilds
-          if (out.isDefined && !built)
-            System.err.println(s"[artifacts] disk hit: $tag")
-        } else if (acquireLock(lockOf(dir))) {
-          try {
-            if (!manifestOk(dir, fingerprint)) { // winner of a steal re-checks
-              writeEntry(s, dir, fingerprint, build); built = true
-            }
-          } finally releaseLock(lockOf(dir))
-        } else if (System.currentTimeMillis() > deadline) {
-          // the elected builder is alive but slower than any sane build:
-          // build our own copy (publish stays first-writer-wins safe)
-          writeEntry(s, dir, fingerprint, build); built = true
-        } else Thread.sleep(PollMs)
-      }
-      out.get
+      (build: => DataFrame): DataFrame = {
+    val dir = entryDir(root(s), tag, fingerprint)
+    val deadline = System.currentTimeMillis() + WaitBuildMs
+    var out: Option[DataFrame] = None
+    var built = false
+    while (out.isEmpty) {
+      if (manifestOk(dir, fingerprint)) {
+        out = readData(s, dir, tag) // None self-heals → loop rebuilds
+        if (out.isDefined && !built) log.info(s"disk hit: $tag")
+      } else if (acquireLock(lockOf(dir))) {
+        try {
+          if (!manifestOk(dir, fingerprint)) { // winner of a steal re-checks
+            writeEntry(s, dir, tag, fingerprint, build); built = true
+          }
+        } finally releaseLock(lockOf(dir))
+      } else if (System.currentTimeMillis() > deadline) {
+        // the elected builder is alive but slower than any sane build:
+        // build our own copy (publish stays first-writer-wins safe)
+        writeEntry(s, dir, tag, fingerprint, build); built = true
+      } else Thread.sleep(PollMs)
+    }
+    out.get
   }
 
   /** Publish-if-absent without reading back — the write-through hook for
     * trainers that must always retrain in-session (q74 BPE: its bench
     * cost is the training cost) but whose deterministic product should
     * still land on disk once for every other session. No-op when the
-    * entry already exists (same corpus ⇒ bit-identical product) or the
-    * disk layer is off.
+    * entry already exists (same corpus ⇒ bit-identical product).
     */
   def put(s: SparkSession, tag: String, fingerprint: String)
-      (df: => DataFrame): Unit = rootOf(s).foreach { root =>
-    val dir = entryDir(root, tag, fingerprint)
+      (df: => DataFrame): Unit = {
+    val dir = entryDir(root(s), tag, fingerprint)
     if (!manifestOk(dir, fingerprint) && acquireLock(lockOf(dir)))
       try {
-        if (!manifestOk(dir, fingerprint)) writeEntry(s, dir, fingerprint, df)
+        if (!manifestOk(dir, fingerprint)) writeEntry(s, dir, tag, fingerprint, df)
       } finally releaseLock(lockOf(dir))
   }
 
-  private def writeEntry(s: SparkSession, dir: Path, fingerprint: String,
-      build: => DataFrame): Unit = {
+  private def writeEntry(s: SparkSession, dir: Path, tag: String,
+      fingerprint: String, build: => DataFrame): Unit = {
     val built = build
     val tmp = dir.getParent.resolve(
       ".tmp-" + java.util.UUID.randomUUID().toString)
     Files.createDirectories(tmp)
     built.write.mode("overwrite").parquet(tmp.resolve("data").toString)
     Files.writeString(tmp.resolve("_MANIFEST"), versioned(fingerprint))
-    // the artifact now lives on disk: release the build frame's
-    // checkpoint blocks (only THIS plan's — the cachedIndexTable
-    // LogicalRDD-id derivation)
+    // the artifact now lives on disk: release the checkpoint blocks of
+    // the builder's intermediates found in the build plan (only THIS
+    // plan's LogicalRDDs) — e.g. the pair graph's shingle/band tables
     built.queryExecution.logical.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.foreach(_.unpersist(blocking = false))
     publish(tmp, dir, fingerprint)
+    log.info(s"built: $tag")
   }
 
   private def lockOf(dir: Path): Path =

@@ -260,12 +260,11 @@ object Dev {
         }
       case Some("storegc") =>
         // ops maintenance: age out cold store entries (default 7 days)
-        graft.ArtifactStore.rootOf(spark).foreach { root =>
-          val hours = args.lift(1).map(_.toLong).getOrElse(7L * 24)
-          val gone = graft.ArtifactStore.gc(root, hours * 3600 * 1000)
-          println(s"[dev] store gc @ $root: removed ${gone.size} entries")
-          gone.foreach(p => println(s"[dev]   $p"))
-        }
+        val root = graft.ArtifactStore.rootOf(spark).get
+        val hours = args.lift(1).map(_.toLong).getOrElse(7L * 24)
+        val gone = graft.ArtifactStore.gc(root, hours * 3600 * 1000)
+        println(s"[dev] store gc @ $root: removed ${gone.size} entries")
+        gone.foreach(p => println(s"[dev]   $p"))
       case Some("oracle") =>
         // print one query's oracle SQL (for DuckDB-side iteration without
         // a full Verify sweep)

@@ -291,23 +291,7 @@ object TextQueries {
     merges.toSeq
   }
 
-  /** Trained-tokenizer artifact cache, fingerprinted by the corpus file
-    * (path, size, mtime) and step count: training is deterministic given
-    * the corpus, so q75's encode reuses the table q74 just trained (r5
-    * ran the identical 20-step loop twice per sweep) — the artifact-store
-    * pattern every tokenizer pipeline uses. q74 itself always retrains
-    * (it IS the training operator; its bench cost must stay the real
-    * training cost) and refreshes the cache for consumers.
-    */
-  private val bpeArtifacts =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Int, String, String, Long)]]
-
-  private def bpeCorpusFingerprint(s: SparkSession, dir: String,
-      steps: Int): String =
-    s"$steps:${Tables.parquetFingerprint(s, dir, "documents")}"
-
-  private def bpeTrain(s: SparkSession, dir: String, steps: Int)
-      : Seq[(Int, String, String, Long)] = {
+  private def bpeTrain(s: SparkSession, dir: String, steps: Int): DataFrame = {
     val initUdf = udf((w: String) => bpeInitialSymbols(w))
     // NOTE (r18): deriving this census from the lexdocs artifact was
     // A/B-measured on one host and read ~0.3-0.5 s SLOWER per retrain
@@ -319,46 +303,31 @@ object TextQueries {
       .select(explode(tokens(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .select(col("freq"), initUdf(col("w")).as("syms"))
-    val rows = bpeTrainFromVocab(s, vocab, steps)
-    bpeArtifacts.put(bpeCorpusFingerprint(s, dir, steps), rows)
-    // write-through (publish-if-absent): training is deterministic given
-    // the corpus, so the disk copy never needs refreshing — but q74
-    // itself must keep retraining in-session (it IS the training
-    // operator; its bench cost must stay the real training cost)
-    graft.ArtifactStore.put(s, s"bpe$steps",
-      Tables.parquetFingerprint(s, dir, "documents"))(
-      s.createDataFrame(rows).toDF("step", "left", "right", "pair_count"))
-    rows
+    s.createDataFrame(bpeTrainFromVocab(s, vocab, steps))
+      .toDF("step", "left", "right", "pair_count")
   }
 
-  /** Disk-store read of a previously trained merge table (any JVM), as
-    * the driver rows the consumers use. */
-  private def bpeFromStore(s: SparkSession, dir: String, steps: Int)
-      : Option[Seq[(Int, String, String, Long)]] =
-    graft.ArtifactStore.readIfPresent(s, s"bpe$steps",
-      Tables.parquetFingerprint(s, dir, "documents")).map { df =>
-      val rows = df.orderBy("step").collect()
-        .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
-        .toSeq
-      bpeArtifacts.put(bpeCorpusFingerprint(s, dir, steps), rows)
-      rows
-    }
-
-  private[graft] def bpeMergeTable(s: SparkSession, dir: String,
-      steps: Int): DataFrame =
-    s.createDataFrame(bpeTrain(s, dir, steps))
-      .toDF("step", "left", "right", "pair_count")
-
-  /** Merge pairs for encoding: in-memory artifact if the corpus
-    * fingerprint matches, else the disk store's copy (trained by any
-    * earlier session), else train (and cache + publish).
+  /** q74's merge table: ALWAYS retrained (it IS the training operator;
+    * its bench cost must stay the real training cost), then written
+    * through publish-if-absent — training is deterministic given the
+    * corpus, so the disk copy never needs refreshing, and q75 (any
+    * session) reads it instead of re-running the loop.
     */
+  private[graft] def bpeMergeTable(s: SparkSession, dir: String,
+      steps: Int): DataFrame = {
+    val merges = bpeTrain(s, dir, steps)
+    graft.ArtifactStore.put(s, s"bpe$steps", documentsFp(s, dir))(merges)
+    merges
+  }
+
+  /** Merge pairs for encoding, in step order: the trained-tokenizer
+    * artifact (driver rows, fingerprinted by the corpus and step count),
+    * trained and published on a store miss. */
   private[graft] def bpeMergesShared(s: SparkSession, dir: String,
       steps: Int): Seq[(String, String)] =
-    bpeArtifacts.get(bpeCorpusFingerprint(s, dir, steps))
-      .orElse(bpeFromStore(s, dir, steps))
-      .getOrElse(bpeTrain(s, dir, steps))
-      .map(m => (m._2, m._3))
+    graft.Artifacts.rows(s, s"bpe$steps", documentsFp(s, dir))(
+      bpeTrain(s, dir, steps))
+      ._1.sortBy(_.getInt(0)).map(r => (r.getString(1), r.getString(2)))
 
   /** Batch dedup-build saturation mode (r17 verdict task 1): cap for
     * the BATCH pair-graph build's band buckets, promoted from the
@@ -485,50 +454,18 @@ object TextQueries {
   // ---- dedup-graph artifact store (q29, q38, q52, q55, q61, q72) ---------
   //
   // The jaccard≥0.5 LSH pair graph and its connected-component labels are
-  // CORPUS-level artifacts, exactly like the ANN index tables
-  // (VectorQueries.cachedIndexFrame) and the BPE merge table: a 100 TB
-  // dedup pipeline computes the pair graph once per corpus snapshot and
-  // every consumer — pair listing (q29), keep-list (q38), leakage gate
-  // (q55), train export (q61), component listing/histogram (q52/q72) —
-  // reads the persisted result. Keyed by the documents table's
-  // per-part-file fingerprint plus the SparkContext identity (checkpointed
-  // frames die with their context, so a fresh suite rebuilds), so a
-  // rewritten corpus retrains and distinct SFs never collide. The pair set
-  // is deterministic given the corpus (md5-seeded minhash), so every
-  // consumer's result is unchanged — only the redundant per-query
-  // recompute of the shingle/band/verify stages is gone.
-  private val textFrames =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  private def cachedTextFrame(s: SparkSession, tag: String, dir: String)
-      (build: => DataFrame): DataFrame = {
-    val fp = Tables.parquetFingerprint(s, dir, "documents")
-    val key = tag + ":" + System.identityHashCode(s.sparkContext) + ":" + fp
-    // L1: this context's TrieMap. L2: the cross-JVM disk store — a fresh
-    // session re-reads the published parquet instead of rebuilding. Every
-    // L1 hit re-checks the backing entry (stillLive also TOUCHES it, so
-    // gc's last-use aging sees cache hits as uses): a vanished entry
-    // (store gc, a changed store root) drops the frame and re-reads
-    // through instead of serving a scan over deleted files.
-    textFrames.get(key) match {
-      case Some(df) if graft.ArtifactStore.stillLive(s, tag, fp) => df
-      case _ =>
-        textFrames.remove(key)
-        textFrames.getOrElseUpdate(key,
-          graft.ArtifactStore.readThrough(s, tag, fp)(build))
-    }
-  }
-
-  /** Drop every JVM-local artifact cache (the L1 layer over the disk
-    * store): the staged text frames and the trained BPE merge tables.
-    * For harnesses that must re-derive artifacts cold in ONE JVM — the
-    * bench's repeated cold-build timings — never needed in a deployed
-    * pipeline (the disk store is the real carrier).
-    */
-  private[graft] def dropSessionCaches(): Unit = {
-    textFrames.clear()
-    bpeArtifacts.clear()
-  }
+  // CORPUS-level artifacts, exactly like the ANN index tables and the BPE
+  // merge table: a 100 TB dedup pipeline computes the pair graph once per
+  // corpus snapshot and every consumer — pair listing (q29), keep-list
+  // (q38), leakage gate (q55), train export (q61), component
+  // listing/histogram (q52/q72) — reads the persisted result. Keyed by the
+  // documents table's per-part-file fingerprint, so a rewritten corpus
+  // rebuilds and distinct SFs never collide. The pair set is deterministic
+  // given the corpus (md5-seeded minhash), so every consumer's result is
+  // unchanged — only the redundant per-query recompute of the
+  // shingle/band/verify stages is gone.
+  private def documentsFp(s: SparkSession, dir: String): String =
+    Tables.parquetFingerprint(s, dir, "documents")
 
   /** q92's per-valid-doc NB decision frame (doc_id, cls, margin,
     * pred_class): the trained multinomial model applied to the held-out
@@ -543,13 +480,11 @@ object TextQueries {
     // Shared through the corpus-fingerprinted store: the labeled-tokenized
     // corpus is the preprocessing table a deployed pipeline materializes
     // once per snapshot, not per scoring query.
-    val docs = cachedTextFrame(s, "nblabeled", dir) {
+    val docs = graft.Artifacts.frame(s, "nblabeled", documentsFp(s, dir)) {
       // ONE labeling/split/tokenize definition shared with the
       // incremental NB maintenance (CorpusStatsMaintenance.nbLabeled):
       // the maintained counts and this snapshot can never drift.
-      // staged: store ON writes the parquet directly; store off keeps
-      // the checkpoint (feeds class counts, priors AND valid scoring)
-      staged(s, CorpusStatsMaintenance.nbLabeled(Tables.documents(s, dir)))
+      CorpusStatsMaintenance.nbLabeled(Tables.documents(s, dir))
     }
     val toks = docs.select(col("doc_id"), col("split"), col("cls"),
       explode(col("toks")).as("token"))
@@ -587,10 +522,9 @@ object TextQueries {
   }
 
   /** The jaccard≥0.5 near-dup pair graph (d1, d2, jac) as a persisted
-    * artifact. The checkpoint holds only the verified pairs (tiny — true
-    * dup pairs), and the builder's shingle/band intermediates are released
-    * once the pair table is pinned (their LogicalRDD blocks, nothing
-    * else's — the cachedIndexTable pattern).
+    * artifact: the store holds only the verified pairs (tiny — true dup
+    * pairs); the builder's shingle/band checkpoints are released by the
+    * store's publish once the pair table is on disk.
     */
   private[graft] def lshNeardupPairsShared(s: SparkSession, dir: String): DataFrame = {
     // the artifact is keyed by the active cap: a capped pair graph is a
@@ -598,74 +532,36 @@ object TextQueries {
     // conf must never read one mode's graph as the other's
     val cap = dedupMaxBucket(s)
     val tag = if (cap > 0) s"lshpairs05c$cap" else "lshpairs05"
-    cachedTextFrame(s, tag, dir) {
-      val built = lshNeardupPairs(s, dir, 0.5)
-      // store ON: the parquet write materializes the pair plan once and
-      // writeEntry's LogicalRDD sweep releases the builder's shingle/band
-      // checkpoints found in the plan tree. Store off: eager checkpoint
-      // + manual release, as before.
-      if (graft.ArtifactStore.rootOf(s).isDefined) built
-      else {
-        val out = built.localCheckpoint()
-        built.queryExecution.logical.collect {
-          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-        }.foreach(_.unpersist(blocking = false))
-        out
-      }
-    }
+    graft.Artifacts.frame(s, tag, documentsFp(s, dir))(
+      lshNeardupPairs(s, dir, 0.5))
   }
 
   /** Component labels of the shared pair graph, as a persisted artifact —
     * the dedup pipeline's cluster table, computed once per corpus.
     */
   private[graft] def neardupComponentsShared(s: SparkSession, dir: String): DataFrame =
-    cachedTextFrame(s, "neardupcc", dir)(neardupComponents(s, dir))
+    graft.Artifacts.frame(s, "neardupcc", documentsFp(s, dir))(
+      neardupComponents(s, dir))
 
-  /** Per-doc mean bigram surprisal (doc_id, lang, source, s) under the
-    * corpus bigram LM, persisted once per corpus fingerprint — the LM
-    * scoring table every perplexity consumer (q67's source report, q98's
-    * CCNet terciles, q100's funnel gate 4) reads. Same artifact-store
-    * rationale as the dedup graph and the ANN indexes: a deployed
-    * pipeline trains and applies its LM once per corpus snapshot; the
-    * consumers' own aggregations stay the only per-query work. The
-    * checkpoint holds one row per document (never the bigram stream),
-    * and the builder's bigram checkpoint blocks are released once the
-    * doc table is pinned. Docs with < 2 tokens have no bigrams and are
-    * absent, exactly as in the inline chains this replaces.
-    */
   /** The corpus bigram stream and its conditional LM, shared by the
     * batch artifact below AND the streaming funnel's frozen-reference
     * trainer (CurationAdmission.buildReference) — ONE definition of the
     * tokenizer + smoothing, so the stream can never score against a
     * silently different LM than the batch funnel it twins. Returns
-    * (bg: (doc_id, lang, source, bg) — lazy over the lexdocs artifact
-    * when the disk store is on, checkpointed otherwise, lm: (bg, p)).
+    * (bg: (doc_id, lang, source, bg) — lazy over the lexdocs artifact,
+    * lm: (bg, p)).
     */
   private[graft] def corpusBigramLm(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     // bigrams slide over the persisted tokenized corpus (lexdocs) — no
-    // re-tokenize. Store ON: bg stays LAZY; each consumer re-reads the
-    // artifact with a row-local explode, so no corpus-TOKEN-sized
-    // checkpoint is ever materialized (writing ~5× corpus bytes per LM
-    // build was the 100 TB cost), and the downstream LogicalRDD sweeps
-    // (docSurprisalShared store-off arm, buildReference) find nothing
-    // to release because the artifact is a plain parquet scan. Store
-    // OFF: the eager checkpoint keeps the 3 consumers sharing one
-    // materialization, exactly as before — its lineage truncation also
-    // hides the lexdocs fallback checkpoint from those sweeps. Storage
-    // note (ADVICE r18): with the store OFF an LM-only session therefore
-    // pins TWO corpus-sized checkpoints (the hidden lexdocs fallback via
-    // staged + this bigram one) where the pre-lexdocs form pinned one —
-    // peak block storage roughly doubles for that session profile.
-    // Accepted as the shared-cache design: lexdocs serves every other
-    // tokenizer consumer in the same session, and the store-ON path
-    // (the deployed shape) materializes neither.
-    val bgPlan = lexDocsShared(s, dir)
+    // re-tokenize. bg stays LAZY: each consumer re-reads the artifact
+    // with a row-local explode, so no corpus-TOKEN-sized checkpoint is
+    // ever materialized (writing ~5× corpus bytes per LM build was the
+    // 100 TB cost).
+    val bg = lexDocsShared(s, dir)
       .filter(size(col("t")) >= 2)
       .select(col("doc_id"), col("lang"), col("source"),
         explode(tokenBigrams(col("t"))).as("bg"))
-    val bg = if (graft.ArtifactStore.rootOf(s).isDefined) bgPlan
-      else bgPlan.localCheckpoint() // 3 consumers: c2, c1, scoring join
     val f2 = bg.groupBy(col("bg")).agg(count(lit(1)).as("c2"))
     val f1 = bg.groupBy(substring_index(col("bg"), " ", 1).as("w1"))
       .agg(count(lit(1)).as("c1"))
@@ -674,21 +570,6 @@ object TextQueries {
       .select(col("bg"), (col("c2") / col("c1").cast("double")).as("p"))
     (bg, lm)
   }
-
-  /** Stage a single-frame artifact build: when the disk store is ON the
-    * frame goes straight into ArtifactStore.writeEntry's parquet write
-    * (ONE materialization — an outer localCheckpoint would spend a
-    * dedicated job materializing blocks the write immediately re-reads
-    * and unpersists); with the store off the checkpoint is what makes
-    * the frame shareable across consumers, exactly as before. Only for
-    * builders with no release-after-checkpoint bookkeeping — a builder
-    * that unpersists its own intermediates before returning (the LM,
-    * the dedup graph, spans) must keep its eager checkpoint, because
-    * the store write runs AFTER the thunk and would otherwise scan
-    * already-released blocks.
-    */
-  private def staged(s: SparkSession, df: DataFrame): DataFrame =
-    if (graft.ArtifactStore.rootOf(s).isEmpty) df.localCheckpoint() else df
 
   /** Tokenized corpus (doc_id, lang, source, t) as a persisted artifact
     * — the staging table of the lexical-retrieval family (q94 BM25, q99
@@ -701,19 +582,19 @@ object TextQueries {
     * corpus-fingerprinted store as the dedup graph and the LM.
     */
   private[graft] def lexDocsShared(s: SparkSession, dir: String): DataFrame =
-    cachedTextFrame(s, "lexdocs", dir) {
-      staged(s, Tables.documents(s, dir)
+    graft.Artifacts.frame(s, "lexdocs", documentsFp(s, dir)) {
+      Tables.documents(s, dir)
         .select(col("doc_id"), col("lang"), col("source"),
-          tokens(col("text")).as("t")))
+          tokens(col("text")).as("t"))
     }
 
   /** Document-frequency census (token, df) over the shared tokenized
     * corpus — vocab-sized, the idf side of every BM25 scorer. */
   private[graft] def lexDfShared(s: SparkSession, dir: String): DataFrame =
-    cachedTextFrame(s, "lexdf", dir) {
-      staged(s, lexDocsShared(s, dir)
+    graft.Artifacts.frame(s, "lexdf", documentsFp(s, dir)) {
+      lexDocsShared(s, dir)
         .select(explode(array_distinct(col("t"))).as("token"))
-        .groupBy(col("token")).agg(count(lit(1)).as("df")))
+        .groupBy(col("token")).agg(count(lit(1)).as("df"))
     }
 
   /** Distinct per-doc 5-gram relation (doc_id, lang, g) as a persisted
@@ -725,10 +606,10 @@ object TextQueries {
     * so the build re-reads token arrays instead of re-running the text
     * regexes over the whole corpus. */
   private[graft] def gram5Shared(s: SparkSession, dir: String): DataFrame =
-    cachedTextFrame(s, "gram5", dir) {
-      staged(s, lexDocsShared(s, dir)
+    graft.Artifacts.frame(s, "gram5", documentsFp(s, dir)) {
+      lexDocsShared(s, dir)
         .select(col("doc_id"), col("lang"),
-          explode(array_distinct(wordNgramsFromTokensUdf(5)(col("t")))).as("g")))
+          explode(array_distinct(wordNgramsFromTokensUdf(5)(col("t")))).as("g"))
     }
 
   // ---- Bloom decontamination kernels (ONE definition shared by q120
@@ -805,10 +686,10 @@ object TextQueries {
     * derived from the shared shingle table once per corpus snapshot,
     * read by the bitset build and by q120's exact-audit join. */
   private[graft] def benchGramsShared(s: SparkSession, dir: String): DataFrame =
-    cachedTextFrame(s, "benchgrams", dir) {
-      staged(s, gram5Shared(s, dir)
+    graft.Artifacts.frame(s, "benchgrams", documentsFp(s, dir)) {
+      gram5Shared(s, dir)
         .withColumn("split", splitAssign(col("doc_id")))
-        .filter(col("split") =!= "train").select(col("g")).distinct())
+        .filter(col("split") =!= "train").select(col("g")).distinct()
     }
 
   /** The decontamination bitset as a PERSISTED corpus artifact — at
@@ -821,10 +702,10 @@ object TextQueries {
     * bounded (m/32-row) table. */
   private[graft] def bloomSetShared(s: SparkSession, dir: String)
       : (DataFrame, Long) = {
-    val f = cachedTextFrame(s, "bloomset", dir) {
+    val f = graft.Artifacts.frame(s, "bloomset", documentsFp(s, dir)) {
       val bench = benchGramsShared(s, dir)
       val m = bloomWidthFor(bench.count())
-      staged(s, bloomWordRows(bench, m).withColumn("m", lit(m)))
+      bloomWordRows(bench, m).withColumn("m", lit(m))
     }
     val mRow = f.select(col("m")).head(1)
     val m = if (mRow.isEmpty) bloomWidthFor(0L) else mRow.head.getLong(0)
@@ -886,36 +767,34 @@ object TextQueries {
     * (Xie et al. 2023 hash the raw corpus once, then score it against
     * many target distributions); q102 is one such scoring pass. */
   private[graft] def dsirFeatsShared(s: SparkSession, dir: String): DataFrame =
-    cachedTextFrame(s, "dsirfeats", dir) {
+    graft.Artifacts.frame(s, "dsirfeats", documentsFp(s, dir)) {
       // hashed features derive from the STAGED tokenized corpus — same
       // unigram+bigram stream as before, minus a full re-tokenize pass
-      staged(s, lexDocsShared(s, dir)
+      lexDocsShared(s, dir)
         .select(col("doc_id"), col("source"), col("t"))
         .filter(size(col("t")) >= 1)
         .select(col("doc_id"), col("source"),
           explode(concat(col("t"), tokenBigrams(col("t")))).as("f"))
         .withColumn("b", substring(md5(col("f")), 1, 2))
-        .drop("f"))
+        .drop("f")
     }
 
+  /** Per-doc mean bigram surprisal (doc_id, lang, source, s) under the
+    * corpus bigram LM, persisted once per corpus fingerprint — the LM
+    * scoring table every perplexity consumer (q67's source report, q98's
+    * CCNet terciles, q100's funnel gate 4) reads: a deployed pipeline
+    * trains and applies its LM once per corpus snapshot; the consumers'
+    * own aggregations stay the only per-query work. The store holds one
+    * row per document (never the bigram stream). Docs with < 2 tokens
+    * have no bigrams and are absent, exactly as in the inline chains
+    * this replaces.
+    */
   private[graft] def docSurprisalShared(s: SparkSession, dir: String): DataFrame =
-    cachedTextFrame(s, "bigramlm", dir) {
+    graft.Artifacts.frame(s, "bigramlm", documentsFp(s, dir)) {
       val (bg, p) = corpusBigramLm(s, dir)
-      val plan = bg.join(p, "bg")
+      bg.join(p, "bg")
         .groupBy(col("doc_id"), col("lang"), col("source"))
         .agg(avg(-log(col("p"))).as("s"))
-      // store ON: the parquet write materializes the lazy plan once and
-      // writeEntry's LogicalRDD sweep releases the bigram checkpoint it
-      // finds in the plan tree — no dedicated checkpoint job. Store off:
-      // the eager checkpoint + manual release, exactly as before.
-      if (graft.ArtifactStore.rootOf(s).isDefined) plan
-      else {
-        val out = plan.localCheckpoint()
-        bg.queryExecution.logical.collect {
-          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-        }.foreach(_.unpersist(blocking = false))
-        out
-      }
     }
 
   /** Per-doc longest duplicated stride-1 window run (doc_id, maxrun) as
@@ -933,23 +812,9 @@ object TextQueries {
     * agg, no xW shuffle per query. Parity with the inline form is
     * spec-pinned (QueriesSpec) and the oracle is unchanged. */
   private[graft] def spanRunsShared(s: SparkSession, dir: String): DataFrame =
-    cachedTextFrame(s, "spanruns10", dir) {
-      val idx = CorpusStatsMaintenance.buildSpans(
-        Tables.documents(s, dir).select(col("doc_id"), col("text")))
-      val plan = CorpusStatsMaintenance.spanRuns(idx)
-      // store ON: the parquet write materializes the run table once and
-      // writeEntry's LogicalRDD sweep releases the builder's window/
-      // census checkpoints found in the plan tree. Store off: eager
-      // checkpoint + manual release (the lshNeardupPairsShared pattern).
-      if (graft.ArtifactStore.rootOf(s).isDefined) plan
-      else {
-        val out = plan.localCheckpoint()
-        Seq(idx.wins, idx.census).foreach(_.queryExecution.logical.collect {
-          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-        }.foreach(_.unpersist(blocking = false)))
-        out
-      }
-    }
+    graft.Artifacts.frame(s, "spanruns10", documentsFp(s, dir))(
+      CorpusStatsMaintenance.spanRuns(CorpusStatsMaintenance.buildSpans(
+        Tables.documents(s, dir).select(col("doc_id"), col("text")))))
 
   /** CCNet tercile assignment (per, with columns doc_id/lang/s →
     * + bucket ∈ {1,2,3}) — EXACTLY `ntile(3) over (partition by lang

@@ -82,13 +82,13 @@ object CurationAdmission {
     val nbg = bg.count()
     s.range(1).select((lit(1.0) / (lit(nbg) + lit(1)).cast("double")).as("punk"))
       .write.mode("overwrite").parquet(s"$refPath/params")
-    // the corpus-bigram checkpoint is the largest build intermediate —
-    // release its blocks once the reference artifacts are on disk (the
-    // docSurprisalShared pattern), so a long-lived session that trains
-    // the reference and then drives admission doesn't pin it forever
-    Seq(bg, per).foreach(_.queryExecution.logical.collect {
+    // release the per-doc checkpoint once the reference artifacts are on
+    // disk, so a long-lived session that trains the reference and then
+    // drives admission doesn't pin it forever (bg is a lazy plan over the
+    // lexdocs artifact: nothing of its own to release)
+    per.queryExecution.logical.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false)))
+    }.foreach(_.unpersist(blocking = false))
   }
 
   /** One epoch of the funnel. `batch` = (doc_id, lang, text). Returns the

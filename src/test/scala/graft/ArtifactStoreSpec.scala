@@ -6,11 +6,14 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The disk-backed artifact store: build-once/read-forever across JVMs,
-  * atomic first-writer-wins publishes, lock-elected single builder under
-  * a planted race, corrupt-entry self-healing, and store-backed shared
-  * getters. readThrough deliberately keeps NO in-memory state — the disk
-  * is the only carrier — so "second call in this JVM reads without
+/** The disk-backed artifact store — always on, the only materialization
+  * path of the corpus artifact families: build-once/read-forever across
+  * JVMs, atomic first-writer-wins publishes, lock-elected single builder
+  * under a planted race, corrupt-entry self-healing, loud failure on a
+  * disabling root, and store-backed shared getters under the one L1
+  * (`Artifacts.frame`, keyed by the documents or the embeddings
+  * fingerprint). readThrough deliberately keeps NO in-memory state — the
+  * disk is the only carrier — so "second call in this JVM reads without
   * building" is exactly the fresh-JVM behavior (the cross-JVM run is
   * additionally exercised for real by two sequential `sbt runMain`
   * prewarm passes; see SCALING.md).
@@ -136,20 +139,22 @@ class ArtifactStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("disabled layer returns the raw build and writes nothing") {
-    val prev = spark.conf.getOption("spark.graft.artifacts.path")
-    spark.conf.set("spark.graft.artifacts.path", "off")
-    try {
-      val builds = new AtomicInteger(0)
-      def build = { builds.incrementAndGet(); spark.range(2).toDF("id") }
-      assert(ArtifactStore.readThrough(spark, "x", "y")(build).collect().length == 2)
-      assert(ArtifactStore.readThrough(spark, "x", "y")(build).collect().length == 2)
-      assert(builds.get == 2, "disabled layer must not cache")
-      assert(ArtifactStore.readIfPresent(spark, "x", "y").isEmpty)
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.graft.artifacts.path", v)
-      case None => spark.conf.unset("spark.graft.artifacts.path")
+  test("a disabling root (off or empty) fails loudly, naming the setting") {
+    // the store cannot be turned off: `off` must not silently become a
+    // relative directory called "off", nor an empty value the cwd
+    Seq("off", "", "  ").foreach { bad =>
+      withStore(bad) {
+        val builds = new AtomicInteger(0)
+        val e = intercept[IllegalArgumentException](
+          ArtifactStore.readThrough(spark, "x", "y") {
+            builds.incrementAndGet(); spark.range(2).toDF("id") })
+        assert(e.getMessage.contains("spark.graft.artifacts.path") &&
+          e.getMessage.contains("SPARK_GRAFT_ARTIFACTS"), e.getMessage)
+        assert(builds.get == 0, "misconfigured store still ran the build")
+        intercept[IllegalArgumentException](ArtifactStore.rootOf(spark))
+      }
     }
+    assert(!Files.exists(Paths.get("off")), "`off` became a relative store root")
   }
 
   test("gc ages out cold entries, orphan tmp dirs and stale locks — and spares live ones") {
@@ -218,34 +223,52 @@ class ArtifactStoreSpec extends AnyFunSuite {
         concat(lit("kappa lambda omicron sigma upsilon "),
           col("id").cast("string")).as("text"))
       .write.mode("overwrite").parquet(s"$corpus/documents.parquet")
+    // the one frame L1 serves both fingerprint sources: a documents-keyed
+    // getter (lex census) and an embeddings-keyed one (SRP band tables)
+    spark.range(24).select(col("id").as("vec_id"),
+        array((0 until 8).map(i => sin(col("id") * (i + 1)).cast("float")): _*)
+          .as("embedding"), (col("id") % 3).cast("int").as("label"))
+      .write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
     withStore(root) {
       def census(): Map[String, Long] =
         graft.operators.TextQueries.lexDfShared(spark, corpus)
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val first = census()
-      assert(first.size == 5 && first.values.forall(_ == 20))
-      val entry = Files.list(Paths.get(root, "lexdf")).toArray.map(_.toString)
-        .filter(_.contains("fp=")).head
-      val manifest = Paths.get(entry, "_MANIFEST")
-      // an L1 hit is a USE: gc ages by last use, so the hit must refresh
-      // the manifest mtime — age it back, hit, observe it move forward
-      val aged = java.nio.file.attribute.FileTime
-        .fromMillis(System.currentTimeMillis() - 3600 * 1000)
-      Files.setLastModifiedTime(manifest, aged)
-      census() // L1 hit
-      assert(Files.getLastModifiedTime(manifest).toMillis > aged.toMillis,
-        "L1 cache hit did not touch the manifest — gc would collect a hot entry")
-      // gc the entry out from under the live L1 frame: the next getter
-      // call must notice, drop the dead frame, and re-read through —
-      // not serve a scan over deleted files
-      Files.setLastModifiedTime(manifest, aged)
-      val gone = ArtifactStore.gc(Paths.get(root), 60 * 1000)
-      assert(gone.map(_.toString).contains(entry), s"gc spared the entry: $gone")
-      val healed = census() // must rebuild + republish, not FileNotFound
-      assert(healed == first, "re-read-through census diverged")
-      assert(ArtifactStore.readIfPresent(spark, "lexdf",
-        Tables.parquetFingerprint(spark, corpus, "documents")).isDefined,
-        "getter did not republish after its backing entry was collected")
+      def bands(): Set[(Long, Int, Long)] =
+        graft.operators.VectorQueries.srpBandsShared(spark, corpus)
+          .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("t"),
+            r.getAs[Long]("b"))).toSet
+      val getters = Seq[(String, String, () => Iterable[Any])](
+        ("lexdf", "documents", () => census()),
+        ("srpbands", "embeddings", () => bands()))
+      getters.foreach { case (tag, table, get) =>
+        val first = get()
+        assert(first.nonEmpty, s"$tag built empty")
+        val entry = Files.list(Paths.get(root, tag)).toArray.map(_.toString)
+          .filter(_.contains("fp=")).head
+        val manifest = Paths.get(entry, "_MANIFEST")
+        // an L1 hit is a USE: gc ages by last use, so the hit must refresh
+        // the manifest mtime — age it back, hit, observe it move forward
+        val aged = java.nio.file.attribute.FileTime
+          .fromMillis(System.currentTimeMillis() - 3600 * 1000)
+        Files.setLastModifiedTime(manifest, aged)
+        get() // L1 hit
+        assert(Files.getLastModifiedTime(manifest).toMillis > aged.toMillis,
+          s"$tag: L1 cache hit did not touch the manifest — gc would collect a hot entry")
+        // gc the entry out from under the live L1 frame: the next getter
+        // call must notice, drop the dead frame, and re-read through —
+        // not serve a scan over deleted files
+        Files.setLastModifiedTime(manifest, aged)
+        val gone = ArtifactStore.gc(Paths.get(root), 60 * 1000)
+        assert(gone.map(_.toString).contains(entry), s"$tag: gc spared the entry: $gone")
+        val healed = get() // must rebuild + republish, not FileNotFound
+        assert(healed == first, s"$tag: re-read-through result diverged")
+        assert(ArtifactStore.readIfPresent(spark, tag,
+          Tables.parquetFingerprint(spark, corpus, table)).isDefined,
+          s"$tag: getter did not republish after its backing entry was collected")
+      }
+      val census0 = census()
+      assert(census0.size == 5 && census0.values.forall(_ == 20))
+      assert(bands().size == 24 * graft.operators.VectorQueries.SrpAnnTables)
     }
   }
 
