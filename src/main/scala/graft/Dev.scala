@@ -559,8 +559,10 @@ object Dev {
           probe.select(col("doc_id"),
             graft.functions.TextFunctions.wordNgramsUdf(3)(col("text"))
               .as("shingles")))
-        val touched = AdmissionStore.touchedBuckets(banded, col("bucket"), k)
-        val pruned = AdmissionStore.readTouched(spark, bands, touched)
+        val (keys, read) = AdmissionStore.observeTouched(banded, col("bucket"),
+          bands, banded.schema)
+        keys.localCheckpoint()
+        val pruned = AdmissionStore.readTouched(spark, bands, read.get.buckets)
         pruned.collect()
         val scanned = pruned.queryExecution.executedPlan.collect {
           case f: org.apache.spark.sql.execution.FileSourceScanExec => f

@@ -1521,13 +1521,17 @@ object VectorQueries {
     * checkpoint; the reused result earns the eager materialization.
     */
   private[graft] def pqCodebook(subvecs: DataFrame): DataFrame = {
-    val seedOrder = Window.orderBy(
-      md5(concat(lit("pq:"), col("vec_id").cast("string"))), col("vec_id"))
+    // ranked within subspace 0, the seeds' own (single) partition: a
+    // literal partition key would be optimised away and leave the window
+    // unpartitioned, which Spark warns about on every pq build
+    val seedOrder = Window.partitionBy(col("sub"))
+      .orderBy(md5(concat(lit("pq:"), col("vec_id").cast("string"))), col("vec_id"))
     val seeds = subvecs.filter(col("sub") === 0)
-      .select(col("vec_id"))
+      .select(col("sub"), col("vec_id"))
       .orderBy(md5(concat(lit("pq:"), col("vec_id").cast("string"))), col("vec_id"))
       .limit(PqK)
       .withColumn("code", row_number().over(seedOrder) - 1)
+      .drop("sub")
     val cb0 = broadcast(seeds).join(subvecs, "vec_id")
       .select(col("sub"), col("code"), col("subvec").as("centroid"))
     pqAssignKeepSubvec(subvecs, cb0)

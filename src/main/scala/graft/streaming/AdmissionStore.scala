@@ -1,7 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, collect_set, hash, lit, pmod}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 /** Shared store plumbing for the admission gates' epoch-partitioned
   * tables. ONE copy of the write/read/compaction protocol (its checked
@@ -20,10 +23,13 @@ import org.apache.spark.sql.functions.{col, hash, lit, pmod}
   * verdict's admission-family 100× blocker was the per-batch store SCAN:
   * the JOIN cost was bounded (band/bucket/cell-equi) but every batch
   * re-read the whole accumulated store. With the key-hash layout a batch
-  * first computes its own touched pb set (bounded by K — a collect of
-  * ≤K ints, never data-sized) and the store read prunes to those
-  * partition dirs at FILE level (Spark partition pruning;
-  * AdmissionPruningSpec asserts the scanned file count). A small batch
+  * reads its own touched pb set (≤K ints, never data-sized) off a named
+  * `collect_set` observation on the checkpoint that already materialises
+  * its keys ([[observeTouched]] — no job of its own), and the store read
+  * prunes to those partition dirs at FILE level (Spark partition
+  * pruning; AdmissionPruningSpec asserts the scanned file count). The
+  * read schema is the schema of the frame the gate writes the table
+  * from, so a pruned read pays no schema-inference job either. A small batch
   * touching b of K buckets reads ~b/K of the store; the worst case
   * (batch touches every bucket) degrades to the old full scan, never
   * below it. Compaction preserves the layout.
@@ -78,8 +84,8 @@ private[graft] object AdmissionStore {
     * [[maintain]]'s job, so a store born small is not stuck small. */
   val DefaultBuckets = 16
 
-  /** Fan-out ceiling: keeps [[touchedBuckets]]' driver collect (≤K
-    * ints) and the per-epoch partition-dir count trivially bounded.
+  /** Fan-out ceiling: keeps the observed touched set (≤K ints) and the
+    * per-epoch partition-dir count trivially bounded.
     * 65536 buckets × [[TargetBucketBytes]] ≈ 16 TB of fingerprints per
     * store — far past any admission store (they hold band/window/cell
     * keys, not the corpus). */
@@ -133,12 +139,11 @@ private[graft] object AdmissionStore {
   /** The blocking-key partition bucket under fan-out `k`. */
   def pb(key: Column, k: Int): Column = pmod(hash(key), lit(k))
 
-  /** The batch's touched pb set for a blocking-key column under fan-out
-    * `k` — ≤min(k, distinct batch keys) ints, the one driver-side
-    * collect in the pruned-read path. */
-  def touchedBuckets(df: DataFrame, key: Column, k: Int): Seq[Int] =
-    df.select(pb(key, k).as("pb")).distinct().collect()
-      .map(_.getInt(0)).toSeq
+  /** The value of an observation whose frame has been materialised.
+    * Bounded: a frame that never ran fails loudly here instead of
+    * hanging the batch. */
+  private[streaming] def observed(o: Observation): Row =
+    Await.result(o.future, 10.minutes)
 
   private def fsOf(s: SparkSession) = org.apache.hadoop.fs.FileSystem
     .get(s.sparkContext.hadoopConfiguration)
@@ -630,13 +635,20 @@ private[graft] object AdmissionStore {
     * ONE definition for every gate so the written layout can never
     * drift from the pruned-read routing.
     *
+    * An EMPTY epoch publishes nothing and returns None: an empty frame
+    * stages no pb dir, and a data-less epoch dir would only be listing
+    * noise for every later read. Judged from the staged tree itself, so
+    * the callers run no emptiness job of their own. Safe under
+    * retries: the gates' kept sets are deterministic, so a retried
+    * epoch re-stages the same (non)emptiness.
+    *
     * Refuses to run while a maintenance lock is held (checked at entry
     * AND immediately before the publish rename — see the object doc's
     * race analysis) or while a maintenance aside exists (the mid-swap
     * state: stamping a fresh table over it would fork the store). */
   def writeEpoch(df: DataFrame, key: Column, table: String, epoch: Long,
       expectedStoreBytes: Long = 0L,
-      targetBucketBytes: Long = TargetBucketBytes): WidthSignal = {
+      targetBucketBytes: Long = TargetBucketBytes): Option[WidthSignal] = {
     val s = df.sparkSession
     assertNoMaintenance(s, table)
     val fs = fsOf(s)
@@ -681,6 +693,11 @@ private[graft] object AdmissionStore {
     df.withColumn("pb", pb(key, k))
       .write.partitionBy("pb")
       .mode("overwrite").parquet(staged)
+    if (!fs.exists(hPath(staged)) || !fs.listStatus(hPath(staged)).exists(st =>
+        st.isDirectory && st.getPath.getName.startsWith("pb="))) {
+      fs.delete(hPath(staged), true)
+      return None
+    }
     writeMarker(s, s"$staged/_PBK", k)
     // byte carry, measured before the swap: the staged tree's bytes are
     // this epoch's contribution, the current epoch dir's (a retry) what
@@ -707,7 +724,7 @@ private[graft] object AdmissionStore {
       // one re-base walk over the live epoch dirs, then incremental
     }
     writeBytesCell(s, table, bytes)
-    WidthSignal(table, k, bytes, targetBucketBytes)
+    Some(WidthSignal(table, k, bytes, targetBucketBytes))
   }
 
   /** The store's current width signal (stamped K vs carried bytes; an
@@ -723,42 +740,58 @@ private[graft] object AdmissionStore {
     WidthSignal(table, k, bytes, targetBucketBytes)
   }
 
-  /** Read a store table pruned to the batch's touched pb partition
-    * dirs, routing with the store's own stamped K. The filter is on a
-    * partition column, so untouched dirs are never listed into the scan
-    * (file-level pruning, not row filtering). */
-  def readPruned(s: SparkSession, table: String, batchKeys: DataFrame,
-      key: Column): DataFrame = {
-    val k = requireLayout(s, table) // audited ONCE per read
-    s.read.parquet(table)
-      .filter(col("pb").isin(touchedBuckets(batchKeys, key, k): _*))
+  /** One batch's pruned read of a store table, made by
+    * [[observeTouched]]: `buckets` is the batch's touched pb set under
+    * the store's stamped K, taken from the observation on the batch's
+    * materialised keys; `read` scans only those partition dirs (the
+    * filter is on a partition column, so untouched dirs are never
+    * listed into the scan — file-level pruning, not row filtering). */
+  final class PrunedRead private[AdmissionStore] (table: String,
+      val k: Int, schema: StructType, touched: Observation) {
+    def buckets: Seq[Int] = observed(touched).getSeq[Int](0)
+    def read(s: SparkSession): DataFrame =
+      s.read.schema(schema).parquet(table)
+        .filter(col("pb").isin(buckets: _*))
   }
 
-  /** [[readPruned]] for a store that may not exist yet: an absent store
-    * reads as None (a fresh gate) — UNLESS a maintenance aside exists,
-    * which means an interrupted compact/rebucket publish took the live
-    * dir with it: treating that as "fresh store" would fail OPEN (admit
-    * duplicates of everything admitted), so fail loudly and point at
-    * the recovery. Epoch-replacement asides are settled first, so the
-    * writeEpoch rename window is recoverable by any reader. */
-  def readPrunedIfExists(s: SparkSession, table: String,
-      batchKeys: DataFrame, key: Column): Option[DataFrame] = {
-    val fs = fsOf(s)
+  /** Bind a batch's blocking keys to a pruned read of `table`: returns
+    * `keys` with the touched pb set (`collect_set(pb(key, K))`, K the
+    * store's stamp) attached as a named observation — the caller
+    * materialises that frame with the checkpoint it runs anyway, so the
+    * set costs no job — and the read handle. `stored` is the schema of
+    * the frame the gate writes the table from; the `pb`/`epoch`
+    * partition columns are appended, so the read infers nothing.
+    *
+    * None for a store that does not exist yet (a fresh gate) — UNLESS a
+    * maintenance aside exists, which means an interrupted
+    * compact/rebucket publish took the live dir with it: treating that
+    * as "fresh store" would fail OPEN (admit duplicates of everything
+    * admitted), so fail loudly and point at the recovery.
+    * Epoch-replacement asides are settled first, so the writeEpoch
+    * rename window is recoverable by any reader. "Exists" means holds
+    * at least one epoch dir: a store whose first write crashed between
+    * the stamp and the data write is genuinely empty (nothing admitted
+    * was lost). The layout is audited here, once per read. */
+  def observeTouched(keys: DataFrame, key: Column, table: String,
+      stored: StructType): (DataFrame, Option[PrunedRead]) = {
+    val s = keys.sparkSession
     recoverEpochAsides(s, table)
-    // "exists" means holds at least one epoch dir: a store whose first
-    // write crashed between the stamp and the data write is genuinely
-    // empty (nothing admitted was lost), not schema-inference fodder
-    if (hasEpochs(s, table)) Some(readPruned(s, table, batchKeys, key))
-    else if (fs.exists(hPath(asideOf(table)))) throw new IllegalStateException(
+    if (hasEpochs(s, table)) {
+      val k = requireLayout(s, table)
+      val touched = Observation(s"touched:$table")
+      val schema = stored.add("pb", IntegerType).add("epoch", LongType)
+      (keys.observe(touched, collect_set(pb(key, k)).as("pb")),
+        Some(new PrunedRead(table, k, schema, touched)))
+    } else if (fsOf(s).exists(hPath(asideOf(table)))) throw new IllegalStateException(
       s"admission store $table missing but a maintenance aside exists — " +
         "an interrupted compact()/maintain() publish; re-run the gate's " +
         "compact()/maintain() to recover before admitting")
-    else None
+    else (keys, None)
   }
 
   /** Read a store pruned to an explicit touched-bucket set (the caller
-    * computed it under the store's stamped K — see [[readPruned]] for
-    * the usual path). */
+    * computed it under the store's stamped K — see [[observeTouched]]
+    * for the per-batch path). */
   def readTouched(s: SparkSession, path: String,
       touched: Seq[Int]): DataFrame = {
     requireLayout(s, path)
@@ -785,7 +818,7 @@ private[graft] object AdmissionStore {
     * aside is superseded debris — drop it); live missing + aside
     * present = crash BETWEEN the renames (the aside IS the store —
     * restore it). Reads refuse to run in the second state
-    * ([[readPrunedIfExists]]), so the window is fail-loud, never
+    * ([[observeTouched]]), so the window is fail-loud, never
     * fail-open. */
   private[graft] def recoverAside(s: SparkSession, live: String): Unit = {
     val fs = fsOf(s)

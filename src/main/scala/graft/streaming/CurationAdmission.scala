@@ -1,9 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.functions.TextFunctions._
+import graft.operators.CorpusStatsMaintenance
 
 /** Streaming curation admission — the streaming twin of the q100 batch
   * funnel: every micro-batch of incoming documents passes the same gate
@@ -91,6 +94,36 @@ object CurationAdmission {
     }.foreach(_.unpersist(blocking = false))
   }
 
+  /** The frozen references one stream judges against, bound once: the
+    * bigram LM and per-lang cutoffs as frames over the reference files
+    * (their file listing and schema are fixed at [[Reference.load]]),
+    * the unseen-bigram penalty `punk`, and — when the fifth gate is
+    * armed — the benchmark Bloom bitset. */
+  final case class Reference(lm: DataFrame, cuts: DataFrame, punk: Double,
+      bench: Option[CorpusStatsMaintenance.BloomIndex])
+
+  object Reference {
+    /** Load the artifacts [[buildReference]] (and, for `benchRefPath`,
+      * [[DecontaminationAdmission.buildReference]]) wrote. */
+    def load(s: SparkSession, refPath: String,
+        benchRefPath: Option[String] = None): Reference =
+      Reference(s.read.parquet(s"$refPath/lm"),
+        s.read.parquet(s"$refPath/cutoffs"),
+        s.read.parquet(s"$refPath/params").head.getDouble(0),
+        benchRefPath.map(DecontaminationAdmission.readReference(s, _)))
+  }
+
+  /** The audit row's columns, ONE definition for the row [[admit]]
+    * builds and writes and the pinned schema [[readAudits]] reads with.
+    * The epoch value lives ONLY in the partition directory — writing it
+    * as a data column too would be shadowed (and silently retyped to
+    * int) by partition discovery on any root read of the audit table. */
+  private val AuditSchema = StructType(Seq(
+    StructField("n_in", LongType), StructField("drop_quality", LongType),
+    StructField("drop_lm", LongType), StructField("drop_dedup", LongType),
+    StructField("drop_quote", LongType), StructField("drop_decon", LongType),
+    StructField("admitted", LongType), StructField("store_k", IntegerType)))
+
   /** One epoch of the funnel. `batch` = (doc_id, lang, text). Returns the
     * audit row it also persists: (epoch, n_in, drop_quality, drop_lm,
     * drop_dedup, drop_quote, drop_decon, admitted, store_k) — store_k
@@ -100,32 +133,42 @@ object CurationAdmission {
     * retry-deterministic and store bytes grow between a write and a
     * late retry).
     *
-    * `benchRefPath`, when set, arms a FIFTH gate — benchmark
+    * `ref.bench`, when set, arms a FIFTH gate — benchmark
     * decontamination (the batch funnel q100's held-out-overlap stage in
     * its 100 TB Bloom form, [[DecontaminationAdmission]]'s judgment
     * verbatim): a doc whose distinct-5-gram Bloom hit fraction against
     * the frozen eval-suite bitset exceeds `maxHitFrac` drops, attributed
     * LAST (a clone of a contaminated doc is a dedup drop — first gate
     * catches). None keeps the four-gate funnel byte-identical.
+    *
+    * Every gate count is a named `Dataset.observe` metric on the
+    * checkpoint that materialises that gate's survivors anyway, so
+    * counting costs no Spark job; the near-dup survivors arrive in
+    * memory from [[NearDupAdmission.judge]].
     */
-  def admit(batch: DataFrame, batchId: Long, refPath: String,
+  def admit(batch: DataFrame, batchId: Long, ref: Reference,
             storePath: String, keptPath: String, auditPath: String,
             qualityFloor: Double = 0.72, quoteSpan: Int = 20,
-            benchRefPath: Option[String] = None,
             maxHitFrac: Double = 0.05): Row = {
     val s = batch.sparkSession
+    def counted(df: DataFrame, name: String): (DataFrame, Long) = {
+      val o = Observation(s"curation.$name:$batchId")
+      val cp = df.observe(o, count(lit(1)).as(name)).localCheckpoint()
+      (cp, AdmissionStore.observed(o).getLong(0))
+    }
+    val qualityOk = Observation(s"curation.quality_ok:$batchId")
     val scored = batch
       .withColumn("q", qualityScore(col("text")))
+      .observe(qualityOk, count(lit(1)).as("n_in"),
+        count(when(col("q") >= qualityFloor, true)).as("quality_ok"))
       .localCheckpoint() // gates 1 and 2 both read it
-    val nIn = scored.count()
+    val quality = AdmissionStore.observed(qualityOk)
+    val nIn = quality.getLong(0)
     val qualOk = scored.filter(col("q") >= qualityFloor)
-    val dropQuality = nIn - qualOk.count()
+    val dropQuality = nIn - quality.getLong(1)
 
     // LM gate against the frozen reference: shuffle join on the bigram
     // key; unseen bigrams pay the pinned punk penalty
-    val lm = s.read.parquet(s"$refPath/lm")
-    val cuts = s.read.parquet(s"$refPath/cutoffs")
-    val punk = s.read.parquet(s"$refPath/params").head.getDouble(0)
     val t = tokens(col("text"))
     val withToks = qualOk.select(col("doc_id"), col("lang"), col("text"), t.as("t"))
     val scorable = withToks.filter(size(col("t")) >= 2)
@@ -135,93 +178,68 @@ object CurationAdmission {
         // trained with (tokenBigrams) — a drifted inline copy here
         // would silently miss the whole LM and punk-drop all traffic
         explode(tokenBigrams(col("t"))).as("bg"))
-      .join(lm, Seq("bg"), "left")
-      .withColumn("p", coalesce(col("p"), lit(punk)))
+      .join(ref.lm, Seq("bg"), "left")
+      .withColumn("p", coalesce(col("p"), lit(ref.punk)))
       .groupBy(col("doc_id"), col("lang"))
       .agg(avg(-log(col("p"))).as("s"))
     // LEFT join: a doc whose language has no reference cutoff cannot be
     // scored against the frozen model — it DROPS (conservative; an
     // unknown/garbled lang code is exactly the doc this gate exists to
     // stop, since all its bigrams pay punk and max out surprisal)
-    val lmDropIds = surprisal.join(broadcast(cuts), Seq("lang"), "left")
+    val lmDropIds = surprisal.join(broadcast(ref.cuts), Seq("lang"), "left")
       .filter(col("cut").isNull || col("s") > col("cut"))
       .select(col("doc_id"))
-    val lmOk = qualOk.join(lmDropIds, Seq("doc_id"), "left_anti")
-      .localCheckpoint() // counted AND handed to the dedup gate
-    val dropLm = (nIn - dropQuality) - lmOk.count()
+    // counted AND handed to the dedup gate
+    val (lmOk, nAfterLm) = counted(
+      qualOk.join(lmDropIds, Seq("doc_id"), "left_anti"), "lm_ok")
+    val dropLm = (nIn - dropQuality) - nAfterLm
 
-    // dedup gate: the near-dup admission component, store shared as-is.
-    // The width signals ride into this epoch's audit row (max bucket
-    // bytes across the gate's tables vs the layout target — the
-    // SRP/Bloom width-report pattern, r16 lifecycle): the stream's own
-    // accounting says when the store has outgrown its fan-out, instead
-    // of an operator discovering it from degraded pruning.
-    val dedupSignals = NearDupAdmission.admit(
-      lmOk.select(col("doc_id"), col("text")),
-      batchId, storePath, keptPath)
-    // a batch dropped WHOLESALE at dedup (pure re-sends — routine in a
-    // deployed stream) leaves a FILE-LESS kept dir that schema inference
-    // can't read: the funnel must account it and carry on, not die. The
-    // empty case is judged by LISTING the epoch dir for data files — not
-    // by absorbing AnalysisException, which would also swallow a
-    // misconfigured keptPath or a corrupt parquet footer as
-    // "drop_dedup = everything"; a genuinely unreadable epoch still
-    // aborts (the read below propagates its real error)
-    val keptEpochDir = new org.apache.hadoop.fs.Path(s"$keptPath/epoch=$batchId")
-    val keptFs = keptEpochDir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val keptHasData = keptFs.exists(keptEpochDir) &&
-      keptFs.listStatus(keptEpochDir).exists(st =>
-        st.isFile && st.getPath.getName.startsWith("part-"))
-    val dedupKept = (if (keptHasData) s.read.parquet(keptEpochDir.toString)
-      else lmOk.select(col("doc_id"), col("text")).limit(0))
-      .localCheckpoint() // re-read and OVERWRITTEN by the quote gate below
-    val afterDedup = dedupKept.count()
-    val dropDedup = (nIn - dropQuality - dropLm) - afterDedup
+    // dedup gate: the near-dup admission component, store shared as-is;
+    // its survivors come back in memory, counted. The width signals ride
+    // into this epoch's audit row (max bucket bytes across the gate's
+    // tables vs the layout target — the SRP/Bloom width-report pattern,
+    // r16 lifecycle): the stream's own accounting says when the store
+    // has outgrown its fan-out, instead of an operator discovering it
+    // from degraded pruning.
+    val dedup = NearDupAdmission.judge(
+      lmOk.select(col("doc_id"), col("text")), batchId, storePath)
+    val dedupKept = dedup.survivors
+    val dropDedup = nAfterLm - dedup.admitted
 
     // verbatim-quote gate (the streaming analogue of q100's q68
     // contamination gate, q117's span semantics): AFTER dedup, matching
     // the batch funnel's attribution — an exact clone is a dedup drop,
-    // not a quote drop. The final survivor set overwrites the epoch's
-    // kept dir, and only FINAL survivors publish window census. Known
-    // subtlety, by design: the near-dup store has already accumulated
-    // fingerprints of docs the quote gate then drops — a future
-    // near-variant of a quote-dropped doc stays blocked (conservative;
-    // the quoted content cannot re-enter via a paraphrase of the
-    // dropped doc either).
-    val wins = QuoteAdmission.windowsOf(dedupKept)
-    val quoteDropIds = QuoteAdmission
-      .quoteDrops(wins, batchId, storePath, quoteSpan)
-    val afterQuote = dedupKept.join(quoteDropIds, Seq("doc_id"), "left_anti")
-      .localCheckpoint() // materialize BEFORE overwriting what it reads
-    val nAfterQuote = afterQuote.count()
-    val dropQuote = afterDedup - nAfterQuote
+    // not a quote drop. The final survivor set is the epoch's kept dir,
+    // and only FINAL survivors publish window census. Known subtlety, by
+    // design: the near-dup store has already accumulated fingerprints of
+    // docs the quote gate then drops — a future near-variant of a
+    // quote-dropped doc stays blocked (conservative; the quoted content
+    // cannot re-enter via a paraphrase of the dropped doc either).
+    val wins = QuoteAdmission.windowsOf(dedupKept, storePath)
+    val quoteDropIds = QuoteAdmission.quoteDrops(wins, batchId, quoteSpan)
+    val (afterQuote, nAfterQuote) = counted(
+      dedupKept.join(quoteDropIds, Seq("doc_id"), "left_anti"), "quote_ok")
+    val dropQuote = dedup.admitted - nAfterQuote
 
-    // benchmark decontamination gate (armed by benchRefPath): the SAME
+    // benchmark decontamination gate (armed by ref.bench): the SAME
     // per-doc judgment DecontaminationAdmission runs (ONE definition —
     // hitFractions; see its doc for why a fraction, not any-hit), over
     // the quote survivors. Runs LAST so upstream gates keep their
     // attribution; drops before the census publish, so the quote store
     // only ever covers FINAL survivors. Unarmed, the four-gate funnel
-    // is byte-identical AND cost-identical: no extra join, checkpoint,
-    // or count.
-    val (finalKept, dropDecon) = benchRefPath match {
-      case None => (afterQuote, 0L)
-      case Some(rp) =>
-        val dropIds = DecontaminationAdmission
-          .hitFractions(afterQuote, DecontaminationAdmission.readReference(s, rp))
+    // is byte-identical AND cost-identical: no extra join or checkpoint.
+    val (finalKept, admitted) = ref.bench match {
+      case None => (afterQuote, nAfterQuote)
+      case Some(bloom) =>
+        val dropIds = DecontaminationAdmission.hitFractions(afterQuote, bloom)
           .filter(col("frac") > maxHitFrac).select(col("doc_id"))
-        val fk = afterQuote.join(dropIds, Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-        (fk, nAfterQuote - fk.count())
+        counted(afterQuote.join(dropIds, Seq("doc_id"), "left_anti"), "decon_ok")
     }
+    val dropDecon = nAfterQuote - admitted
     finalKept.write.mode("overwrite").parquet(s"$keptPath/epoch=$batchId")
     QuoteAdmission.publishCensus(wins, finalKept.select(col("doc_id")),
       batchId, storePath)
-    val admitted = nAfterQuote - dropDecon
 
-    // the epoch value lives ONLY in the partition directory — writing it
-    // as a data column too would be shadowed (and silently retyped to
-    // int) by partition discovery on any root read of the audit table
     // the audit row stays RETRY-DETERMINISTIC (a replayed epoch must
     // reproduce it bit-for-bit — the spec's idempotence contract), so
     // it carries only the stamped fan-out K; the byte-level width
@@ -232,16 +250,13 @@ object CurationAdmission {
     // not-concurrent-with-the-stream — a retry AFTER a mid-outage
     // re-bucket legitimately reports the new K (the store it actually
     // wrote into), the one sanctioned divergence
-    val storeK = if (dedupSignals.isEmpty) 0 else dedupSignals.map(_.k).max
-    val audit = s.range(1).select(
-      lit(nIn).as("n_in"),
-      lit(dropQuality).as("drop_quality"), lit(dropLm).as("drop_lm"),
-      lit(dropDedup).as("drop_dedup"), lit(dropQuote).as("drop_quote"),
-      lit(dropDecon).as("drop_decon"),
-      lit(admitted).as("admitted"),
-      lit(storeK).as("store_k"))
-    audit.write.mode("overwrite").parquet(s"$auditPath/epoch=$batchId")
-    audit.select(lit(batchId).as("epoch"), col("*")).head
+    val storeK = if (dedup.signals.isEmpty) 0 else dedup.signals.map(_.k).max
+    val audit = Row(nIn, dropQuality, dropLm, dropDedup, dropQuote,
+      dropDecon, admitted, storeK)
+    s.createDataFrame(java.util.List.of(audit), AuditSchema)
+      .write.mode("overwrite").parquet(s"$auditPath/epoch=$batchId")
+    new GenericRowWithSchema((batchId +: audit.toSeq).toArray,
+      StructType(StructField("epoch", LongType) +: AuditSchema.fields))
   }
 
   /** Read an audit table under the PINNED schema — the one safe way to
@@ -252,29 +267,33 @@ object CurationAdmission {
     * makes pre-store_k epochs read as null, coalesced to 0 — "0 = the
     * epoch appended nothing" already means "no fan-out observed", which
     * is exactly true of an epoch written before the stamp existed. */
-  def readAudits(s: SparkSession, auditPath: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("n_in", LongType), StructField("drop_quality", LongType),
-      StructField("drop_lm", LongType), StructField("drop_dedup", LongType),
-      StructField("drop_quote", LongType), StructField("drop_decon", LongType),
-      StructField("admitted", LongType), StructField("store_k", IntegerType),
-      StructField("epoch", LongType))) // the partition column, by name
-    s.read.schema(schema).parquet(auditPath).na.fill(0, Seq("store_k"))
-  }
+  def readAudits(s: SparkSession, auditPath: String): DataFrame =
+    s.read.schema(AuditSchema.add("epoch", LongType)) // the partition column, by name
+      .parquet(auditPath).na.fill(0, Seq("store_k"))
 
-  /** Wire as a streaming sink over a (doc_id, lang, text) stream. */
+  /** Wire as a streaming sink over a (doc_id, lang, text) stream.
+    *
+    * The references are bound at stream start ([[Reference.load]]), not
+    * re-read per batch: every micro-batch of one run judges against the
+    * same model. A reference rewrite (a new [[buildReference]] into
+    * `refPath` or `benchRefPath`) takes effect at the next start; a
+    * rewrite under a running stream fails its next batch loudly on the
+    * replaced files (the bound frames still list the files they were
+    * loaded with) instead of mixing two models in one run.
+    */
   def stream(docs: DataFrame, refPath: String, storePath: String,
              keptPath: String, auditPath: String, checkpoint: String,
              qualityFloor: Double = 0.72, quoteSpan: Int = 20,
              benchRefPath: Option[String] = None,
-             maxHitFrac: Double = 0.05): DataStreamWriter[Row] =
+             maxHitFrac: Double = 0.05): DataStreamWriter[Row] = {
+    val ref = Reference.load(docs.sparkSession, refPath, benchRefPath)
     docs.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        admit(batch, id, refPath, storePath, keptPath, auditPath,
-          qualityFloor, quoteSpan, benchRefPath, maxHitFrac)
+        admit(batch, id, ref, storePath, keptPath, auditPath,
+          qualityFloor, quoteSpan, maxHitFrac)
         ()
       }
+  }
 }

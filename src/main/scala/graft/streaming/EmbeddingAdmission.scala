@@ -39,13 +39,18 @@ object EmbeddingAdmission {
       struct(lit(2).as("t"), srpBucketExpr(col("embedding"), bits, 32).as("b"))
     )).as("tb"))
 
+  /** The stored rows of the buckets table — ONE definition for the
+    * write and the pruned read's schema (the vecs table stores the kept
+    * (vec_id, embedding) rows as they are). */
+  private def storedBuckets(banded: DataFrame, kept: DataFrame): DataFrame =
+    banded.join(kept.select("vec_id"), "vec_id")
+
   def admit(batch: DataFrame, batchId: Long, storePath: String,
             keptPath: String, threshold: Double = 0.95, bits: Int = 8,
             maxBucket: Int = 0, expectedStoreBytes: Long = 0L)
       : Seq[AdmissionStore.WidthSignal] = {
     val s = batch.sparkSession
     val vecs = batch.select(col("vec_id"), col("embedding")).localCheckpoint()
-    val banded = bandedOf(vecs, bits).localCheckpoint()
 
     // only a genuinely-missing store reads as empty; any other failure
     // (incl. an interrupted maintenance publish) aborts the epoch —
@@ -55,10 +60,12 @@ object EmbeddingAdmission {
     // layout, routing K from each table's own stamp): buckets by the
     // batch's own (t, b) bands, vecs by the surviving candidates'
     // vec_ids — per-batch store IO is O(touched partitions), not
-    // O(store).
-    def readStore(sub: String, batchKeys: DataFrame,
-        key: org.apache.spark.sql.Column): Option[DataFrame] =
-      AdmissionStore.readPrunedIfExists(s, s"$storePath/$sub", batchKeys, key)
+    // O(store). Each touched set is observed on the checkpoint that
+    // materialises its keys.
+    val bandedRaw = bandedOf(vecs, bits)
+    val (bandedObs, storeBucketsRead) = AdmissionStore.observeTouched(bandedRaw,
+      col("tb"), s"$storePath/buckets", storedBuckets(bandedRaw, vecs).schema)
+    val banded = bandedObs.localCheckpoint()
 
     // skew guard judged on the combined store+batch bucket population —
     // a template bucket just under the cap on each side alone must not
@@ -75,25 +82,31 @@ object EmbeddingAdmission {
         (banded.join(broadcast(hot), Seq("tb"), "left_anti"),
           storeBuckets.map(_.join(broadcast(hot), Seq("tb"), "left_anti")))
       }
-    val (batchBuckets, storeBuckets) =
-      decap(readStore("buckets", banded, col("tb")))
+    val (batchBuckets, storeBuckets) = decap(storeBucketsRead.map(_.read(s)))
 
     // dups vs the already-admitted store (bipartite bucket join)
     val dupVsStore = storeBuckets match {
       case None => vecs.select(col("vec_id")).limit(0)
       case Some(sb) =>
-        val cand = batchBuckets
+        val candRaw = batchBuckets
           .join(sb.select(col("tb"), col("vec_id").as("sd")), "tb")
           // a vector never duplicates its own stored copy — retry safety
           .filter(col("vec_id") =!= col("sd"))
           .select(col("vec_id"), col("sd")).distinct()
-          // materialized: read twice (touched-pb collect + verify join),
-          // candidate-pair-sized by construction
-          .localCheckpoint()
+        val vecsTable = s"$storePath/vecs"
+        val (candObs, storeVecsRead) = AdmissionStore.observeTouched(candRaw,
+          col("sd"), vecsTable, vecs.schema)
+        // every epoch writes vecs before buckets: stored buckets without
+        // stored vecs is a damaged store, never an empty one
+        val vecsRead = storeVecsRead.getOrElse(throw new IllegalStateException(
+          s"admission store $vecsTable has no epochs but its buckets table " +
+            "does — the store is damaged; rebuild it"))
+        // materialized: it carries the vecs read's touched set, and it is
+        // candidate-pair-sized by construction
+        val cand = candObs.localCheckpoint()
         cand
           .join(vecs.select(col("vec_id"), col("embedding").as("v_a")), "vec_id")
-          .join(AdmissionStore.readPruned(s, s"$storePath/vecs",
-              cand, col("sd"))
+          .join(vecsRead.read(s)
             .select(col("vec_id").as("sd"), col("embedding").as("v_b")), "sd")
           .filter(cosineSim(col("v_a"), col("v_b")) >= threshold)
           .select(col("vec_id")).distinct()
@@ -114,23 +127,18 @@ object EmbeddingAdmission {
         Seq("vec_id"), "left_anti")
       .localCheckpoint()
     // deterministic epoch dirs: a retried batch overwrites its own
-    // output. An EMPTY epoch appends nothing to the store: Spark writes
-    // a file-less dir for an empty frame, and the next batch's store
-    // read would then die on schema inference — the one way a batch
-    // could poison the gate.
+    // output; an empty epoch publishes nothing to the store
+    // (AdmissionStore.writeEpoch). Key-hash partition dirs inside the
+    // epoch (AdmissionStore layout): vecs by vec_id (the verify join's
+    // key), buckets by the band key. First epoch sizes each table's
+    // fan-out from the expected-scale hint; width signals ride back per
+    // epoch (the lifecycle report).
     kept.write.mode("overwrite").parquet(s"$keptPath/epoch=$batchId")
-    if (kept.isEmpty) Seq.empty
-    else {
-      // key-hash partition dirs inside the epoch (AdmissionStore layout):
-      // vecs by vec_id (the verify join's key), buckets by the band key.
-      // First epoch sizes each table's fan-out from the expected-scale
-      // hint; width signals ride back per epoch (the lifecycle report).
-      Seq(
-        AdmissionStore.writeEpoch(kept, col("vec_id"),
-          s"$storePath/vecs", batchId, expectedStoreBytes),
-        AdmissionStore.writeEpoch(banded.join(kept.select("vec_id"), "vec_id"),
-          col("tb"), s"$storePath/buckets", batchId, expectedStoreBytes))
-    }
+    Seq(
+      AdmissionStore.writeEpoch(kept, col("vec_id"),
+        s"$storePath/vecs", batchId, expectedStoreBytes),
+      AdmissionStore.writeEpoch(storedBuckets(banded, kept),
+        col("tb"), s"$storePath/buckets", batchId, expectedStoreBytes)).flatten
   }
 
   /** Fold accumulated epoch partitions into a single base epoch (offline

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import graft.functions.TextFunctions._
@@ -22,43 +22,60 @@ import graft.functions.TextFunctions._
   */
 object NearDupAdmission {
 
-  def admit(batch: DataFrame, batchId: Long, storePath: String,
-            keptPath: String, threshold: Double = 0.5, numHashes: Int = 64,
+  /** One epoch's verdict: the admitted (doc_id, text) rows (a lazy
+    * frame over this epoch's checkpoint — reading it runs no gate work
+    * again), how many there are, and the store writes' width signals. */
+  final case class Judged(survivors: DataFrame, admitted: Long,
+      signals: Seq[AdmissionStore.WidthSignal])
+
+  // The stored rows of the two tables, ONE definition for the write and
+  // the pruned read's schema: docs by doc_id (the verify join's key),
+  // bands by bucket (the blocking join's key)
+  private def storedDocs(kept: DataFrame): DataFrame =
+    kept.filter(size(col("shingles")) > 0).select("doc_id", "shingles")
+  private def storedBands(banded: DataFrame, kept: DataFrame): DataFrame =
+    banded.join(kept.select("doc_id"), "doc_id")
+
+  /** Judge one epoch and append its admitted fingerprints to the store;
+    * the survivors are handed back in memory ([[admit]] writes them to
+    * the kept dir, the curation funnel feeds them to its next gate). */
+  def judge(batch: DataFrame, batchId: Long, storePath: String,
+            threshold: Double = 0.5, numHashes: Int = 64,
             bands: Int = 32, rows: Int = 2, maxBucket: Int = 0,
-            expectedStoreBytes: Long = 0L)
-      : Seq[AdmissionStore.WidthSignal] = {
-    val s = batch.sparkSession
+            expectedStoreBytes: Long = 0L): Judged = {
     val all = batch
       .select(col("doc_id"), col("text"),
         wordNgramsUdf(3)(col("text")).as("shingles"))
       .localCheckpoint()
-    val docs = all.filter(size(col("shingles")) > 0)
     // shingle-less docs (< 3 alphabetic words) cannot near-duplicate
     // anything — always admitted, exactly as the batch q38 keeps them
-    val trivial = all.filter(size(col("shingles")) === 0)
-    val banded = graft.operators.TextQueries
-      .bandedOf(docs, numHashes, bands, rows).localCheckpoint()
-
+    val docs = all.filter(size(col("shingles")) > 0)
     // only a genuinely-missing store reads as empty; any other failure
     // (corrupt file, IO error, an interrupted maintenance publish)
     // aborts the epoch — swallowing it would admit duplicates of
     // everything previously admitted.
     //
-    // dups vs the already-admitted store (bipartite band join). The
-    // store is key-hash partitioned (AdmissionStore layout, routing K
-    // from the store's own stamp): the bands read prunes to the batch's
-    // own band buckets — complete for the join (every row of a touched
-    // BUCKET shares its pb dir) and for the hotness judgment (a bucket
-    // outside the batch's pb set can produce no candidate, and every
-    // batch bucket is touched by definition) — and the shingle-payload
-    // read prunes to the surviving candidates' doc-id buckets. Per-batch
-    // store IO is O(touched partitions), not O(store) — the r14
-    // verdict's admission-family 100× blocker.
-    val dupVsStore = AdmissionStore.readPrunedIfExists(s,
-        s"$storePath/bands", banded, col("bucket")) match {
+    // The store is key-hash partitioned (AdmissionStore layout, routing
+    // K from the store's own stamp): the bands read prunes to the
+    // batch's own band buckets — complete for the join (every row of a
+    // touched BUCKET shares its pb dir) and for the hotness judgment (a
+    // bucket outside the batch's pb set can produce no candidate, and
+    // every batch bucket is touched by definition) — and the
+    // shingle-payload read prunes to the surviving candidates' doc-id
+    // buckets. Per-batch store IO is O(touched partitions), not
+    // O(store) — the r14 verdict's admission-family 100× blocker. Both
+    // touched sets are observed on the checkpoints below.
+    val bandedRaw = graft.operators.TextQueries
+      .bandedOf(docs, numHashes, bands, rows)
+    val (bandedObs, storeBandsRead) = AdmissionStore.observeTouched(bandedRaw,
+      col("bucket"), s"$storePath/bands", storedBands(bandedRaw, all).schema)
+    val banded = bandedObs.localCheckpoint()
+
+    // dups vs the already-admitted store (bipartite band join)
+    val dupVsStore = storeBandsRead match {
       case None => docs.select(col("doc_id")).limit(0)
-      case Some(storeBandsRaw) =>
-        {
+      case Some(bandsRead) =>
+        val storeBandsRaw = bandsRead.read(batch.sparkSession)
         // the hot-bucket cap must also gate this bipartite join: a hot
         // template bucket ACCUMULATED in the store would otherwise still
         // produce batch×store quadratic candidates even with the in-batch
@@ -75,26 +92,32 @@ object NearDupAdmission {
             (banded.join(broadcast(hot), Seq("bucket"), "left_anti"),
               storeBandsRaw.join(broadcast(hot), Seq("bucket"), "left_anti"))
           }
-        val cand = batchBands
+        val candRaw = batchBands
           .join(storeBands.select(col("bucket"), col("doc_id").as("sd")), "bucket")
           // a doc never duplicates its own stored fingerprint — this is
           // what keeps a RETRIED epoch idempotent (its admitted docs are
           // already in the store under the same ids)
           .filter(col("doc_id") =!= col("sd"))
           .select(col("doc_id"), col("sd")).distinct()
-          // materialized: read twice below (the touched-pb collect and
-          // the verify join) — and candidate-pair-sized by construction
-          .localCheckpoint()
+        val docsTable = s"$storePath/docs"
+        val (candObs, storeDocsRead) = AdmissionStore.observeTouched(candRaw,
+          col("sd"), docsTable, storedDocs(all).schema)
+        // every epoch writes docs before bands: stored bands without
+        // stored docs is a damaged store, never an empty one
+        val docsRead = storeDocsRead.getOrElse(throw new IllegalStateException(
+          s"admission store $docsTable has no epochs but its bands table does " +
+            "— the store is damaged; rebuild it"))
+        // materialized: it carries the docs read's touched set, and it
+        // is candidate-pair-sized by construction
+        val cand = candObs.localCheckpoint()
         cand
           .join(docs.select(col("doc_id"), col("shingles").as("sh_a")), "doc_id")
-          .join(AdmissionStore.readPruned(s, s"$storePath/docs",
-              cand, col("sd"))
+          .join(docsRead.read(batch.sparkSession)
             .select(col("doc_id").as("sd"), col("shingles").as("sh_b")), "sd")
           .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
           .withColumn("uni", size(array_union(col("sh_a"), col("sh_b"))))
           .filter(col("inter") / col("uni") >= threshold)
           .select(col("doc_id")).distinct()
-        }
     }
     // dups within the batch: the shared LSH pair core; greedy pair-drop,
     // higher id loses (q38 semantics)
@@ -102,31 +125,42 @@ object NearDupAdmission {
       .lshPairsFromDocs(docs, banded, threshold, maxBucket)
       .select(col("d2").as("doc_id")).distinct()
 
-    val kept = docs
+    // survivors = every doc not judged a dup, shingle-less ones included;
+    // counted by a named observation on the checkpoint that materialises
+    // them
+    val counted = Observation(s"neardup:$batchId")
+    val kept = all
       .join(dupVsStore.unionByName(dupInBatch).distinct(), Seq("doc_id"), "left_anti")
+      .observe(counted, count(lit(1)).as("n"))
       .localCheckpoint()
-    // deterministic epoch dirs: a retried batch overwrites its own
-    // output. An EMPTY epoch appends nothing to the store: Spark writes
-    // a file-less dir for an empty frame, and the next batch's store
-    // read would then die on schema inference — the one way a batch
-    // could poison the gate.
-    kept.select("doc_id", "text")
-      .unionByName(trivial.select("doc_id", "text"))
-      .write.mode("overwrite").parquet(s"$keptPath/epoch=$batchId")
-    if (kept.isEmpty) Seq.empty
-    else {
-      // key-hash partition dirs inside the epoch (AdmissionStore layout):
-      // docs by doc_id (the verify join's key), bands by bucket (the
-      // blocking join's key). The first epoch sizes each table's fan-out
-      // from the caller's expected-scale hint; every epoch's width
-      // signal rides back in the return so the stream's reports carry
-      // the layout's growth story (AdmissionStore lifecycle).
-      Seq(
-        AdmissionStore.writeEpoch(kept.select("doc_id", "shingles"),
-          col("doc_id"), s"$storePath/docs", batchId, expectedStoreBytes),
-        AdmissionStore.writeEpoch(banded.join(kept.select("doc_id"), "doc_id"),
-          col("bucket"), s"$storePath/bands", batchId, expectedStoreBytes))
-    }
+    // key-hash partition dirs inside the deterministic epoch dir
+    // (AdmissionStore layout; a retried batch overwrites its own
+    // output, an empty epoch publishes nothing). The first epoch sizes
+    // each table's fan-out from the caller's expected-scale hint; every
+    // epoch's width signal rides back in the return so the stream's
+    // reports carry the layout's growth story (AdmissionStore
+    // lifecycle).
+    val signals = Seq(
+      AdmissionStore.writeEpoch(storedDocs(kept),
+        col("doc_id"), s"$storePath/docs", batchId, expectedStoreBytes),
+      AdmissionStore.writeEpoch(storedBands(banded, kept),
+        col("bucket"), s"$storePath/bands", batchId, expectedStoreBytes)).flatten
+    Judged(kept.select("doc_id", "text"),
+      AdmissionStore.observed(counted).getLong(0), signals)
+  }
+
+  /** [[judge]], then the survivors overwrite the deterministic
+    * `epoch=<batchId>` kept dir (a retried batch reproduces its own
+    * output). */
+  def admit(batch: DataFrame, batchId: Long, storePath: String,
+            keptPath: String, threshold: Double = 0.5, numHashes: Int = 64,
+            bands: Int = 32, rows: Int = 2, maxBucket: Int = 0,
+            expectedStoreBytes: Long = 0L)
+      : Seq[AdmissionStore.WidthSignal] = {
+    val j = judge(batch, batchId, storePath, threshold, numHashes, bands,
+      rows, maxBucket, expectedStoreBytes)
+    j.survivors.write.mode("overwrite").parquet(s"$keptPath/epoch=$batchId")
+    j.signals
   }
 
   /** Compact the store's accumulated epoch partitions into a single base

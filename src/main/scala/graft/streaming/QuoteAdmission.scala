@@ -41,57 +41,68 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   */
 object QuoteAdmission {
 
-  /** (doc_id, i, h): stride-1 window hashes of (doc_id, text) docs —
-    * q117's relation, materialized once per epoch (drop computation and
-    * census publication both read it). ONE window-key definition shared
-    * with the incremental span census
+  /** One epoch's windows: `frame` = (doc_id, i, h), the stride-1
+    * window hashes of the batch, materialised once (drop computation
+    * and census publication both read it), and `census` = the census
+    * store's pruned read, its touched set observed on that same
+    * checkpoint (None before the first census epoch). */
+  final case class Windows(frame: DataFrame,
+      census: Option[AdmissionStore.PrunedRead])
+
+  /** The census rows an epoch publishes: the admitted docs' DISTINCT
+    * window hashes. ONE definition for the write and the pruned read's
+    * schema. */
+  private def censusRows(wins: DataFrame, keptIds: DataFrame): DataFrame =
+    wins.join(keptIds.select(col("doc_id")), "doc_id")
+      .select(col("h")).distinct()
+
+  /** The [[Windows]] of (doc_id, text) docs — q117's relation. ONE
+    * window-key definition shared with the incremental span census
     * ([[graft.operators.CorpusStatsMaintenance.windowHashes]]) so the
     * batch/stream hash can never drift. Docs shorter than `window`
-    * tokens have none and are trivially admitted.
+    * tokens have none and are trivially admitted. The census read
+    * prunes to the batch's own window-hash key buckets (AdmissionStore
+    * layout, routing K from the store's stamp) — coverage only ever
+    * tests hashes the batch holds, and every row of a touched hash
+    * shares its pb dir. A missing census WITH a maintenance aside is
+    * not "empty" — it is an INTERRUPTED compact()/maintain() publish:
+    * failing open would admit long quotes of everything previously
+    * admitted, so the read fails loudly and points at the recovery
+    * (one shared aside convention — see compact()).
     */
-  def windowsOf(docs: DataFrame, window: Int = 10): DataFrame =
-    graft.operators.CorpusStatsMaintenance.windowHashes(docs, window)
-      .localCheckpoint()
+  def windowsOf(docs: DataFrame, storePath: String, window: Int = 10): Windows = {
+    val raw = graft.operators.CorpusStatsMaintenance.windowHashes(docs, window)
+    val (observed, census) = AdmissionStore.observeTouched(raw, col("h"),
+      s"$storePath/census", censusRows(raw, raw).schema)
+    Windows(observed.localCheckpoint(), census)
+  }
 
   /** Doc ids of `wins` whose longest covered run reaches the span
     * threshold — covered by the store (excluding this epoch's own
     * partition, for retry safety) or by a lower-id doc of the same batch.
     */
-  def quoteDrops(wins: DataFrame, batchId: Long, storePath: String,
+  def quoteDrops(wins: Windows, batchId: Long,
                  spanTokens: Int = 20, window: Int = 10): DataFrame = {
     require(spanTokens >= window,
       s"spanTokens ($spanTokens) must be >= window ($window)")
-    val s = wins.sparkSession
+    val s = wins.frame.sparkSession
     val runThreshold = spanTokens - window + 1
-    val censusPath = s"$storePath/census"
-    // a genuinely-missing store reads empty; any other failure aborts the
-    // epoch (swallowing it would admit quotes of everything admitted).
-    // A missing census WITH a maintenance aside is not "empty" — it is
-    // an INTERRUPTED compact()/maintain() publish: failing open would
-    // admit long quotes of everything previously admitted, so
-    // readPrunedIfExists fails loudly and points at the recovery (one
-    // shared aside convention — see compact()).
-    // Pruned to the batch's own window-hash key buckets (AdmissionStore
-    // layout, routing K from the store's stamp) — coverage only ever
-    // tests hashes the batch holds, and every row of a touched hash
-    // shares its pb dir.
-    val stored: Option[DataFrame] =
-      AdmissionStore.readPrunedIfExists(s, censusPath,
-          wins, col("h"))
-        .map(_.filter(col("epoch") =!= batchId)) // retries skip their own output
+    val stored: Option[DataFrame] = wins.census
+      .map(_.read(s).filter(col("epoch") =!= batchId)) // retries skip their own output
 
     // covered-by-store: the window's hash has at least one admitted owner
     // (any owner — epochs have fresh ids, so ownership can't be this doc)
+    val w = wins.frame
     val storeHit = stored match {
-      case None => wins.select(col("doc_id"), col("i")).limit(0)
+      case None => w.select(col("doc_id"), col("i")).limit(0)
       case Some(census) =>
-        wins.join(census.select(col("h")).distinct(), "h")
+        w.join(census.select(col("h")).distinct(), "h")
           .select(col("doc_id"), col("i"))
     }
     // covered-in-batch: a LOWER-id batch doc holds the same hash (greedy
     // lower-id-wins, the q38/near-dup convention)
-    val minOwner = wins.groupBy(col("h")).agg(min(col("doc_id")).as("mo"))
-    val batchHit = wins.join(minOwner, "h")
+    val minOwner = w.groupBy(col("h")).agg(min(col("doc_id")).as("mo"))
+    val batchHit = w.join(minOwner, "h")
       .filter(col("mo") < col("doc_id"))
       .select(col("doc_id"), col("i"))
 
@@ -111,30 +122,22 @@ object QuoteAdmission {
     * never be self, so per-hash owner counts would be dead weight in a
     * window-sized key space). `keptIds` = (doc_id) the FINAL admitted set
     * (a funnel must publish survivors of ALL its gates, not just this
-    * one).
+    * one). An epoch with no surviving windows publishes nothing
+    * ([[AdmissionStore.writeEpoch]]'s empty-epoch rule).
     */
-  def publishCensus(wins: DataFrame, keptIds: DataFrame, batchId: Long,
+  def publishCensus(wins: Windows, keptIds: DataFrame, batchId: Long,
                     storePath: String, expectedStoreBytes: Long = 0L)
-      : Seq[AdmissionStore.WidthSignal] = {
-    val rows = wins.join(keptIds.select(col("doc_id")), "doc_id")
-      .select(col("h")).distinct()
-    // an epoch with no surviving windows publishes nothing: an empty
-    // frame writes a FILE-LESS dir, and the census read would die on
-    // schema inference ever after (the admission gates' empty-epoch
-    // guard). Safe under retries: the kept set is deterministic, so a
-    // retried epoch republishes the same (non)emptiness.
-    if (rows.isEmpty) Seq.empty
-    else Seq(AdmissionStore.writeEpoch(rows, col("h"),
-      s"$storePath/census", batchId, expectedStoreBytes))
-  }
+      : Seq[AdmissionStore.WidthSignal] =
+    AdmissionStore.writeEpoch(censusRows(wins.frame, keptIds), col("h"),
+      s"$storePath/census", batchId, expectedStoreBytes).toSeq
 
   def admit(batch: DataFrame, batchId: Long, storePath: String,
             keptPath: String, spanTokens: Int = 20, window: Int = 10,
             expectedStoreBytes: Long = 0L)
       : Seq[AdmissionStore.WidthSignal] = {
     val all = batch.select(col("doc_id"), col("text")).localCheckpoint()
-    val wins = windowsOf(all, window)
-    val dropped = quoteDrops(wins, batchId, storePath, spanTokens, window)
+    val wins = windowsOf(all, storePath, window)
+    val dropped = quoteDrops(wins, batchId, spanTokens, window)
     val kept = all.join(dropped, Seq("doc_id"), "left_anti").localCheckpoint()
     // deterministic epoch dirs: a retried batch overwrites its own output
     kept.write.mode("overwrite").parquet(s"$keptPath/epoch=$batchId")

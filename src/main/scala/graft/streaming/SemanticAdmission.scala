@@ -80,19 +80,23 @@ object SemanticAdmission {
         .parquet(s"$storePath/geometry")
     }
 
-    val m = scored(batch.select(col("vec_id"), col("embedding")), cent)
-      .localCheckpoint()
-
     // vs the admitted store: cell-equi bipartite join; the batch member
     // loses (see keep-rule doc above); own stored copy exempt (retry).
     // The members read prunes to the batch's own cells' key-hash
-    // partitions (AdmissionStore layout) — per-batch store IO is
-    // O(touched partitions), not O(store)
-    val dupVsStore = AdmissionStore.readPrunedIfExists(s,
-        s"$storePath/members", m, col("cell")) match {
+    // partitions (AdmissionStore layout), the touched set observed on
+    // the checkpoint below — per-batch store IO is O(touched
+    // partitions), not O(store). The store keeps (cell, csim) alongside
+    // so no future batch ever re-scores admitted vectors against the
+    // centroids: its rows are the scored frame's, so that is the read
+    // schema.
+    val mRaw = scored(batch.select(col("vec_id"), col("embedding")), cent)
+    val (mObs, membersRead) = AdmissionStore.observeTouched(mRaw,
+      col("cell"), s"$storePath/members", mRaw.schema)
+    val m = mObs.localCheckpoint()
+    val dupVsStore = membersRead match {
       case None => m.select(col("vec_id")).limit(0)
-      case Some(members) => m.alias("a")
-        .join(members.alias("b"),
+      case Some(read) => m.alias("a")
+        .join(read.read(s).alias("b"),
           col("a.cell") === col("b.cell") &&
             col("a.vec_id") =!= col("b.vec_id"))
         .filter(cosineSim(col("a.embedding"), col("b.embedding")) >= tau)
@@ -115,17 +119,13 @@ object SemanticAdmission {
       .join(dupVsStore.unionByName(dupInBatch).distinct(),
         Seq("vec_id"), "left_anti")
       .localCheckpoint()
-    // deterministic epoch dirs: a retried batch overwrites its own output
+    // deterministic epoch dirs: a retried batch overwrites its own
+    // output; an empty epoch publishes nothing to the store
+    // (AdmissionStore.writeEpoch)
     kept.select(col("vec_id"), col("embedding"))
       .write.mode("overwrite").parquet(s"$keptPath/epoch=$batchId")
-    // the store keeps (cell, csim) alongside so no future batch ever
-    // re-scores admitted vectors against the centroids. An EMPTY epoch
-    // appends nothing: Spark writes a file-less dir for an empty frame,
-    // and the store read above would then die on schema inference
-    // forever after — the one way a batch could poison the gate.
-    if (kept.isEmpty) Seq.empty
-    else Seq(AdmissionStore.writeEpoch(kept, col("cell"),
-      s"$storePath/members", batchId, expectedStoreBytes))
+    AdmissionStore.writeEpoch(kept, col("cell"),
+      s"$storePath/members", batchId, expectedStoreBytes).toSeq
   }
 
   /** Fold accumulated epoch partitions into a single base epoch (offline

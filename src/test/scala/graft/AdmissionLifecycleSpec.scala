@@ -17,7 +17,7 @@ import graft.streaming.{AdmissionStore, NearDupAdmission, QuoteAdmission}
   * lies, and the aside-protocol swap making the mid-publish window
   * fail-loud, never fail-open.
   */
-class AdmissionLifecycleSpec extends AnyFunSuite {
+class AdmissionLifecycleSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -25,7 +25,6 @@ class AdmissionLifecycleSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def tmp(p: String): String = Files.createTempDirectory(p).toString
 
   private def pbDirs(dir: String): Seq[Int] = {
     val f = new java.io.File(dir)
@@ -149,7 +148,18 @@ class AdmissionLifecycleSpec extends AnyFunSuite {
       probe.select(col("doc_id"),
         graft.functions.TextFunctions.wordNgramsUdf(3)(col("text")).as("shingles")),
       64, 32, 2)
-    val touched = AdmissionStore.touchedBuckets(banded, col("bucket"), k2)
+    // the touched set a gate reads: observed on the checkpoint that
+    // materialises the keys, and exactly the distinct pb set of those
+    // keys under the store's stamped K
+    val (keys, read) = AdmissionStore.observeTouched(banded, col("bucket"),
+      bands, banded.schema)
+    keys.localCheckpoint()
+    val touched = read.get.buckets
+    val distinctPb = banded.select(AdmissionStore.pb(col("bucket"), k2))
+      .distinct().collect().map(_.getInt(0))
+    assert(read.get.k == k2)
+    assert(touched.sorted == distinctPb.toSeq.sorted,
+      s"observed $touched, distinct ${distinctPb.toSeq}")
     val pruned = filesRead(AdmissionStore.readTouched(spark, bands, touched))
     assert(pruned < partFiles(bands),
       s"no pruning after re-bucket ($pruned of ${partFiles(bands)})")

@@ -16,7 +16,7 @@ import graft.streaming.{AdmissionStore, NearDupAdmission}
   * r17 byte-carry (the width signal without a per-batch store walk),
   * the epoch-replacement aside, and the structural `_PBK` recovery.
   */
-class AdmissionMaintenanceSpec extends AnyFunSuite {
+class AdmissionMaintenanceSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -24,7 +24,6 @@ class AdmissionMaintenanceSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def tmp(p: String): String = Files.createTempDirectory(p).toString
 
   private def lockOf(table: String) = Paths.get(s"${table}_maint.lock")
 
@@ -201,13 +200,13 @@ class AdmissionMaintenanceSpec extends AnyFunSuite {
     val table = tmp("maint_bytes") + "/bands"
     AdmissionStore.writeEpoch(bandRow("b0", 0L), col("bucket"), table, 0L)
     val sig1 = AdmissionStore.writeEpoch(bandRow("b1", 1L), col("bucket"),
-      table, 1L)
+      table, 1L).get
     assert(sig1.storeBytes == diskBytesUnderEpochs(table),
       s"carry ${sig1.storeBytes} != walk ${diskBytesUnderEpochs(table)}")
     // a RETRY of epoch 1 replaces, not adds: the carry subtracts the
     // replaced epoch's bytes
     val sig1r = AdmissionStore.writeEpoch(bandRow("b1", 1L), col("bucket"),
-      table, 1L)
+      table, 1L).get
     assert(sig1r.storeBytes == diskBytesUnderEpochs(table),
       s"retry double-counted: ${sig1r.storeBytes} vs ${diskBytesUnderEpochs(table)}")
     // crashed-write staged debris is invisible to the signal even across
@@ -226,8 +225,37 @@ class AdmissionMaintenanceSpec extends AnyFunSuite {
     // and a torn/deleted cell self-heals on the next write
     Files.deleteIfExists(Paths.get(s"$table/_BYTES"))
     val sig3 = AdmissionStore.writeEpoch(bandRow("b3", 3L), col("bucket"),
-      table, 3L)
+      table, 3L).get
     assert(sig3.storeBytes == diskBytesUnderEpochs(table))
+  }
+
+  test("an empty epoch publishes nothing: no epoch dir, no staged debris, pruned reads unaffected") {
+    import spark.implicits._
+    val table = tmp("maint_empty") + "/bands"
+    val stored = bandRow("b0", 0L).schema
+    def prunedRead(keys: Seq[String]): Option[Set[(String, Long)]] = {
+      val k = keys.toDF("bucket")
+      val (cp, read) = AdmissionStore.observeTouched(k, col("bucket"), table, stored)
+      cp.localCheckpoint()
+      read.map(_.read(spark).select("bucket", "doc_id").collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSet)
+    }
+    def entries = Option(new java.io.File(table).list()).map(_.toSet).getOrElse(Set.empty)
+    // a fresh table whose first epoch is empty stays a store with no epochs
+    assert(AdmissionStore.writeEpoch(bandRow("b0", 0L).limit(0), col("bucket"),
+      table, 0L).isEmpty)
+    assert(!entries.exists(n => n.startsWith("epoch=") || n.startsWith(".epoch_stage_")),
+      s"empty first epoch left $entries")
+    assert(prunedRead(Seq("b0")).isEmpty)
+    // after a real epoch, an empty one adds no dir and changes no read
+    assert(AdmissionStore.writeEpoch(bandRow("b0", 0L), col("bucket"), table, 0L).nonEmpty)
+    val before = prunedRead(Seq("b0", "b1"))
+    assert(before.contains(Set(("b0", 0L))), s"$before")
+    assert(AdmissionStore.writeEpoch(bandRow("b1", 1L).limit(0), col("bucket"),
+      table, 1L).isEmpty)
+    assert(!entries.contains("epoch=1") && !entries.exists(_.startsWith(".epoch_stage_")),
+      s"empty epoch left $entries")
+    assert(prunedRead(Seq("b0", "b1")) == before)
   }
 
   test("epoch replacement is recoverable mid-dance: the old-aside restores on the next gate read") {
@@ -273,8 +301,8 @@ class AdmissionMaintenanceSpec extends AnyFunSuite {
     // reads fail loudly while the stamp is gone (unchanged contract)
     import spark.implicits._
     intercept[IllegalStateException] {
-      AdmissionStore.readPruned(spark, table,
-        Seq("b0").toDF("bucket"), col("bucket")).collect()
+      val keys = Seq("b0").toDF("bucket")
+      AdmissionStore.observeTouched(keys, col("bucket"), table, keys.schema)
     }
     // the advertised recovery now actually works: compact/maintain
     // re-derive the stamp from the agreeing per-epoch markers

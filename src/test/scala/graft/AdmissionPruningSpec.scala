@@ -18,7 +18,7 @@ import graft.streaming.{AdmissionStore, EmbeddingAdmission, NearDupAdmission, Qu
   * lifecycle (sizing at first write, width signal, re-bucket) is
   * AdmissionLifecycleSpec's subject.
   */
-class AdmissionPruningSpec extends AnyFunSuite {
+class AdmissionPruningSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -26,8 +26,6 @@ class AdmissionPruningSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def tmp(p: String): String =
-    Files.createTempDirectory(p).toString
 
   /** The number of files the scan behind `df` actually read — executed
     * first, then the FileSourceScanExec's numFiles metric (a plain

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -11,7 +10,7 @@ import graft.streaming.CurationAdmission
   * quality gate, frozen-reference-LM gate, near-dup gate, per-epoch
   * audit accounting, idempotent retries.
   */
-class CurationAdmissionSpec extends AnyFunSuite {
+class CurationAdmissionSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -20,6 +19,10 @@ class CurationAdmissionSpec extends AnyFunSuite {
     .getOrCreate()
 
   private val corpus = "/root/testdata/sf0.001"
+
+  /** Spark jobs of one steady-state micro-batch with all five gates
+    * armed (the job-budget test's second epoch). */
+  private val JobsPerBatch = 37
 
   // a doc whose quality is high (>= 20 alpha tokens, no punctuation,
   // stopword-rich) but whose bigrams are ALL absent from the reference
@@ -45,6 +48,10 @@ class CurationAdmissionSpec extends AnyFunSuite {
     (lm, cuts, punk)
   }
 
+  /** The references bound the way a stream binds them at start. */
+  private def bound(ref: String, bench: Option[String] = None) =
+    CurationAdmission.Reference.load(spark, ref, bench)
+
   /** Driver-side replay of the LM gate's per-doc score. */
   private def scoreWith(lm: Map[String, Double], punk: Double)(
       text: String): Option[Double] = {
@@ -69,10 +76,10 @@ class CurationAdmissionSpec extends AnyFunSuite {
   }
 
   test("funnel gates fire by reason, audit conserves, retry is idempotent") {
-    val ref = Files.createTempDirectory("cur_ref").toString
-    val store = Files.createTempDirectory("cur_store").toString
-    val kept = Files.createTempDirectory("cur_kept").toString
-    val audit = Files.createTempDirectory("cur_audit").toString
+    val ref = tmp("cur_ref")
+    val store = tmp("cur_store")
+    val kept = tmp("cur_kept")
+    val audit = tmp("cur_audit")
 
     CurationAdmission.buildReference(spark, corpus, ref)
     assert(spark.read.parquet(s"$ref/lm").count() > 0)
@@ -105,7 +112,7 @@ class CurationAdmissionSpec extends AnyFunSuite {
       r.getAs[String]("lang"), r.getAs[String]("text"))).toSeq ++
       Seq((9001L, "en", junk), (9002L, "en", nonsense))
     val row0 = CurationAdmission.admit(batch0.toDF("doc_id", "lang", "text"),
-      0L, ref, store, kept, audit)
+      0L, bound(ref), store, kept, audit)
     assert(row0.getAs[Long]("n_in") == 5)
     assert(row0.getAs[Long]("drop_quality") == 1, row0.toString)
     assert(row0.getAs[Long]("drop_lm") == 1, row0.toString)
@@ -141,7 +148,7 @@ class CurationAdmissionSpec extends AnyFunSuite {
       (fresh.head.getAs[Long]("doc_id"), fresh.head.getAs[String]("lang"),
         fresh.head.getAs[String]("text")))
     val row1 = CurationAdmission.admit(batch1.toDF("doc_id", "lang", "text"),
-      1L, ref, store, kept, audit)
+      1L, bound(ref), store, kept, audit)
     assert(row1.getAs[Long]("drop_dedup") == 1, row1.toString)
     // an exact clone is attributed to DEDUP, not the quote gate (the
     // batch funnel's first-gate-catches order)
@@ -178,7 +185,7 @@ class CurationAdmissionSpec extends AnyFunSuite {
     val (qlang, snippet) = quoteFixture.get
     val row2 = CurationAdmission.admit(
       Seq((9200L, qlang, snippet)).toDF("doc_id", "lang", "text"),
-      2L, ref, store, kept, audit)
+      2L, bound(ref), store, kept, audit)
     assert(row2.getAs[Long]("drop_quote") == 1 &&
       row2.getAs[Long]("drop_dedup") == 0 &&
       row2.getAs[Long]("drop_quality") == 0 &&
@@ -195,7 +202,7 @@ class CurationAdmissionSpec extends AnyFunSuite {
 
     // retried epoch: identical audit, no double admission
     val row1r = CurationAdmission.admit(batch1.toDF("doc_id", "lang", "text"),
-      1L, ref, store, kept, audit)
+      1L, bound(ref), store, kept, audit)
     assert(row1r == row1, s"retry diverged: $row1r vs $row1")
     val keptAll = spark.read.parquet(kept).select("doc_id")
       .collect().map(_.getLong(0))
@@ -204,11 +211,11 @@ class CurationAdmissionSpec extends AnyFunSuite {
   }
 
   test("armed decontamination gate drops benchmark-quoting docs, attributed last") {
-    val ref = Files.createTempDirectory("cur5_ref").toString
-    val store = Files.createTempDirectory("cur5_store").toString
-    val kept = Files.createTempDirectory("cur5_kept").toString
-    val audit = Files.createTempDirectory("cur5_audit").toString
-    val deconRef = Files.createTempDirectory("cur5_decon").toString
+    val ref = tmp("cur5_ref")
+    val store = tmp("cur5_store")
+    val kept = tmp("cur5_kept")
+    val audit = tmp("cur5_audit")
+    val deconRef = tmp("cur5_decon")
     CurationAdmission.buildReference(spark, corpus, ref)
     val (lm, cuts, punk) = loadRef(ref)
     val score = scoreWith(lm, punk) _
@@ -245,8 +252,8 @@ class CurationAdmissionSpec extends AnyFunSuite {
       (9100L, e.getAs[String]("lang"), e.getAs[String]("text")),
       (9101L, g.getAs[String]("lang"), g.getAs[String]("text")))
       .toDF("doc_id", "lang", "text")
-    val row = CurationAdmission.admit(batch, 0L, ref, store, kept, audit,
-      benchRefPath = Some(deconRef))
+    val row = CurationAdmission.admit(batch, 0L, bound(ref, Some(deconRef)),
+      store, kept, audit)
     assert(row.getAs[Long]("n_in") == 2 &&
       row.getAs[Long]("drop_quality") == 0 &&
       row.getAs[Long]("drop_lm") == 0 &&
@@ -258,26 +265,26 @@ class CurationAdmissionSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet == Set(9101L))
 
     // retried epoch reproduces the verdicts
-    val rowR = CurationAdmission.admit(batch, 0L, ref, store, kept, audit,
-      benchRefPath = Some(deconRef))
+    val rowR = CurationAdmission.admit(batch, 0L, bound(ref, Some(deconRef)),
+      store, kept, audit)
     assert(rowR.getAs[Long]("drop_decon") == 1 &&
       rowR.getAs[Long]("admitted") == 1, rowR.toString)
 
     // unarmed control: the same batch through a four-gate funnel admits
     // BOTH docs — the fifth gate is the only thing separating them
-    val store2 = Files.createTempDirectory("cur5_store2").toString
-    val kept2 = Files.createTempDirectory("cur5_kept2").toString
-    val audit2 = Files.createTempDirectory("cur5_audit2").toString
-    val row2 = CurationAdmission.admit(batch, 0L, ref, store2, kept2, audit2)
+    val store2 = tmp("cur5_store2")
+    val kept2 = tmp("cur5_kept2")
+    val audit2 = tmp("cur5_audit2")
+    val row2 = CurationAdmission.admit(batch, 0L, bound(ref), store2, kept2, audit2)
     assert(row2.getAs[Long]("drop_decon") == 0 &&
       row2.getAs[Long]("admitted") == 2, row2.toString)
   }
 
   test("a batch dropped wholesale at dedup does not kill the funnel") {
-    val ref = Files.createTempDirectory("curw_ref").toString
-    val store = Files.createTempDirectory("curw_store").toString
-    val kept = Files.createTempDirectory("curw_kept").toString
-    val audit = Files.createTempDirectory("curw_audit").toString
+    val ref = tmp("curw_ref")
+    val store = tmp("curw_store")
+    val kept = tmp("curw_kept")
+    val audit = tmp("curw_audit")
     CurationAdmission.buildReference(spark, corpus, ref)
     val (lm, cuts, punk) = loadRef(ref)
     val score = scoreWith(lm, punk) _
@@ -291,22 +298,22 @@ class CurationAdmissionSpec extends AnyFunSuite {
     val doc = (pick.getAs[Long]("doc_id"), pick.getAs[String]("lang"),
       pick.getAs[String]("text"))
     val row0 = CurationAdmission.admit(Seq(doc).toDF("doc_id", "lang", "text"),
-      0L, ref, store, kept, audit)
+      0L, bound(ref), store, kept, audit)
     assert(row0.getAs[Long]("admitted") == 1, row0.toString)
     // epoch 1: NOTHING but exact clones of the admitted doc (pure
     // re-sends — routine in a deployed stream). Every doc drops at
-    // dedup, the kept epoch dir is file-less, and the funnel must
-    // account the epoch and carry on — not die reading it back
+    // dedup, the later gates see an empty survivor set, and the funnel
+    // must account the epoch and carry on
     val clones = Seq((8001L, doc._2, doc._3), (8002L, doc._2, doc._3))
     val row1 = CurationAdmission.admit(
-      clones.toDF("doc_id", "lang", "text"), 1L, ref, store, kept, audit)
+      clones.toDF("doc_id", "lang", "text"), 1L, bound(ref), store, kept, audit)
     assert(row1.getAs[Long]("n_in") == 2 &&
       row1.getAs[Long]("drop_dedup") == 2 &&
       row1.getAs[Long]("admitted") == 0, row1.toString)
     // and epoch 2 still works end-to-end after the empty epoch
     val row2 = CurationAdmission.admit(
       Seq((8003L, doc._2, doc._3)).toDF("doc_id", "lang", "text"),
-      2L, ref, store, kept, audit)
+      2L, bound(ref), store, kept, audit)
     assert(row2.getAs[Long]("drop_dedup") == 1 &&
       row2.getAs[Long]("admitted") == 0, row2.toString)
   }
@@ -314,10 +321,10 @@ class CurationAdmissionSpec extends AnyFunSuite {
   test("multi-epoch drive: conservation holds, clones stay blocked across compaction") {
     import spark.implicits._
     import graft.functions.TextFunctions._
-    val ref = Files.createTempDirectory("cur_ref3").toString
-    val store = Files.createTempDirectory("cur_store3").toString
-    val kept = Files.createTempDirectory("cur_kept3").toString
-    val audit = Files.createTempDirectory("cur_audit3").toString
+    val ref = tmp("cur_ref3")
+    val store = tmp("cur_store3")
+    val kept = tmp("cur_kept3")
+    val audit = tmp("cur_audit3")
     CurationAdmission.buildReference(spark, corpus, ref)
     val (lm, cuts, punk) = loadRef(ref)
     val score = scoreWith(lm, punk) _
@@ -346,7 +353,7 @@ class CurationAdmissionSpec extends AnyFunSuite {
         (if (e == 0) pool.head._1 else 50000L + e, pool.head._2, pool.head._3),
         (60000L + e, "en", junk))
       val row = CurationAdmission.admit(
-        batch.toDF("doc_id", "lang", "text"), e.toLong, ref, store, kept, audit)
+        batch.toDF("doc_id", "lang", "text"), e.toLong, bound(ref), store, kept, audit)
       val (nIn, dq, dl, dd, dquo, adm) = (row.getAs[Long]("n_in"),
         row.getAs[Long]("drop_quality"), row.getAs[Long]("drop_lm"),
         row.getAs[Long]("drop_dedup"), row.getAs[Long]("drop_quote"),
@@ -372,11 +379,11 @@ class CurationAdmissionSpec extends AnyFunSuite {
   test("streaming wrapper drives the funnel through foreachBatch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val ref = Files.createTempDirectory("cur_ref2").toString
-    val store = Files.createTempDirectory("cur_store2").toString
-    val kept = Files.createTempDirectory("cur_kept2").toString
-    val audit = Files.createTempDirectory("cur_audit2").toString
-    val ckpt = Files.createTempDirectory("cur_ckpt2").toString
+    val ref = tmp("cur_ref2")
+    val store = tmp("cur_store2")
+    val kept = tmp("cur_kept2")
+    val audit = tmp("cur_audit2")
+    val ckpt = tmp("cur_ckpt2")
     CurationAdmission.buildReference(spark, corpus, ref)
 
     // a clean doc under an UNKNOWN lang code: it passes quality but has
@@ -398,11 +405,104 @@ class CurationAdmissionSpec extends AnyFunSuite {
       a.getAs[Long]("drop_lm") == 2, a.toString)
   }
 
+  /** Spark jobs `body` starts, counted by a job tag on this thread and a
+    * listener that matches it. */
+  private def jobsOf[T](tag: String)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag))) n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.addJobTag(tag)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, n.get)
+    } finally { sc.removeJobTag(tag); sc.removeSparkListener(l) }
+  }
+
+  test("a micro-batch runs a pinned number of Spark jobs; the returned audit row is the persisted one") {
+    import spark.implicits._
+    import graft.functions.TextFunctions._
+    val ref = tmp("curj_ref"); val deconRef = tmp("curj_decon")
+    val store = tmp("curj_store"); val kept = tmp("curj_kept")
+    val audit = tmp("curj_audit")
+    CurationAdmission.buildReference(spark, corpus, ref)
+    val pool = Tables.documents(spark, corpus)
+      .filter(qualityScore(col("text")) >= 0.72)
+      .select("doc_id", "lang", "text").orderBy("doc_id").limit(9)
+      .as[(Long, String, String)].collect().toSeq
+    assert(pool.length == 9, "corpus no longer yields 9 quality docs")
+    // the planted benchmark doc: the eval suite is its text
+    graft.streaming.DecontaminationAdmission.buildReference(
+      Seq(pool(8)._3).toDF("text")
+        .select(explode(array_distinct(wordNgramsUdf(5)(col("text")))).as("g"))
+        .distinct(), deconRef)
+    val refs = bound(ref, Some(deconRef))
+    // epoch 0 creates the stores; epoch 1 is the steady state every
+    // later batch of a stream repeats: fresh docs, a clone of an epoch-0
+    // doc, junk and the planted doc, with every store read armed
+    val epoch0 = pool.take(4) :+ ((9001L, "en", junk))
+    val epoch1 = pool.slice(4, 9) ++ Seq((9100L, pool(0)._2, pool(0)._3),
+      (9002L, "en", junk))
+    jobsOf("curation-epoch-0") {
+      CurationAdmission.admit(epoch0.toDF("doc_id", "lang", "text"), 0L, refs,
+        store, kept, audit)
+    }
+    val (row, jobs) = jobsOf("curation-epoch-1") {
+      CurationAdmission.admit(epoch1.toDF("doc_id", "lang", "text"), 1L, refs,
+        store, kept, audit)
+    }
+    assert(row.getAs[Long]("n_in") == 7 && row.getAs[Long]("drop_quality") >= 1 &&
+      row.getAs[Long]("drop_dedup") + row.getAs[Long]("drop_lm") >= 1, row.toString)
+    // every count is an observation on a checkpoint the funnel runs
+    // anyway, the references are bound, the near-dup survivors arrive in
+    // memory: a reintroduced count(), re-read or schema inference shows
+    // up here as a higher number
+    assert(jobs == JobsPerBatch, s"a micro-batch ran $jobs Spark jobs, pinned $JobsPerBatch")
+
+    // the row admit returns (built on the driver) is the row it persisted
+    val persisted = CurationAdmission.readAudits(spark, audit)
+      .filter(col("epoch") === 1L).collect()
+    assert(persisted.length == 1)
+    val p = persisted.head
+    assert(row.schema.fieldNames.toSet == p.schema.fieldNames.toSet,
+      s"${row.schema} vs ${p.schema}")
+    row.schema.fields.foreach { f =>
+      assert(f.dataType == p.schema(f.name).dataType, s"type of ${f.name}")
+      assert(row.getAs[Any](f.name) == p.getAs[Any](f.name), s"value of ${f.name}")
+    }
+  }
+
+  test("references are bound at stream start: a rewrite under a bound reference fails loudly") {
+    import spark.implicits._
+    val ref = tmp("curb_ref")
+    CurationAdmission.buildReference(spark, corpus, ref)
+    val refs = bound(ref)
+    val batch = Seq((9001L, "en", nonsense)).toDF("doc_id", "lang", "text")
+    CurationAdmission.buildReference(spark, corpus, ref) // rewritten in place
+    val e = intercept[Exception] {
+      CurationAdmission.admit(batch, 0L, refs, tmp("curb_store"),
+        tmp("curb_kept"), tmp("curb_audit"))
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => s"${t.getClass.getName}: ${t.getMessage}").mkString(" / ")
+    assert(chain.contains("FILE_NOT_EXIST") || chain.contains("FileNotFound"), chain)
+    // a fresh binding reads the rewritten model
+    val row = CurationAdmission.admit(batch, 0L, bound(ref), tmp("curb_store"),
+      tmp("curb_kept"), tmp("curb_audit"))
+    assert(row.getAs[Long]("drop_lm") == 1, row.toString)
+  }
+
   test("readAudits reads mixed pre-/post-store_k audit tables under the pinned schema") {
     // pre-r16 audit epochs have no store_k column; a root read's
     // inferred schema then depends on which file wins — readAudits pins
     // the schema and defaults the missing column to 0 (r16 ADVICE)
-    val audit = Files.createTempDirectory("cur_audit3").toString
+    val audit = tmp("cur_audit3")
     def row(storeK: Option[Int]) = {
       val base = spark.range(1).select(
         lit(10L).as("n_in"), lit(1L).as("drop_quality"),

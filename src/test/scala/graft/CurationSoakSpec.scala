@@ -37,7 +37,7 @@ import graft.streaming.{AdmissionStore, CurationAdmission, DecontaminationAdmiss
   *   - retention genuinely deleted consumed segments and the stream
   *     still lost nothing.
   */
-class CurationSoakSpec extends AnyFunSuite {
+class CurationSoakSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -65,12 +65,12 @@ class CurationSoakSpec extends AnyFunSuite {
   }
 
   test("composed curation funnel survives maintenance churn and kill/resume across ~48 micro-batches") {
-    val ref = Files.createTempDirectory("soak_ref").toString
-    val store = Files.createTempDirectory("soak_store").toString
-    val kept = Files.createTempDirectory("soak_kept").toString
-    val audit = Files.createTempDirectory("soak_audit").toString
-    val ckpt = Files.createTempDirectory("soak_ckpt").toString
-    val topic = Files.createTempDirectory("soak_topic")
+    val ref = tmp("soak_ref")
+    val store = tmp("soak_store")
+    val kept = tmp("soak_kept")
+    val audit = tmp("soak_audit")
+    val ckpt = tmp("soak_ckpt")
+    val topic = java.nio.file.Paths.get(tmp("soak_topic"))
 
     CurationAdmission.buildReference(spark, corpus, ref)
 
@@ -124,7 +124,7 @@ class CurationSoakSpec extends AnyFunSuite {
           (f5.isEmpty || (f5 & e5).size.toDouble / f5.size <= 0.02)
         }
     }.getOrElse(fail("corpus tail no longer yields a decon fixture"))
-    val deconRef = Files.createTempDirectory("soak_decon").toString
+    val deconRef = tmp("soak_decon")
     locally {
       import spark.implicits._
       import graft.functions.TextFunctions.wordNgramsUdf

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,7 +11,7 @@ import graft.streaming.DecontaminationAdmission
   * pass, retried epochs are idempotent, audits conserve, and a new eval
   * suite joins the frozen bitset through the refresh lifecycle.
   */
-class DecontaminationAdmissionSpec extends AnyFunSuite {
+class DecontaminationAdmissionSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -42,10 +41,10 @@ class DecontaminationAdmissionSpec extends AnyFunSuite {
   test("decontamination gate: quoting docs drop, clean/gramless pass, refresh extends the set") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val ref = Files.createTempDirectory("dadm_ref").toString
-    val kept = Files.createTempDirectory("dadm_kept").toString
-    val audit = Files.createTempDirectory("dadm_audit").toString
-    val ckpt = Files.createTempDirectory("dadm_ckpt").toString
+    val ref = tmp("dadm_ref")
+    val kept = tmp("dadm_kept")
+    val audit = tmp("dadm_audit")
+    val ckpt = tmp("dadm_ckpt")
     DecontaminationAdmission.buildReference(gramsOf(evalItem), ref)
 
     // doc 1: quotes 15 consecutive eval-item tokens inside filler — its

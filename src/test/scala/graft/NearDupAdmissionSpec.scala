@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,7 +9,7 @@ import graft.streaming.NearDupAdmission
   * batch-1 docs (or lower-id batch-2 docs) must be dropped; novel docs
   * admitted; retried epochs idempotent.
   */
-class NearDupAdmissionSpec extends AnyFunSuite {
+class NearDupAdmissionSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -32,9 +31,9 @@ class NearDupAdmissionSpec extends AnyFunSuite {
   test("admission filter drops near-dups vs store and within batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val store = Files.createTempDirectory("ndup_store").toString
-    val kept = Files.createTempDirectory("ndup_kept").toString
-    val ckpt = Files.createTempDirectory("ndup_ckpt").toString
+    val store = tmp("ndup_store")
+    val kept = tmp("ndup_kept")
+    val ckpt = tmp("ndup_ckpt")
 
     val mem = MemoryStream[(Long, String)]
     val q = NearDupAdmission.stream(
@@ -84,8 +83,8 @@ class NearDupAdmissionSpec extends AnyFunSuite {
 
   test("hot-bucket cap also gates the batch-vs-store band join") {
     import spark.implicits._
-    val store = Files.createTempDirectory("ndup_hot_store").toString
-    val kept = Files.createTempDirectory("ndup_hot_kept").toString
+    val store = tmp("ndup_hot_store")
+    val kept = tmp("ndup_hot_kept")
     // epoch 0 admits a template cluster into the STORE: 30 IDENTICAL docs,
     // so every one of their band buckets deterministically holds all 30
     // entries (with the in-batch cap on, none pairs with another → all 30
@@ -107,8 +106,8 @@ class NearDupAdmissionSpec extends AnyFunSuite {
       s"hot-bucket store join was not capped (100 judged vs template): $keptIds")
     // control: without the cap the same doc IS recognized as a store dup
     // (epoch-0 control admits only doc 0; the rest drop as in-batch dups)
-    val store2 = Files.createTempDirectory("ndup_hot_store2").toString
-    val kept2 = Files.createTempDirectory("ndup_hot_kept2").toString
+    val store2 = tmp("ndup_hot_store2")
+    val kept2 = tmp("ndup_hot_kept2")
     NearDupAdmission.admit(template.toDF("doc_id", "text"), 0L, store2, kept2)
     NearDupAdmission.admit(
       Seq((100L, textX)).toDF("doc_id", "text"),

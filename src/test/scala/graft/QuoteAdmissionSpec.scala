@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.QuoteAdmission
@@ -10,7 +9,7 @@ import graft.streaming.QuoteAdmission
   * resolve greedy lower-id-wins, retries are idempotent, and compaction
   * preserves detection.
   */
-class QuoteAdmissionSpec extends AnyFunSuite {
+class QuoteAdmissionSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -30,8 +29,8 @@ class QuoteAdmissionSpec extends AnyFunSuite {
 
   test("quote gate: long quotes rejected, short pass, greedy in-batch, idempotent retry, compaction") {
     import spark.implicits._
-    val store = Files.createTempDirectory("graft_quote_store").toString
-    val keptP = Files.createTempDirectory("graft_quote_kept").toString
+    val store = tmp("graft_quote_store")
+    val keptP = tmp("graft_quote_kept")
 
     // epoch 0: two fully distinct 40-token docs — both admitted
     val baseWords = (0 until 40).map(w('a', _))
@@ -88,8 +87,8 @@ class QuoteAdmissionSpec extends AnyFunSuite {
     assert(epochs == Set(-1L), s"compaction left epochs: $epochs")
     // the fresh-checkpoint batchId-0 hazard: a new stream's FIRST batch
     // against the compacted store must still see every admitted hash
-    val store2 = Files.createTempDirectory("graft_quote_store_fresh").toString
-    val kept2 = Files.createTempDirectory("graft_quote_kept_fresh").toString
+    val store2 = tmp("graft_quote_store_fresh")
+    val kept2 = tmp("graft_quote_kept_fresh")
     // copy the compacted census as a pre-existing store for a new stream
     // — under the keyed layout a hand-built store must carry the pb
     // partition dirs AND the _PBK stamp (at the SAME fan-out the copied
@@ -113,8 +112,8 @@ class QuoteAdmissionSpec extends AnyFunSuite {
 
   test("compact is crash-safe: interrupted windows fail loud and recover, never open") {
     import spark.implicits._
-    val store = Files.createTempDirectory("graft_quote_store_crash").toString
-    val keptP = Files.createTempDirectory("graft_quote_kept_crash").toString
+    val store = tmp("graft_quote_store_crash")
+    val keptP = tmp("graft_quote_kept_crash")
     val fs = org.apache.hadoop.fs.FileSystem
       .get(spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
@@ -174,9 +173,9 @@ class QuoteAdmissionSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val store = Files.createTempDirectory("graft_quote_store3").toString
-    val keptP = Files.createTempDirectory("graft_quote_kept3").toString
-    val ckpt = Files.createTempDirectory("graft_quote_ckpt").toString
+    val store = tmp("graft_quote_store3")
+    val keptP = tmp("graft_quote_kept3")
+    val ckpt = tmp("graft_quote_ckpt")
     val fill = (c: Char, n: Int) => (0 until n).map(w(c, _))
     val baseWords = (0 until 40).map(w('a', _))
 
@@ -198,8 +197,8 @@ class QuoteAdmissionSpec extends AnyFunSuite {
 
   test("quote gate matches q117 semantics: runs may stitch different owners") {
     import spark.implicits._
-    val store = Files.createTempDirectory("graft_quote_store2").toString
-    val keptP = Files.createTempDirectory("graft_quote_kept2").toString
+    val store = tmp("graft_quote_store2")
+    val keptP = tmp("graft_quote_kept2")
     // two admitted docs contribute ADJACENT halves of what a later doc
     // quotes: doc 1 owns tokens 0..19, doc 2 owns 10..29 of the same
     // word sequence, so every window of the 30-token span exists in the

@@ -92,9 +92,8 @@ class SemanticAdmissionSpec extends AnyFunSuite {
     assert(e.getMessage.contains("retrained"), e.getMessage)
 
     // an EMPTY epoch (or one admitting nothing) must not poison the
-    // store: Spark writes file-less dirs for empty frames, and a later
-    // store read would die on schema inference — the gate skips the
-    // append instead, and keeps working
+    // store: the empty epoch publishes nothing (AdmissionStore.writeEpoch),
+    // and the gate keeps working
     SemanticAdmission.admit(
       Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding"),
       5L, centroids, store, kept)
