@@ -121,8 +121,6 @@ object GeoFunctions {
     SemiMinor * a * (sigma - deltaSigma)
   }
 
-  val vincentyUdf = udf(vincentyM _)
-
   private val Base32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 
   /** Standard geohash encode (base32), precision in characters. */
@@ -175,9 +173,6 @@ object GeoFunctions {
   }
 
   val geohashEncodeUdf = udf(geohashEncodeScala _)
-  val geohashDecodeUdf = udf { (gh: String) =>
-    val (lat, lng) = geohashDecodeScala(gh); Array(lat, lng)
-  }
 
   def geohashEncode(lat: Column, lng: Column, precision: Int): Column =
     geohashEncodeUdf(lat, lng, lit(precision))

@@ -60,12 +60,6 @@ object TextFunctions {
       transform(sequence(lit(1), size(toks) - lit(n - 1)),
         i => concat_ws(" ", slice(toks, i, lit(n)))))
 
-  /** Reference tokenizer: word 2-grams ++ 3-grams over the cleaned text. */
-  def refTokenize(c: Column): Column = {
-    val t = tokens(c)
-    concat(wordNgrams(t, 2), wordNgrams(t, 3))
-  }
-
   /** Compiled twin of `tokens(c)` for the per-row UDF paths: lowercase,
     * strip to [a-z ], split on whitespace runs, drop empties — in ONE
     * char scan. The regex pipeline it replaces
@@ -175,13 +169,6 @@ object TextFunctions {
     val nonSpace = length(regexp_replace(c, "\\s", ""))
     when(nonSpace === 0, 0.0).otherwise(
       length(regexp_replace(c, "[A-Za-z0-9\\s]", "")) / nonSpace.cast("double"))
-  }
-
-  /** Mean token length over whitespace tokens. */
-  def meanTokenLen(c: Column): Column = {
-    val t = tokens(c)
-    when(size(t) === 0, 0.0).otherwise(
-      aggregate(t, lit(0L), (acc, x) => acc + length(x)) / size(t).cast("double"))
   }
 
   /** Composite document quality score in [0,1]: rewards mid-length docs,
@@ -380,8 +367,6 @@ object TextFunctions {
   def simhash64(text: String): Long =
     simhash64FromTokens(tokenizeScala(text))
 
-  val simhashUdf = udf(simhash64 _)
-  val simhashFromTokensUdf = udf(simhash64FromTokens _)
 
   /** Null (dropped) for zero-token docs instead of a separate size()
     * filter: keeps the tokenize → hash chain a SINGLE projection — a

@@ -60,7 +60,6 @@ object VectorKernels {
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression with Serializable {
 
-  private val floatArray = ArrayType(FloatType, containsNull = false)
   private def ok(t: DataType): Boolean = t match {
     case ArrayType(FloatType, _) => true
     case _ => false

@@ -1012,8 +1012,6 @@ object VectorQueries {
       else math.ceil(math.sqrt(cent.count().toDouble)).toInt
     val asVecs = cent.select(col("cell").as("vec_id"),
       col("centroid").as("embedding"))
-    def toSup(df: DataFrame) = df
-      .select(col("vec_id").as("super"), col("embedding").as("scentroid"))
     def superStep(sup: DataFrame): DataFrame = {
       val assigned = assignCellsExact(asVecs,
         sup.select(col("super").as("cell"), col("scentroid").as("centroid")))

@@ -197,6 +197,15 @@ object LedgerSource {
   def entriesBetween(ledgers: Seq[LedgerInfo], from: Cursor, to: Cursor): Long =
     backlog(ledgers, from) - backlog(ledgers, to)
 
+  /** The cursor at a partition's first retained entry (0:0 when empty). */
+  def firstCursor(ledgers: Seq[LedgerInfo]): Cursor =
+    Cursor(ledgers.headOption.map(_.ledgerId).getOrElse(0L), 0L)
+
+  /** The cursor just past a partition's last entry (0:0 when empty). */
+  def endCursor(ledgers: Seq[LedgerInfo]): Cursor =
+    ledgers.lastOption.map(l => Cursor(l.ledgerId, l.entries))
+      .getOrElse(Cursor(0L, 0L))
+
   /** Partition set a v1 pushed filter restricts `partition` to, when the
     * filter is EXACTLY a partition-dir predicate (equality / IN / null
     * tests on the partition column). Only these are accepted for pushdown:
@@ -309,6 +318,25 @@ object LedgerSource {
       (pushed._2 ++ oHi).reduceOption(_ min _))
   }
 
+  /** A batch read's [from, to) cursor range per partition: the
+    * `startOffsets`/`endOffsets` reader options (a partition absent from
+    * them spans its first to its end cursor), trimmed to the publish
+    * window `bounds` from segment metadata. ONE definition for the
+    * aggregate scan's counts, the scan's size estimate and the planned
+    * splits, so the three always agree. */
+  final class CursorWindow(options: Map[String, String],
+      bounds: (Option[Long], Option[Long])) {
+    private val start =
+      options.get("startoffsets").map(LedgerOffset.parse(_).cursors)
+    private val end =
+      options.get("endoffsets").map(LedgerOffset.parse(_).cursors)
+    def apply(p: Int, ledgers: Seq[LedgerInfo]): (Cursor, Cursor) =
+      trimToPublishBounds(ledgers,
+        start.flatMap(_.get(p)).getOrElse(firstCursor(ledgers)),
+        end.flatMap(_.get(p)).getOrElse(endCursor(ledgers)),
+        bounds._1, bounds._2)
+  }
+
   /** Bytes on disk for a partition's segment files (metadata-only). */
   def partitionBytes(dir: Path, ledgers: Seq[LedgerInfo]): Long =
     ledgers.map { l =>
@@ -388,14 +416,9 @@ object LedgerSource {
     val rows = listPartitions(root).map { p =>
       val dir = root.resolve(s"partition-$p")
       val ledgers = listLedgers(dir)
-      val bytes = ledgers.map { l =>
-        try Files.size(dir.resolve(s"ledger-${l.ledgerId}.log"))
-        catch { case _: Throwable => 0L }
-      }.sum
-      InternalRow(p, ledgers.size,
-        ledgers.headOption.map(_.ledgerId).getOrElse(0L),
+      InternalRow(p, ledgers.size, firstCursor(ledgers).ledgerId,
         ledgers.lastOption.map(_.ledgerId).getOrElse(0L),
-        ledgers.map(_.entries).sum, bytes)
+        ledgers.map(_.entries).sum, partitionBytes(dir, ledgers))
     }
     LocalRelation(out, rows, isStreaming = false)
   }
@@ -421,10 +444,8 @@ object LedgerSource {
       AttributeReference("lag", LongType, nullable = false)())
     val rows = listPartitions(root).map { p =>
       val ledgers = listLedgers(root.resolve(s"partition-$p"))
-      val c = cursors.getOrElse(p,
-        Cursor(ledgers.headOption.map(_.ledgerId).getOrElse(0L), 0L))
-      val end = ledgers.lastOption.map(l => Cursor(l.ledgerId, l.entries))
-        .getOrElse(Cursor(0L, 0L))
+      val c = cursors.getOrElse(p, firstCursor(ledgers))
+      val end = endCursor(ledgers)
       InternalRow(p, c.ledgerId, c.entryId, end.ledgerId, end.entryId,
         backlog(ledgers, c))
     }
@@ -785,27 +806,20 @@ class LedgerAggScan(path: String, options: Map[String, String],
   override def toBatch(): Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] = {
       val root = toLocalPath(path)
-      val startOpt = options.get("startoffsets").map(LedgerOffset.parse(_).cursors)
-      val endOpt = options.get("endoffsets").map(LedgerOffset.parse(_).cursors)
       // startPublishUs/endPublishUs are HARD read bounds even with no
       // Catalyst filter in the plan (publish_us FILTERS stay residual, so
       // Spark never pushes an aggregate over them — the option path is the
       // only way a time window reaches this scan). Counts must match the
       // rows the trimmed row scan returns: same mergedPublishBounds window,
       // same metadata trim as LedgerBatchRead.
-      val bounds = mergedPublishBounds(options, (None, None))
+      val window = new CursorWindow(options,
+        mergedPublishBounds(options, (None, None)))
       val all = listPartitions(root)
       val parts = staticAllowed.fold(all)(s => all.filter(s))
       LedgerSource.lastPlannedPartitions.put(path, parts)
       val perPart = parts.map { p =>
         val ledgers = listLedgers(root.resolve(s"partition-$p"))
-        val from0 = startOpt.flatMap(_.get(p)).getOrElse(
-          Cursor(ledgers.headOption.map(_.ledgerId).getOrElse(0L), 0L))
-        val to0 = endOpt.flatMap(_.get(p)).getOrElse(
-          ledgers.lastOption.map(l => Cursor(l.ledgerId, l.entries))
-            .getOrElse(Cursor(0L, 0L)))
-        val (from, to) =
-          trimToPublishBounds(ledgers, from0, to0, bounds._1, bounds._2)
+        val (from, to) = window(p, ledgers)
         p -> math.max(0L, entriesBetween(ledgers, from, to))
       }
       val rows: Seq[(Int, Long)] =
@@ -847,7 +861,7 @@ class LedgerScan(path: String, options: Map[String, String],
     extends Scan
     with SupportsReportPartitioning with SupportsReportOrdering
     with SupportsReportStatistics with SupportsRuntimeFiltering {
-  import LedgerSource.{Cursor, LedgerOffset, entriesBetween, listLedgers, partitionBytes, trimToPublishBounds}
+  import LedgerSource.{CursorWindow, entriesBetween, listLedgers, partitionBytes}
   // pushed publish_us filters ∩ the startPublishUs/endPublishUs reader
   // options — one effective window drives the trim, the stats, and the
   // planned splits
@@ -948,24 +962,17 @@ class LedgerScan(path: String, options: Map[String, String],
     */
   override def estimateStatistics(): Statistics = {
     val root = LedgerSource.toLocalPath(path)
-    val startOpt = options.get("startoffsets").map(LedgerOffset.parse(_).cursors)
-    val endOpt = options.get("endoffsets").map(LedgerOffset.parse(_).cursors)
+    // publish_us bounds narrow the estimate the same way they narrow
+    // the planned splits — a time-sliced lookup sizes (and broadcasts)
+    // like the slice it reads, not like the whole topic
+    val window = new CursorWindow(options, effBounds)
     var rows = 0L
     var bytes = 0L
     partitionSnapshot.foreach { p =>
       val dir = root.resolve(s"partition-$p")
       val ledgers = listLedgers(dir)
       val total = ledgers.map(_.entries).sum
-      val from0 = startOpt.flatMap(_.get(p)).getOrElse(
-        Cursor(ledgers.headOption.map(_.ledgerId).getOrElse(0L), 0L))
-      val to0 = endOpt.flatMap(_.get(p)).getOrElse(
-        ledgers.lastOption.map(l => Cursor(l.ledgerId, l.entries))
-          .getOrElse(Cursor(0L, 0L)))
-      // publish_us bounds narrow the estimate the same way they narrow
-      // the planned splits — a time-sliced lookup sizes (and broadcasts)
-      // like the slice it reads, not like the whole topic
-      val (from, to) =
-        trimToPublishBounds(ledgers, from0, to0, effBounds._1, effBounds._2)
+      val (from, to) = window(p, ledgers)
       val range = math.max(0L, entriesBetween(ledgers, from, to))
       val dirBytes = partitionBytes(dir, ledgers)
       rows += range
@@ -1052,8 +1059,11 @@ class LedgerBatchRead(path: String, options: Map[String, String],
     partitionSnapshot.getOrElse(listPartitions(root))
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val startOpt = options.get("startoffsets").map(LedgerOffset.parse(_).cursors)
-    val endOpt = options.get("endoffsets").map(LedgerOffset.parse(_).cursors)
+    // the time-index seek: publish_us bounds narrow [from, to) from
+    // metadata before anything is allocated — trim-then-allocate is
+    // also the correct filter-below-limit order, though a residual
+    // time filter blocks limit pushdown so the two never co-occur
+    val window = new CursorWindow(options, tsBounds)
     val locations = executorLocations()
     val parts = partitions()
     LedgerSource.lastPlannedPartitions.put(path, parts)
@@ -1072,17 +1082,7 @@ class LedgerBatchRead(path: String, options: Map[String, String],
     parts.foreach { p =>
       if (consumed < limitPos) {
         val ledgers = listLedgers(root.resolve(s"partition-$p"))
-        val from0 = startOpt.flatMap(_.get(p)).getOrElse(
-          Cursor(ledgers.headOption.map(_.ledgerId).getOrElse(0L), 0L))
-        val to0 = endOpt.flatMap(_.get(p)).getOrElse(
-          ledgers.lastOption.map(l => Cursor(l.ledgerId, l.entries))
-            .getOrElse(Cursor(0L, 0L)))
-        // the time-index seek: publish_us bounds narrow [from, to) from
-        // metadata before anything is allocated — trim-then-allocate is
-        // also the correct filter-below-limit order, though a residual
-        // time filter blocks limit pushdown so the two never co-occur
-        val (from, to) =
-          trimToPublishBounds(ledgers, from0, to0, tsBounds._1, tsBounds._2)
+        val (from, to) = window(p, ledgers)
         val avail = math.max(0L, entriesBetween(ledgers, from, to))
         val winStart = math.max(consumed, offsetPos)
         val winEnd = math.min(consumed + avail, limitPos)
@@ -1142,15 +1142,10 @@ class LedgerMicroBatchStream(path: String, options: Map[String, String],
       asLedgerOffset(latestConsumedOffset.get()).cursors
     else Map.empty[Int, Cursor]
     val parts = partitions()
-    val backlogs = parts.map { p =>
-      val ledgers = listLedgers(partitionDir(p))
-      val c = consumed.getOrElse(p,
-        Cursor(ledgers.headOption.map(_.ledgerId).getOrElse(0L), 0L))
-      backlog(ledgers, c)
-    }
+    val b = backlogs(parts, consumed)
     Map(
-      "totalBacklog" -> backlogs.sum.toString,
-      "maxPartitionBacklog" -> (if (backlogs.isEmpty) "0" else backlogs.max.toString),
+      "totalBacklog" -> b.sum.toString,
+      "maxPartitionBacklog" -> (if (b.isEmpty) "0" else b.max.toString),
       "numPartitions" -> parts.size.toString,
       "batchEntries" -> lastBatchEntries.toString,
       "batchBytes" -> lastBatchBytes.toString,
@@ -1181,25 +1176,26 @@ class LedgerMicroBatchStream(path: String, options: Map[String, String],
   // scrapes. Registration is idempotent per (SparkEnv, topic) and a
   // missing SparkEnv is a no-op: metrics never fail a stream.
   locally {
-    def backlogs(): Seq[Long] = {
-      val consumed = lastPlannedEnd
-      partitions().map { p =>
-        val ledgers = listLedgers(partitionDir(p))
-        val c = consumed.getOrElse(p,
-          Cursor(ledgers.headOption.map(_.ledgerId).getOrElse(0L), 0L))
-        backlog(ledgers, c)
-      }
-    }
+    def planned(): Seq[Long] = backlogs(partitions(), lastPlannedEnd)
     org.apache.spark.metrics.source.GraftLedgerMetricsSource.register(path, Map(
-      "totalBacklog" -> (() => backlogs().sum),
+      "totalBacklog" -> (() => planned().sum),
       "maxPartitionBacklog" ->
-        (() => { val b = backlogs(); if (b.isEmpty) 0L else b.max }),
+        (() => { val b = planned(); if (b.isEmpty) 0L else b.max }),
       "numPartitions" -> (() => partitions().size.toLong),
       "batchEntries" -> (() => lastBatchEntries),
       "batchBytes" -> (() => lastBatchBytes),
       "decodeFailures" ->
         (() => Option(decodeFailures).map(_.value.longValue).getOrElse(0L))))
   }
+
+  /** Per-partition backlog behind `consumed` — a partition absent from
+    * it counts from its first entry. ONE definition for the progress
+    * metrics and the metrics-system gauges. */
+  private def backlogs(parts: Seq[Int], consumed: Map[Int, Cursor]): Seq[Long] =
+    parts.map { p =>
+      val ledgers = listLedgers(partitionDir(p))
+      backlog(ledgers, consumed.getOrElse(p, firstCursor(ledgers)))
+    }
 
   // Trigger.AvailableNow: snapshot the end target once, then keep emitting
   // rate-limited batches until every partition reaches it.
@@ -1211,13 +1207,8 @@ class LedgerMicroBatchStream(path: String, options: Map[String, String],
   override def reportLatestOffset(): Offset = allAvailableOffset()
 
   private def allAvailableOffset(): LedgerOffset =
-    LedgerOffset(partitions().map { p =>
-      val ledgers = listLedgers(partitionDir(p))
-      val end = ledgers.lastOption
-        .map(l => Cursor(l.ledgerId, l.entries))
-        .getOrElse(Cursor(0L, 0L))
-      p -> end
-    }.toMap)
+    LedgerOffset(partitions().map(p =>
+      p -> endCursor(listLedgers(partitionDir(p)))).toMap)
 
   private val root = toLocalPath(path)
   private val maxRate = options.getOrElse("maxrateperpartition", "1000").toDouble
@@ -1265,12 +1256,9 @@ class LedgerMicroBatchStream(path: String, options: Map[String, String],
   override def initialOffset(): Offset =
     LedgerOffset(partitions().map { p =>
       val ledgers = listLedgers(partitionDir(p))
-      val first = Cursor(ledgers.headOption.map(_.ledgerId).getOrElse(0L), 0L)
-      val default = startTime.fold(first) { t =>
-        val end = ledgers.lastOption.map(l => Cursor(l.ledgerId, l.entries))
-          .getOrElse(first)
-        trimToPublishBounds(ledgers, first, end, Some(t), None)._1
-      }
+      val first = firstCursor(ledgers)
+      val default = startTime.fold(first)(t =>
+        trimToPublishBounds(ledgers, first, endCursor(ledgers), Some(t), None)._1)
       p -> startOverride.getOrElse(p, default)
     }.toMap)
 
@@ -1283,24 +1271,16 @@ class LedgerMicroBatchStream(path: String, options: Map[String, String],
     val cur = asLedgerOffset(start).cursors
     val parts = partitions()
     val ledgersByPart = parts.map(p => p -> listLedgers(partitionDir(p))).toMap
-    val cursors = parts.map { p =>
-      val ledgers = ledgersByPart(p)
-      val c = cur.getOrElse(p,
-        Cursor(ledgers.headOption.map(_.ledgerId).getOrElse(0L), 0L))
-      p -> c
-    }.toMap
+    val cursors = parts.map(p =>
+      p -> cur.getOrElse(p, firstCursor(ledgersByPart(p)))).toMap
     val backlogs = parts.map(p => backlog(ledgersByPart(p), cursors(p)))
     // measured avg entry size per partition (bytes on disk / entries) feeds
     // the byte-rate cap — O(ledgers) driver-side metadata only
     val avgEntryBytes = parts.map { p =>
-      val dir = partitionDir(p)
       val ledgers = ledgersByPart(p)
       val entries = ledgers.map(_.entries).sum
       if (entries == 0) 1.0
-      else ledgers.map(l =>
-        try Files.size(dir.resolve(s"ledger-${l.ledgerId}.log")) catch {
-          case _: Throwable => 0L
-        }).sum.toDouble / entries
+      else partitionBytes(partitionDir(p), ledgers).toDouble / entries
     }
     val quotas = RateAllocator.maxEntriesPerPartition(
       estimatedRate, backlogs, batchIntervalMs,
@@ -1333,9 +1313,7 @@ class LedgerMicroBatchStream(path: String, options: Map[String, String],
         val ledgers = listLedgers(partitionDir(p))
         val n = entriesBetween(ledgers, from, to)
         val totalEntries = ledgers.map(_.entries).sum
-        val totalBytes = ledgers.map(l =>
-          try Files.size(partitionDir(p).resolve(s"ledger-${l.ledgerId}.log"))
-          catch { case _: Throwable => 0L }).sum
+        val totalBytes = partitionBytes(partitionDir(p), ledgers)
         batchEntries += n
         if (totalEntries > 0) batchBytes += (totalBytes.toDouble / totalEntries * n).toLong
         Some(LedgerInputPartition(path, p, from.ledgerId, from.entryId,

@@ -9,13 +9,17 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 /** Shared store plumbing for the admission gates' epoch-partitioned
   * tables. ONE copy of the write/read/compaction protocol (its checked
   * results exist precisely because a silent failure would empty a
-  * store) instead of a per-gate clone drifting apart.
-  * QuoteAdmission's census compaction deliberately does NOT delegate
-  * to [[compactEpochs]]: it folds into `epoch=-1` with a distinct-fold
-  * (see its doc), but it runs through this object's stamp, pb routing,
-  * [[recoverAside]]/[[publishSwap]] protocol, maintenance lock and
-  * marker-travels-with-the-publish convention — ONE aside name per
-  * table, whoever published.
+  * store) instead of a per-gate clone drifting apart. Each gate declares
+  * its tables once ([[Table]]: sub-dir, blocking key, compaction fold)
+  * and derives its compact/maintain from that list ([[Store]]).
+  *
+  * BASE EPOCH: compaction folds every table's epochs into ONE base
+  * epoch, `epoch=-1` ([[BaseEpoch]]). Batch ids are non-negative, so no
+  * batch can alias the base. An `epoch=0` base fails OPEN: batch 0 of a
+  * fresh checkpoint replaces `epoch=0` with its own rows ([[writeEpoch]]
+  * overwrites its deterministic epoch dir), every compacted row is gone,
+  * and the gate re-admits clones of them; the quote gate's same-epoch
+  * retry exclusion would also skip the whole base in that batch.
   *
   * BLOCKING-KEY LAYOUT (r15): every stateful gate's store table is
   * additionally partitioned by `pb = pmod(hash(blocking key), K)`
@@ -55,8 +59,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
   * MAINTENANCE LOCK (r17 — the r16 verdict's top item): the
   * "maintenance is offline, not concurrent with an active stream"
   * contract is ENFORCED, not prose. Every maintenance entry point
-  * ([[compactEpochs]], [[rebucket]], [[maintain]], QuoteAdmission's
-  * census fold) runs under a per-table lock file
+  * ([[compactEpochs]], [[rebucket]], [[maintain]]) runs under a
+  * per-table lock file
   * (`<table>_maint.lock`, atomic create — the ArtifactStore election
   * pattern), and [[writeEpoch]] checks that lock twice: at entry and
   * again immediately before its publish rename, throwing loudly while
@@ -106,6 +110,36 @@ private[graft] object AdmissionStore {
     * job is covered by the epoch-drift abort, never by silent loss. */
   private[graft] val MaintLockStaleMs: Long = 15 * 60 * 1000L
 
+  /** The epoch every compaction folds into — below every batch id (see
+    * the object doc's BASE EPOCH). */
+  val BaseEpoch: Long = -1L
+
+  /** One table of a gate's store, declared once: its dir under the store
+    * path, the blocking key its `pb` buckets route on, and the fold
+    * compaction applies to the accumulated rows (`epoch` dropped, `pb`
+    * kept) — the identity keeps every row. */
+  final case class Table(sub: String, key: Column,
+      fold: DataFrame => DataFrame = identity) {
+    def at(storePath: String): String = s"$storePath/$sub"
+  }
+
+  /** A gate's declared tables, and the offline maintenance derived from
+    * them. */
+  final case class Store(tables: Table*) {
+    /** Fold every table's epochs into the base epoch ([[compactEpochs]]). */
+    def compact(s: SparkSession, storePath: String): Unit =
+      tables.foreach(t => compactEpochs(s, storePath, t.sub, t.fold))
+
+    /** Compact, then re-bucket every table whose width signal fired, each
+      * on its own blocking key ([[AdmissionStore.maintain]]). */
+    def maintain(s: SparkSession, storePath: String,
+        targetBucketBytes: Long): Seq[LayoutReport] = {
+      compact(s, storePath)
+      tables.flatMap(t => AdmissionStore.maintain(s, t.at(storePath), t.key,
+        targetBucketBytes))
+    }
+  }
+
   /** Per-epoch width report — the store's analogue of the SRP frozen-
     * width / Bloom occupancy signals: carried back from every
     * [[writeEpoch]] so the stream's own reports say when the layout has
@@ -113,7 +147,6 @@ private[graft] object AdmissionStore {
     * degraded pruning. */
   final case class WidthSignal(table: String, k: Int, storeBytes: Long,
       targetBucketBytes: Long) {
-    def bucketBytes: Long = storeBytes / k
     def suggestedK: Int = chooseK(storeBytes, targetBucketBytes)
     def needsRebucket: Boolean = suggestedK > k
   }
@@ -258,8 +291,7 @@ private[graft] object AdmissionStore {
     * SURVIVES owns the table (exactly one — a clobbered write reads
     * back the winner's token and the loser throws), and ownership is
     * re-verified at every publish ([[guardEpochDrift]]) and at release
-    * (never delete a thief's fresh lock). Exposed to QuoteAdmission's
-    * census fold — the one maintenance flow outside this object. */
+    * (never delete a thief's fresh lock). */
   private[graft] def withMaintenance[T](s: SparkSession, table: String)
       (body: => T): T = {
     val fs = fsOf(s); val p = maintLockOf(table)
@@ -567,9 +599,8 @@ private[graft] object AdmissionStore {
   }
 
   /** Re-base the carried byte cell from the epoch-dir walk — the locked
-    * maintenance flows' post-publish step (QuoteAdmission's census fold
-    * included). */
-  private[graft] def rebaseBytes(s: SparkSession, table: String): Unit =
+    * maintenance flows' post-publish step. */
+  private def rebaseBytes(s: SparkSession, table: String): Unit =
     writeBytesCell(s, table, epochWalkBytes(s, table))
 
   /** Re-base walk: bytes summed over the live `epoch=*` dirs only —
@@ -798,10 +829,10 @@ private[graft] object AdmissionStore {
     s.read.parquet(path).filter(col("pb").isin(touched: _*))
   }
 
-  /** Stage a `_PBK` marker into a not-yet-published tree, so the marker
-    * travels with an aside-protocol publish (QuoteAdmission's census
-    * compact stages its own distinct-fold). */
-  private[graft] def stageMarker(s: SparkSession, stagedDir: String,
+  /** Stage a `_PBK` marker into a not-yet-published tree (the table stamp
+    * and every staged epoch dir's own), so the marker travels with the
+    * publish. */
+  private def stageMarker(s: SparkSession, stagedDir: String,
       k: Int): Unit = {
     val fs = fsOf(s)
     writeMarker(s, s"$stagedDir/_PBK", k)
@@ -820,7 +851,7 @@ private[graft] object AdmissionStore {
     * restore it). Reads refuse to run in the second state
     * ([[observeTouched]]), so the window is fail-loud, never
     * fail-open. */
-  private[graft] def recoverAside(s: SparkSession, live: String): Unit = {
+  private def recoverAside(s: SparkSession, live: String): Unit = {
     val fs = fsOf(s)
     val aside = hPath(asideOf(live)); val livePath = hPath(live)
     if (fs.exists(aside)) {
@@ -838,7 +869,7 @@ private[graft] object AdmissionStore {
     * already carries its own `_PBK`, so the marker travels WITH the
     * publish — no crash window leaves an intact keyed store whose
     * reads then claim it predates the layout. */
-  private[graft] def publishSwap(s: SparkSession, live: String, staged: String): Unit = {
+  private def publishSwap(s: SparkSession, live: String, staged: String): Unit = {
     val fs = fsOf(s)
     val livePath = hPath(live); val stagedPath = hPath(staged)
     val aside = hPath(asideOf(live))
@@ -858,8 +889,8 @@ private[graft] object AdmissionStore {
     * crashed or superseded maintainers — staging dirs are uuid-unique
     * per run, so under the held lock anything matching the prefix is
     * dead or doomed-to-abort), and re-derive a deleted table stamp from
-    * agreeing epoch markers. Exposed to QuoteAdmission's census fold. */
-  private[graft] def maintenancePrologue(s: SparkSession, table: String): Unit = {
+    * agreeing epoch markers. */
+  private def maintenancePrologue(s: SparkSession, table: String): Unit = {
     recoverAside(s, table)
     sweepEpochDebris(s, table)
     recoverTableStamp(s, table)
@@ -877,47 +908,48 @@ private[graft] object AdmissionStore {
       }
   }
 
-  /** Fold `storePath/sub`'s accumulated epoch partitions into a single
-    * base epoch. Only a genuinely-ABSENT live table is a no-op (nothing
-    * to compact — the exists check plus AnalysisException for the
-    * file-less-dir schema-inference case); any other read failure (IO
-    * error, corrupt footer, permissions) propagates, matching the
-    * object's fail-loud contract. The publish is the aside dance
-    * ([[publishSwap]]) with the layout marker staged INSIDE the tmp
-    * tree — guarded by the maintenance lock and the epoch-drift
-    * re-list, so a racing writeEpoch either fails loudly or aborts
-    * this publish; neither loses an epoch silently. */
-  def compactEpochs(s: SparkSession, storePath: String, sub: String): Unit = {
-    val live = s"$storePath/$sub"
-    withMaintenance(s, live) {
-      val fs = fsOf(s)
-      // uuid-unique staging tree: a superseded slow maintainer can never
-      // write into the tree THIS run publishes (its own guard aborts it;
-      // the prologue sweeps its abandoned tree next pass)
-      val tmp = s"$storePath/${sub}_compact_tmp-${java.util.UUID.randomUUID()}"
-      maintenancePrologue(s, live)
-      // snapshot BEFORE the read pins its file listing: an epoch landing
-      // in the gap is then in the fold-but-not-snapshot direction, which
-      // the drift guard ABORTS on — the other order would pass the guard
-      // while the staged fold silently lacked the raced epoch's rows
-      val snapshot = epochSet(s, live)
-      val df: Option[DataFrame] =
-        if (!fs.exists(hPath(live))) None
-        else try Some(s.read.parquet(live))
-        catch { case _: org.apache.spark.sql.AnalysisException => None }
-      df.foreach { frame =>
-        // preserve the blocking-key layout: pb is a discovered partition
-        // column of the accumulated epochs — the compacted base keeps it
-        val parts = frame.columns.filter(_ == "pb")
-        frame.drop("epoch").write.partitionBy(parts: _*)
-          .mode("overwrite").parquet(s"$tmp/epoch=0")
-        // the marker travels with the publish: stamp the staged tree FIRST
-        // (table stamp + the folded epoch dir's own marker)
-        if (parts.nonEmpty) stageMarker(s, tmp, requireLayout(s, live))
-        guardEpochDrift(s, live, snapshot, tmp)
-        publishSwap(s, live, tmp)
-        writeBytesCell(s, live, epochWalkBytes(s, live)) // re-base the carry
-      }
+  /** The ONE staged republish of every maintenance rewrite (run under the
+    * held lock): snapshot the epoch set, stage `rewrite` of the live rows
+    * into a uuid-unique sibling tree partitioned by (epoch, pb), stamp
+    * fan-out `k` into it, guard against lock loss and epoch drift, swap
+    * it in via the aside dance and re-base the byte carry. A racing
+    * writeEpoch either fails loudly against the lock or aborts this
+    * publish; neither loses an epoch silently. */
+  private def republish(s: SparkSession, table: String, kind: String,
+      k: Int)(rewrite: DataFrame => DataFrame): Unit = {
+    // snapshot BEFORE the read pins its file listing: an epoch landing
+    // in the gap is then in the staged-but-not-snapshot direction, which
+    // the drift guard ABORTS on — the other order would pass the guard
+    // while the staged tree silently lacked the raced epoch's rows
+    val snapshot = epochSet(s, table)
+    // uuid-unique staging tree: a superseded slow maintainer can never
+    // write into the tree THIS run publishes (its own guard aborts it;
+    // the prologue sweeps its abandoned tree next pass)
+    val tmp = s"${table}_${kind}_tmp-${java.util.UUID.randomUUID()}"
+    rewrite(s.read.parquet(table))
+      .write.partitionBy("epoch", "pb")
+      .mode("overwrite").parquet(tmp)
+    stageMarker(s, tmp, k) // the marker travels with the publish
+    guardEpochDrift(s, table, snapshot, tmp)
+    publishSwap(s, table, tmp)
+    rebaseBytes(s, table)
+  }
+
+  /** Fold `storePath/sub`'s accumulated epochs into the base epoch
+    * ([[BaseEpoch]]) through `fold`, preserving the blocking-key layout
+    * (`pb` is a discovered partition column of the epochs, kept as is).
+    * A table with no epochs is a no-op; any read failure propagates,
+    * matching the object's fail-loud contract. Runs as the table's
+    * elected single maintainer ([[republish]]). */
+  def compactEpochs(s: SparkSession, storePath: String, sub: String,
+      fold: DataFrame => DataFrame = identity): Unit = {
+    val table = s"$storePath/$sub"
+    withMaintenance(s, table) {
+      maintenancePrologue(s, table)
+      if (hasEpochs(s, table))
+        republish(s, table, "compact", requireLayout(s, table)) { rows =>
+          fold(rows.drop("epoch")).withColumn("epoch", lit(BaseEpoch))
+        }
     }
   }
 
@@ -927,13 +959,15 @@ private[graft] object AdmissionStore {
     * the elected single maintainer (lock + epoch-drift guard); a no-op
     * at the stamped K. */
   def rebucket(s: SparkSession, table: String, key: Column, k2: Int): Unit =
-    withMaintenance(s, table)(rebucketLocked(s, table, key, k2))
+    withMaintenance(s, table) {
+      maintenancePrologue(s, table)
+      rebucketLocked(s, table, key, k2)
+    }
 
   private def rebucketLocked(s: SparkSession, table: String, key: Column,
-      k2: Int, prologue: Boolean = true): Unit = {
+      k2: Int): Unit = {
     require(k2 > 0 && k2 <= MaxBuckets, s"fan-out $k2 out of range")
     val fs = fsOf(s)
-    if (prologue) maintenancePrologue(s, table)
     if (!fs.exists(hPath(table))) return
     val k = requireLayout(s, table)
     if (k2 == k) return
@@ -946,18 +980,9 @@ private[graft] object AdmissionStore {
       writeMarker(s, pbkPath(table).toString, k2)
       return
     }
-    // snapshot BEFORE the read pins its listing (see compactEpochs)
-    val snapshot = epochSet(s, table)
-    // uuid-unique staging tree (see compactEpochs)
-    val tmp = s"${table}_rebucket_tmp-${java.util.UUID.randomUUID()}"
-    s.read.parquet(table).drop("pb")
-      .withColumn("pb", pb(key, k2))
-      .write.partitionBy("epoch", "pb")
-      .mode("overwrite").parquet(tmp)
-    stageMarker(s, tmp, k2)
-    guardEpochDrift(s, table, snapshot, tmp)
-    publishSwap(s, table, tmp)
-    writeBytesCell(s, table, epochWalkBytes(s, table)) // re-base the carry
+    republish(s, table, "rebucket", k2) { rows =>
+      rows.drop("pb").withColumn("pb", pb(key, k2))
+    }
   }
 
   /** The growth lifecycle's maintenance arm: measure the store's width
@@ -974,11 +999,10 @@ private[graft] object AdmissionStore {
       else {
         // re-base the carry under the lock (the one full walk per
         // maintenance pass), so the decision never runs on a drifted cell
-        writeBytesCell(s, table, epochWalkBytes(s, table))
+        rebaseBytes(s, table)
         val sig = widthSignal(s, table, targetBucketBytes)
         if (sig.needsRebucket) {
-          // prologue already ran above — don't repeat its listings
-          rebucketLocked(s, table, key, sig.suggestedK, prologue = false)
+          rebucketLocked(s, table, key, sig.suggestedK)
           Some(LayoutReport(sig, rebucketed = true, k = sig.suggestedK))
         } else Some(LayoutReport(sig, rebucketed = false, k = sig.k))
       }

@@ -29,6 +29,12 @@ import graft.functions.expressions.VectorExpressions.{cosineSim, srpBucketExpr}
   */
 object EmbeddingAdmission {
 
+  // The store's two tables: vecs by vec_id (the verify join's key),
+  // buckets by the band key
+  private val Vecs = AdmissionStore.Table("vecs", col("vec_id"))
+  private val Buckets = AdmissionStore.Table("buckets", col("tb"))
+  private val tables = AdmissionStore.Store(Vecs, Buckets)
+
   /** Three OR-amplified band buckets per vector (independent plane sets
     * at offsets 0/16/32, as q62).
     */
@@ -64,7 +70,7 @@ object EmbeddingAdmission {
     // materialises its keys.
     val bandedRaw = bandedOf(vecs, bits)
     val (bandedObs, storeBucketsRead) = AdmissionStore.observeTouched(bandedRaw,
-      col("tb"), s"$storePath/buckets", storedBuckets(bandedRaw, vecs).schema)
+      Buckets.key, Buckets.at(storePath), storedBuckets(bandedRaw, vecs).schema)
     val banded = bandedObs.localCheckpoint()
 
     // skew guard judged on the combined store+batch bucket population —
@@ -93,7 +99,7 @@ object EmbeddingAdmission {
           // a vector never duplicates its own stored copy — retry safety
           .filter(col("vec_id") =!= col("sd"))
           .select(col("vec_id"), col("sd")).distinct()
-        val vecsTable = s"$storePath/vecs"
+        val vecsTable = Vecs.at(storePath)
         val (candObs, storeVecsRead) = AdmissionStore.observeTouched(candRaw,
           col("sd"), vecsTable, vecs.schema)
         // every epoch writes vecs before buckets: stored buckets without
@@ -129,40 +135,33 @@ object EmbeddingAdmission {
     // deterministic epoch dirs: a retried batch overwrites its own
     // output; an empty epoch publishes nothing to the store
     // (AdmissionStore.writeEpoch). Key-hash partition dirs inside the
-    // epoch (AdmissionStore layout): vecs by vec_id (the verify join's
-    // key), buckets by the band key. First epoch sizes each table's
+    // epoch (AdmissionStore layout). First epoch sizes each table's
     // fan-out from the expected-scale hint; width signals ride back per
     // epoch (the lifecycle report).
     kept.write.mode("overwrite").parquet(s"$keptPath/epoch=$batchId")
     Seq(
-      AdmissionStore.writeEpoch(kept, col("vec_id"),
-        s"$storePath/vecs", batchId, expectedStoreBytes),
+      AdmissionStore.writeEpoch(kept, Vecs.key,
+        Vecs.at(storePath), batchId, expectedStoreBytes),
       AdmissionStore.writeEpoch(storedBuckets(banded, kept),
-        col("tb"), s"$storePath/buckets", batchId, expectedStoreBytes)).flatten
+        Buckets.key, Buckets.at(storePath), batchId, expectedStoreBytes)).flatten
   }
 
-  /** Fold accumulated epoch partitions into a single base epoch (offline
-    * maintenance, ENFORCED since r17 by AdmissionStore's per-table lock +
+  /** Fold accumulated epoch partitions into the base epoch (offline
+    * maintenance, ENFORCED by AdmissionStore's per-table lock +
     * epoch-drift guard — a racing writeEpoch fails loudly or aborts the
     * publish; rename results checked so a failure cannot silently empty
     * the store).
     */
   def compact(s: SparkSession, storePath: String): Unit =
-    Seq("vecs", "buckets")
-      .foreach(AdmissionStore.compactEpochs(s, storePath, _))
+    tables.compact(s, storePath)
 
   /** Full offline maintenance: fold epochs, then re-bucket any table
     * whose width signal fired (the AdmissionStore lifecycle), each on
     * its own blocking key. */
   def maintain(s: SparkSession, storePath: String,
       targetBucketBytes: Long = AdmissionStore.TargetBucketBytes)
-      : Seq[AdmissionStore.LayoutReport] = {
-    compact(s, storePath)
-    Seq("vecs" -> col("vec_id"), "buckets" -> col("tb")).flatMap {
-      case (sub, key) =>
-        AdmissionStore.maintain(s, s"$storePath/$sub", key, targetBucketBytes)
-    }
-  }
+      : Seq[AdmissionStore.LayoutReport] =
+    tables.maintain(s, storePath, targetBucketBytes)
 
   /** Wire as a streaming sink over a (vec_id, embedding) stream. */
   def stream(vecs: DataFrame, storePath: String, keptPath: String,

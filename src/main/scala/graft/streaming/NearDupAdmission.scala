@@ -22,6 +22,12 @@ import graft.functions.TextFunctions._
   */
 object NearDupAdmission {
 
+  // The store's two tables: docs by doc_id (the verify join's key),
+  // bands by bucket (the blocking join's key)
+  private val Docs = AdmissionStore.Table("docs", col("doc_id"))
+  private val Bands = AdmissionStore.Table("bands", col("bucket"))
+  private val tables = AdmissionStore.Store(Docs, Bands)
+
   /** One epoch's verdict: the admitted (doc_id, text) rows (a lazy
     * frame over this epoch's checkpoint — reading it runs no gate work
     * again), how many there are, and the store writes' width signals. */
@@ -29,8 +35,7 @@ object NearDupAdmission {
       signals: Seq[AdmissionStore.WidthSignal])
 
   // The stored rows of the two tables, ONE definition for the write and
-  // the pruned read's schema: docs by doc_id (the verify join's key),
-  // bands by bucket (the blocking join's key)
+  // the pruned read's schema
   private def storedDocs(kept: DataFrame): DataFrame =
     kept.filter(size(col("shingles")) > 0).select("doc_id", "shingles")
   private def storedBands(banded: DataFrame, kept: DataFrame): DataFrame =
@@ -68,7 +73,7 @@ object NearDupAdmission {
     val bandedRaw = graft.operators.TextQueries
       .bandedOf(docs, numHashes, bands, rows)
     val (bandedObs, storeBandsRead) = AdmissionStore.observeTouched(bandedRaw,
-      col("bucket"), s"$storePath/bands", storedBands(bandedRaw, all).schema)
+      Bands.key, Bands.at(storePath), storedBands(bandedRaw, all).schema)
     val banded = bandedObs.localCheckpoint()
 
     // dups vs the already-admitted store (bipartite band join)
@@ -99,7 +104,7 @@ object NearDupAdmission {
           // already in the store under the same ids)
           .filter(col("doc_id") =!= col("sd"))
           .select(col("doc_id"), col("sd")).distinct()
-        val docsTable = s"$storePath/docs"
+        val docsTable = Docs.at(storePath)
         val (candObs, storeDocsRead) = AdmissionStore.observeTouched(candRaw,
           col("sd"), docsTable, storedDocs(all).schema)
         // every epoch writes docs before bands: stored bands without
@@ -142,9 +147,9 @@ object NearDupAdmission {
     // lifecycle).
     val signals = Seq(
       AdmissionStore.writeEpoch(storedDocs(kept),
-        col("doc_id"), s"$storePath/docs", batchId, expectedStoreBytes),
+        Docs.key, Docs.at(storePath), batchId, expectedStoreBytes),
       AdmissionStore.writeEpoch(storedBands(banded, kept),
-        col("bucket"), s"$storePath/bands", batchId, expectedStoreBytes)).flatten
+        Bands.key, Bands.at(storePath), batchId, expectedStoreBytes)).flatten
     Judged(kept.select("doc_id", "text"),
       AdmissionStore.observed(counted).getLong(0), signals)
   }
@@ -163,18 +168,16 @@ object NearDupAdmission {
     j.signals
   }
 
-  /** Compact the store's accumulated epoch partitions into a single base
+  /** Compact the store's accumulated epoch partitions into the base
     * epoch — unbounded epoch-dir growth is the one O(epochs) listing cost
-    * in the admission design. Offline maintenance, and since r17 that
-    * contract is ENFORCED, not prose: the compaction runs as the table's
-    * elected single maintainer (AdmissionStore's lock), a concurrent
-    * writeEpoch fails loudly against the held lock, and the publish
-    * aborts on epoch-set drift — a raced epoch can no longer be silently
-    * swapped away with the superseded tree.
+    * in the admission design. Offline maintenance, ENFORCED by
+    * AdmissionStore's per-table lock: a concurrent writeEpoch fails
+    * loudly against the held lock, and the publish aborts on epoch-set
+    * drift — a raced epoch is never silently swapped away with the
+    * superseded tree.
     */
   def compact(s: SparkSession, storePath: String): Unit =
-    Seq("docs", "bands")
-      .foreach(AdmissionStore.compactEpochs(s, storePath, _))
+    tables.compact(s, storePath)
 
   /** Full offline maintenance: fold epochs, then re-bucket any table
     * whose width signal says the store has outgrown its fan-out
@@ -183,13 +186,8 @@ object NearDupAdmission {
     * same key its pruned reads route on. */
   def maintain(s: SparkSession, storePath: String,
       targetBucketBytes: Long = AdmissionStore.TargetBucketBytes)
-      : Seq[AdmissionStore.LayoutReport] = {
-    compact(s, storePath)
-    Seq("docs" -> col("doc_id"), "bands" -> col("bucket")).flatMap {
-      case (sub, key) =>
-        AdmissionStore.maintain(s, s"$storePath/$sub", key, targetBucketBytes)
-    }
-  }
+      : Seq[AdmissionStore.LayoutReport] =
+    tables.maintain(s, storePath, targetBucketBytes)
 
   /** Wire as a streaming sink over a (doc_id, text) stream. */
   def stream(docs: DataFrame, storePath: String, keptPath: String,

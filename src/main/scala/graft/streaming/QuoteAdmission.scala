@@ -35,11 +35,18 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * partition from the store read, so a foreachBatch retry that already
   * published its census cannot self-reject (sub-threshold windows shared
   * between two docs BOTH kept in the original run would otherwise read
-  * back as covered). Compaction folds epochs into `epoch=0` — offline
-  * maintenance, not concurrent with an active stream, like the near-dup
-  * store's.
+  * back as covered). Compaction folds epochs into the base epoch
+  * `epoch=-1` (AdmissionStore's BASE EPOCH) — offline maintenance, not
+  * concurrent with an active stream, like the near-dup store's.
   */
 object QuoteAdmission {
+
+  /** The census table: window hashes keyed by `h`. Compaction folds it
+    * to DISTINCT hashes — hash existence is all coverage tests, so rows
+    * repeated across epochs are dead weight in the base (`pb` is a
+    * function of `h`, so the pair is distinct exactly when `h` is). */
+  private val Census = AdmissionStore.Table("census", col("h"), _.distinct())
+  private val tables = AdmissionStore.Store(Census)
 
   /** One epoch's windows: `frame` = (doc_id, i, h), the stride-1
     * window hashes of the batch, materialised once (drop computation
@@ -68,12 +75,12 @@ object QuoteAdmission {
     * not "empty" — it is an INTERRUPTED compact()/maintain() publish:
     * failing open would admit long quotes of everything previously
     * admitted, so the read fails loudly and points at the recovery
-    * (one shared aside convention — see compact()).
+    * (AdmissionStore's one aside convention).
     */
   def windowsOf(docs: DataFrame, storePath: String, window: Int = 10): Windows = {
     val raw = graft.operators.CorpusStatsMaintenance.windowHashes(docs, window)
-    val (observed, census) = AdmissionStore.observeTouched(raw, col("h"),
-      s"$storePath/census", censusRows(raw, raw).schema)
+    val (observed, census) = AdmissionStore.observeTouched(raw, Census.key,
+      Census.at(storePath), censusRows(raw, raw).schema)
     Windows(observed.localCheckpoint(), census)
   }
 
@@ -128,8 +135,8 @@ object QuoteAdmission {
   def publishCensus(wins: Windows, keptIds: DataFrame, batchId: Long,
                     storePath: String, expectedStoreBytes: Long = 0L)
       : Seq[AdmissionStore.WidthSignal] =
-    AdmissionStore.writeEpoch(censusRows(wins.frame, keptIds), col("h"),
-      s"$storePath/census", batchId, expectedStoreBytes).toSeq
+    AdmissionStore.writeEpoch(censusRows(wins.frame, keptIds), Census.key,
+      Census.at(storePath), batchId, expectedStoreBytes).toSeq
 
   def admit(batch: DataFrame, batchId: Long, storePath: String,
             keptPath: String, spanTokens: Int = 20, window: Int = 10,
@@ -145,84 +152,22 @@ object QuoteAdmission {
       expectedStoreBytes)
   }
 
-  /** Fold accumulated epoch partitions into a single base epoch (the
-    * near-dup store's compaction pattern; offline maintenance only — a
+  /** Fold accumulated census epochs into the base epoch
+    * ([[AdmissionStore.compactEpochs]]; offline maintenance only — a
     * retry AFTER compaction would no longer find its epoch to exclude).
-    * The base lands in `epoch=-1`: batchIds are non-negative, so the
-    * same-epoch exclusion in quoteDrops can NEVER alias the compacted
-    * base — compacting into epoch=0 would make the first batch of any
-    * FRESH checkpoint (batchId 0) exclude the entire accumulated store
-    * and then overwrite it with its own census.
-    */
-  def compact(s: SparkSession, storePath: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    val live = s"$storePath/census"
-    // uuid-unique staging tree (the AdmissionStore convention): a
-    // superseded slow maintainer can never write into the tree this run
-    // publishes; abandoned trees are swept by the prologue
-    val tmp = s"$storePath/census_compact_tmp-${java.util.UUID.randomUUID()}"
-    val livePath = new org.apache.hadoop.fs.Path(live)
-    // the census fold runs as the table's elected single maintainer
-    // (AdmissionStore's lock + epoch-drift guard — one enforcement for
-    // every maintenance flow, this hand-rolled fold included): a
-    // concurrent writeEpoch either fails loudly against the fresh lock
-    // or aborts this publish via the drift re-list; neither can lose
-    // an epoch with the swapped-out tree.
-    AdmissionStore.withMaintenance(s, live) {
-      // ONE aside convention per table (AdmissionStore's): an interrupted
-      // publish — this compact's OR a maintain() re-bucket's — recovers
-      // here, and quoteDrops' reads refuse to run while {no live, aside
-      // present} stands (fail-loud, never fail-open). A second hand-rolled
-      // aside name would leave half the crash states unrecoverable by
-      // whichever tool checked the other. The prologue also sweeps
-      // never-retried staged debris and re-derives a deleted table
-      // stamp from agreeing epoch markers.
-      AdmissionStore.maintenancePrologue(s, live)
-      // a genuinely-missing census is a no-op; any OTHER read failure
-      // propagates (the old catch-everything would silently skip a
-      // compaction over an unreadable store)
-      if (fs.exists(livePath)) {
-        val snapshot = AdmissionStore.epochSet(s, live)
-        // (no pre-delete: the staging tree is uuid-unique per run, and
-        // the prologue swept any abandoned census_compact_tmp-* trees)
-        // pb is a pure function of h under the store's own stamped fan-out
-        // — recomputing it preserves the blocking-key layout through the
-        // distinct, at whatever K the store has grown to
-        val k = AdmissionStore.layoutK(s, live).getOrElse(
-          throw new IllegalStateException(
-            s"quote store $live has no _PBK layout marker — rebuild the store"))
-        s.read.parquet(live).select(col("h")).distinct()
-          .withColumn("pb", AdmissionStore.pb(col("h"), k))
-          .write.partitionBy("pb")
-          .mode("overwrite").parquet(s"$tmp/epoch=-1")
-        // the layout marker travels WITH the publish (staged into the tmp
-        // tree — table stamp and the folded epoch's own marker — before any
-        // rename): no crash window can leave an intact keyed census whose
-        // reads then claim it predates the layout
-        AdmissionStore.stageMarker(s, tmp, k)
-        // a writeEpoch that slipped past a stale lock lands here: abort
-        // the publish rather than swap its epoch away
-        AdmissionStore.guardEpochDrift(s, live, snapshot, tmp)
-        // crash-safe publish: live -> aside, tmp -> live, drop aside — the
-        // shared AdmissionStore dance; at no point is the census both
-        // absent and unrecoverable
-        AdmissionStore.publishSwap(s, live, tmp)
-        AdmissionStore.rebaseBytes(s, live) // re-base the width carry
-      }
-    }
-  }
+    * The base lies below every batchId, so the same-epoch exclusion in
+    * quoteDrops can never alias it. */
+  def compact(s: SparkSession, storePath: String): Unit =
+    tables.compact(s, storePath)
 
-  /** Full offline maintenance: fold epochs (the aside-protocol compact
-    * above), then re-bucket the census when its width signal fired (the
-    * AdmissionStore lifecycle). Epoch structure survives the re-bucket,
-    * so the same-epoch retry exclusion keeps working. */
+  /** Full offline maintenance: fold epochs, then re-bucket the census
+    * when its width signal fired (the AdmissionStore lifecycle). Epoch
+    * structure survives the re-bucket, so the same-epoch retry exclusion
+    * keeps working. */
   def maintain(s: SparkSession, storePath: String,
       targetBucketBytes: Long = AdmissionStore.TargetBucketBytes)
-      : Seq[AdmissionStore.LayoutReport] = {
-    compact(s, storePath)
-    AdmissionStore.maintain(s, s"$storePath/census", col("h"),
-      targetBucketBytes).toSeq
-  }
+      : Seq[AdmissionStore.LayoutReport] =
+    tables.maintain(s, storePath, targetBucketBytes)
 
   /** Wire as a streaming sink over a (doc_id, text) stream. */
   def stream(docs: DataFrame, storePath: String, keptPath: String,

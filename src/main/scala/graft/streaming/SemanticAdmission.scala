@@ -34,9 +34,10 @@ import graft.operators.{IndexMaintenance, VectorQueries}
   *
   * Geometry staleness is ENFORCED, not assumed: the store pins the
   * centroid fingerprint it was scored under
-  * ([[IndexMaintenance.centroidFingerprint]]); an admit against a
-  * retrained geometry fails loudly instead of mixing csims from two
-  * geometries — the same contract the maintenance family carries.
+  * ([[IndexMaintenance.centroidFingerprint]]); binding a retrained
+  * geometry ([[Geometry.pin]], once per stream) fails loudly instead of
+  * mixing csims from two geometries — the same contract the
+  * maintenance family carries.
   *
   * Epoch idempotence: admitted vectors append as deterministic
   * `epoch=<batchId>` partitions (overwrite mode), a vector never
@@ -46,39 +47,58 @@ import graft.operators.{IndexMaintenance, VectorQueries}
   */
 object SemanticAdmission {
 
+  // The store's one table: admitted members by cell (the cell-equi
+  // join's key)
+  private val Members = AdmissionStore.Table("members", col("cell"))
+  private val tables = AdmissionStore.Store(Members)
+
+  /** The trained geometry a stream judges against, bound to a store once
+    * ([[Geometry.pin]]) instead of re-checked per batch: `cent` is the
+    * broadcast centroid frame, already verified against the pin of the
+    * store at `storePath`. Only [[Geometry.pin]] makes one. */
+  final class Geometry private (val cent: DataFrame, val storePath: String)
+
+  object Geometry {
+    /** Pin `cent` to the store at `storePath`: the first pin records the
+      * centroid fingerprint ([[IndexMaintenance.centroidFingerprint]]);
+      * every later pin must match it — a retrained index invalidates
+      * every stored csim and cell id at once, so a mismatch fails loudly
+      * HERE, before any batch runs (the same axis as refreshSemDedup's
+      * rebuild report). */
+    def pin(cent: DataFrame, storePath: String): Geometry = {
+      val s = cent.sparkSession
+      val path = s"$storePath/geometry"
+      val fp = IndexMaintenance.centroidFingerprint(cent)
+      val fs = org.apache.hadoop.fs.FileSystem
+        .get(s.sparkContext.hadoopConfiguration)
+      if (fs.exists(new org.apache.hadoop.fs.Path(path))) {
+        val stored = s.read.parquet(path).select("fp").head().getString(0)
+        if (stored != fp) throw new IllegalStateException(
+          s"semantic-admission store was scored under centroid geometry " +
+            s"$stored but the gate was given $fp — the index was " +
+            "retrained; rebuild the admission store")
+      } else {
+        import s.implicits._
+        Seq(fp).toDF("fp").write.mode("overwrite").parquet(path)
+      }
+      new Geometry(cent, storePath)
+    }
+  }
+
   private def scored(vecs: DataFrame, cent: DataFrame): DataFrame =
     VectorQueries.assignCells(vecs, cent)
       .join(broadcast(cent), "cell")
       .select(col("vec_id"), col("cell"), col("embedding"),
         cosineSim(col("embedding"), col("centroid")).as("csim"))
 
-  def admit(batch: DataFrame, batchId: Long, cent: DataFrame,
+  /** One epoch against `geom`, which must be pinned to this store. */
+  def admit(batch: DataFrame, batchId: Long, geom: Geometry,
             storePath: String, keptPath: String,
             tau: Double = 0.95, expectedStoreBytes: Long = 0L)
       : Seq[AdmissionStore.WidthSignal] = {
+    require(geom.storePath == storePath, s"semantic-admission geometry " +
+      s"is pinned to ${geom.storePath}, not to $storePath")
     val s = batch.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(s.sparkContext.hadoopConfiguration)
-    def exists(sub: String): Boolean =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$storePath/$sub"))
-
-    // geometry pin: first admit records the fingerprint; every later
-    // admit must match it — a retrained index invalidates every stored
-    // csim and cell id at once, and failing loudly here is the only
-    // sound behavior (same axis as refreshSemDedup's rebuild report)
-    val fp = IndexMaintenance.centroidFingerprint(cent)
-    if (exists("geometry")) {
-      val stored = s.read.parquet(s"$storePath/geometry")
-        .select("fp").head().getString(0)
-      if (stored != fp) throw new IllegalStateException(
-        s"semantic-admission store was scored under centroid geometry " +
-          s"$stored but the gate was given $fp — the index was " +
-          "retrained; rebuild the admission store")
-    } else {
-      import s.implicits._
-      Seq(fp).toDF("fp").write.mode("overwrite")
-        .parquet(s"$storePath/geometry")
-    }
 
     // vs the admitted store: cell-equi bipartite join; the batch member
     // loses (see keep-rule doc above); own stored copy exempt (retry).
@@ -89,9 +109,9 @@ object SemanticAdmission {
     // so no future batch ever re-scores admitted vectors against the
     // centroids: its rows are the scored frame's, so that is the read
     // schema.
-    val mRaw = scored(batch.select(col("vec_id"), col("embedding")), cent)
+    val mRaw = scored(batch.select(col("vec_id"), col("embedding")), geom.cent)
     val (mObs, membersRead) = AdmissionStore.observeTouched(mRaw,
-      col("cell"), s"$storePath/members", mRaw.schema)
+      Members.key, Members.at(storePath), mRaw.schema)
     val m = mObs.localCheckpoint()
     val dupVsStore = membersRead match {
       case None => m.select(col("vec_id")).limit(0)
@@ -124,40 +144,41 @@ object SemanticAdmission {
     // (AdmissionStore.writeEpoch)
     kept.select(col("vec_id"), col("embedding"))
       .write.mode("overwrite").parquet(s"$keptPath/epoch=$batchId")
-    AdmissionStore.writeEpoch(kept, col("cell"),
-      s"$storePath/members", batchId, expectedStoreBytes).toSeq
+    AdmissionStore.writeEpoch(kept, Members.key,
+      Members.at(storePath), batchId, expectedStoreBytes).toSeq
   }
 
-  /** Fold accumulated epoch partitions into a single base epoch (offline
-    * maintenance, ENFORCED since r17 by AdmissionStore's per-table lock +
+  /** Fold accumulated epoch partitions into the base epoch (offline
+    * maintenance, ENFORCED by AdmissionStore's per-table lock +
     * epoch-drift guard; rename results checked so a failure cannot
     * silently empty the store). The geometry pin survives untouched.
     */
   def compact(s: SparkSession, storePath: String): Unit =
-    AdmissionStore.compactEpochs(s, storePath, "members")
+    tables.compact(s, storePath)
 
   /** Full offline maintenance: fold epochs, then re-bucket when the
     * width signal fired (the AdmissionStore lifecycle); the geometry
     * pin survives untouched. */
   def maintain(s: SparkSession, storePath: String,
       targetBucketBytes: Long = AdmissionStore.TargetBucketBytes)
-      : Seq[AdmissionStore.LayoutReport] = {
-    compact(s, storePath)
-    AdmissionStore.maintain(s, s"$storePath/members", col("cell"),
-      targetBucketBytes).toSeq
-  }
+      : Seq[AdmissionStore.LayoutReport] =
+    tables.maintain(s, storePath, targetBucketBytes)
 
   /** Wire as a streaming sink over a (vec_id, embedding) stream against
-    * a frozen trained geometry. */
+    * a frozen trained geometry. The geometry is pinned here, at stream
+    * start ([[Geometry.pin]]): a store scored under other centroids
+    * fails before the first batch, and no batch re-reads the pin. */
   def stream(vecs: DataFrame, cent: DataFrame, storePath: String,
              keptPath: String, checkpoint: String,
              tau: Double = 0.95,
-             expectedStoreBytes: Long = 0L): DataStreamWriter[Row] =
+             expectedStoreBytes: Long = 0L): DataStreamWriter[Row] = {
+    val geom = Geometry.pin(cent, storePath)
     vecs.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        admit(batch, id, cent, storePath, keptPath, tau, expectedStoreBytes)
+        admit(batch, id, geom, storePath, keptPath, tau, expectedStoreBytes)
         ()
       }
+  }
 }

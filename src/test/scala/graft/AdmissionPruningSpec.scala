@@ -111,10 +111,10 @@ class AdmissionPruningSpec extends AnyFunSuite with TempDirs {
     // still blocks afterwards
     NearDupAdmission.compact(spark, store)
     val epochs = new java.io.File(s"$store/bands").list().filter(_.startsWith("epoch="))
-    assert(epochs.toSeq == Seq("epoch=0"), s"compaction left $epochs")
-    assert(pbDirs(s"$store/bands/epoch=0").nonEmpty,
+    assert(epochs.toSeq == Seq("epoch=-1"), s"compaction left $epochs")
+    assert(pbDirs(s"$store/bands/epoch=-1").nonEmpty,
       "compaction dropped the pb layout")
-    assert(pbDirs(s"$store/docs/epoch=0").nonEmpty)
+    assert(pbDirs(s"$store/docs/epoch=-1").nonEmpty)
     val batch2 = Seq((200L, doc(5))).toDF("doc_id", "text")
     NearDupAdmission.admit(batch2, 2L, store, kept)
     assert(spark.read.parquet(s"$kept/epoch=2").isEmpty,
@@ -223,10 +223,11 @@ class AdmissionPruningSpec extends AnyFunSuite with TempDirs {
 
     val semStore = tmp("prunes_store"); val semKept = tmp("prunes_kept")
     val cent = graft.operators.VectorQueries.trainCells(e)
-    SemanticAdmission.admit(e, 0L, cent, semStore, semKept)
+    val geom = SemanticAdmission.Geometry.pin(cent, semStore)
+    SemanticAdmission.admit(e, 0L, geom, semStore, semKept)
     assert(pbDirs(s"$semStore/members/epoch=0").nonEmpty,
       "members not key-partitioned")
-    SemanticAdmission.admit(clone, 1L, cent, semStore, semKept)
+    SemanticAdmission.admit(clone, 1L, geom, semStore, semKept)
     assert(spark.read.parquet(s"$semKept/epoch=1").isEmpty,
       "semantic clone admitted against the pruned store")
   }

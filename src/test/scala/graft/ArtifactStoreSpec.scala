@@ -18,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * additionally exercised for real by two sequential `sbt runMain`
   * prewarm passes; see SCALING.md).
   */
-class ArtifactStoreSpec extends AnyFunSuite {
+class ArtifactStoreSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -28,7 +28,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft-store-spec").toString
+    tmp("graft-store-spec")
 
   private def withStore[T](root: String)(f: => T): T = {
     val prev = spark.conf.getOption("spark.graft.artifacts.path")
@@ -53,7 +53,10 @@ class ArtifactStoreSpec extends AnyFunSuite {
       // fresh-JVM path — must read the published copy, not rebuild
       val second = ArtifactStore.readThrough(spark, "specfam", "fpA")(build)
       assert(builds.get == 1, "second readThrough rebuilt instead of reading disk")
-      assert(second.queryExecution.executedPlan.toString.contains(root),
+      // every scanned file is under the store root (inputFiles, not the
+      // plan string: explain abbreviates a long Location path)
+      assert(second.inputFiles.nonEmpty &&
+        second.inputFiles.forall(_.contains(root)),
         "returned frame does not scan the store path")
       assert(second.collect().length == 10)
       // a different fingerprint is a different entry
@@ -217,7 +220,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
 
   test("L1-cached getters survive gc: vanished entries re-read through, hits touch the manifest") {
     val root = freshRoot()
-    val corpus = Files.createTempDirectory("graft-store-corpus2").toString
+    val corpus = tmp("graft-store-corpus2")
     spark.range(20).select(col("id").as("doc_id"),
         lit("en").as("lang"), lit("src0").as("source"),
         concat(lit("kappa lambda omicron sigma upsilon "),
@@ -278,7 +281,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
     // back a frame that scans the store path — which is exactly what a
     // fresh JVM gets on the same store
     val root = freshRoot()
-    val corpus = Files.createTempDirectory("graft-store-corpus").toString
+    val corpus = tmp("graft-store-corpus")
     spark.range(30).select(col("id").as("doc_id"),
         lit("en").as("lang"), lit("src0").as("source"),
         concat(lit("alpha beta gamma delta epsilon zeta "),
@@ -286,7 +289,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$corpus/documents.parquet")
     withStore(root) {
       val df = graft.operators.TextQueries.lexDfShared(spark, corpus)
-      assert(df.queryExecution.executedPlan.toString.contains(root),
+      assert(df.inputFiles.nonEmpty && df.inputFiles.forall(_.contains(root)),
         "lexDfShared is not reading the published store entry")
       // the census content is right: tokens() strips digits, so the
       // corpus has exactly the 6 word types, each in all 30 docs

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,7 +10,7 @@ import graft.streaming.EmbeddingAdmission
   * must drop; novel vectors admit; retried epochs are idempotent; the
   * hot-bucket cap gates the store join.
   */
-class EmbeddingAdmissionSpec extends AnyFunSuite {
+class EmbeddingAdmissionSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -30,9 +29,9 @@ class EmbeddingAdmissionSpec extends AnyFunSuite {
   test("admission drops near-dup vectors vs store and within batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val store = Files.createTempDirectory("eadm_store").toString
-    val kept = Files.createTempDirectory("eadm_kept").toString
-    val ckpt = Files.createTempDirectory("eadm_ckpt").toString
+    val store = tmp("eadm_store")
+    val kept = tmp("eadm_kept")
+    val ckpt = tmp("eadm_ckpt")
 
     val mem = MemoryStream[(Long, Seq[Float])]
     val q = EmbeddingAdmission.stream(
@@ -70,7 +69,7 @@ class EmbeddingAdmissionSpec extends AnyFunSuite {
     EmbeddingAdmission.compact(spark, store)
     val epochDirs = new java.io.File(store + "/vecs").listFiles()
       .filter(_.getName.startsWith("epoch=")).map(_.getName).toSeq
-    assert(epochDirs == Seq("epoch=0"), epochDirs.toString)
+    assert(epochDirs == Seq("epoch=-1"), epochDirs.toString)
     EmbeddingAdmission.admit(
       Seq((6L, vADup)).toDF("vec_id", "embedding"), 2L, store, kept)
     val keptAfter = spark.read.parquet(kept).select("vec_id")
@@ -81,8 +80,8 @@ class EmbeddingAdmissionSpec extends AnyFunSuite {
 
   test("hot-bucket cap gates the batch-vs-store bucket join") {
     import spark.implicits._
-    val store = Files.createTempDirectory("eadm_hot_store").toString
-    val kept = Files.createTempDirectory("eadm_hot_kept").toString
+    val store = tmp("eadm_hot_store")
+    val kept = tmp("eadm_hot_kept")
     // epoch 0: 30 IDENTICAL vectors — with the cap on, their buckets are
     // hot, so none pairs in-batch → all 30 admitted into the store
     val template = (0 until 30).map(i => (i.toLong, vA))
@@ -100,8 +99,8 @@ class EmbeddingAdmissionSpec extends AnyFunSuite {
     assert(keptIds.contains(100L),
       s"hot-bucket store join was not capped: $keptIds")
     // control: without the cap the same vector IS a store dup
-    val store2 = Files.createTempDirectory("eadm_hot_store2").toString
-    val kept2 = Files.createTempDirectory("eadm_hot_kept2").toString
+    val store2 = tmp("eadm_hot_store2")
+    val kept2 = tmp("eadm_hot_kept2")
     EmbeddingAdmission.admit(template.toDF("vec_id", "embedding"),
       0L, store2, kept2)
     EmbeddingAdmission.admit(

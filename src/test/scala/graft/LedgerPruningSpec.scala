@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.LedgerSource
@@ -22,7 +22,7 @@ import graft.sources.LedgerSource
   * partition indices each batch planning actually planned — pruning is
   * asserted on what the source DID, not on plan text.
   */
-class LedgerPruningSpec extends AnyFunSuite {
+class LedgerPruningSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = {
     // getOrCreate would reuse another suite's session (same JVM) and skip
@@ -45,7 +45,7 @@ class LedgerPruningSpec extends AnyFunSuite {
     * runtime filters are correctly dropped as useless.
     */
   private def writeTopic(entries: Int = 8, pad: Int = 0): Path = {
-    val root = Files.createTempDirectory("graft_pruning_topic")
+    val root = Paths.get(tmp("graft_pruning_topic"))
     val padding = if (pad > 0) "-" + ("x" * pad) else ""
     (0 until 4).foreach { p =>
       val dir = root.resolve(s"partition-$p")
@@ -150,7 +150,7 @@ class LedgerPruningSpec extends AnyFunSuite {
     */
   private def writeDim(rows: Seq[(Int, String)]): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_pruning_dim")
+    val dir = Paths.get(tmp("graft_pruning_dim"))
     rows.toDF("p", "tag").write.mode("overwrite").parquet(dir.toString)
     spark.read.parquet(dir.toString)
   }
@@ -238,7 +238,7 @@ class LedgerPruningSpec extends AnyFunSuite {
     assert(s2.collect().map(r => (r.getInt(0), r.getLong(1))).toMap ==
       (0 until 4).map(_ -> 28L).toMap) // 0+1+...+7
     // count over an empty topic is still one zero row
-    val empty = Files.createTempDirectory("graft_pruning_empty")
+    val empty = Paths.get(tmp("graft_pruning_empty"))
     assert(spark.read.format("graft-ledger").option("path", empty.toString)
       .load().selectExpr("count(*)").collect().map(_.getLong(0)).toSeq == Seq(0L))
     // coherence: the ops TVF and the pushed aggregate read the same
@@ -257,7 +257,7 @@ class LedgerPruningSpec extends AnyFunSuite {
     // layouts and windows
     val rnd = new scala.util.Random(42)
     (1 to 8).foreach { _ =>
-      val root = Files.createTempDirectory("graft_pruning_prop")
+      val root = Paths.get(tmp("graft_pruning_prop"))
       (0 until 3).foreach { p =>
         val dir = root.resolve(s"partition-$p")
         Files.createDirectories(dir)
@@ -393,7 +393,7 @@ class LedgerPruningSpec extends AnyFunSuite {
     * log's publish windows are [1e6,1e6+5), [3e6,3e6+5), [7e6,7e6+5)
     * with real coverage gaps between them. */
   private def writeTimeTopic(): Path = {
-    val root = Files.createTempDirectory("graft_time_topic")
+    val root = Paths.get(tmp("graft_time_topic"))
     (0 until 4).foreach { p =>
       val dir = root.resolve(s"partition-$p")
       Files.createDirectories(dir)
@@ -566,7 +566,7 @@ class LedgerPruningSpec extends AnyFunSuite {
     // a DPP-sized time topic: 4 partitions × ledgers 1/3 × 2000 padded
     // entries, so the filtered dim broadcasts and runtime filters are
     // not dropped as useless
-    val root = Files.createTempDirectory("graft_time_dpp_topic")
+    val root = Paths.get(tmp("graft_time_dpp_topic"))
     (0 until 4).foreach { p =>
       val d = root.resolve(s"partition-$p")
       Files.createDirectories(d)

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.LedgerSource
 import graft.sources.LedgerSource.{Cursor, LedgerInfo, LedgerOffset}
 
-class LedgerSourceSpec extends AnyFunSuite {
+class LedgerSourceSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -52,7 +52,7 @@ class LedgerSourceSpec extends AnyFunSuite {
   // ---- end-to-end through the DSv2 source ----
 
   private def writeTopic(): Path = {
-    val root = Files.createTempDirectory("graft_ledger_topic")
+    val root = Paths.get(tmp("graft_ledger_topic"))
     def write(p: Int, ledger: Long, lines: Seq[String]): Unit = {
       val dir = root.resolve(s"partition-$p")
       Files.createDirectories(dir)
@@ -136,7 +136,7 @@ class LedgerSourceSpec extends AnyFunSuite {
   }
 
   test("entry counts are cached by (size, mtime): no re-read until append") {
-    val dir = Files.createTempDirectory("graft_count_cache")
+    val dir = Paths.get(tmp("graft_count_cache"))
     val f = dir.resolve("ledger-1.log")
     Files.write(f, "a\nb\nc".getBytes(StandardCharsets.UTF_8))
     val before = LedgerSource.countScans.get()
@@ -326,7 +326,7 @@ class LedgerSourceSpec extends AnyFunSuite {
   }
 
   test("format=json decodes typed columns in-source; malformed rows null out and count") {
-    val root = Files.createTempDirectory("graft_ledger_json")
+    val root = Paths.get(tmp("graft_ledger_json"))
     val dir = root.resolve("partition-0"); Files.createDirectories(dir)
     Files.write(dir.resolve("ledger-1.log"), Seq(
       """k0,{"name":"alpha","qty":3,"score":1.5,"ok":true}""",
@@ -355,7 +355,7 @@ class LedgerSourceSpec extends AnyFunSuite {
   }
 
   test("mis-typed JSON field values null out and count as decode failures") {
-    val root = Files.createTempDirectory("graft_ledger_badtype")
+    val root = Paths.get(tmp("graft_ledger_badtype"))
     val dir = root.resolve("partition-0"); Files.createDirectories(dir)
     Files.write(dir.resolve("ledger-1.log"), Seq(
       """k0,{"qty":3}""",
@@ -431,8 +431,8 @@ class LedgerSourceSpec extends AnyFunSuite {
 
   test("checkpoint recovery resumes without duplicates after new data arrives") {
     val topic = writeTopic()
-    val ckpt = Files.createTempDirectory("graft_ledger_ckpt2").toString
-    val out = Files.createTempDirectory("graft_ledger_sink").toString
+    val ckpt = tmp("graft_ledger_ckpt2")
+    val out = tmp("graft_ledger_sink")
     def run(): Unit = {
       val df = spark.readStream.format("graft-ledger")
         .option("path", topic.toString).load()
@@ -458,8 +458,8 @@ class LedgerSourceSpec extends AnyFunSuite {
 
   test("startPublishUs positions a fresh stream mid-log (seek-by-time)") {
     val topic = writeTopic()
-    val out = Files.createTempDirectory("graft_ledger_seek_sink").toString
-    val ckpt = Files.createTempDirectory("graft_ledger_seek_ckpt").toString
+    val out = tmp("graft_ledger_seek_sink")
+    val ckpt = tmp("graft_ledger_seek_ckpt")
     // bound 2000003 lands INSIDE p1's ledger 2 (entries 3..4 qualify) and
     // ABOVE all of p0's ledger 1 (skipped whole) — p0 starts at ledger 4
     val q = spark.readStream.format("graft-ledger")
@@ -486,7 +486,7 @@ class LedgerSourceSpec extends AnyFunSuite {
         .load()
         .writeStream.format("noop")
         .option("checkpointLocation",
-          Files.createTempDirectory("graft_ledger_seek_bad").toString)
+          tmp("graft_ledger_seek_bad"))
         .trigger(Trigger.AvailableNow()).start()
       bad.awaitTermination(60000)
     }

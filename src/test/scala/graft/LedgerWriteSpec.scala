@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{LedgerStreamingWrite, LedgerWrite}
 import graft.streaming.ConsistencyChecker
 
-class LedgerWriteSpec extends AnyFunSuite {
+class LedgerWriteSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -19,7 +19,7 @@ class LedgerWriteSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def newTopic(tag: String): Path =
-    Files.createTempDirectory(s"graft_write_$tag")
+    Paths.get(tmp(s"graft_write_$tag"))
 
   private def append(root: Path, rows: Seq[(Integer, String, String)]): Unit = {
     import spark.implicits._
@@ -108,7 +108,7 @@ class LedgerWriteSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val root = newTopic("stream")
-    val ckpt = Files.createTempDirectory("graft_write_ckpt").toString
+    val ckpt = tmp("graft_write_ckpt")
     val mem = MemoryStream[(Int, String, String)]
     val q = mem.toDF().toDF("partition", "key", "v")
       .select(col("partition"), col("key"), col("v").cast("binary").as("value"))
@@ -171,8 +171,8 @@ class LedgerWriteSpec extends AnyFunSuite {
     // with the streaming read path (offsets, admission, bounded readers)
     val root = newTopic("loop")
     append(root, Seq((0, "w1", "v1"), (1, "w2", "v2"), (0, "w3", "v3")))
-    val out = Files.createTempDirectory("graft_write_loop_out").toString
-    val ckpt = Files.createTempDirectory("graft_write_loop_ckpt").toString
+    val out = tmp("graft_write_loop_out")
+    val ckpt = tmp("graft_write_loop_ckpt")
     val q = spark.readStream.format("graft-ledger")
       .option("path", root.toString).load()
       .selectExpr("partition", "key", "CAST(value AS STRING) AS v")

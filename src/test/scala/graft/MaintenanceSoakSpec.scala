@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,7 +19,7 @@ import graft.streaming.{EmbeddingAdmission, NearDupAdmission, QuoteAdmission, Se
   * genuinely drifted epoch trips the IVF drift detector into a
   * warm-start retrain AND the PQ misfit ratio into a codebook retrain.
   */
-class MaintenanceSoakSpec extends AnyFunSuite {
+class MaintenanceSoakSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -63,14 +62,14 @@ class MaintenanceSoakSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("ledger segments -> admission gates -> incremental index/graph refresh, with one drift retrain") {
-    val docTopic = Files.createTempDirectory("soak_docledger").toString
-    val vecTopic = Files.createTempDirectory("soak_vecledger").toString
-    val docStore = Files.createTempDirectory("soak_docstore").toString
-    val docKept = Files.createTempDirectory("soak_dockept").toString
-    val quoteStore = Files.createTempDirectory("soak_quotestore").toString
-    val quoteKept = Files.createTempDirectory("soak_quotekept").toString
-    val vecStore = Files.createTempDirectory("soak_vecstore").toString
-    val vecKept = Files.createTempDirectory("soak_veckept").toString
+    val docTopic = tmp("soak_docledger")
+    val vecTopic = tmp("soak_vecledger")
+    val docStore = tmp("soak_docstore")
+    val docKept = tmp("soak_dockept")
+    val quoteStore = tmp("soak_quotestore")
+    val quoteKept = tmp("soak_quotekept")
+    val vecStore = tmp("soak_vecstore")
+    val vecKept = tmp("soak_veckept")
 
     val allDocs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val allVecs = Tables.embeddings(spark, dir)
@@ -118,10 +117,11 @@ class MaintenanceSoakSpec extends AnyFunSuite {
     // admitted epoch flows through it, and the end-state store must hold
     // NO within-cell pair at its tau — the gate's whole contract,
     // checked globally below
-    val semStore = Files.createTempDirectory("soak_semstore").toString
-    val semKept = Files.createTempDirectory("soak_semkept").toString
+    val semStore = tmp("soak_semstore")
+    val semKept = tmp("soak_semkept")
     val semTau = 0.35 // the q119 near-dup band on this corpus
-    SemanticAdmission.admit(vecs0, 0L, ivf.centroids, semStore, semKept,
+    val semGeom = SemanticAdmission.Geometry.pin(ivf.centroids, semStore)
+    SemanticAdmission.admit(vecs0, 0L, semGeom, semStore, semKept,
       tau = semTau)
 
     var admittedDocs = docs0
@@ -264,7 +264,8 @@ class MaintenanceSoakSpec extends AnyFunSuite {
       // the streaming gate admits the same epoch under the same frozen
       // geometry (incremental refresh never moves centroids, so the
       // store's fingerprint pin holds across epochs)
-      SemanticAdmission.admit(keptV, ep.toLong, ivf.centroids,
+      SemanticAdmission.admit(keptV, ep.toLong,
+        SemanticAdmission.Geometry.pin(ivf.centroids, semStore),
         semStore, semKept, tau = semTau)
 
       // SRP: row-local append under the frozen width (no boundary at
@@ -415,11 +416,10 @@ class MaintenanceSoakSpec extends AnyFunSuite {
       semAfter.centroidFp != sem.centroidFp,
       "rebuild did not re-pin the state to the retrained geometry")
     // and the STREAMING gate refuses the retrained geometry outright —
-    // its store was scored under the frozen centroids, so admitting
-    // against the moved ones must fail loudly, not mix csims
+    // its store was scored under the frozen centroids, so binding the
+    // moved ones must fail loudly, not mix csims
     val geomErr = intercept[IllegalStateException] {
-      SemanticAdmission.admit(keptDrift, 3L, ivfRetrained.centroids,
-        semStore, semKept, tau = semTau)
+      SemanticAdmission.Geometry.pin(ivfRetrained.centroids, semStore)
     }
     assert(geomErr.getMessage.contains("retrained"), geomErr.getMessage)
 

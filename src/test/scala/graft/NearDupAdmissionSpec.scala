@@ -72,13 +72,28 @@ class NearDupAdmissionSpec extends AnyFunSuite with TempDirs {
     NearDupAdmission.compact(spark, store)
     val epochDirs = new java.io.File(store + "/docs").listFiles()
       .filter(_.getName.startsWith("epoch=")).map(_.getName).toSeq
-    assert(epochDirs == Seq("epoch=0"), epochDirs.toString)
-    assert(spark.read.parquet(store + "/docs").select("doc_id")
-      .collect().map(_.getLong(0)).toSet == Set(1L, 2L, 4L))
+    assert(epochDirs == Seq("epoch=-1"), epochDirs.toString)
+    def storeDocIds = spark.read.parquet(store + "/docs").select("doc_id")
+      .collect().map(_.getLong(0)).toSet
+    assert(storeDocIds == Set(1L, 2L, 4L))
     NearDupAdmission.admit(Seq((6L, textXDup)).toDF("doc_id", "text"), 2L, store, kept)
     val keptAfter = spark.read.parquet(kept).select("doc_id")
       .collect().map(_.getLong(0)).toSet
     assert(keptAfter == Set(1L, 2L, 4L, 9L), s"dup admitted after compact: $keptAfter")
+
+    // a FRESH checkpoint over the compacted store starts at batch 0: its
+    // epoch must not replace the compacted base, and a later exact clone
+    // of a compacted doc (fresh id) must still drop
+    val keptFresh = tmp("ndup_kept_fresh")
+    val textW = "an unrelated fresh document about checkpoint cursors and offsets"
+    NearDupAdmission.admit(Seq((10L, textW)).toDF("doc_id", "text"), 0L,
+      store, keptFresh)
+    assert(storeDocIds == Set(1L, 2L, 4L, 10L),
+      s"batch 0 of a fresh checkpoint replaced the compacted base: $storeDocIds")
+    NearDupAdmission.admit(Seq((11L, textX)).toDF("doc_id", "text"), 1L,
+      store, keptFresh)
+    assert(spark.read.parquet(s"$keptFresh/epoch=1").isEmpty,
+      "exact clone of a compacted doc admitted after a fresh checkpoint")
   }
 
   test("hot-bucket cap also gates the batch-vs-store band join") {

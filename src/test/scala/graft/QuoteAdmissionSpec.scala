@@ -80,23 +80,29 @@ class QuoteAdmissionSpec extends AnyFunSuite with TempDirs {
     // compaction folds epochs into epoch=-1 — an id no batch can carry,
     // so a FRESH checkpoint's batchId-0 epoch can neither exclude the
     // compacted base from its store read nor overwrite it
+    def census = spark.read.parquet(s"$store/census")
+    def distinctHashes = census.select("h").distinct().count()
+    // doc 11's 15-token quote put the same window hashes in epochs 0 and 1
+    assert(census.count() > distinctHashes, "no hash repeats across epochs")
     QuoteAdmission.compact(spark, store)
-    val epochs = spark.read.parquet(s"$store/census")
+    val epochs = census
       .select("epoch").distinct().collect()
       .map(_.get(0).toString.toLong).toSet
     assert(epochs == Set(-1L), s"compaction left epochs: $epochs")
+    // the base holds each window hash once
+    assert(census.count() == distinctHashes,
+      "compacted census holds repeated hashes")
     // the fresh-checkpoint batchId-0 hazard: a new stream's FIRST batch
     // against the compacted store must still see every admitted hash
     val store2 = tmp("graft_quote_store_fresh")
     val kept2 = tmp("graft_quote_kept_fresh")
     // copy the compacted census as a pre-existing store for a new stream
-    // — under the keyed layout a hand-built store must carry the pb
-    // partition dirs AND the _PBK stamp (at the SAME fan-out the copied
-    // pb values were computed under), like any real store would
-    spark.read.parquet(s"$store/census").drop("epoch").write
-      .partitionBy("pb").parquet(s"$store2/census/epoch=-1")
-    graft.streaming.AdmissionStore.stageMarker(spark, s"$store2/census",
-      graft.streaming.AdmissionStore.layoutK(spark, s"$store/census").get)
+    // — its pb partition dirs, _PBK stamps and byte cell included
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val fs = org.apache.hadoop.fs.FileSystem.get(hconf)
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs,
+      new org.apache.hadoop.fs.Path(s"$store/census"), fs,
+      new org.apache.hadoop.fs.Path(s"$store2/census"), false, hconf))
     QuoteAdmission.admit(Seq(
       doc(40L, fill('t', 8) ++ baseWords.slice(10, 35) ++ fill('u', 8)),
       doc(41L, fill('v', 40))

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,9 +9,10 @@ import graft.streaming.SemanticAdmission
   * the store and within the batch (where the LEAST prototypical member
   * is kept — the q119 rule, not lower-id-wins); cross-cell vectors never
   * pair; retried epochs are idempotent; a retrained centroid geometry is
-  * rejected loudly; compaction preserves behavior.
+  * rejected loudly when the stream binds it; compaction preserves
+  * behavior.
   */
-class SemanticAdmissionSpec extends AnyFunSuite {
+class SemanticAdmissionSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -41,9 +41,9 @@ class SemanticAdmissionSpec extends AnyFunSuite {
   test("semantic admission: store dups drop, in-batch keeps the least prototypical") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val store = Files.createTempDirectory("sadm_store").toString
-    val kept = Files.createTempDirectory("sadm_kept").toString
-    val ckpt = Files.createTempDirectory("sadm_ckpt").toString
+    val store = tmp("sadm_store")
+    val kept = tmp("sadm_kept")
+    val ckpt = tmp("sadm_ckpt")
 
     val mem = MemoryStream[(Long, Seq[Float])]
     val q = SemanticAdmission.stream(
@@ -74,31 +74,41 @@ class SemanticAdmissionSpec extends AnyFunSuite {
     assert(members == Map(1L -> 0, 2L -> 1, 5L -> 0), members.toString)
 
     // idempotent retry of epoch 1: same kept set, no appends
+    val geom = SemanticAdmission.Geometry.pin(centroids, store)
     SemanticAdmission.admit(
       Seq((3L, vADup), (4L, w1), (5L, w2)).toDF("vec_id", "embedding"),
-      1L, centroids, store, kept)
+      1L, geom, store, kept)
     val keptRetry = spark.read.parquet(kept).select("vec_id")
       .collect().map(_.getLong(0)).toSeq.sorted
     assert(keptRetry == Seq(1L, 2L, 5L), keptRetry.toString)
 
     // a RETRAINED geometry is rejected loudly — stored csims and cells
-    // are meaningless under moved centroids
+    // are meaningless under moved centroids. The stream binds its
+    // geometry once, at start, so the mismatch fails there, before any
+    // batch runs
     val retrained = Seq((0, Seq(0.7f, 0.7f, 0f, 0f)), (1, Seq(0f, 0f, 0f, 1f)))
       .toDF("cell", "centroid")
+    val mem2 = MemoryStream[(Long, Seq[Float])]
     val e = intercept[IllegalStateException] {
-      SemanticAdmission.admit(Seq((9L, vB)).toDF("vec_id", "embedding"),
-        2L, retrained, store, kept)
+      SemanticAdmission.stream(mem2.toDF().toDF("vec_id", "embedding"),
+        retrained, store, kept, tmp("sadm_ckpt_retrained"))
     }
     assert(e.getMessage.contains("retrained"), e.getMessage)
+    // and a geometry pinned to another store is refused by admit
+    val other = SemanticAdmission.Geometry.pin(centroids, tmp("sadm_other"))
+    intercept[IllegalArgumentException] {
+      SemanticAdmission.admit(Seq((9L, vB)).toDF("vec_id", "embedding"),
+        2L, other, store, kept)
+    }
 
     // an EMPTY epoch (or one admitting nothing) must not poison the
     // store: the empty epoch publishes nothing (AdmissionStore.writeEpoch),
     // and the gate keeps working
     SemanticAdmission.admit(
       Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding"),
-      5L, centroids, store, kept)
+      5L, geom, store, kept)
     SemanticAdmission.admit(
-      Seq((7L, vADup)).toDF("vec_id", "embedding"), 6L, centroids, store, kept)
+      Seq((7L, vADup)).toDF("vec_id", "embedding"), 6L, geom, store, kept)
     assert(spark.read.parquet(s"$kept/epoch=6").count() == 0,
       "store dup admitted after an empty epoch — the store read broke")
 
@@ -106,9 +116,9 @@ class SemanticAdmissionSpec extends AnyFunSuite {
     SemanticAdmission.compact(spark, store)
     val epochDirs = new java.io.File(store + "/members").listFiles()
       .filter(_.getName.startsWith("epoch=")).map(_.getName).toSeq
-    assert(epochDirs == Seq("epoch=0"), epochDirs.toString)
+    assert(epochDirs == Seq("epoch=-1"), epochDirs.toString)
     SemanticAdmission.admit(
-      Seq((6L, vADup)).toDF("vec_id", "embedding"), 2L, centroids, store, kept)
+      Seq((6L, vADup)).toDF("vec_id", "embedding"), 2L, geom, store, kept)
     val keptAfter = spark.read.parquet(kept).select("vec_id")
       .collect().map(_.getLong(0)).toSet
     assert(keptAfter == Set(1L, 2L, 5L),
