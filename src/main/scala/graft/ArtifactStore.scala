@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -24,16 +25,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * parquet `data/` plus a `_MANIFEST` holding the full unhashed key (the
   * collision guard — a hash hit with a mismatched manifest is treated as
   * corrupt and replaced). Writers build into a sibling `.tmp-<uuid>` and
-  * publish with an ATOMIC rename: a killed writer leaves only an ignored
-  * tmp dir, never a half-published artifact.
+  * publish it with [[Publish.publishIfAbsent]]: a killed writer leaves
+  * only an ignored tmp dir, never a half-published artifact. The whole
+  * store lives on the root's Hadoop filesystem (manifests, touches,
+  * reads, [[gc]], [[statusRelation]]); only [[codeFingerprint]] reads
+  * local class files.
   *
-  * Concurrency: a `<entry>.lock` file (atomic create) elects ONE builder
-  * per entry across sessions and JVMs; losers poll for the winner's
-  * manifest and read it — N racing sessions build once, read N times. A
-  * crashed builder's lock goes stale by mtime ([[LockStaleMs]]) and is
-  * stolen; a waiter that outlives [[WaitBuildMs]] falls back to building
-  * its own copy (first-writer-wins publish keeps that safe, just
-  * redundant).
+  * Concurrency: a `<entry>.lock` file elects ONE builder per entry across
+  * sessions and JVMs ([[Publish.tryLock]]: token-owned, stale after
+  * [[Publish.LockStaleMs]], stolen through a tomb, released only by its
+  * owner); losers poll for the winner's manifest while the lock is held
+  * fresh and read it — N racing sessions build once, read N times. A
+  * waiter that outlives [[WaitBuildMs]] falls back to building its own
+  * copy (first-writer-wins publish keeps that safe, just redundant).
   *
   * Root resolution, in order: the `spark.graft.artifacts.path` session
   * conf, the `SPARK_GRAFT_ARTIFACTS` env var, then
@@ -76,7 +80,7 @@ object ArtifactStore {
       val p = Paths.get(url.toURI)
       if (Files.isDirectory(p)) {
         val walk = Files.walk(p)
-        try walk.sorted(java.util.Comparator.comparing[Path, String](_.toString))
+        try walk.sorted(java.util.Comparator.comparing[java.nio.file.Path, String](_.toString))
           .forEach { f =>
             if (Files.isRegularFile(f) && f.toString.endsWith(".class")) {
               md.update(p.relativize(f).toString.getBytes("UTF-8"))
@@ -94,12 +98,12 @@ object ArtifactStore {
     }
   }
 
-  private[graft] val LockStaleMs = 15 * 60 * 1000L
   private[graft] val WaitBuildMs = 20 * 60 * 1000L
   private val PollMs = 100L
 
   /** The session's store root. Always defined (the store cannot be
-    * disabled); the Option shape is kept for existing callers. */
+    * disabled); the Option shape is kept for existing callers. A
+    * scheme-less root prints as the plain directory it names. */
   def rootOf(s: SparkSession): Option[Path] = Some(root(s))
 
   private def root(s: SparkSession): Path = {
@@ -111,7 +115,7 @@ object ArtifactStore {
         s"artifact store root '$conf' (spark.graft.artifacts.path / " +
           "SPARK_GRAFT_ARTIFACTS) is not a directory: the store cannot be " +
           "disabled — set a path, or unset both for <tmpdir>/graft-artifacts")
-    Paths.get(conf)
+    new Path(conf)
   }
 
   private def md5(s: String): String =
@@ -121,21 +125,24 @@ object ArtifactStore {
   private def versioned(fingerprint: String): String =
     s"v$SchemaVersion:c$codeFingerprint:$fingerprint"
 
-  private def entryDir(root: Path, tag: String, fingerprint: String): Path =
-    root.resolve(tag).resolve("fp=" + md5(versioned(fingerprint)))
+  /** The entry dir of (tag, fingerprint) under the session's root, and
+    * the root's filesystem. */
+  private def locate(s: SparkSession, tag: String, fingerprint: String)
+      : (FileSystem, Path) = {
+    val r = root(s)
+    (Publish.fsOf(r, s), new Path(new Path(r, tag), "fp=" + md5(versioned(fingerprint))))
+  }
 
-  private def manifestOk(dir: Path, fingerprint: String): Boolean =
-    try Files.exists(dir.resolve("_MANIFEST")) &&
-      Files.readString(dir.resolve("_MANIFEST")) == versioned(fingerprint)
+  private def manifestOk(fs: FileSystem, dir: Path, fingerprint: String): Boolean =
+    try Publish.readString(fs, new Path(dir, "_MANIFEST")).contains(versioned(fingerprint))
     catch { case _: java.io.IOException => false }
 
   /** Mark an entry as used: gc ages by LAST USE (manifest mtime), not
     * build time — a hot entry of an unchanged corpus must survive any
     * maxAgeMs as long as sessions keep reading it.
     */
-  private def touch(dir: Path): Unit =
-    try Files.setLastModifiedTime(dir.resolve("_MANIFEST"),
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
+  private def touch(fs: FileSystem, dir: Path): Unit =
+    try fs.setTimes(new Path(dir, "_MANIFEST"), System.currentTimeMillis(), -1)
     catch { case _: java.io.IOException => () }
 
   /** Open the published parquet, self-healing a manifest-present but
@@ -143,16 +150,16 @@ object ArtifactStore {
     * the entry is removed — manifest first, so it reads as a MISS — and
     * the caller falls back to its miss path instead of being wedged.
     */
-  private def readData(s: SparkSession, dir: Path, tag: String)
+  private def readData(s: SparkSession, fs: FileSystem, dir: Path, tag: String)
       : Option[DataFrame] =
     try {
-      val df = s.read.parquet(dir.resolve("data").toString)
-      touch(dir)
+      val df = s.read.parquet(new Path(dir, "data").toString)
+      touch(fs, dir)
       Some(df)
     } catch {
       case e: Exception =>
         log.warn(s"unreadable entry for $tag (${e.getClass.getSimpleName}) — removing")
-        deleteRecursively(dir)
+        deleteRecursively(fs, dir)
         None
     }
 
@@ -169,9 +176,9 @@ object ArtifactStore {
     */
   private[graft] def stillLive(s: SparkSession, tag: String,
       fingerprint: String): Boolean = {
-    val dir = entryDir(root(s), tag, fingerprint)
-    val ok = manifestOk(dir, fingerprint)
-    if (ok) touch(dir)
+    val (fs, dir) = locate(s, tag, fingerprint)
+    val ok = manifestOk(fs, dir, fingerprint)
+    if (ok) touch(fs, dir)
     ok
   }
 
@@ -179,9 +186,9 @@ object ArtifactStore {
     * the entry exists. */
   def readIfPresent(s: SparkSession, tag: String, fingerprint: String)
       : Option[DataFrame] = {
-    val dir = entryDir(root(s), tag, fingerprint)
-    if (manifestOk(dir, fingerprint)) {
-      val out = readData(s, dir, tag)
+    val (fs, dir) = locate(s, tag, fingerprint)
+    if (manifestOk(fs, dir, fingerprint)) {
+      val out = readData(s, fs, dir, tag)
       if (out.isDefined) log.info(s"disk hit: $tag")
       out
     } else None
@@ -194,25 +201,27 @@ object ArtifactStore {
     */
   def readThrough(s: SparkSession, tag: String, fingerprint: String)
       (build: => DataFrame): DataFrame = {
-    val dir = entryDir(root(s), tag, fingerprint)
+    val (fs, dir) = locate(s, tag, fingerprint)
     val deadline = System.currentTimeMillis() + WaitBuildMs
     var out: Option[DataFrame] = None
     var built = false
     while (out.isEmpty) {
-      if (manifestOk(dir, fingerprint)) {
-        out = readData(s, dir, tag) // None self-heals → loop rebuilds
+      if (manifestOk(fs, dir, fingerprint)) {
+        out = readData(s, fs, dir, tag) // None self-heals → loop rebuilds
         if (out.isDefined && !built) log.info(s"disk hit: $tag")
-      } else if (acquireLock(lockOf(dir))) {
-        try {
-          if (!manifestOk(dir, fingerprint)) { // winner of a steal re-checks
-            writeEntry(s, dir, tag, fingerprint, build); built = true
-          }
-        } finally releaseLock(lockOf(dir))
-      } else if (System.currentTimeMillis() > deadline) {
-        // the elected builder is alive but slower than any sane build:
-        // build our own copy (publish stays first-writer-wins safe)
-        writeEntry(s, dir, tag, fingerprint, build); built = true
-      } else Thread.sleep(PollMs)
+      } else Publish.tryLock(fs, lockOf(dir)) match {
+        case Right(lock) =>
+          try {
+            if (!manifestOk(fs, dir, fingerprint)) { // winner of a steal re-checks
+              writeEntry(s, fs, dir, tag, fingerprint, build); built = true
+            }
+          } finally lock.release()
+        case Left(_) if System.currentTimeMillis() > deadline =>
+          // the elected builder is alive but slower than any sane build:
+          // build our own copy (publish stays first-writer-wins safe)
+          writeEntry(s, fs, dir, tag, fingerprint, build); built = true
+        case Left(_) => Thread.sleep(PollMs)
+      }
     }
     out.get
   }
@@ -221,110 +230,55 @@ object ArtifactStore {
     * trainers that must always retrain in-session (q74 BPE: its bench
     * cost is the training cost) but whose deterministic product should
     * still land on disk once for every other session. No-op when the
-    * entry already exists (same corpus ⇒ bit-identical product).
+    * entry already exists (same corpus ⇒ bit-identical product) or
+    * another session holds its lock.
     */
   def put(s: SparkSession, tag: String, fingerprint: String)
       (df: => DataFrame): Unit = {
-    val dir = entryDir(root(s), tag, fingerprint)
-    if (!manifestOk(dir, fingerprint) && acquireLock(lockOf(dir)))
-      try {
-        if (!manifestOk(dir, fingerprint)) writeEntry(s, dir, tag, fingerprint, df)
-      } finally releaseLock(lockOf(dir))
+    val (fs, dir) = locate(s, tag, fingerprint)
+    if (!manifestOk(fs, dir, fingerprint))
+      Publish.tryLock(fs, lockOf(dir)).foreach { lock =>
+        try {
+          if (!manifestOk(fs, dir, fingerprint))
+            writeEntry(s, fs, dir, tag, fingerprint, df)
+        } finally lock.release()
+      }
   }
 
-  private def writeEntry(s: SparkSession, dir: Path, tag: String,
+  private def writeEntry(s: SparkSession, fs: FileSystem, dir: Path, tag: String,
       fingerprint: String, build: => DataFrame): Unit = {
     val built = build
-    val tmp = dir.getParent.resolve(
-      ".tmp-" + java.util.UUID.randomUUID().toString)
-    Files.createDirectories(tmp)
-    built.write.mode("overwrite").parquet(tmp.resolve("data").toString)
-    Files.writeString(tmp.resolve("_MANIFEST"), versioned(fingerprint))
+    val tmp = new Path(dir.getParent, ".tmp-" + java.util.UUID.randomUUID().toString)
+    built.write.mode("overwrite").parquet(new Path(tmp, "data").toString)
+    val out = fs.create(new Path(tmp, "_MANIFEST"), true)
+    try out.write(versioned(fingerprint).getBytes("UTF-8")) finally out.close()
     // the artifact now lives on disk: release the checkpoint blocks of
     // the builder's intermediates found in the build plan (only THIS
     // plan's LogicalRDDs) — e.g. the pair graph's shingle/band tables
     built.queryExecution.logical.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.foreach(_.unpersist(blocking = false))
-    publish(tmp, dir, fingerprint)
+    // a target with a MISMATCHED manifest (hash collision, or a corrupt
+    // half-cleaned entry) is replaced rather than trusted
+    Publish.publishIfAbsent(fs, tmp, dir)(manifestOk(fs, dir, fingerprint))
     log.info(s"built: $tag")
   }
 
-  private def lockOf(dir: Path): Path =
-    dir.getParent.resolve(dir.getFileName.toString + ".lock")
+  private def lockOf(dir: Path): Path = new Path(dir.getParent, dir.getName + ".lock")
 
-  /** Atomic lock-file election; a lock whose mtime is older than
-    * [[LockStaleMs]] belonged to a crashed builder and is stolen. The
-    * steal is an ATOMIC RENAME-aside, not check-then-delete: with a plain
-    * delete, two stealers could each delete-and-recreate (the second
-    * deleting the first's FRESH lock), electing two builders. Exactly one
-    * stealer's move succeeds; the losers re-contend on whatever lock the
-    * winner creates. The aside name keeps the `.lock` suffix so a crashed
-    * stealer's debris is swept by the same gc rule as any stale lock.
-    */
-  private def acquireLock(lock: Path): Boolean =
-    try {
-      Files.createDirectories(lock.getParent)
-      Files.createFile(lock)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        val stale =
-          try System.currentTimeMillis() -
-            Files.getLastModifiedTime(lock).toMillis > LockStaleMs
-          catch { case _: java.io.IOException => false } // vanished: next poll wins
-        if (stale) {
-          val aside = lock.resolveSibling(lock.getFileName.toString +
-            ".stale-" + java.util.UUID.randomUUID() + ".lock")
-          try {
-            Files.move(lock, aside, StandardCopyOption.ATOMIC_MOVE)
-            Files.deleteIfExists(aside)
-            acquireLock(lock)
-          } catch { case _: java.io.IOException => false } // lost the steal race
-        } else false
-    }
+  /** Delete an entry (or any store path) on its own filesystem. */
+  private[graft] def deleteRecursively(p: Path): Unit =
+    deleteRecursively(Publish.fsOf(p), p)
 
-  private def releaseLock(lock: Path): Unit =
-    try Files.deleteIfExists(lock) catch { case _: java.io.IOException => () }
-
-  /** Atomic first-writer-wins publish. A lost race (target appeared
-    * between the build and the rename) discards this writer's copy; a
-    * target with a MISMATCHED manifest (hash collision, or a corrupt
-    * half-cleaned entry) is replaced rather than trusted.
-    */
-  private def publish(tmp: Path, dir: Path, fingerprint: String): Unit = {
-    try {
-      Files.createDirectories(dir.getParent)
-      Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
-    } catch {
-      // the exact exception for "target already exists" varies by
-      // filesystem (FileAlreadyExists, DirectoryNotEmpty, or a generic
-      // FileSystemException from the rename syscall) — any IO failure
-      // here resolves the same way: trust a valid existing entry,
-      // replace an invalid one
-      case _: java.io.IOException =>
-        if (manifestOk(dir, fingerprint)) deleteRecursively(tmp)
-        else { // corrupt or colliding entry: replace it
-          deleteRecursively(dir)
-          try Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
-          catch { case _: Throwable => deleteRecursively(tmp) }
-        }
-    }
-  }
-
-  private[graft] def deleteRecursively(p: Path): Unit = if (Files.exists(p)) {
-    // the manifest dies FIRST: the reverse-lexicographic walk below would
-    // otherwise remove data/ before _MANIFEST ('_' sorts before 'd'), and
-    // an INTERRUPTED delete would leave a manifest-present, data-missing
-    // entry that every later manifestOk check trusts (wedging the family
-    // until it ages out). Manifest-first, an interruption leaves
-    // manifest-less debris — a plain miss the next builder replaces.
-    try Files.deleteIfExists(p.resolve("_MANIFEST"))
+  private def deleteRecursively(fs: FileSystem, p: Path): Unit = {
+    // the manifest dies FIRST: an INTERRUPTED recursive delete could
+    // otherwise leave a manifest-present, data-missing entry that every
+    // later manifestOk check trusts (wedging the family until it ages
+    // out). Manifest-first, an interruption leaves manifest-less debris —
+    // a plain miss the next builder replaces.
+    try fs.delete(new Path(p, "_MANIFEST"), false)
     catch { case _: java.io.IOException => () }
-    val walk = Files.walk(p)
-    try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-      .forEach(f => Files.deleteIfExists(f))
-    finally walk.close()
+    fs.delete(p, true)
   }
 
   /** Driver-side store snapshot as a LocalRelation — backs the
@@ -333,7 +287,7 @@ object ArtifactStore {
     * on-disk bytes, freshness, and any builder debris (tmp dirs from
     * crashed builds, lock files) — the ops view an operator checks
     * before trusting a store or scheduling a [[gc]]. Metadata only
-    * (directory walk; no data files are read).
+    * (listings; no data files are read).
     */
   def statusRelation(rootPath: String)
       : org.apache.spark.sql.catalyst.plans.logical.LocalRelation = {
@@ -350,45 +304,33 @@ object ArtifactStore {
       AttributeReference("newest_manifest_ms", LongType, nullable = false)(),
       AttributeReference("tmp_dirs", IntegerType, nullable = false)(),
       AttributeReference("locks", IntegerType, nullable = false)())
-    val root = Paths.get(rootPath)
+    val root = new Path(rootPath)
+    val fs = Publish.fsOf(root)
     val rows =
-      if (!Files.exists(root)) Seq.empty[InternalRow]
-      else {
-        val fams = Files.list(root)
-        try fams.toArray.toSeq.collect {
-          case f: Path if Files.isDirectory(f) =>
-            var (entries, live, tmps, locks) = (0, 0, 0, 0)
-            var bytes = 0L
-            var newest = 0L
-            val children = Files.list(f)
-            try children.forEach { e =>
-              val name = e.getFileName.toString
-              if (name.startsWith(".tmp-")) tmps += 1
-              else if (name.endsWith(".lock")) locks += 1
-              else if (name.startsWith("fp=")) {
-                entries += 1
-                val m = e.resolve("_MANIFEST")
-                if (Files.exists(m)) {
-                  live += 1
-                  newest = math.max(newest,
-                    try Files.getLastModifiedTime(m).toMillis
-                    catch { case _: java.io.IOException => 0L })
-                }
-                // a concurrent gc/publish may delete the entry mid-walk;
-                // a vanished subtree counts 0 bytes, it must not throw
-                try {
-                  val walk = Files.walk(e)
-                  try walk.forEach(p =>
-                    if (Files.isRegularFile(p))
-                      bytes += (try Files.size(p)
-                      catch { case _: java.io.IOException => 0L }))
-                  finally walk.close()
-                } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
-              }
-            } finally children.close()
-            InternalRow(UTF8String.fromString(f.getFileName.toString),
-              entries, live, bytes, newest, tmps, locks)
-        } finally fams.close()
+      if (!fs.exists(root)) Seq.empty[InternalRow]
+      else fs.listStatus(root).toSeq.filter(_.isDirectory).map { f =>
+        var (entries, live, tmps, locks) = (0, 0, 0, 0)
+        var bytes = 0L
+        var newest = 0L
+        fs.listStatus(f.getPath).foreach { e =>
+          val name = e.getPath.getName
+          if (name.startsWith(".tmp-")) tmps += 1
+          else if (name.endsWith(".lock")) locks += 1
+          else if (name.startsWith("fp=")) {
+            entries += 1
+            // a concurrent gc/publish may delete the entry mid-walk; a
+            // vanished manifest or subtree counts 0, it must not throw
+            try {
+              newest = math.max(newest,
+                fs.getFileStatus(new Path(e.getPath, "_MANIFEST")).getModificationTime)
+              live += 1
+            } catch { case _: java.io.FileNotFoundException => () }
+            bytes += (try fs.getContentSummary(e.getPath).getLength
+              catch { case _: java.io.IOException => 0L })
+          }
+        }
+        InternalRow(UTF8String.fromString(f.getPath.getName),
+          entries, live, bytes, newest, tmps, locks)
       }
     LocalRelation(out, rows, isStreaming = false)
   }
@@ -398,42 +340,46 @@ object ArtifactStore {
     * than `maxAgeMs` (a rewritten corpus gets a new fingerprint, so its
     * predecessor's entries go cold and only age out here; a hot entry of
     * an unchanged corpus is touched by its readers — including on every
-    * L1 cache hit via [[stillLive]] — and never ages), plus orphaned
-    * `.tmp-*` build dirs and stale `.lock` files past the crash-steal
-    * threshold. Safe against racing builders (a deleted entry is just a
-    * miss — the next readThrough re-publishes) and against the in-memory
-    * frame caches (they re-check [[stillLive]] on every hit and re-read
-    * through on a vanished entry). NOT safe against a reader caught
-    * mid-action: Spark re-opens parquet files per job, so a collected
-    * entry can still fail one in-flight query of a live session — run gc
-    * with a maxAgeMs comfortably above any query's lifetime, never 0, on
-    * a shared store. Returns the deleted entry paths.
+    * L1 cache hit via [[stillLive]] — and never ages), plus crashed
+    * builders' debris past the lock-steal threshold: orphaned `.tmp-*`
+    * build dirs, stale `.lock` files and manifest-less entries
+    * ([[Publish.sweep]]). Safe against racing builders (a deleted entry
+    * is just a miss — the next readThrough re-publishes) and against the
+    * in-memory frame caches (they re-check [[stillLive]] on every hit and
+    * re-read through on a vanished entry). NOT safe against a reader
+    * caught mid-action: Spark re-opens parquet files per job, so a
+    * collected entry can still fail one in-flight query of a live
+    * session — run gc with a maxAgeMs comfortably above any query's
+    * lifetime, never 0, on a shared store. Returns the deleted paths,
+    * each under `root` as given.
     */
   def gc(root: Path, maxAgeMs: Long): Seq[Path] = {
-    if (!Files.exists(root)) return Seq.empty
+    val fs = Publish.fsOf(root)
+    if (!fs.exists(root)) return Seq.empty
     val now = System.currentTimeMillis()
-    def mtime(p: Path): Long =
-      try Files.getLastModifiedTime(p).toMillis
-      catch { case _: java.io.IOException => 0L }
-    val deleted = scala.collection.mutable.ArrayBuffer[Path]()
-    val fams = Files.list(root)
-    try fams.forEach { fam =>
-      if (Files.isDirectory(fam)) {
-        val entries = Files.list(fam)
-        try entries.forEach { e =>
-          val name = e.getFileName.toString
-          val stale =
-            if (name.startsWith(".tmp-")) now - mtime(e) > LockStaleMs
-            else if (name.endsWith(".lock")) now - mtime(e) > LockStaleMs
-            else if (name.startsWith("fp=")) {
-              val m = e.resolve("_MANIFEST")
-              !Files.exists(m) && now - mtime(e) > LockStaleMs ||
-                Files.exists(m) && now - mtime(m) > maxAgeMs
-            } else false
-          if (stale) { deleted += e; deleteRecursively(e) }
-        } finally entries.close()
+    val debris = scala.collection.mutable.ArrayBuffer[Path]()
+    val cold = scala.collection.mutable.ArrayBuffer[Path]()
+    fs.listStatus(root).filter(_.isDirectory).foreach { fam =>
+      val famPath = new Path(root, fam.getPath.getName)
+      fs.listStatus(fam.getPath).foreach { e =>
+        val name = e.getPath.getName
+        val entry = new Path(famPath, name)
+        val stale = now - e.getModificationTime > Publish.LockStaleMs
+        if (name.startsWith(".tmp-") || name.endsWith(".lock")) {
+          if (stale) debris += entry
+        } else if (name.startsWith("fp=")) {
+          val manifestAge =
+            try Some(now - fs.getFileStatus(new Path(entry, "_MANIFEST")).getModificationTime)
+            catch { case _: java.io.FileNotFoundException => None }
+          manifestAge match {
+            case None => if (stale) debris += entry // interrupted delete
+            case Some(a) => if (a > maxAgeMs) cold += entry
+          }
+        }
       }
-    } finally fams.close()
-    deleted.toSeq
+    }
+    Publish.sweep(fs, debris.toSeq)
+    cold.foreach(deleteRecursively(fs, _))
+    (debris ++ cold).toSeq
   }
 }

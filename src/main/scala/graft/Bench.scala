@@ -362,6 +362,6 @@ object Bench {
     println(line)
     spark.stop()
     coldStores.foreach(s =>
-      ArtifactStore.deleteRecursively(java.nio.file.Paths.get(s)))
+      Publish.localFs.delete(new org.apache.hadoop.fs.Path(s), true))
   }
 }

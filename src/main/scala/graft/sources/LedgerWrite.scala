@@ -1,12 +1,13 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types._
+import graft.Publish
 
 /** DSv2 write path for `graft-ledger` — the source/sink symmetry the
   * reference only sketches (pulsar-spark-dstream/.../PulsarProducer.scala:12-27
@@ -31,14 +32,16 @@ import org.apache.spark.sql.types._
   *    commit messages (stray pieces from failed/speculative attempts are
   *    never read) into one NEW segment per partition, published with an
   *    atomic rename — readers either see the whole segment or none of
-  *    it, and existing segments are never rewritten (the BucketedUpsert
+  *    it ([[graft.Publish.publishIfAbsent]] on the root's local FS), and
+  *    existing segments are never rewritten (the BucketedUpsert
   *    touched-state-only discipline at the segment layer). The merge is
   *    driver-local file concatenation — the single-file-emulation
   *    stand-in for a broker's server-side segment append; callers that
   *    `repartition(col("partition"))` upstream hand commit one piece per
   *    partition, keeping it one sequential copy per segment;
   *  - streaming commits are idempotent per (queryId, epochId): a
-  *    manifest written before any rename records the merged-tmp → final
+  *    manifest written ([[graft.Publish.writeAtomically]]) before any
+  *    rename records the merged-tmp → final
   *    segment plan, so a retried epoch re-executes the SAME plan
   *    (skipping renames whose target already exists) instead of
   *    allocating fresh ids and double-appending, and a marker file in
@@ -67,6 +70,13 @@ object LedgerWrite {
     */
   def nextLedgerId(partitionDir: Path): Long =
     LedgerSource.listLedgers(partitionDir).lastOption.map(_.ledgerId + 1L).getOrElse(0L)
+
+  /** Publish a merged segment `tmp` as `target` unless `target` exists
+    * (a retried epoch's earlier publish); a leftover `tmp` is dropped. */
+  private[sources] def publishSegment(tmp: Path, target: Path): Boolean =
+    Publish.publishIfAbsent(Publish.localFs, hPath(tmp), hPath(target))(valid = true)
+
+  private[sources] def hPath(p: Path) = new org.apache.hadoop.fs.Path(p.toUri)
 
   /** Merge staged pieces (deterministic task order) into `target`. */
   private[sources] def mergePieces(staging: Path, pieces: Seq[(String, Path)], target: Path): Unit = {
@@ -260,8 +270,9 @@ class LedgerBatchWrite(path: String, queryId: String, schema: StructType,
       Files.createDirectories(dir)
       val tmp = dir.resolve(s".tmp-$writeId")
       mergePieces(staging, pieces.map(_._2).toSeq, tmp)
-      Files.move(tmp, dir.resolve(s"ledger-${nextLedgerId(dir)}.log"),
-        StandardCopyOption.ATOMIC_MOVE)
+      val target = dir.resolve(s"ledger-${nextLedgerId(dir)}.log")
+      if (!publishSegment(tmp, target)) throw new java.io.IOException(
+        s"graft-ledger write: cannot publish $tmp as $target")
     }
     deleteRecursively(staging)
   }
@@ -295,12 +306,8 @@ class LedgerStreamingWrite(path: String, queryId: String, schema: StructType,
     if (Files.exists(marker(epochId))) { cleanupEpoch(epochId, messages); return }
     // plan: one (tmp → final) rename per partition, recorded BEFORE any
     // rename so a retried commit replays the identical id assignment
-    val plan: Seq[(Int, String, String)] =
-      if (Files.exists(manifest(epochId)))
-        Files.readAllLines(manifest(epochId), StandardCharsets.UTF_8).asScala.toSeq
-          .filter(_.nonEmpty).map { l =>
-            val Array(p, t, f) = l.split(",", 3); (p.toInt, t, f)
-          }
+    val recorded: String =
+      if (Files.exists(manifest(epochId))) Files.readString(manifest(epochId))
       else {
         val byPartition = messages.collect { case m: LedgerCommitMessage => m }
           .flatMap(m => m.pieces.map(p => (p.partition, (m.taskUid, staging.resolve(p.file)))))
@@ -310,20 +317,17 @@ class LedgerStreamingWrite(path: String, queryId: String, schema: StructType,
           Files.createDirectories(dir)
           val tmpName = s".tmp-$queryId-$epochId"
           mergePieces(staging, pieces.map(_._2).toSeq, dir.resolve(tmpName))
-          (p, tmpName, s"ledger-${nextLedgerId(dir)}.log")
+          s"$p,$tmpName,ledger-${nextLedgerId(dir)}.log"
         }
         Files.createDirectories(staging)
-        val mtmp = staging.resolve(s".manifest-$epochId.tmp")
-        Files.write(mtmp, computed.map { case (p, t, f) => s"$p,$t,$f" }
-          .mkString("\n").getBytes(StandardCharsets.UTF_8))
-        Files.move(mtmp, manifest(epochId), StandardCopyOption.ATOMIC_MOVE)
-        computed
+        Publish.writeAtomically(Publish.localFs, hPath(manifest(epochId)),
+          computed.mkString("\n")).getOrElse(throw new java.io.IOException(
+            s"graft-ledger write: manifest ${manifest(epochId)} did not land"))
       }
-    plan.foreach { case (p, tmpName, finalName) =>
+    recorded.split("\n").filter(_.nonEmpty).foreach { l =>
+      val Array(p, tmpName, finalName) = l.split(",", 3)
       val dir = root.resolve(s"partition-$p")
-      if (!Files.exists(dir.resolve(finalName)) && Files.exists(dir.resolve(tmpName)))
-        Files.move(dir.resolve(tmpName), dir.resolve(finalName),
-          StandardCopyOption.ATOMIC_MOVE)
+      publishSegment(dir.resolve(tmpName), dir.resolve(finalName))
     }
     Files.createDirectories(root.resolve(CommitsDirName))
     Files.write(marker(epochId), Array.emptyByteArray)

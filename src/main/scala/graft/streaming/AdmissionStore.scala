@@ -2,9 +2,12 @@ package graft.streaming
 
 import scala.concurrent.Await
 import scala.concurrent.duration._
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, collect_set, hash, lit, pmod}
 import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
+import graft.Publish
 
 /** Shared store plumbing for the admission gates' epoch-partitioned
   * tables. ONE copy of the write/read/compaction protocol (its checked
@@ -60,19 +63,22 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
   * "maintenance is offline, not concurrent with an active stream"
   * contract is ENFORCED, not prose. Every maintenance entry point
   * ([[compactEpochs]], [[rebucket]], [[maintain]]) runs under a
-  * per-table lock file
-  * (`<table>_maint.lock`, atomic create — the ArtifactStore election
-  * pattern), and [[writeEpoch]] checks that lock twice: at entry and
-  * again immediately before its publish rename, throwing loudly while
-  * maintenance holds it. The previously fail-SILENT window — an epoch
-  * landing between maintenance's store read and its publishSwap was
-  * dropped with the swapped-out tree — is additionally closed from the
-  * maintenance side: every staged rewrite re-lists the table's epoch
-  * set under a freshly-touched lock right before the swap and ABORTS
-  * on drift ([[guardEpochDrift]]), so even a writer that slipped past
-  * a stale lock (crashed or long-paused maintainer — locks go stale by
-  * mtime after [[MaintLockStaleMs]] so a crashed maintainer cannot
-  * wedge the stream forever) loses nothing: either the writer fails
+  * per-table lock file, `<table>_maint.lock`, elected through
+  * [[graft.Publish.tryLock]] (the election every store shares). The
+  * exclusive create alone does not decide the owner — Hadoop's local
+  * `create(path, false)` is check-then-create — the election token
+  * that SURVIVES in the file does, and it is re-checked at every
+  * refresh and at release. [[writeEpoch]] checks that lock twice: at
+  * entry and again immediately before its publish swap, throwing
+  * loudly while maintenance holds it. The previously fail-SILENT
+  * window — an epoch landing between maintenance's store read and its
+  * swap was dropped with the swapped-out tree — is additionally closed
+  * from the maintenance side: every staged rewrite re-lists the table's
+  * epoch set under a freshly-touched lock right before the swap and
+  * ABORTS on drift ([[guardEpochDrift]]), so even a writer that slipped
+  * past a stale lock (crashed or long-paused maintainer — locks go stale
+  * by mtime after [[graft.Publish.LockStaleMs]] so a crashed maintainer
+  * cannot wedge the stream forever) loses nothing: either the writer fails
   * loudly and its batch retries, or the maintenance aborts loudly and
   * is re-run. The one residual window is a writer whose JVM pauses
   * between its final lock check and its rename for longer than the
@@ -101,14 +107,6 @@ private[graft] object AdmissionStore {
     * degrades to. Test-scale specs pass a tiny target to drive the
     * lifecycle across the boundary. */
   val TargetBucketBytes: Long = 256L << 20
-
-  /** A maintenance lock untouched for this long belonged to a crashed
-    * maintainer: writers treat it as absent (a crashed maintainer must
-    * not wedge the stream forever) and the next maintenance steals it.
-    * A LIVE maintainer re-touches the lock right before its publish
-    * ([[guardEpochDrift]]), so the stale window during a long staging
-    * job is covered by the epoch-drift abort, never by silent loss. */
-  private[graft] val MaintLockStaleMs: Long = 15 * 60 * 1000L
 
   /** The epoch every compaction folds into — below every batch id (see
     * the object doc's BASE EPOCH). */
@@ -178,20 +176,26 @@ private[graft] object AdmissionStore {
   private[streaming] def observed(o: Observation): Row =
     Await.result(o.future, 10.minutes)
 
-  private def fsOf(s: SparkSession) = org.apache.hadoop.fs.FileSystem
-    .get(s.sparkContext.hadoopConfiguration)
-  private def hPath(p: String) = new org.apache.hadoop.fs.Path(p)
+  private val log = LogManager.getLogger(getClass)
+
+  /** The filesystem that owns `table` (resolved from its path). */
+  private def fsOf(s: SparkSession, table: String): FileSystem =
+    Publish.fsOf(hPath(table), s)
+  private def hPath(p: String) = new Path(p)
   private def pbkPath(table: String) = hPath(s"$table/_PBK")
   private def bytesPath(table: String) = hPath(s"$table/_BYTES")
   private def asideOf(table: String) = s"${table}_aside"
   private def maintLockOf(table: String) = hPath(s"${table}_maint.lock")
 
+  /** The table's `epoch=*` dirs (empty for an absent table). */
+  private def epochDirs(fs: FileSystem, table: String) =
+    if (!fs.exists(hPath(table))) Array.empty[org.apache.hadoop.fs.FileStatus]
+    else fs.listStatus(hPath(table))
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("epoch="))
+
   /** Whether the table holds at least one epoch partition dir. */
-  private def hasEpochs(s: SparkSession, table: String): Boolean = {
-    val fs = fsOf(s)
-    fs.exists(hPath(table)) && fs.listStatus(hPath(table)).exists(st =>
-      st.isDirectory && st.getPath.getName.startsWith("epoch="))
-  }
+  private def hasEpochs(s: SparkSession, table: String): Boolean =
+    epochDirs(fsOf(s, table), table).nonEmpty
 
   /** The table's live epoch dirs, each FINGERPRINTED
     * (`name|fileCount|bytes|dirMtime`) — the drift guard's snapshot.
@@ -206,27 +210,17 @@ private[graft] object AdmissionStore {
     * snapshot/guard on the rare maintenance path — never the per-batch
     * store walk the r16 `_BYTES` carry removed. */
   private[graft] def epochSet(s: SparkSession, table: String): Set[String] = {
-    val fs = fsOf(s)
-    if (!fs.exists(hPath(table))) Set.empty
-    else fs.listStatus(hPath(table)).collect {
-      case st if st.isDirectory && st.getPath.getName.startsWith("epoch=") =>
-        val cs = fs.getContentSummary(st.getPath)
-        s"${st.getPath.getName}|${cs.getFileCount}|${cs.getLength}|" +
-          st.getModificationTime
+    val fs = fsOf(s, table)
+    epochDirs(fs, table).map { st =>
+      val cs = fs.getContentSummary(st.getPath)
+      s"${st.getPath.getName}|${cs.getFileCount}|${cs.getLength}|" +
+        st.getModificationTime
     }.toSet
   }
 
   // ---------------------------------------------------------------------
   // Maintenance lock — the single-maintainer contract, enforced
   // ---------------------------------------------------------------------
-
-  private def lockFresh(s: SparkSession, table: String): Boolean = {
-    val fs = fsOf(s); val p = maintLockOf(table)
-    try fs.exists(p) && System.currentTimeMillis() -
-      fs.getFileStatus(p).getModificationTime <= MaintLockStaleMs
-    catch { case _: java.io.FileNotFoundException => false } // lost a
-    // race with the release between exists and getFileStatus — absent
-  }
 
   /** [[writeEpoch]]'s side of the contract: a FRESH maintenance lock
     * means a maintainer owns the table right now — an epoch published
@@ -236,136 +230,50 @@ private[graft] object AdmissionStore {
     * the writer proceeds (availability), and the epoch-drift guard
     * protects a maintainer that is merely slow, not dead. */
   private def assertNoMaintenance(s: SparkSession, table: String): Unit =
-    if (lockFresh(s, table)) throw new IllegalStateException(
-      s"admission store $table is under maintenance " +
-        s"(${maintLockOf(table)} is held) — writeEpoch would race the " +
-        "rewrite and could be silently dropped with the superseded tree; " +
-        "retry the batch after maintenance completes, or remove a stale " +
-        "lock left by a crashed maintainer")
+    if (Publish.heldFresh(fsOf(s, table), maintLockOf(table)))
+      throw new IllegalStateException(
+        s"admission store $table is under maintenance " +
+          s"(${maintLockOf(table)} is held) — writeEpoch would race the " +
+          "rewrite and could be silently dropped with the superseded tree; " +
+          "retry the batch after maintenance completes, or remove a stale " +
+          "lock left by a crashed maintainer")
 
-  /** The read side of lock OWNERSHIP: the lock file carries the owning
-    * maintainer's election token (the writeMarker surviving-content
-    * convention), so a stolen/replaced lock is distinguishable from
-    * one's own. None for absent or unreadable. */
-  private def readLockToken(s: SparkSession,
-      p: org.apache.hadoop.fs.Path): Option[String] = {
-    val fs = fsOf(s)
-    try {
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(new String(org.apache.hadoop.io.IOUtils
-          .readFullyToByteArray(in), "UTF-8").trim)
-        finally in.close()
-      }
-    } catch { case _: java.io.IOException => None } // absent, torn or
-    // checksum-corrupt: simply NOT this run's token — ownership checks
-    // fail closed (abort before publish, leave the lock on release) and
-    // writers judge staleness by mtime, so an unreadable lock never
-    // crashes a batch or a guard
+  // This call chain's held locks (table → lock): guard and release must
+  // verify the lock still carries THIS maintenance run's token — a
+  // per-table map shared across threads would let a same-JVM thief's
+  // token shadow the loser's and wave its publish through. Thread-local
+  // is sound: every guard/release runs on the thread that elected.
+  private val heldLocks = new ThreadLocal[Map[String, Publish.Lock]] {
+    override def initialValue(): Map[String, Publish.Lock] = Map.empty
   }
 
-  // This call chain's held election tokens (table → token): guard and
-  // release must verify the lock still carries THIS maintenance run's
-  // token — a per-table map would let a same-JVM thief's token shadow
-  // the loser's and wave its publish through. Thread-local is sound:
-  // every guard/release runs on the thread that elected.
-  private val heldTokens = new ThreadLocal[Map[String, String]] {
-    override def initialValue(): Map[String, String] = Map.empty
-  }
-
-  /** Test seam for the steal race (see its call site in
-    * [[withMaintenance]]): AdmissionMaintenanceSpec installs a probe
-    * that refreshes the lock mid-steal — the exact interleaving the
-    * r17 review flagged — and restores the no-op afterwards. */
-  private[graft] var stealRaceProbe: () => Unit = () => ()
-
-  /** Run `body` as the table's single elected maintainer. Election is
-    * token-based, never blind: a FRESH lock throws (two concurrent
-    * maintainers are the same contract violation as a concurrent
-    * writer); a STALE lock is stolen via atomic rename-aside — the
-    * loser of a double steal fails its rename and aborts, so a fresh
-    * lock can never be deleted out from under its owner (the r17
-    * review's delete-then-create hole). The new lock carries a random
-    * election token and is read back: whichever maintainer's token
-    * SURVIVES owns the table (exactly one — a clobbered write reads
-    * back the winner's token and the loser throws), and ownership is
-    * re-verified at every publish ([[guardEpochDrift]]) and at release
-    * (never delete a thief's fresh lock). */
+  /** Run `body` as the table's single elected maintainer
+    * ([[Publish.tryLock]]). A lost election throws: a FRESH lock means
+    * another maintainer is active (two concurrent maintainers are the
+    * same contract violation as a concurrent writer), and a lost or
+    * aborted steal means one is electing. Ownership is re-verified at
+    * every publish ([[guardEpochDrift]]) and at release (never delete a
+    * thief's fresh lock). */
   private[graft] def withMaintenance[T](s: SparkSession, table: String)
       (body: => T): T = {
-    val fs = fsOf(s); val p = maintLockOf(table)
-    val token = java.util.UUID.randomUUID().toString
-    if (lockFresh(s, table)) throw new IllegalStateException(
-      s"admission store $table already has an active maintainer " +
-        s"($p is held fresh) — the single-maintainer contract allows one")
-    if (fs.exists(p)) { // stale: steal atomically — rename-aside, so a
-      // concurrent stealer's rename FAILS instead of both proceeding
-      val tomb = hPath(s"$p.stale-$token")
-      stealRaceProbe() // test seam: the window where a live owner's
-      // touchMaintLock can land between the staleness judgment above
-      // and the rename below (AdmissionMaintenanceSpec forces it);
-      // production leaves it a no-op
-      if (!fs.rename(p, tomb)) throw new IllegalStateException(
-        s"admission store $table: lost the stale-lock steal race on $p " +
-          "— another maintainer is electing; retry later")
-      // the steal was check-THEN-rename: between our staleness read and
-      // the rename, the live owner's touchMaintLock may have refreshed
-      // the lock (the r17 review's transient two-maintainer window).
-      // The rename preserved the file's mtime, so re-judge staleness on
-      // the TOMB: a fresh tomb is a live maintainer's lock — hand it
-      // back (rename restores it untouched for the owner's next token
-      // check) and abort the steal instead of electing over them.
-      val tombFresh =
-        try System.currentTimeMillis() -
-          fs.getFileStatus(tomb).getModificationTime <= MaintLockStaleMs
-        catch { case _: java.io.FileNotFoundException => false }
-      if (tombFresh) {
-        if (!fs.rename(tomb, p)) fs.delete(tomb, false) // p re-created by
-        // a third electing maintainer first: the displaced owner's next
-        // touch fails its token check and aborts loudly either way
-        throw new IllegalStateException(
-          s"admission store $table: aborting stale-lock steal on $p — " +
-            "the owner refreshed it between the staleness check and the " +
-            "steal; it is a LIVE maintainer's lock, retry later")
-      }
-      fs.delete(tomb, false)
+    val lock = Publish.tryLock(fsOf(s, table), maintLockOf(table)) match {
+      case Right(l) => l
+      case Left(why) => throw new IllegalStateException(
+        s"admission store $table: lost the maintenance-lock election ($why) " +
+          "— the single-maintainer contract allows one active maintainer; " +
+          "retry later")
     }
-    val out = try fs.create(p, false)
-    catch { case _: java.io.IOException => throw new IllegalStateException(
-      s"admission store $table: lost the maintenance-lock election on $p " +
-        "— another maintainer acquired it first") }
-    try out.write(token.getBytes("UTF-8")) finally out.close()
-    // surviving-content election (local fs create(false) is not atomic:
-    // two near-simultaneous creators can both land — the token that
-    // survives picks exactly one winner, the other aborts here)
-    if (!readLockToken(s, p).contains(token)) throw new IllegalStateException(
-      s"admission store $table: lost the maintenance-lock election on $p " +
-        "— another maintainer's token survived")
-    heldTokens.set(heldTokens.get() + (table -> token))
+    heldLocks.set(heldLocks.get() + (table -> lock))
     try body finally {
-      heldTokens.set(heldTokens.get() - table)
-      // release ONLY our own lock: a thief that legally stole it after
-      // it went stale owns it now — deleting would expose the thief's
-      // publish window to writers
-      if (readLockToken(s, p).contains(token)) fs.delete(p, false)
+      heldLocks.set(heldLocks.get() - table)
+      lock.release()
     }
-  }
-
-  /** Re-assert ownership + liveness on the held lock: refresh its mtime
-    * (so a writer's pre-rename check sees a FRESH lock even when the
-    * staging job outran [[MaintLockStaleMs]]) and return whether the
-    * lock still carries this run's token. */
-  private def touchMaintLock(s: SparkSession, table: String): Boolean = {
-    val fs = fsOf(s); val p = maintLockOf(table)
-    val mine = heldTokens.get().get(table)
-    val owned = mine.nonEmpty && readLockToken(s, p) == mine
-    if (owned) fs.setTimes(p, System.currentTimeMillis(), -1)
-    owned
   }
 
   /** The maintenance side of the race, checked right before a publish:
-    * (a) OWNERSHIP — if the lock no longer carries this run's token
+    * (a) OWNERSHIP — refresh the held lock (so a writer's pre-rename
+    * check sees it FRESH even when the staging job outran
+    * [[Publish.LockStaleMs]]); if it no longer carries this run's token
     * (it went stale mid-staging and another maintainer stole it), this
     * run must abort: its staged tree may already be superseded, and
     * publishing would race the thief's rewrite; (b) DRIFT — compare
@@ -377,8 +285,8 @@ private[graft] object AdmissionStore {
     * next run to misread. */
   private[graft] def guardEpochDrift(s: SparkSession, table: String,
       snapshot: Set[String], staged: String): Unit = {
-    if (!touchMaintLock(s, table)) {
-      fsOf(s).delete(hPath(staged), true)
+    if (!heldLocks.get().get(table).exists(_.refresh())) {
+      fsOf(s, staged).delete(hPath(staged), true)
       throw new IllegalStateException(
         s"admission store $table: maintenance lock lost mid-rewrite " +
           "(it went stale and another maintainer stole it) — aborting " +
@@ -386,7 +294,7 @@ private[graft] object AdmissionStore {
     }
     val now = epochSet(s, table)
     if (now != snapshot) {
-      fsOf(s).delete(hPath(staged), true)
+      fsOf(s, staged).delete(hPath(staged), true)
       throw new IllegalStateException(
         s"admission store $table: epoch set drifted during maintenance " +
           s"(staged from ${snapshot.toSeq.sorted.mkString("{", ",", "}")}, " +
@@ -405,17 +313,8 @@ private[graft] object AdmissionStore {
     * ([[writeMarker]]), so a torn marker cannot arise from a crash, and
     * garbage here means tampering or corruption, never a retryable
     * race. */
-  private def readMarker(s: SparkSession,
-      p: org.apache.hadoop.fs.Path): Option[Int] = {
-    val fs = fsOf(s)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val raw = try new String(org.apache.hadoop.io.IOUtils
-        .readFullyToByteArray(in), "UTF-8").trim
-      finally in.close() // readFullyToByteArray does NOT close — a
-      // leaked handle per marker read would accumulate across a
-      // long-lived stream's per-batch audits
+  private def readMarker(fs: FileSystem, p: Path): Option[Int] =
+    Publish.readString(fs, p).map { raw =>
       val k = try raw.toInt catch {
         case _: NumberFormatException => throw new IllegalStateException(
           s"admission-store marker $p is unreadable ('$raw') — restore " +
@@ -423,35 +322,25 @@ private[graft] object AdmissionStore {
       }
       if (k <= 0) throw new IllegalStateException(
         s"admission-store marker $p carries a nonsensical fan-out K=$k")
-      Some(k)
+      k
     }
-  }
 
   /** The fan-out a store was written with, from its table-level `_PBK`
     * stamp; None for an absent stamp. */
   def layoutK(s: SparkSession, table: String): Option[Int] =
-    readMarker(s, pbkPath(table))
+    readMarker(fsOf(s, table), pbkPath(table))
 
-  /** Atomic marker write: temp name, then rename into place (rename is
-    * atomic on HDFS/local) — a concurrent reader can never observe a
-    * created-but-empty marker and abort on a spurious K="" mismatch.
-    * The SURVIVING content decides success: HDFS rename fails onto an
-    * existing dest (a lost race), a local fs overwrites it — either
-    * way the marker is re-read and anything but `k` THROWS, so a
-    * failed stamp can never publish silently (the caller's staged tree
-    * never swaps in marker-less, and a racing first writer with a
-    * different sizing hint aborts before writing data). */
-  private def writeMarker(s: SparkSession, path: String, k: Int): Unit = {
-    val fs = fsOf(s)
-    val tmp = hPath(s"$path.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(k.toString.getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, hPath(path))) fs.delete(tmp, false)
-    val survived = readMarker(s, hPath(path))
-    if (!survived.contains(k)) throw new java.io.IOException(
-      s"cannot stamp $path with fan-out K=$k — the marker now reads " +
-        s"${survived.map(_.toString).getOrElse("<absent>")} (lost a race " +
-        "to a different K, or the marker write failed)")
+  /** Atomic marker write ([[Publish.writeAtomically]]): a reader never
+    * sees a created-but-empty marker, and a surviving marker other than
+    * `k` THROWS, so a failed stamp can never publish silently (the
+    * caller's staged tree never swaps in marker-less, and a racing first
+    * writer with a different sizing hint aborts before writing data). */
+  private def writeMarker(fs: FileSystem, p: Path, k: Int): Unit = {
+    val survived = Publish.writeAtomically(fs, p, k.toString)
+    if (!survived.contains(k.toString)) throw new java.io.IOException(
+      s"cannot stamp $p with fan-out K=$k — the marker now reads " +
+        s"${survived.getOrElse("<absent>")} (lost a race to a different " +
+        "K, or the marker write failed)")
   }
 
   /** Stamp fan-out `k` on a table with no stamp yet, then validate the
@@ -460,8 +349,8 @@ private[graft] object AdmissionStore {
     * DIFFERENT hints abort here BEFORE any epoch data is written under
     * the losing K. */
   private def stampK(s: SparkSession, table: String, k: Int): Unit = {
-    val fs = fsOf(s); val p = pbkPath(table)
-    if (!fs.exists(p)) writeMarker(s, p.toString, k)
+    val fs = fsOf(s, table); val p = pbkPath(table)
+    if (!fs.exists(p)) writeMarker(fs, p, k)
     val stamped = layoutK(s, table)
     if (!stamped.contains(k)) throw new IllegalStateException(
       s"admission store $table: lost the first-write stamp race — this " +
@@ -478,17 +367,14 @@ private[graft] object AdmissionStore {
     * Epochs that DISAGREE (or carry no marker) stay unrecoverable:
     * there is no one K the data was routed under. */
   private def recoverTableStamp(s: SparkSession, table: String): Unit = {
-    val fs = fsOf(s)
+    val fs = fsOf(s, table)
     if (!fs.exists(hPath(table)) || fs.exists(pbkPath(table))) return
-    val eks = fs.listStatus(hPath(table))
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("epoch="))
-      .map(e => readMarker(s,
-        new org.apache.hadoop.fs.Path(e.getPath, "_PBK")))
+    val eks = epochDirs(fs, table).map(e => readMarker(fs, new Path(e.getPath, "_PBK")))
     eks.toSeq.distinct match {
       case Seq(Some(k)) =>
-        writeMarker(s, pbkPath(table).toString, k)
-        System.err.println(s"[admission] $table: re-stamped missing " +
-          s"table _PBK from ${eks.length} agreeing epoch markers (K=$k)")
+        writeMarker(fs, pbkPath(table), k)
+        log.warn(s"$table: re-stamped missing table _PBK from " +
+          s"${eks.length} agreeing epoch markers (K=$k)")
       case _ => () // absent/divergent epochs: requireLayout's loud path
     }
   }
@@ -524,7 +410,7 @@ private[graft] object AdmissionStore {
         "(they recover an interrupted publish, and re-derive a deleted " +
         "table stamp when the per-epoch markers agree) or rebuild the " +
         "store"))
-    val fs = fsOf(s)
+    val fs = fsOf(s, table)
     val seen = auditCache.get(table) match {
       case Some((ck, eps)) if ck == k => eps
       case _ => Set.empty[String] // K changed (rebucket) → re-audit all
@@ -535,8 +421,7 @@ private[graft] object AdmissionStore {
       .foreach { e =>
         names += e.getPath.getName
         if (!seen.contains(e.getPath.getName)) {
-          val ek = readMarker(s,
-            new org.apache.hadoop.fs.Path(e.getPath, "_PBK"))
+          val ek = readMarker(fs, new Path(e.getPath, "_PBK"))
           if (!ek.contains(k)) throw new IllegalStateException(
             s"admission store $table is stamped with pb fan-out K=$k but " +
               s"epoch dir ${e.getPath.getName} was written under " +
@@ -571,31 +456,24 @@ private[graft] object AdmissionStore {
     * debris never inflates the signal into a premature re-bucket (the
     * r16 ADVICE flag). chooseK's power-of-two ladder makes an
     * epoch-sized drift immaterial to the suggested K. */
-  private def readBytesCell(s: SparkSession, table: String): Option[Long] = {
-    val fs = fsOf(s); val p = bytesPath(table)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val raw = try new String(org.apache.hadoop.io.IOUtils
-        .readFullyToByteArray(in), "UTF-8").trim
-      finally in.close()
-      // a torn/garbled cell re-bases instead of failing: the cell is an
-      // advisory counter, not layout ground truth like _PBK
+  private def readBytesCell(s: SparkSession, table: String): Option[Long] =
+    // a torn/garbled cell re-bases instead of failing: the cell is an
+    // advisory counter, not layout ground truth like _PBK
+    Publish.readString(fsOf(s, table), bytesPath(table)).flatMap(raw =>
       try Some(raw.toLong).filter(_ >= 0) catch {
         case _: NumberFormatException => None
-      }
-    }
-  }
+      })
 
   private def writeBytesCell(s: SparkSession, table: String, v: Long): Unit = {
-    val fs = fsOf(s); val p = bytesPath(table)
-    val tmp = hPath(s"$p.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(math.max(0L, v).toString.getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(p, false) // rename onto an existing file fails on HDFS;
-    if (!fs.rename(tmp, p)) fs.delete(tmp, false) // a reader in the
-    // delete→rename gap sees an absent cell and re-bases — advisory
+    val fs = fsOf(s, table); val p = bytesPath(table)
+    val cell = math.max(0L, v).toString
+    // rename replaces the old cell on the local FS but fails onto it on
+    // HDFS: there the old cell is deleted and the write retried — a
+    // reader in that gap sees an absent cell and re-bases (advisory)
+    if (!Publish.writeAtomically(fs, p, cell).contains(cell)) {
+      fs.delete(p, false)
+      Publish.writeAtomically(fs, p, cell)
+    }
   }
 
   /** Re-base the carried byte cell from the epoch-dir walk — the locked
@@ -609,53 +487,22 @@ private[graft] object AdmissionStore {
     * getContentSummary recursion is server-side on HDFS and bounded by
     * that epoch's own files elsewhere. */
   private def epochWalkBytes(s: SparkSession, table: String): Long = {
-    val fs = fsOf(s)
-    if (!fs.exists(hPath(table))) 0L
-    else fs.listStatus(hPath(table))
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("epoch="))
-      .map(e => fs.getContentSummary(e.getPath).getLength).sum
+    val fs = fsOf(s, table)
+    epochDirs(fs, table).map(e => fs.getContentSummary(e.getPath).getLength).sum
   }
 
   // ---------------------------------------------------------------------
   // Epoch publish + debris recovery
   // ---------------------------------------------------------------------
 
-  /** Restore/sweep `.epoch_old_*` asides (the epoch-replacement dance's
-    * crash debris): an old-aside whose `epoch=N` twin is MISSING is the
-    * prior attempt's committed rows caught between [[writeEpoch]]'s two
-    * renames — restore it, so the window is absent-but-recoverable for
-    * every reader, not just the retrying batch; one whose twin exists
-    * is superseded debris — drop it. One listStatus when the table
-    * exists; usually zero matches. */
-  private def recoverEpochAsides(s: SparkSession, table: String): Unit = {
-    val fs = fsOf(s)
-    if (!fs.exists(hPath(table))) return
-    fs.listStatus(hPath(table))
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith(".epoch_old_"))
-      .foreach { st =>
-        val ep = hPath(s"$table/epoch=" +
-          st.getPath.getName.stripPrefix(".epoch_old_"))
-        if (fs.exists(ep)) fs.delete(st.getPath, true)
-        else if (!fs.rename(st.getPath, ep)) throw new java.io.IOException(
-          s"recover: cannot restore ${st.getPath} -> $ep")
-      }
-  }
-
-  /** Maintenance-only debris sweep (under the lock, so no writer owns
-    * any staged dir): drop every `.epoch_stage_*` left by crashed epoch
-    * writes that were never retried — they are invisible to readers but
-    * accumulate bytes and files forever otherwise — and settle every
-    * `.epoch_old_*` via [[recoverEpochAsides]]. */
-  private def sweepEpochDebris(s: SparkSession, table: String): Unit = {
-    val fs = fsOf(s)
-    recoverEpochAsides(s, table)
-    if (!fs.exists(hPath(table))) return
-    fs.listStatus(hPath(table))
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith(".epoch_stage_"))
-      .foreach(st => fs.delete(st.getPath, true))
-  }
+  /** Settle `.epoch_old_*` asides, the epoch-replacement swap's crash
+    * debris ([[Publish.settle]]): an old-aside whose `epoch=N` twin is
+    * MISSING is the prior attempt's committed rows caught between
+    * [[writeEpoch]]'s two renames — restored, so the window is
+    * absent-but-recoverable for every reader, not just the retrying
+    * batch; one whose twin exists is superseded debris — dropped. */
+  private def recoverEpochAsides(s: SparkSession, table: String): Unit =
+    Publish.settleAll(fsOf(s, table), hPath(table), ".epoch_old_", "epoch=")
 
   /** Write one epoch of a store table under the blocking-key layout:
     * pb partition dirs inside the deterministic epoch dir (idempotent
@@ -682,12 +529,8 @@ private[graft] object AdmissionStore {
       targetBucketBytes: Long = TargetBucketBytes): Option[WidthSignal] = {
     val s = df.sparkSession
     assertNoMaintenance(s, table)
-    val fs = fsOf(s)
-    if (!fs.exists(hPath(table)) && fs.exists(hPath(asideOf(table))))
-      throw new IllegalStateException(
-        s"admission store $table missing but a maintenance aside exists — " +
-          "an interrupted compact()/maintain() publish; re-run the gate's " +
-          "compact()/maintain() to recover before writing")
+    val fs = fsOf(s, table)
+    if (!fs.exists(hPath(table))) refuseMidSwap(fs, table, "writing")
     val k = layoutK(s, table).getOrElse {
       val k0 = chooseK(math.max(0L, expectedStoreBytes), targetBucketBytes)
       stampK(s, table, k0) // stamp BEFORE data: a crash here leaves a
@@ -695,9 +538,9 @@ private[graft] object AdmissionStore {
     }                      // the retried batch rewrites its epoch
     // Epoch publish: parquet AND the epoch's own _PBK marker are staged
     // into a dot-prefixed dir (hidden from Spark's file index and
-    // partition discovery), then swapped in via rename — with any
-    // existing epoch dir renamed ASIDE first (`.epoch_old_<epoch>`,
-    // also hidden) rather than deleted. Readers therefore never see a
+    // partition discovery), then swapped in with any existing epoch dir
+    // renamed ASIDE first (`.epoch_old_<epoch>`, also hidden) rather than
+    // deleted ([[Publish.swap]]). Readers therefore never see a
     // half-written epoch; the one non-atomic window is between the two
     // renames, where the epoch is ABSENT — but its prior rows survive
     // in the old-aside, and recoverEpochAsides (run by every gate read
@@ -706,49 +549,38 @@ private[graft] object AdmissionStore {
     // Streaming's sequential batch-retry contract the window is
     // additionally unreachable by later batches: the failed batch
     // retries (overwriting this epoch) before any successor runs.
-    val epochDir = s"$table/epoch=$epoch"
-    val staged = s"$table/.epoch_stage_$epoch"
-    val oldAside = s"$table/.epoch_old_$epoch"
-    fs.delete(hPath(staged), true)
+    val epochDir = hPath(s"$table/epoch=$epoch")
+    val staged = hPath(s"$table/.epoch_stage_$epoch")
+    fs.delete(staged, true)
     // a crashed PREVIOUS retry's old-aside: if its epoch dir is MISSING,
     // the aside is the epoch's only committed copy — RESTORE it before
     // spending a Spark job staging (a crash during THIS staging must
     // not leave the epoch unrecoverable anywhere; deleting here was the
     // r17 review's fail-open window). With the epoch dir present, the
     // aside is superseded debris.
-    if (!fs.exists(hPath(epochDir)) && fs.exists(hPath(oldAside))) {
-      if (!fs.rename(hPath(oldAside), hPath(epochDir)))
-        throw new java.io.IOException(
-          s"writeEpoch: cannot restore $oldAside -> $epochDir")
-    } else fs.delete(hPath(oldAside), true)
+    val oldAside = hPath(s"$table/.epoch_old_$epoch")
+    Publish.settle(fs, epochDir, oldAside)
     df.withColumn("pb", pb(key, k))
       .write.partitionBy("pb")
-      .mode("overwrite").parquet(staged)
-    if (!fs.exists(hPath(staged)) || !fs.listStatus(hPath(staged)).exists(st =>
+      .mode("overwrite").parquet(staged.toString)
+    val stagedDirs = try fs.listStatus(staged)
+      catch { case _: java.io.FileNotFoundException => Array.empty[org.apache.hadoop.fs.FileStatus] }
+    if (!stagedDirs.exists(st =>
         st.isDirectory && st.getPath.getName.startsWith("pb="))) {
-      fs.delete(hPath(staged), true)
+      fs.delete(staged, true)
       return None
     }
-    writeMarker(s, s"$staged/_PBK", k)
+    writeMarker(fs, new Path(staged, "_PBK"), k)
     // byte carry, measured before the swap: the staged tree's bytes are
     // this epoch's contribution, the current epoch dir's (a retry) what
     // it replaces — both epoch-sized listings, never a store walk
-    val stagedBytes = fs.getContentSummary(hPath(staged)).getLength
+    val stagedBytes = fs.getContentSummary(staged).getLength
     val replacedBytes =
-      if (fs.exists(hPath(epochDir)))
-        fs.getContentSummary(hPath(epochDir)).getLength
-      else 0L
+      try fs.getContentSummary(epochDir).getLength
+      catch { case _: java.io.FileNotFoundException => 0L }
     assertNoMaintenance(s, table) // re-checked at rename-ε: a maintainer
     // that locked after our entry check must not lose this epoch silently
-    if (fs.exists(hPath(epochDir)) &&
-        !fs.rename(hPath(epochDir), hPath(oldAside)))
-      throw new java.io.IOException(s"writeEpoch: cannot set aside $epochDir")
-    if (!fs.rename(hPath(staged), hPath(epochDir))) {
-      fs.rename(hPath(oldAside), hPath(epochDir)) // best-effort restore
-      throw new java.io.IOException(
-        s"writeEpoch: rename $staged -> $epochDir failed")
-    }
-    fs.delete(hPath(oldAside), true)
+    Publish.swap(fs, epochDir, staged, oldAside)
     val bytes = readBytesCell(s, table) match {
       case Some(prev) => prev + stagedBytes - replacedBytes
       case None => epochWalkBytes(s, table) // first carry (or torn cell):
@@ -813,11 +645,10 @@ private[graft] object AdmissionStore {
       val schema = stored.add("pb", IntegerType).add("epoch", LongType)
       (keys.observe(touched, collect_set(pb(key, k)).as("pb")),
         Some(new PrunedRead(table, k, schema, touched)))
-    } else if (fsOf(s).exists(hPath(asideOf(table)))) throw new IllegalStateException(
-      s"admission store $table missing but a maintenance aside exists — " +
-        "an interrupted compact()/maintain() publish; re-run the gate's " +
-        "compact()/maintain() to recover before admitting")
-    else (keys, None)
+    } else {
+      refuseMidSwap(fsOf(s, table), table, "admitting")
+      (keys, None)
+    }
   }
 
   /** Read a store pruned to an explicit touched-bucket set (the caller
@@ -829,83 +660,51 @@ private[graft] object AdmissionStore {
     s.read.parquet(path).filter(col("pb").isin(touched: _*))
   }
 
+  /** A missing table beside a maintenance aside is an interrupted
+    * compact/rebucket publish that took the live dir with it: treating
+    * it as a fresh store would fail OPEN, so refuse loudly. */
+  private def refuseMidSwap(fs: FileSystem, table: String, doing: String): Unit =
+    if (fs.exists(hPath(asideOf(table)))) throw new IllegalStateException(
+      s"admission store $table missing but a maintenance aside exists — " +
+        "an interrupted compact()/maintain() publish; re-run the gate's " +
+        s"compact()/maintain() to recover before $doing")
+
   /** Stage a `_PBK` marker into a not-yet-published tree (the table stamp
     * and every staged epoch dir's own), so the marker travels with the
     * publish. */
   private def stageMarker(s: SparkSession, stagedDir: String,
       k: Int): Unit = {
-    val fs = fsOf(s)
-    writeMarker(s, s"$stagedDir/_PBK", k)
+    val fs = fsOf(s, stagedDir)
+    writeMarker(fs, hPath(s"$stagedDir/_PBK"), k)
     // every epoch dir inside the staged tree carries its own marker —
     // the per-epoch ground truth requireLayout audits against
-    fs.listStatus(hPath(stagedDir))
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("epoch="))
-      .foreach(e => writeMarker(s,
-        new org.apache.hadoop.fs.Path(e.getPath, "_PBK").toString, k))
+    epochDirs(fs, stagedDir).foreach(e => writeMarker(fs, new Path(e.getPath, "_PBK"), k))
   }
 
-  /** Recover an interrupted aside-protocol publish, if any: live
-    * present + aside present = crash AFTER the new tree landed (the
-    * aside is superseded debris — drop it); live missing + aside
-    * present = crash BETWEEN the renames (the aside IS the store —
-    * restore it). Reads refuse to run in the second state
-    * ([[observeTouched]]), so the window is fail-loud, never
-    * fail-open. */
-  private def recoverAside(s: SparkSession, live: String): Unit = {
-    val fs = fsOf(s)
-    val aside = hPath(asideOf(live)); val livePath = hPath(live)
-    if (fs.exists(aside)) {
-      if (fs.exists(livePath)) {
-        if (!fs.delete(aside, true))
-          throw new java.io.IOException(s"recover: cannot drop stale aside $aside")
-      } else if (!fs.rename(aside, livePath))
-        throw new java.io.IOException(s"recover: cannot restore $aside -> $live")
-    }
-  }
-
-  /** Publish a staged replacement tree over the live one via the aside
-    * dance (live → aside, staged → live, drop aside): at no point is
-    * the store both absent and unrecoverable, and the staged tree
-    * already carries its own `_PBK`, so the marker travels WITH the
-    * publish — no crash window leaves an intact keyed store whose
-    * reads then claim it predates the layout. */
-  private def publishSwap(s: SparkSession, live: String, staged: String): Unit = {
-    val fs = fsOf(s)
-    val livePath = hPath(live); val stagedPath = hPath(staged)
-    val aside = hPath(asideOf(live))
-    if (!fs.rename(livePath, aside))
-      throw new java.io.IOException(s"publish: rename $live -> $aside failed")
-    if (!fs.rename(stagedPath, livePath)) {
-      fs.rename(aside, livePath) // restore; best-effort before the throw
-      throw new java.io.IOException(s"publish: rename $staged -> $live failed")
-    }
-    if (!fs.delete(aside, true))
-      throw new java.io.IOException(s"publish: cannot drop aside $aside")
-  }
-
-  /** Shared entry ritual for every locked maintenance flow: settle
-    * publish + epoch asides, sweep never-retried staged debris (inside
-    * the table AND the sibling staging trees/lock tombs abandoned by
-    * crashed or superseded maintainers — staging dirs are uuid-unique
+  /** Shared entry ritual for every locked maintenance flow: settle an
+    * interrupted publish ([[Publish.settle]] — the table's aside is
+    * restored when the live dir is missing; reads refuse to run in that
+    * state ([[observeTouched]]), so the window is fail-loud, never
+    * fail-open) and the epoch asides, sweep never-retried staged debris
+    * (inside the table AND the sibling staging trees/lock tombs abandoned
+    * by crashed or superseded maintainers — staging dirs are uuid-unique
     * per run, so under the held lock anything matching the prefix is
     * dead or doomed-to-abort), and re-derive a deleted table stamp from
     * agreeing epoch markers. */
   private def maintenancePrologue(s: SparkSession, table: String): Unit = {
-    recoverAside(s, table)
-    sweepEpochDebris(s, table)
-    recoverTableStamp(s, table)
-    val fs = fsOf(s)
+    val fs = fsOf(s, table)
     val tablePath = hPath(table)
-    val parent = tablePath.getParent
+    Publish.settle(fs, tablePath, hPath(asideOf(table)))
+    recoverEpochAsides(s, table)
+    def under(dir: Path)(debris: String => Boolean): Seq[Path] =
+      if (dir == null || !fs.exists(dir)) Nil
+      else fs.listStatus(dir).toSeq.map(_.getPath).filter(p => debris(p.getName))
     val name = tablePath.getName
-    if (parent != null && fs.exists(parent))
-      fs.listStatus(parent).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith(s"${name}_compact_tmp") ||
-            n.startsWith(s"${name}_rebucket_tmp") ||
-            n.startsWith(s"${name}_maint.lock.stale-"))
-          fs.delete(st.getPath, true)
-      }
+    Publish.sweep(fs, under(tablePath)(_.startsWith(".epoch_stage_")) ++
+      under(tablePath.getParent)(n => n.startsWith(s"${name}_compact_tmp") ||
+        n.startsWith(s"${name}_rebucket_tmp") ||
+        n.startsWith(s"${name}_maint.lock.stale-")))
+    recoverTableStamp(s, table)
   }
 
   /** The ONE staged republish of every maintenance rewrite (run under the
@@ -931,7 +730,10 @@ private[graft] object AdmissionStore {
       .mode("overwrite").parquet(tmp)
     stageMarker(s, tmp, k) // the marker travels with the publish
     guardEpochDrift(s, table, snapshot, tmp)
-    publishSwap(s, table, tmp)
+    // the staged tree already carries its own `_PBK`, so the marker
+    // travels WITH the publish — no crash window leaves an intact keyed
+    // store whose reads then claim it predates the layout
+    Publish.swap(fsOf(s, table), hPath(table), hPath(tmp), hPath(asideOf(table)))
     rebaseBytes(s, table)
   }
 
@@ -967,7 +769,7 @@ private[graft] object AdmissionStore {
   private def rebucketLocked(s: SparkSession, table: String, key: Column,
       k2: Int): Unit = {
     require(k2 > 0 && k2 <= MaxBuckets, s"fan-out $k2 out of range")
-    val fs = fsOf(s)
+    val fs = fsOf(s, table)
     if (!fs.exists(hPath(table))) return
     val k = requireLayout(s, table)
     if (k2 == k) return
@@ -977,7 +779,7 @@ private[graft] object AdmissionStore {
       // old K). The lock is held, so delete-then-stamp has no racing
       // first writer to protect against.
       fs.delete(pbkPath(table), false)
-      writeMarker(s, pbkPath(table).toString, k2)
+      writeMarker(fs, pbkPath(table), k2)
       return
     }
     republish(s, table, "rebucket", k2) { rows =>
@@ -995,7 +797,7 @@ private[graft] object AdmissionStore {
       targetBucketBytes: Long = TargetBucketBytes): Option[LayoutReport] =
     withMaintenance(s, table) {
       maintenancePrologue(s, table)
-      if (!fsOf(s).exists(hPath(table))) None
+      if (!fsOf(s, table).exists(hPath(table))) None
       else {
         // re-base the carry under the lock (the one full walk per
         // maintenance pass), so the decision never runs on a drifted cell

@@ -1,13 +1,18 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.Publish
 
 /** Hash-bucketed parquet point upsert. The lookup table lives as
   * `bucket=N` partition directories keyed by `crc32(key) % numBuckets`;
   * an epoch reads ONLY the buckets its fresh keys touch (partition-pruned
-  * scan), runs the caller's merge over that slice, and atomically swaps
-  * ONLY those directories. Epoch cost is O(batch + touched-bucket rows),
+  * scan), runs the caller's merge over that slice, and swaps ONLY those
+  * directories ([[graft.Publish.swap]]: each old bucket is set aside
+  * before its replacement lands, and the next epoch settles a swap a
+  * crash interrupted before it reads, so a bucket's history is never
+  * lost). Epoch cost is O(batch + touched-bucket rows),
   * not O(table) — the parquet-fixture restatement of the reference's
   * per-key Cassandra point writes (K1/K3), replacing round 1's
   * whole-table rewrite. A real deployment would use MERGE INTO on a
@@ -15,6 +20,10 @@ import org.apache.spark.sql.functions._
   * the same story.
   */
 object BucketedUpsert {
+
+  /** Bucket `b`'s old directory waits at `<AsidePrefix>b` during its
+    * swap — hidden from Spark's partition discovery by the leading dot. */
+  private val AsidePrefix = ".bucket_old_"
 
   private def bucketOf(keyCol: String, numBuckets: Int) =
     // null keys → bucket -1, caught with a named error at the touched-
@@ -62,8 +71,12 @@ object BucketedUpsert {
         s"bucketed upsert: null values in key column '$keyCol' — filter or fix upstream")
     if (touched.isEmpty) return
     val dataCols = freshB.columns.toSeq.filterNot(_ == "bucket")
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(tablePath)
+    val root = new Path(tablePath)
+    val fs = Publish.fsOf(root, s)
+    // settle every swap a crash interrupted BEFORE reading: a bucket set
+    // aside with no live twin is restored, so the merge below sees its
+    // full history
+    Publish.settleAll(fs, root, AsidePrefix, "bucket=")
     // only a genuinely-missing table means "empty": any other read failure
     // (corrupt file, IO error) must abort the epoch — swallowing it would
     // merge against nothing and overwrite touched buckets' history
@@ -92,16 +105,12 @@ object BucketedUpsert {
     result.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
     if (!fs.exists(root)) fs.mkdirs(root)
     touched.foreach { b =>
-      val dst = new org.apache.hadoop.fs.Path(tablePath, s"bucket=$b")
-      val src = new org.apache.hadoop.fs.Path(tmp, s"bucket=$b")
-      fs.delete(dst, true)
-      // Hadoop rename reports many failures as `false`, not an exception —
-      // after the delete above, an unchecked false would silently drop the
-      // bucket's entire history
-      if (fs.exists(src) && !fs.rename(src, dst))
-        throw new java.io.IOException(
-          s"bucketed upsert: rename $src -> $dst failed; bucket $b left empty")
+      val src = new Path(tmp, s"bucket=$b")
+      // a bucket the merge emptied swaps in as an empty directory
+      if (!fs.exists(src)) fs.mkdirs(src)
+      Publish.swap(fs, new Path(tablePath, s"bucket=$b"), src,
+        new Path(tablePath, s"$AsidePrefix$b"))
     }
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+    fs.delete(new Path(tmp), true)
   }
 }

@@ -74,7 +74,7 @@ class AdmissionMaintenanceSpec extends AnyFunSuite with TempDirs {
     Files.createFile(lockOf(table))
     Files.setLastModifiedTime(lockOf(table),
       java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - AdmissionStore.MaintLockStaleMs - 1000))
+        System.currentTimeMillis() - Publish.LockStaleMs - 1000))
     // the writer treats the stale lock as absent — availability over a
     // dead maintainer
     AdmissionStore.writeEpoch(bandRow("b1", 1L), col("bucket"), table, 1L)
@@ -321,11 +321,11 @@ class AdmissionMaintenanceSpec extends AnyFunSuite with TempDirs {
     val staged = s"${table}_rebucket_tmp-paused"
     AdmissionStore.withMaintenance(spark, table) {
       val snapshot = AdmissionStore.epochSet(spark, table)
-      // the maintainer legally pauses past MaintLockStaleMs (GC, host
+      // the maintainer legally pauses past LockStaleMs (GC, host
       // stall — the r16/r17 bench windows saw 2.8× swings): age the lock
       Files.setLastModifiedTime(lockOf(table),
         java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - AdmissionStore.MaintLockStaleMs - 1000))
+          System.currentTimeMillis() - Publish.LockStaleMs - 1000))
       // a SECOND maintainer elects through the PRODUCTION steal path and
       // completes a real staged publish (compact folds both epochs)
       AdmissionStore.compactEpochs(spark,
@@ -361,10 +361,10 @@ class AdmissionMaintenanceSpec extends AnyFunSuite with TempDirs {
       .resolve("." + lockOf(table).getFileName + ".crc"))
     Files.setLastModifiedTime(lockOf(table),
       java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - AdmissionStore.MaintLockStaleMs - 1000))
+        System.currentTimeMillis() - Publish.LockStaleMs - 1000))
     // force the r17-review interleaving: the owner's touchMaintLock lands
     // BETWEEN the thief's staleness judgment and its rename-aside
-    AdmissionStore.stealRaceProbe = () =>
+    Publish.stealRaceProbe = () =>
       Files.setLastModifiedTime(lockOf(table),
         java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
     try {
@@ -374,7 +374,7 @@ class AdmissionMaintenanceSpec extends AnyFunSuite with TempDirs {
         }
       }
       assert(e.getMessage.contains("refreshed"), e.getMessage)
-    } finally AdmissionStore.stealRaceProbe = () => ()
+    } finally Publish.stealRaceProbe = () => ()
     // the lock was handed BACK: still present, still the owner's token,
     // still fresh — the owner's next guard/touch passes untouched
     assert(Files.exists(lockOf(table)), "owner's refreshed lock not handed back")
@@ -382,7 +382,7 @@ class AdmissionMaintenanceSpec extends AnyFunSuite with TempDirs {
       == "owner-token")
     assert(System.currentTimeMillis() -
       Files.getLastModifiedTime(lockOf(table)).toMillis
-      < AdmissionStore.MaintLockStaleMs, "handed-back lock must be fresh")
+      < Publish.LockStaleMs, "handed-back lock must be fresh")
     Files.delete(lockOf(table))
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -89,7 +90,7 @@ class ArtifactStoreSpec extends AnyFunSuite with TempDirs {
       // the inverse damage — manifest INTACT, data gone (an interrupted
       // gc delete, a torn copy): the read must self-heal into a rebuild,
       // not wedge the family behind a trusted-but-unreadable entry
-      ArtifactStore.deleteRecursively(Paths.get(entry, "data"))
+      ArtifactStore.deleteRecursively(new HPath(entry, "data"))
       Files.writeString(Paths.get(entry, "_MANIFEST"),
         Files.readString(Paths.get(entry, "_MANIFEST"))) // keep it valid
       val healed2 = ArtifactStore.readThrough(spark, "heal", "fp1")(build)
@@ -121,6 +122,52 @@ class ArtifactStoreSpec extends AnyFunSuite with TempDirs {
       val leftovers = Files.list(Paths.get(root, "race")).toArray.map(_.toString)
         .filter(p => p.contains(".tmp-") || p.endsWith(".lock"))
       assert(leftovers.isEmpty, s"race left debris: ${leftovers.mkString(",")}")
+    }
+  }
+
+  test("a builder that outlives its lock never deletes the thief's lock; one entry is published") {
+    val root = freshRoot()
+    withStore(root) {
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration._
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val fam = Paths.get(root, "thief")
+      def lockFile = Files.list(fam).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .find(_.getFileName.toString.endsWith(".lock"))
+      val thiefBuilding = new java.util.concurrent.CountDownLatch(1)
+      val thiefGo = new java.util.concurrent.CountDownLatch(1)
+      val builds = new AtomicInteger(0)
+      var thief: Future[Long] = null
+      val first = Future {
+        ArtifactStore.readThrough(spark, "thief", "fpT") {
+          builds.incrementAndGet()
+          // this build runs past staleness: age its own lock ...
+          Files.setLastModifiedTime(lockFile.get, java.nio.file.attribute.FileTime
+            .fromMillis(System.currentTimeMillis() - Publish.LockStaleMs - 1000))
+          // ... so a second session steals it and starts its own build
+          thief = Future {
+            ArtifactStore.readThrough(spark, "thief", "fpT") {
+              builds.incrementAndGet()
+              thiefBuilding.countDown()
+              thiefGo.await()
+              spark.range(7).toDF("id")
+            }.count()
+          }
+          assert(thiefBuilding.await(60, SECONDS), "the stale lock was not stolen")
+          spark.range(7).toDF("id")
+        }.count()
+      }
+      assert(Await.result(first, 120.seconds) == 7L)
+      // the first builder has released: the thief, still building, keeps
+      // its lock
+      assert(lockFile.isDefined, "the first builder's release deleted the thief's lock")
+      thiefGo.countDown()
+      assert(Await.result(thief, 120.seconds) == 7L)
+      assert(builds.get == 2)
+      val left = Files.list(fam).toArray.map(_.toString)
+      assert(left.count(_.contains("fp=")) == 1 && !left.exists(p =>
+        p.contains(".tmp-") || p.endsWith(".lock")),
+        s"expected exactly one published entry: ${left.mkString(",")}")
     }
   }
 
@@ -183,9 +230,9 @@ class ArtifactStoreSpec extends AnyFunSuite with TempDirs {
         Files.readString(e.resolve("_MANIFEST")).endsWith("fpLive"))
       assert(live.length == 1 && dead.length == 1)
       dead.foreach(e => age(e.resolve("_MANIFEST"), 100L * 24 * 3600 * 1000))
-      age(tmp, ArtifactStore.LockStaleMs + 60000)
-      age(lock, ArtifactStore.LockStaleMs + 60000)
-      val gone = ArtifactStore.gc(Paths.get(root), 7L * 24 * 3600 * 1000)
+      age(tmp, Publish.LockStaleMs + 60000)
+      age(lock, Publish.LockStaleMs + 60000)
+      val gone = ArtifactStore.gc(new HPath(root), 7L * 24 * 3600 * 1000)
         .map(_.toString).toSet
       assert(dead.forall(e => gone.contains(e.toString)), s"cold entry survived: $gone")
       assert(gone.contains(tmp.toString) && gone.contains(lock.toString),
@@ -261,7 +308,7 @@ class ArtifactStoreSpec extends AnyFunSuite with TempDirs {
         // call must notice, drop the dead frame, and re-read through —
         // not serve a scan over deleted files
         Files.setLastModifiedTime(manifest, aged)
-        val gone = ArtifactStore.gc(Paths.get(root), 60 * 1000)
+        val gone = ArtifactStore.gc(new HPath(root), 60 * 1000)
         assert(gone.map(_.toString).contains(entry), s"$tag: gc spared the entry: $gone")
         val healed = get() // must rebuild + republish, not FileNotFound
         assert(healed == first, s"$tag: re-read-through result diverged")

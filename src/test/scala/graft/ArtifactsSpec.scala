@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the store first, exactly the accounting the `build` map exists to
   * prevent.
   */
-class ArtifactsSpec extends AnyFunSuite {
+class ArtifactsSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -39,7 +39,7 @@ class ArtifactsSpec extends AnyFunSuite {
   test("prewarmCold builds every repetition genuinely cold and leaves the first store live") {
     import java.nio.file.{Files, Paths}
     val roots = Seq.fill(2)(
-      Files.createTempDirectory("graft-cold-spec").toString)
+      tmp("graft-cold-spec"))
     val prev = spark.conf.getOption("spark.graft.artifacts.path")
     try {
       val builds = Artifacts.prewarmCold(spark, "/root/testdata/sf0.001", roots)

@@ -23,7 +23,7 @@ object Collector extends Serializable {
 /** K4 batched external sink: groups of N per partition, tail flush on
   * close, pluggable transport (reference BigfootClient grouped-200 POST).
   */
-class BatchingSinkSpec extends AnyFunSuite {
+class BatchingSinkSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -35,7 +35,7 @@ class BatchingSinkSpec extends AnyFunSuite {
     import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.functions._
     import graft.streaming.BinaryDumpSink
-    val root = Files.createTempDirectory("graft_blob_dump").toString
+    val root = tmp("graft_blob_dump")
     val df = spark.range(0, 20)
       .select(concat(lit("tag"), col("id")).as("tag_id"),
         encode(concat(lit("png-bytes-"), col("id")), "UTF-8").as("payload"),
@@ -68,8 +68,8 @@ class BatchingSinkSpec extends AnyFunSuite {
     import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.functions._
     import graft.streaming.BinaryDumpSink
-    val root = Files.createTempDirectory("graft_blob_evil").toString
-    val outside = Files.createTempDirectory("graft_blob_outside")
+    val root = tmp("graft_blob_evil")
+    val outside = java.nio.file.Paths.get(tmp("graft_blob_outside"))
     // ids that would escape the root or collide if interpolated raw
     val evil = Seq(
       ("../../" + outside.getFileName.toString + "/pwn", "a"),

@@ -9,7 +9,7 @@ import graft.streaming.BucketedUpsert
 /** The point of the bucketed upsert: an epoch must not scan or rewrite
   * buckets its keys don't touch.
   */
-class BucketedUpsertSpec extends AnyFunSuite {
+class BucketedUpsertSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -55,7 +55,7 @@ class BucketedUpsertSpec extends AnyFunSuite {
 
   test("epochs rewrite only touched buckets; untouched files stay byte-identical") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft_bupsert").toString + "/lookup"
+    val table = tmp("graft_bupsert") + "/lookup"
     // find two keys landing in different crc32 buckets (driver-side, tiny)
     val probe = (1 to 50).map(i => s"key$i").toDF("k")
       .withColumn("b", pmod(crc32(col("k")), lit(64)).cast("int"))
@@ -86,7 +86,7 @@ class BucketedUpsertSpec extends AnyFunSuite {
 
   test("an existing but empty table root reads as zero rows, not a wedge") {
     import spark.implicits._
-    val table = Files.createTempDirectory("graft_bupsert_empty").toString + "/lookup"
+    val table = tmp("graft_bupsert_empty") + "/lookup"
     // simulate the crash window: root created, no bucket directory ever
     // renamed in — the next epoch must behave like a missing table
     Files.createDirectories(Paths.get(table))
@@ -96,5 +96,25 @@ class BucketedUpsertSpec extends AnyFunSuite {
       .select("k", "ts", "v").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
     assert(rows == Set(("k1", 1L, "v1")), rows.toString)
+  }
+
+  test("a swap a crash interrupted is settled before the next merge: the bucket keeps its full history") {
+    import spark.implicits._
+    val table = tmp("graft_bupsert_swap") + "/lookup"
+    // append-only merge: every epoch's rows stay, so the table is the history
+    val append = (existing: org.apache.spark.sql.DataFrame,
+        fresh: org.apache.spark.sql.DataFrame) => existing.unionByName(fresh)
+    val b = Seq("k1").toDF("k")
+      .select(pmod(crc32(col("k")), lit(64)).cast("int")).head().getInt(0)
+    BucketedUpsert.upsert(Seq(("k1", 1L, "v1")).toDF("k", "ts", "v"), table, "k")(append)
+    BucketedUpsert.upsert(Seq(("k1", 2L, "v2")).toDF("k", "ts", "v"), table, "k")(append)
+    // the crash: the old bucket was set aside, its replacement staged but
+    // never renamed in
+    Files.move(Paths.get(table, s"bucket=$b"), Paths.get(table, s".bucket_old_$b"))
+    Files.createDirectories(Paths.get(s"${table}_epoch_tmp", s"bucket=$b"))
+    BucketedUpsert.upsert(Seq(("k1", 3L, "v3")).toDF("k", "ts", "v"), table, "k")(append)
+    val rows = spark.read.parquet(table).select("ts").collect().map(_.getLong(0)).sorted
+    assert(rows.toSeq == Seq(1L, 2L, 3L), s"the merge lost the bucket's history: ${rows.toSeq}")
+    assert(!Files.exists(Paths.get(table, s".bucket_old_$b")), "the aside was not settled")
   }
 }

@@ -11,10 +11,10 @@ import graft.operators.SkewTools
   * At 100 TB this converts every downstream orderkey join from a
   * full-data shuffle into a local bucket zip.
   */
-class BucketingSpec extends AnyFunSuite {
+class BucketingSpec extends AnyFunSuite with TempDirs {
 
   private lazy val warehouse =
-    Files.createTempDirectory("graft_warehouse").toString
+    tmp("graft_warehouse")
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")

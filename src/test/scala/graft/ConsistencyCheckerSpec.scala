@@ -10,7 +10,7 @@ import graft.streaming.ConsistencyChecker
 /** Source-vs-sink reconciliation over the ledger source's bounded batch
   * path: an injected sink gap must surface, a consistent sink must not.
   */
-class ConsistencyCheckerSpec extends AnyFunSuite {
+class ConsistencyCheckerSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -19,7 +19,7 @@ class ConsistencyCheckerSpec extends AnyFunSuite {
     .getOrCreate()
 
   private def writeTopic(): Path = {
-    val root = Files.createTempDirectory("graft_cc_topic")
+    val root = java.nio.file.Paths.get(tmp("graft_cc_topic"))
     val p0 = root.resolve("partition-0"); Files.createDirectories(p0)
     Files.write(p0.resolve("ledger-1.log"),
       (0 until 6).map(i => s"k$i,payload-$i").mkString("\n")

@@ -10,7 +10,7 @@ import graft.sources.CsvReport
   * header'd single-file CSV report, written from a distributed aggregate
   * and read back exactly.
   */
-class CsvReportSpec extends AnyFunSuite {
+class CsvReportSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -20,7 +20,7 @@ class CsvReportSpec extends AnyFunSuite {
 
   test("K5: header'd single-file CSV report round-trips exactly") {
     import org.apache.spark.sql.functions._
-    val out = Files.createTempDirectory("graft_csv_report").toString + "/report"
+    val out = tmp("graft_csv_report") + "/report"
     // a report-shaped aggregate (the reference writes accuracy buckets)
     val report = spark.range(0, 1000)
       .select((col("id") % 7).as("bucket"), col("id").as("v"))

@@ -19,7 +19,7 @@ import graft.streaming.{ConsistencyChecker, GeotagPipeline}
   * reconciled to zero missing rows (with a non-vacuous injected-gap
   * control).
   */
-class EndToEndPipelineSpec extends AnyFunSuite {
+class EndToEndPipelineSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -34,9 +34,9 @@ class EndToEndPipelineSpec extends AnyFunSuite {
 
   test("produce → stream → elect → upsert → reconcile, across two epochs") {
     import spark.implicits._
-    val topic = Files.createTempDirectory("e2e_topic").toString
-    val table = Files.createTempDirectory("e2e_table").toString + "/lookup"
-    val ckpt = Files.createTempDirectory("e2e_ckpt").toString
+    val topic = tmp("e2e_topic")
+    val table = tmp("e2e_table") + "/lookup"
+    val ckpt = tmp("e2e_ckpt")
 
     def produce(rows: Seq[(Integer, String, String)]): Unit =
       rows.toDF("partition", "key", "v")

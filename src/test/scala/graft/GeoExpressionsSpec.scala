@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.GeoFunctions
 import graft.functions.expressions.GeoExpressions
 
-class GeoExpressionsSpec extends AnyFunSuite {
+class GeoExpressionsSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = {
     // getOrCreate would reuse another suite's session (same JVM) and skip
@@ -128,7 +128,7 @@ class GeoExpressionsSpec extends AnyFunSuite {
   test("graft_ledger_status table function reports topic metadata in SQL") {
     import java.nio.file.Files
     import java.nio.charset.StandardCharsets
-    val root = Files.createTempDirectory("graft_status_topic")
+    val root = java.nio.file.Paths.get(tmp("graft_status_topic"))
     def write(p: Int, ledger: Long, lines: Seq[String]): Unit = {
       val dir = root.resolve(s"partition-$p")
       Files.createDirectories(dir)
@@ -181,7 +181,7 @@ class GeoExpressionsSpec extends AnyFunSuite {
 
   test("graft_artifacts_status table function reports store health in SQL") {
     import java.nio.file.Files
-    val root = Files.createTempDirectory("graft_status_store")
+    val root = java.nio.file.Paths.get(tmp("graft_status_store"))
     val prev = spark.conf.getOption("spark.graft.artifacts.path")
     spark.conf.set("spark.graft.artifacts.path", root.toString)
     try {

@@ -13,7 +13,7 @@ import graft.operators.Elections.Pt
   * grouped history merge → election → upsert, across TWO source epochs
   * (proves the stored-history merge path, not just a single batch).
   */
-class GeotagPipelineSpec extends AnyFunSuite {
+class GeotagPipelineSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -27,10 +27,10 @@ class GeotagPipelineSpec extends AnyFunSuite {
     s"""k,{"addr_hash":"$hash","type":"$typ","lat":$lat,"lng":$lng,"accuracy":$acc,"ts_ms":$ts}"""
 
   test("flagship pipeline: two epochs merge history and elect best location") {
-    val topic = Files.createTempDirectory("geotag_topic")
+    val topic = java.nio.file.Paths.get(tmp("geotag_topic"))
     val p0 = topic.resolve("partition-0"); Files.createDirectories(p0)
-    val table = Files.createTempDirectory("geotag_table").toString + "/lookup"
-    val ckpt = Files.createTempDirectory("geotag_ckpt").toString
+    val table = tmp("geotag_table") + "/lookup"
+    val ckpt = tmp("geotag_ckpt")
 
     // epoch 1: 4 clustered DEL points + 1 invalid (type), 1 invalid (zero lat)
     val l1 = Seq(

@@ -12,7 +12,7 @@ import graft.operators.{IndexMaintenance, VectorQueries}
   * persisted-artifact story the corpus-fingerprinted store models
   * statically.
   */
-class IndexMaintenanceSpec extends AnyFunSuite {
+class IndexMaintenanceSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -105,8 +105,8 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     // dup clones never reach the inverted file, and the index stays
     // queryable without a rebuild
     import graft.streaming.EmbeddingAdmission
-    val store = java.nio.file.Files.createTempDirectory("fresh_store").toString
-    val kept = java.nio.file.Files.createTempDirectory("fresh_kept").toString
+    val store = tmp("fresh_store")
+    val kept = tmp("fresh_kept")
     val e = Tables.embeddings(spark, dir)
     val (baseAll, deltaAll) = split()
 

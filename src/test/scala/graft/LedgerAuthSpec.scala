@@ -20,7 +20,7 @@ class FixedHeaderAuth extends LedgerAuthProvider {
   * provider selection): deterministic blob construction, fail-fast
   * resolution, and end-to-end secret redaction.
   */
-class LedgerAuthSpec extends AnyFunSuite {
+class LedgerAuthSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -94,7 +94,7 @@ class LedgerAuthSpec extends AnyFunSuite {
   }
 
   test("end-to-end: authed read works, table renders redacted, blob stays off the rendered surface") {
-    val root: Path = Files.createTempDirectory("graft_auth_topic")
+    val root: Path = java.nio.file.Paths.get(tmp("graft_auth_topic"))
     val dir = root.resolve("partition-0")
     Files.createDirectories(dir)
     Files.write(dir.resolve("ledger-1.log"),

@@ -13,7 +13,7 @@ import graft.sources.LedgerSource.Cursor
   * earliest-available — the lifecycle the reference delegates to the
   * broker, driven against the engine's own write path.
   */
-class LedgerMaintenanceSpec extends AnyFunSuite {
+class LedgerMaintenanceSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -30,15 +30,15 @@ class LedgerMaintenanceSpec extends AnyFunSuite {
   }
 
   test("retention keeps resumable streams exact and degrades stale cursors to earliest") {
-    val root = Files.createTempDirectory("graft_retain")
+    val root = java.nio.file.Paths.get(tmp("graft_retain"))
     // three appends → ledgers 0, 1, 2 on partition 0
     append(root, Seq((0, "a", "v0")))
     append(root, Seq((0, "b", "v1")))
     append(root, Seq((0, "c", "v2")))
 
     // consume everything with a checkpointed stream
-    val out = Files.createTempDirectory("graft_retain_out").toString
-    val ckpt = Files.createTempDirectory("graft_retain_ckpt").toString
+    val out = tmp("graft_retain_out")
+    val ckpt = tmp("graft_retain_ckpt")
     def runStream(): Unit = {
       val q = spark.readStream.format("graft-ledger")
         .option("path", root.toString).load()

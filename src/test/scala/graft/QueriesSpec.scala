@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators._
 import graft.operators.Elections.Pt
 
-class QueriesSpec extends AnyFunSuite {
+class QueriesSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[8]")
@@ -223,18 +223,18 @@ class QueriesSpec extends AnyFunSuite {
     // in-place rewrite that changes mtime must produce a different key,
     // or a rewritten corpus would silently serve a stale artifact.
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = Files.createTempDirectory("graft_fp").toString
+    val fpDir = tmp("graft_fp")
     val src = Paths.get(s"$dir/documents.parquet")
-    val dst = Paths.get(s"$tmp/documents.parquet")
+    val dst = Paths.get(s"$fpDir/documents.parquet")
     Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING)
-    val f1 = graft.Tables.parquetFingerprint(spark, tmp, "documents")
-    val first = TextQueries.lshNeardupPairsShared(spark, tmp)
-    assert(TextQueries.lshNeardupPairsShared(spark, tmp) eq first)
+    val f1 = graft.Tables.parquetFingerprint(spark, fpDir, "documents")
+    val first = TextQueries.lshNeardupPairsShared(spark, fpDir)
+    assert(TextQueries.lshNeardupPairsShared(spark, fpDir) eq first)
     // same name, same bytes, new mtime — the in-place-rewrite case
     dst.toFile.setLastModified(dst.toFile.lastModified() + 1234)
-    val f2 = graft.Tables.parquetFingerprint(spark, tmp, "documents")
+    val f2 = graft.Tables.parquetFingerprint(spark, fpDir, "documents")
     assert(f1 != f2, "fingerprint must change on part-file mtime change")
-    val second = TextQueries.lshNeardupPairsShared(spark, tmp)
+    val second = TextQueries.lshNeardupPairsShared(spark, fpDir)
     assert(!(second eq first), "rewritten corpus must rebuild the artifact")
   }
 
@@ -555,7 +555,7 @@ class QueriesSpec extends AnyFunSuite {
     // Synthetic table: NULL-user click+purchase, NULL-ts click, NULL-ts
     // purchase; every purchase must survive with -1 no-match sentinels.
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("q47null").toString
+    val q47Dir = tmp("q47null")
     Seq[(Long, Option[Long], Option[Long], String)](
       (10L, Some(1000L), Some(1L), "click"),    // normal click, user 1
       (20L, Some(2000L), Some(1L), "purchase"), // matches click 10
@@ -565,8 +565,8 @@ class QueriesSpec extends AnyFunSuite {
       (60L, Some(5000L), Some(2L), "purchase"), // only NULL-ts click before
       (70L, None, Some(1L), "purchase")         // NULL ts purchase, user 1
     ).toDF("event_id", "ts", "user_id", "event_type")
-      .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    val got = RelationalQueries.defs("q47_asof_latest_click")(spark, tmp)
+      .write.mode("overwrite").parquet(s"$q47Dir/events.parquet")
+    val got = RelationalQueries.defs("q47_asof_latest_click")(spark, q47Dir)
       .collect()
       .map(r => (Option(r.get(0)), r.getLong(1), Option(r.get(2)),
         r.getLong(3), r.getLong(4))).toSet

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming._
 import graft.streaming.TripTracker._
 
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -204,23 +204,23 @@ class StreamingSpec extends AnyFunSuite {
   test("foreachBatch upsert maintains capped per-user location table") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_upsert").toString
+    val upsertDir = tmp("graft_upsert")
     val mem = MemoryStream[(Long, Long, Long, String, Double)]
     val events = mem.toDF()
       .toDF("event_id", "ts_us", "user_id", "event_type", "value")
     val q = StreamingJobs.bestLocationUpsert(events,
-        s"$tmp/lookup", s"$tmp/ckpt")
+        s"$upsertDir/lookup", s"$upsertDir/ckpt")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     mem.addData(eventRow(1, 1000000, 1, "click", 10.0),
       eventRow(2, 2000000, 1, "click", 20.0))
     q.awaitTermination(60000)
     val q2 = StreamingJobs.bestLocationUpsert(events,
-        s"$tmp/lookup", s"$tmp/ckpt")
+        s"$upsertDir/lookup", s"$upsertDir/ckpt")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     mem.addData(eventRow(3, 3000000, 1, "click", 30.0),
       eventRow(4, 4000000, 2, "view", 40.0))
     q2.awaitTermination(60000)
-    val table = spark.read.parquet(s"$tmp/lookup")
+    val table = spark.read.parquet(s"$upsertDir/lookup")
     val byUser = table.groupBy("user_id").count().collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(byUser == Map(1L -> 3L, 2L -> 1L))

@@ -19,7 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * drills the checker itself against simulated drift (column add / drop /
   * rename / decimal-scale change) so each class is KNOWN to fail by name.
   */
-class TestdataCanarySpec extends AnyFunSuite {
+class TestdataCanarySpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[8]")
@@ -115,17 +115,7 @@ class TestdataCanarySpec extends AnyFunSuite {
       .foreach(checkTable(dir, _))
   }
 
-  private def tmpRoot(): java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory("canary")
-    // reverse-sorted walk deletes children before parents on JVM exit
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(q => java.nio.file.Files.deleteIfExists(q))
-      finally walk.close()
-    }))
-    p
-  }
+  private def tmpRoot(): java.nio.file.Path = java.nio.file.Paths.get(tmp("canary"))
 
   test("drift drill: add/drop/rename/decimal-scale each fail the canary by name") {
     val tmp = tmpRoot().toString
