@@ -148,12 +148,16 @@ object ArtifactStore {
   /** Open the published parquet, self-healing a manifest-present but
     * unreadable entry (interrupted delete, concurrent gc, torn copy):
     * the entry is removed — manifest first, so it reads as a MISS — and
-    * the caller falls back to its miss path instead of being wedged.
+    * the caller falls back to its miss path instead of being wedged. A
+    * missing `data/` is checked before the read, so that heal logs the
+    * store's one WARN rather than Spark's PATH_NOT_FOUND listener trace.
     */
   private def readData(s: SparkSession, fs: FileSystem, dir: Path, tag: String)
       : Option[DataFrame] =
     try {
-      val df = s.read.parquet(new Path(dir, "data").toString)
+      val data = new Path(dir, "data")
+      if (!fs.exists(data)) throw new java.io.FileNotFoundException(data.toString)
+      val df = s.read.parquet(data.toString)
       touch(fs, dir)
       Some(df)
     } catch {

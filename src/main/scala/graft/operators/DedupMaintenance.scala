@@ -96,42 +96,28 @@ object DedupMaintenance {
     // Saturation cap on the REFRESH arm: under the declared-lossy mode
     // (spark.graft.dedup.maxBucket > 0) hot buckets are dropped from
     // BOTH join sides, with hotness judged on the combined store+delta
-    // population — byte-for-byte the streaming gate's semantics
-    // (NearDupAdmission: a bucket just under the cap on each side alone
-    // must not slip through at 2× combined). Persisted pairs are NEVER
-    // dropped (the union below is monotone); what the cap loses is
+    // population — for delta×delta pairs too, since the delta's bands
+    // sit on the store side. (The streaming gate differs: its in-batch
+    // pairs are capped by the batch's own bucket sizes, only its
+    // batch×store pairs by the combined population.) Persisted pairs are
+    // NEVER dropped (the union below is monotone); what the cap loses is
     // delta-touching candidates whose every shared bucket is hot at
-    // arrival time. NOTE the honest asymmetry vs the capped BUILD: a
-    // refresh judges hotness when the delta arrives and does not
-    // exact-collapse, so under cap > 0 refresh and rebuild are BOTH
-    // declared-lossy but may drop different template pairs — the
+    // arrival time. A refresh judges hotness when the delta arrives and
+    // does not exact-collapse, so under cap > 0 refresh and rebuild are
+    // BOTH declared-lossy but may drop different template pairs — the
     // refresh==rebuild bit-equality contract is pinned at cap = 0 (the
     // default), and DedupCapSpec pins each arm's own drop semantics.
-    val cap = TextQueries.dedupMaxBucket(shD.sparkSession)
-    val (deltaSide, storeSide) =
-      if (cap <= 0) (bandedD, allBands)
-      else {
-        val hot = allBands.groupBy(col("bucket"))
-          .agg(count(lit(1)).as("bn"))
-          .filter(col("bn") > cap).select(col("bucket"))
-        (bandedD.join(broadcast(hot), Seq("bucket"), "left_anti"),
-          allBands.join(broadcast(hot), Seq("bucket"), "left_anti"))
-      }
-    val cand = deltaSide.as("a")
-      .join(storeSide.as("b"),
+    val decap = TextQueries.dropHot(allBands, "bucket",
+      TextQueries.dedupMaxBucket(shD.sparkSession)) _
+    val cand = decap(bandedD).as("a")
+      .join(decap(allBands).as("b"),
         col("a.bucket") === col("b.bucket") &&
           col("a.doc_id") =!= col("b.doc_id"))
       .select(least(col("a.doc_id"), col("b.doc_id")).as("d1"),
         greatest(col("a.doc_id"), col("b.doc_id")).as("d2"))
       .distinct()
     val allDocs = graph.docs.unionByName(shD)
-    val newPairs = cand
-      .join(allDocs.select(col("doc_id").as("d1"), col("shingles").as("sh1")), "d1")
-      .join(allDocs.select(col("doc_id").as("d2"), col("shingles").as("sh2")), "d2")
-      .withColumn("jac", size(array_intersect(col("sh1"), col("sh2"))) /
-        size(array_union(col("sh1"), col("sh2"))).cast("double"))
-      .filter(col("jac") >= Threshold)
-      .select(col("d1"), col("d2"), col("jac"))
+    val newPairs = TextQueries.verifyPairs(cand, allDocs, Threshold)
     val pairs = graph.pairs.unionByName(newPairs).localCheckpoint()
     // warm-start label convergence: persisted labels + fresh endpoints
     val endpoints = pairs.select(col("d1").as("doc_id"))

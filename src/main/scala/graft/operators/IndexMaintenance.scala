@@ -328,34 +328,11 @@ object IndexMaintenance {
     if (r.isNullAt(0)) "empty" else r.getString(0)
   }
 
-  /** The dropped side of every qualifying within-cell near-dup pair
-    * between rosters `a` and `b` under the SemDeDup keep rule: the MORE
-    * prototypical member (higher csim, ties dropping the larger id)
-    * loses. Symmetric in its pair, so the caller controls the pair
-    * universe via `idCond` (a < b at build; delta × all at refresh —
-    * where delta×delta pairs appear twice and collapse in the distinct).
-    */
-  private def semDrops(a: DataFrame, b: DataFrame,
-      idCond: org.apache.spark.sql.Column, tau: Double): DataFrame =
-    a.alias("a").join(b.alias("b"),
-        col("a.cell") === col("b.cell") && idCond)
-      .filter(cosineSim(col("a.embedding"), col("b.embedding")) >= tau)
-      .select(when(col("a.csim") > col("b.csim") ||
-          (col("a.csim") === col("b.csim") &&
-            col("a.vec_id") > col("b.vec_id")), col("a.vec_id"))
-        .otherwise(col("b.vec_id")).as("vec_id"))
-      .distinct()
-
-  private def semRoster(assigned: DataFrame, cent: DataFrame): DataFrame =
-    assigned.join(broadcast(cent), "cell")
-      .select(col("vec_id"), col("cell"), col("embedding"),
-        cosineSim(col("embedding"), col("centroid")).as("csim"))
-
   /** Bootstrap semantic-dedup pass over a built index: per-cell
     * pairwise (Σ|cell|², the q119 cost shape), drop set persisted. */
   def buildSemDedup(index: IvfIndex, tau: Double = 0.35): SemDedupState = {
-    val m = semRoster(index.assigned, index.centroids).localCheckpoint()
-    SemDedupState(m, semDrops(m, m,
+    val m = VectorQueries.semRoster(index.assigned, index.centroids).localCheckpoint()
+    SemDedupState(m, VectorQueries.semDrops(m, m,
       col("a.vec_id") < col("b.vec_id"), tau).localCheckpoint(), tau,
       centroidFingerprint(index.centroids))
   }
@@ -385,11 +362,11 @@ object IndexMaintenance {
         SemDedupRefreshReport("rebuild", delta.count(), state.centroidFp,
           indexFp))
     } else {
-      val dm = semRoster(
+      val dm = VectorQueries.semRoster(
         VectorQueries.assignCells(delta.select(col("vec_id"), col("embedding")),
           index.centroids), index.centroids).localCheckpoint()
       val all = state.members.unionByName(dm)
-      val newDrops = semDrops(dm, all,
+      val newDrops = VectorQueries.semDrops(dm, all,
         col("a.vec_id") =!= col("b.vec_id"), state.tau)
       (SemDedupState(all,
         state.dropped.unionByName(newDrops).distinct().localCheckpoint(),

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import graft.Tables
 import graft.functions.TextFunctions._
 
@@ -112,48 +112,83 @@ object TextQueries {
           .cast("string"))): _*)
   }
 
+  /** A window over a whole census table (one row per source, language or
+    * cell), keyed by `n ≥ 1` on a count column `n` that every census row
+    * carries: one partition holding every row, under a real key — a
+    * literal key is optimised away and leaves the window unpartitioned
+    * (a single-partition exchange with Spark's "No Partition Defined"
+    * warning). */
+  private[graft] def wholeCensus(n: String): WindowSpec =
+    Window.partitionBy(col(n) >= 1)
+
+  /** What the shared LSH pair kernels need to know of one near-dup
+    * modality: its id, band-key and payload columns, and the pair
+    * similarity its verify thresholds, carried out as column `simName`.
+    * The text family is [[Jaccard]]; the embedding gate brings its own
+    * (SRP key, cosine). */
+  private[graft] final case class PairKernel(id: String, key: String,
+      payload: String, sim: (Column, Column) => Column, simName: String)
+
+  /** (doc_id, bucket, shingles) verified by exact set-jaccard. */
+  private[graft] val Jaccard = PairKernel("doc_id", "bucket", "shingles",
+    (a, b) => size(array_intersect(a, b)) / size(array_union(a, b)), "jac")
+
+  /** The hot-bucket cap — the declared-lossy skew guard of every LSH
+    * candidate join. A band bucket holding B rows contributes B²
+    * candidate pairs, so one boilerplate template shared by 10^6 docs
+    * would explode the join exactly like the hot-shingle Σdf² the LSH
+    * path exists to avoid: keys holding more than `cap` rows of the
+    * population `pop` are dropped from `side` (the hot-key list is tiny
+    * → broadcast anti-join). A true pair is lost only if EVERY band it
+    * collides in is hot. `cap` ≤ 0 is off: `side` comes back unchanged,
+    * as the oracle-checked queries need to reproduce the exact join. */
+  private[graft] def dropHot(pop: DataFrame, key: String, cap: Int)(
+      side: DataFrame): DataFrame =
+    if (cap <= 0) side
+    else {
+      val hot = pop.groupBy(col(key))
+        .agg(count(lit(1)).as("bn"))
+        .filter(col("bn") > cap)
+        .select(col(key))
+      side.join(broadcast(hot), Seq(key), "left_anti")
+    }
+
   /** DataFrame-level LSH pair core shared by the batch queries (q29/q38/
-    * q52) and the streaming admission filter: band self-join candidates,
-    * exact set-jaccard verify. `docs` = (doc_id, shingles), `banded` =
-    * bandedOf(docs) — pass both pre-materialized so the UDF lineage runs
-    * once, not once per self-join side.
+    * q52), the dedup maintenance and both LSH admission gates' in-batch
+    * pairs: band self-join candidates, exact verify. `docs` = (id,
+    * payload), `banded` = (id, key) under `k`'s names — pass both
+    * pre-materialized so the banding lineage runs once, not once per
+    * self-join side. The hot-bucket cap ([[dropHot]], exact dedup (q27)
+    * runs before LSH so hot buckets are near-dup templates, not
+    * identical copies) judges the batch's OWN bucket sizes. Returns
+    * (d1 < d2, `k.simName`).
     */
   private[graft] def lshPairsFromDocs(docs: DataFrame, banded: DataFrame,
-      threshold: Double, maxBucket: Int = 0): DataFrame = {
-    // optional skew guard for adversarial template-heavy corpora: a band
-    // bucket holding B docs contributes B² candidate pairs, so one boiler-
-    // plate template shared by 10^6 docs would explode the join exactly
-    // like the hot-shingle Σdf² the LSH path exists to avoid. Buckets over
-    // the cap are dropped (hot-bucket list is tiny → broadcast anti-join).
-    // Lossy by declared design: a true pair is lost only if EVERY band it
-    // collides in is hot, and exact dedup (q27) runs before LSH so hot
-    // buckets are near-dup templates, not identical copies. Off (0) for
-    // the oracle-checked queries, which must reproduce the exact join.
-    val capped =
-      if (maxBucket <= 0) banded
-      else {
-        val hot = banded.groupBy(col("bucket"))
-          .agg(count(lit(1)).as("bn"))
-          .filter(col("bn") > maxBucket)
-          .select(col("bucket"))
-        banded.join(broadcast(hot), Seq("bucket"), "left_anti")
-      }
-    // band join moves only (bucket, doc_id); the wide shingle payload joins
-    // back AFTER candidate dedup, crossing the shuffle once per surviving
-    // pair, not once per band.
+      threshold: Double, maxBucket: Int = 0,
+      k: PairKernel = Jaccard): DataFrame = {
+    val capped = dropHot(banded, k.key, maxBucket)(banded)
+    // band join moves only (key, id); the wide payload joins back AFTER
+    // candidate dedup, crossing the shuffle once per surviving pair, not
+    // once per band.
     val cand = capped.as("a").join(capped.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
+        col(s"a.${k.key}") === col(s"b.${k.key}") &&
+          col(s"a.${k.id}") < col(s"b.${k.id}"))
+      .select(col(s"a.${k.id}").as("d1"), col(s"b.${k.id}").as("d2"))
       .distinct()
-    cand
-      .join(docs.select(col("doc_id").as("d1"), col("shingles").as("sh1")), "d1")
-      .join(docs.select(col("doc_id").as("d2"), col("shingles").as("sh2")), "d2")
-      .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))))
-      .withColumn("uni", size(array_union(col("sh1"), col("sh2"))))
-      .withColumn("jac", col("inter") / col("uni"))
-      .filter(col("jac") >= threshold)
-      .select(col("d1"), col("d2"), col("jac"))
+    verifyPairs(cand, docs, threshold, k)
   }
+
+  /** The join-back verify: candidate pairs `cand` (d1, d2) pick up both
+    * payloads from `docs` (id, payload) and keep those at `k.sim` ≥
+    * `threshold`, as (d1, d2, `k.simName`). */
+  private[graft] def verifyPairs(cand: DataFrame, docs: DataFrame,
+      threshold: Double, k: PairKernel = Jaccard): DataFrame =
+    cand
+      .join(docs.select(col(k.id).as("d1"), col(k.payload).as("p1")), "d1")
+      .join(docs.select(col(k.id).as("d2"), col(k.payload).as("p2")), "d2")
+      .withColumn(k.simName, k.sim(col("p1"), col("p2")))
+      .filter(col(k.simName) >= threshold)
+      .select(col("d1"), col("d2"), col(k.simName))
 
   /** (doc_id, component) labels of the near-dup graph at jaccard ≥ 0.5:
     * edges from the LSH path (identical pair set, near-linear cost),
@@ -1380,7 +1415,7 @@ object TextQueries {
     // step before a training run; a real pipeline would take target
     // weights as config). Two tiny aggregates — scales trivially.
     "q59_source_mixture" -> ((s, dir) => {
-      val w = Window.partitionBy(lit(1))
+      val w = wholeCensus("n_docs")
       Tables.documents(s, dir)
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"))
@@ -1511,7 +1546,7 @@ object TextQueries {
     // `< rate` compare has no float ambiguity against the oracle.
     "q65_mixture_downsample" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val w = Window.partitionBy(lit(1)) // input = per-lang agg, bounded
+      val w = wholeCensus("n_docs") // input = per-lang agg, bounded
       val rates = docs.groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"))
         .withColumn("share",
@@ -2099,7 +2134,7 @@ object TextQueries {
     // libm, both within 1-2 ulp): the round-4 output absorbs it and a
     // spec pins that no share sits near a rounding boundary.
     "q101_temperature_mixture" -> ((s, dir) => {
-      val w = Window.partitionBy(lit(1)) // the bounded language table
+      val w = wholeCensus("n_docs") // the bounded language table
       // token counts from the persisted tokenized corpus (no re-tokenize)
       lexDocsShared(s, dir)
         .select(col("lang"), size(col("t")).as("ntok"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -280,7 +280,7 @@ object VectorQueries {
       val cent = trainCellsShared(s, dir, e)
       val assigned = assignCellsShared(s, dir, e, cent)
         .select(col("vec_id"), col("cell"))
-      val w = Window.partitionBy(lit(1)) // census is nlist-sized, bounded
+      val w = TextQueries.wholeCensus("n_total") // nlist-sized, bounded
       val rates = assigned.groupBy(col("cell"))
         .agg(count(lit(1)).as("n_total"))
         .withColumn("target",
@@ -708,19 +708,9 @@ object VectorQueries {
       val e = Tables.embeddings(s, dir)
       val cent = trainCellsShared(s, dir, e)
       val assigned = assignCellsShared(s, dir, e, cent)
-      val scored = assigned.join(broadcast(cent), "cell")
-        .withColumn("csim", cosineSim(col("embedding"), col("centroid")))
-        .select(col("vec_id"), col("cell"), col("embedding"), col("csim"))
-      val drops = scored.alias("a")
-        .join(scored.alias("b"), col("a.cell") === col("b.cell") &&
-          col("a.vec_id") < col("b.vec_id"))
-        .withColumn("cos", cosineSim(col("a.embedding"), col("b.embedding")))
-        .filter(col("cos") >= 0.35)
-        .select(when(col("a.csim") > col("b.csim") ||
-            (col("a.csim") === col("b.csim") &&
-              col("a.vec_id") > col("b.vec_id")), col("a.vec_id"))
-          .otherwise(col("b.vec_id")).as("vec_id"))
-        .distinct()
+      val scored = semRoster(assigned, cent)
+      val drops = semDrops(scored, scored,
+        col("a.vec_id") < col("b.vec_id"), 0.35)
       scored.join(drops.withColumn("dropped", lit(true)), Seq("vec_id"), "left")
         .select(col("vec_id"), col("cell"),
           coalesce(col("dropped"), lit(false)).as("dropped"),
@@ -1121,6 +1111,33 @@ object VectorQueries {
   private[graft] val IvfBroadcastCellsConf = "spark.graft.ivf.maxBroadcastCells"
   private[graft] val IvfBroadcastCellsDefault = 200000L
 
+  /** The SemDeDup roster of an IVF assignment (vec_id, cell, embedding):
+    * each vector with `csim`, its cosine to its own centroid — how
+    * prototypical it is. ONE definition for q119, the maintained state
+    * ([[IndexMaintenance.buildSemDedup]]) and the streaming gate
+    * ([[graft.streaming.SemanticAdmission]]). */
+  private[graft] def semRoster(assigned: DataFrame, cent: DataFrame): DataFrame =
+    assigned.join(broadcast(cent), "cell")
+      .select(col("vec_id"), col("cell"), col("embedding"),
+        cosineSim(col("embedding"), col("centroid")).as("csim"))
+
+  /** The SemDeDup keep rule: the dropped side of every within-cell pair
+    * of rosters `a` × `b` with cosine ≥ `tau` — the MORE prototypical
+    * member (higher csim) drops, ties drop the larger id. Symmetric in
+    * its pair, so the caller picks the pair universe with `idCond`
+    * (a < b for a build; delta × all for a refresh, where delta × delta
+    * pairs appear twice and collapse in the distinct). */
+  private[graft] def semDrops(a: DataFrame, b: DataFrame, idCond: Column,
+      tau: Double): DataFrame =
+    a.alias("a").join(b.alias("b"),
+        col("a.cell") === col("b.cell") && idCond)
+      .filter(cosineSim(col("a.embedding"), col("b.embedding")) >= tau)
+      .select(when(col("a.csim") > col("b.csim") ||
+          (col("a.csim") === col("b.csim") &&
+            col("a.vec_id") > col("b.vec_id")), col("a.vec_id"))
+        .otherwise(col("b.vec_id")).as("vec_id"))
+      .distinct()
+
   private[graft] def assignCells(e: DataFrame, cent: DataFrame,
       probes: Int = 1, cacheGeometry: Boolean = true): DataFrame = {
     require(probes >= 1, s"hop-1 probes must be >= 1, got $probes")
@@ -1397,11 +1414,20 @@ object VectorQueries {
     * or the same vector family lands in two different bucket spaces.
     */
   private[graft] def srpBandRows(e: DataFrame, bits: Int): DataFrame =
-    e.select(col("vec_id"), col("embedding"), explode(array(
-        (0 until SrpAnnTables).map(t => struct(lit(t).as("t"),
-          srpBucketExpr(col("embedding"), bits, 16 * t).as("b"))): _*)).as("tb"))
+    e.select(col("vec_id"), col("embedding"),
+        srpBandKeys(col("embedding"), bits, SrpAnnTables).as("tb"))
       .select(col("vec_id"), col("embedding"),
         col("tb.t").as("t"), col("tb.b").as("b"))
+
+  /** The OR-amplified SRP band key of `emb`, one row per table: the
+    * exploded struct (t, b), b the `bits`-plane bucket of table t, whose
+    * plane seeds sit 16·t apart. ONE band-key definition for q34/q37's
+    * persisted tables, q45, q62 and the embedding admission gate, which
+    * hashes this struct (field names, types and order) into its store's
+    * pb layout. */
+  private[graft] def srpBandKeys(emb: Column, bits: Int, tables: Int): Column =
+    explode(array((0 until tables).map(t => struct(lit(t).as("t"),
+      srpBucketExpr(emb, bits, 16 * t).as("b"))): _*))
 
   /** IVF probe-and-rerank search over an inverted file: broadcast the
     * query probe list onto the cell-partitioned corpus, exact-cosine
@@ -1616,6 +1642,10 @@ object VectorQueries {
     */
   private[graft] val SrpAnnTables = 8
 
+  /** OR-amplification of the near-dup SRP banding (q45, q62 and the
+    * embedding admission gate): 3 tables, lossless at cosine ≥ 0.95. */
+  private[graft] val SrpDedupTables = 3
+
   /** q62's corpus: embeddings + planted near-dup contamination (the q45
     * pattern — every 5th vector re-identified to +1_000_000, which draws
     * an independent md5 split, and perturbed with eps=0.02 hash noise),
@@ -1666,44 +1696,36 @@ object VectorQueries {
     * 1:1 against the exact O(n²) join.
     */
   private[graft] def neardupPairsLsh(s: SparkSession, dir: String,
-      corpus: DataFrame): DataFrame = {
-    val bits = srpBandBits(s, dir)
-    val banded = corpus.select(col("vec_id"), col("embedding"),
-      explode(array(
-        struct(lit(0).as("t"), srpBucketExpr(col("embedding"), bits, 0).as("b")),
-        struct(lit(1).as("t"), srpBucketExpr(col("embedding"), bits, 16).as("b")),
-        struct(lit(2).as("t"), srpBucketExpr(col("embedding"), bits, 32).as("b"))
-      )).as("tb"))
-    // verify BEFORE deduping the cross-table repeats: the cosine is a pure
-    // function of the pair, so filtering first is equivalent — and the
-    // dedup exchange then carries only the verified (d1, d2) survivors
-    // (a handful of 16-byte rows) instead of two 64-float vectors per
-    // candidate. Same shuffle-slimming as q37's candidate pipeline.
-    banded.as("a").join(banded.as("b"),
-        col("a.tb") === col("b.tb") && col("a.vec_id") < col("b.vec_id"))
-      .filter(cosineSim(col("a.embedding"), col("b.embedding")) >= 0.95)
-      .select(col("a.vec_id").as("d1"), col("b.vec_id").as("d2"))
-      .dropDuplicates("d1", "d2")
-  }
+      corpus: DataFrame): DataFrame =
+    srpVerifiedPairs(corpus.select(col("vec_id"), col("embedding")),
+      srpBandBits(s, dir))
 
-  private[graft] def embeddingLeakPairsLsh(s: SparkSession, dir: String): DataFrame = {
-    val corpus = leakCorpus(s, dir)
-    val bits = srpBandBits(s, dir)
-    val banded = corpus.select(col("vec_id"), col("embedding"), col("split"),
-      explode(array(
-        struct(lit(0).as("t"), srpBucketExpr(col("embedding"), bits, 0).as("b")),
-        struct(lit(1).as("t"), srpBucketExpr(col("embedding"), bits, 16).as("b")),
-        struct(lit(2).as("t"), srpBucketExpr(col("embedding"), bits, 32).as("b"))
-      )).as("tb"))
-    // split inequality + cosine verify both commute with the dedup (pure
-    // per-pair functions), so filter first and dedup only survivors —
-    // same shuffle-slimming rationale as neardupPairsLsh.
+  private[graft] def embeddingLeakPairsLsh(s: SparkSession, dir: String): DataFrame =
+    srpVerifiedPairs(
+      leakCorpus(s, dir).select(col("vec_id"), col("embedding"), col("split")),
+      srpBandBits(s, dir), Some(col("a.split") =!= col("b.split")),
+      Seq(col("a.split").as("s1"), col("b.split").as("s2")))
+
+  /** The verified SRP pair stage q45 and q62 share: [[SrpDedupTables]]
+    * band tables over `corpus` (vec_id, embedding, ...), a band self-join
+    * that CARRIES the embedding, and the verify — cosine ≥ 0.95 and the
+    * caller's pair predicate `pairCond` — BEFORE the cross-table repeats
+    * dedup. Both are pure functions of the pair, so filtering first is
+    * equivalent, and the dedup exchange then carries only the verified
+    * survivors (a handful of 16-byte rows) instead of two 64-float
+    * vectors per candidate — the shuffle-slimming of q37's candidate
+    * pipeline, and why this is not the join-back core the gates share
+    * ([[TextQueries.lshPairsFromDocs]]). Returns (d1 < d2, `carry`...).
+    */
+  private def srpVerifiedPairs(corpus: DataFrame, bits: Int,
+      pairCond: Option[Column] = None, carry: Seq[Column] = Nil): DataFrame = {
+    val banded = corpus.select(col("*"),
+      srpBandKeys(col("embedding"), bits, SrpDedupTables).as("tb"))
+    val verify = cosineSim(col("a.embedding"), col("b.embedding")) >= 0.95
     banded.as("a").join(banded.as("b"),
         col("a.tb") === col("b.tb") && col("a.vec_id") < col("b.vec_id"))
-      .filter(col("a.split") =!= col("b.split") &&
-        cosineSim(col("a.embedding"), col("b.embedding")) >= 0.95)
-      .select(col("a.vec_id").as("d1"), col("b.vec_id").as("d2"),
-        col("a.split").as("s1"), col("b.split").as("s2"))
+      .filter(pairCond.fold(verify)(_ && verify))
+      .select(col("a.vec_id").as("d1") +: col("b.vec_id").as("d2") +: carry: _*)
       .dropDuplicates("d1", "d2")
   }
 

@@ -8,6 +8,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, collect_set, hash, lit, pmod}
 import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 import graft.Publish
+import graft.operators.TextQueries.{PairKernel, dropHot}
 
 /** Shared store plumbing for the admission gates' epoch-partitioned
   * tables. ONE copy of the write/read/compaction protocol (its checked
@@ -650,6 +651,51 @@ private[graft] object AdmissionStore {
       (keys, None)
     }
   }
+
+  /** The batch-vs-store judge of the LSH gates, under the gate's
+    * kernel `k` (id, band key, payload, similarity): the batch's band
+    * rows `banded` join the store's band index, read pruned to the
+    * batch's own keys (`bands`, from [[observeTouched]]); a row never
+    * matches its own stored copy — the retry exclusion that keeps a
+    * replayed epoch idempotent (its admitted rows are already stored
+    * under the same ids); the surviving candidates carry the touched set
+    * of the payload table `payloads` (`stored` its write schema) on
+    * their checkpoint, and each pair verifies `k.sim` ≥ `threshold`
+    * against the pruned payload read. Under a hot-bucket cap, hotness is
+    * judged on the combined store + batch population, so a key just
+    * under the cap on each side alone cannot slip through at 2× the cap
+    * combined. Returns the batch ids that duplicate a stored row. */
+  def dupsVsStore(batch: DataFrame, banded: DataFrame,
+      bands: Option[PrunedRead], payloads: String, stored: StructType,
+      k: PairKernel, threshold: Double, maxBucket: Int): DataFrame =
+    bands match {
+      case None => batch.select(col(k.id)).limit(0)
+      case Some(bandsRead) =>
+        val s = batch.sparkSession
+        val storeBands = bandsRead.read(s)
+        val decap = dropHot(storeBands.select(col(k.key))
+          .unionAll(banded.select(col(k.key))), k.key, maxBucket) _
+        val candRaw = decap(banded)
+          .join(decap(storeBands).select(col(k.key), col(k.id).as("sd")), k.key)
+          .filter(col(k.id) =!= col("sd"))
+          .select(col(k.id), col("sd")).distinct()
+        val (candObs, payloadRead) =
+          observeTouched(candRaw, col("sd"), payloads, stored)
+        // every epoch writes the payloads before the band index: stored
+        // bands without stored payloads is a damaged store, never an
+        // empty one
+        val storePayloads = payloadRead.getOrElse(throw new IllegalStateException(
+          s"admission store $payloads has no epochs but its band index " +
+            "does — the store is damaged; rebuild it"))
+        // materialized: it carries the payload read's touched set, and
+        // it is candidate-pair-sized by construction
+        candObs.localCheckpoint()
+          .join(batch.select(col(k.id), col(k.payload).as("p_a")), k.id)
+          .join(storePayloads.read(s)
+            .select(col(k.id).as("sd"), col(k.payload).as("p_b")), "sd")
+          .filter(k.sim(col("p_a"), col("p_b")) >= threshold)
+          .select(col(k.id)).distinct()
+    }
 
   /** Read a store pruned to an explicit touched-bucket set (the caller
     * computed it under the store's stamped K — see [[observeTouched]]

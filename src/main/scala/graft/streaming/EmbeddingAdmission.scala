@@ -3,7 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
-import graft.functions.expressions.VectorExpressions.{cosineSim, srpBucketExpr}
+import graft.functions.expressions.VectorExpressions.cosineSim
+import graft.operators.{TextQueries, VectorQueries}
+import graft.operators.TextQueries.PairKernel
 
 /** Streaming embedding near-dup admission — the streaming form of the
   * q45/q62 vector dedup, and the embedding sibling of the text
@@ -13,7 +15,7 @@ import graft.functions.expressions.VectorExpressions.{cosineSim, srpBucketExpr}
   * Admitted vectors append to the store as `epoch=<batchId>` partitions;
   * overwriting the deterministic epoch directory makes foreachBatch
   * retries idempotent (a retried batch's vectors never match their own
-  * stored copies — the id filter below — and the kept set is
+  * stored copies — the store judge's id filter — and the kept set is
   * deterministic, so a partial prior attempt replays to the same state).
   *
   * Scale shape: the store keeps two tables — `buckets` ((table, bucket),
@@ -35,15 +37,8 @@ object EmbeddingAdmission {
   private val Buckets = AdmissionStore.Table("buckets", col("tb"))
   private val tables = AdmissionStore.Store(Vecs, Buckets)
 
-  /** Three OR-amplified band buckets per vector (independent plane sets
-    * at offsets 0/16/32, as q62).
-    */
-  private def bandedOf(vecs: DataFrame, bits: Int): DataFrame =
-    vecs.select(col("vec_id"), explode(array(
-      struct(lit(0).as("t"), srpBucketExpr(col("embedding"), bits, 0).as("b")),
-      struct(lit(1).as("t"), srpBucketExpr(col("embedding"), bits, 16).as("b")),
-      struct(lit(2).as("t"), srpBucketExpr(col("embedding"), bits, 32).as("b"))
-    )).as("tb"))
+  /** The gate's pair kernel: SRP band key `tb`, exact cosine verify. */
+  private val Cosine = PairKernel("vec_id", "tb", "embedding", cosineSim, "cos")
 
   /** The stored rows of the buckets table — ONE definition for the
     * write and the pruned read's schema (the vecs table stores the kept
@@ -55,7 +50,6 @@ object EmbeddingAdmission {
             keptPath: String, threshold: Double = 0.95, bits: Int = 8,
             maxBucket: Int = 0, expectedStoreBytes: Long = 0L)
       : Seq[AdmissionStore.WidthSignal] = {
-    val s = batch.sparkSession
     val vecs = batch.select(col("vec_id"), col("embedding")).localCheckpoint()
 
     // only a genuinely-missing store reads as empty; any other failure
@@ -68,64 +62,20 @@ object EmbeddingAdmission {
     // vec_ids — per-batch store IO is O(touched partitions), not
     // O(store). Each touched set is observed on the checkpoint that
     // materialises its keys.
-    val bandedRaw = bandedOf(vecs, bits)
+    val bandedRaw = vecs.select(col("vec_id"), VectorQueries.srpBandKeys(
+      col("embedding"), bits, VectorQueries.SrpDedupTables).as("tb"))
     val (bandedObs, storeBucketsRead) = AdmissionStore.observeTouched(bandedRaw,
       Buckets.key, Buckets.at(storePath), storedBuckets(bandedRaw, vecs).schema)
     val banded = bandedObs.localCheckpoint()
 
-    // skew guard judged on the combined store+batch bucket population —
-    // a template bucket just under the cap on each side alone must not
-    // slip through at 2× the cap combined (declared-lossy, as the text
-    // admission's cap)
-    def decap(storeBuckets: Option[DataFrame]): (DataFrame, Option[DataFrame]) =
-      if (maxBucket <= 0) (banded, storeBuckets)
-      else {
-        val pop = storeBuckets.map(_.select(col("tb"))
-            .unionAll(banded.select(col("tb"))))
-          .getOrElse(banded.select(col("tb")))
-        val hot = pop.groupBy(col("tb")).agg(count(lit(1)).as("bn"))
-          .filter(col("bn") > maxBucket).select(col("tb"))
-        (banded.join(broadcast(hot), Seq("tb"), "left_anti"),
-          storeBuckets.map(_.join(broadcast(hot), Seq("tb"), "left_anti")))
-      }
-    val (batchBuckets, storeBuckets) = decap(storeBucketsRead.map(_.read(s)))
-
-    // dups vs the already-admitted store (bipartite bucket join)
-    val dupVsStore = storeBuckets match {
-      case None => vecs.select(col("vec_id")).limit(0)
-      case Some(sb) =>
-        val candRaw = batchBuckets
-          .join(sb.select(col("tb"), col("vec_id").as("sd")), "tb")
-          // a vector never duplicates its own stored copy — retry safety
-          .filter(col("vec_id") =!= col("sd"))
-          .select(col("vec_id"), col("sd")).distinct()
-        val vecsTable = Vecs.at(storePath)
-        val (candObs, storeVecsRead) = AdmissionStore.observeTouched(candRaw,
-          col("sd"), vecsTable, vecs.schema)
-        // every epoch writes vecs before buckets: stored buckets without
-        // stored vecs is a damaged store, never an empty one
-        val vecsRead = storeVecsRead.getOrElse(throw new IllegalStateException(
-          s"admission store $vecsTable has no epochs but its buckets table " +
-            "does — the store is damaged; rebuild it"))
-        // materialized: it carries the vecs read's touched set, and it is
-        // candidate-pair-sized by construction
-        val cand = candObs.localCheckpoint()
-        cand
-          .join(vecs.select(col("vec_id"), col("embedding").as("v_a")), "vec_id")
-          .join(vecsRead.read(s)
-            .select(col("vec_id").as("sd"), col("embedding").as("v_b")), "sd")
-          .filter(cosineSim(col("v_a"), col("v_b")) >= threshold)
-          .select(col("vec_id")).distinct()
-    }
-    // dups within the batch: greedy pair-drop, higher id loses (q45/q38)
-    val dupInBatch = batchBuckets.as("a")
-      .join(batchBuckets.as("b"),
-        col("a.tb") === col("b.tb") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("d1"), col("b.vec_id").as("d2"))
-      .distinct()
-      .join(vecs.select(col("vec_id").as("d1"), col("embedding").as("v1")), "d1")
-      .join(vecs.select(col("vec_id").as("d2"), col("embedding").as("v2")), "d2")
-      .filter(cosineSim(col("v1"), col("v2")) >= threshold)
+    // dups vs the already-admitted store (bipartite bucket join) and
+    // within the batch (greedy pair-drop, higher id loses: q45/q38) —
+    // the LSH gates' shared kernels, so a hot-bucket cap judges exactly
+    // as the text gate's does
+    val dupVsStore = AdmissionStore.dupsVsStore(vecs, banded, storeBucketsRead,
+      Vecs.at(storePath), vecs.schema, Cosine, threshold, maxBucket)
+    val dupInBatch = TextQueries
+      .lshPairsFromDocs(vecs, banded, threshold, maxBucket, Cosine)
       .select(col("d2").as("vec_id")).distinct()
 
     val kept = vecs

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import graft.functions.TextFunctions._
+import graft.operators.TextQueries
 
 /** Streaming near-dup admission — the streaming form of q38's dedup-keep:
   * a document is admitted iff it does not near-duplicate (exact
@@ -70,63 +71,18 @@ object NearDupAdmission {
     // buckets. Per-batch store IO is O(touched partitions), not
     // O(store) — the r14 verdict's admission-family 100× blocker. Both
     // touched sets are observed on the checkpoints below.
-    val bandedRaw = graft.operators.TextQueries
-      .bandedOf(docs, numHashes, bands, rows)
+    val bandedRaw = TextQueries.bandedOf(docs, numHashes, bands, rows)
     val (bandedObs, storeBandsRead) = AdmissionStore.observeTouched(bandedRaw,
       Bands.key, Bands.at(storePath), storedBands(bandedRaw, all).schema)
     val banded = bandedObs.localCheckpoint()
 
-    // dups vs the already-admitted store (bipartite band join)
-    val dupVsStore = storeBandsRead match {
-      case None => docs.select(col("doc_id")).limit(0)
-      case Some(bandsRead) =>
-        val storeBandsRaw = bandsRead.read(batch.sparkSession)
-        // the hot-bucket cap must also gate this bipartite join: a hot
-        // template bucket ACCUMULATED in the store would otherwise still
-        // produce batch×store quadratic candidates even with the in-batch
-        // cap on. Hotness is judged on the combined population (store +
-        // batch) so a bucket just under the cap on each side alone cannot
-        // slip through at 2× the cap combined.
-        val (batchBands, storeBands) =
-          if (maxBucket <= 0) (banded, storeBandsRaw)
-          else {
-            val hot = storeBandsRaw.select(col("bucket"))
-              .unionAll(banded.select(col("bucket")))
-              .groupBy(col("bucket")).agg(count(lit(1)).as("bn"))
-              .filter(col("bn") > maxBucket).select(col("bucket"))
-            (banded.join(broadcast(hot), Seq("bucket"), "left_anti"),
-              storeBandsRaw.join(broadcast(hot), Seq("bucket"), "left_anti"))
-          }
-        val candRaw = batchBands
-          .join(storeBands.select(col("bucket"), col("doc_id").as("sd")), "bucket")
-          // a doc never duplicates its own stored fingerprint — this is
-          // what keeps a RETRIED epoch idempotent (its admitted docs are
-          // already in the store under the same ids)
-          .filter(col("doc_id") =!= col("sd"))
-          .select(col("doc_id"), col("sd")).distinct()
-        val docsTable = Docs.at(storePath)
-        val (candObs, storeDocsRead) = AdmissionStore.observeTouched(candRaw,
-          col("sd"), docsTable, storedDocs(all).schema)
-        // every epoch writes docs before bands: stored bands without
-        // stored docs is a damaged store, never an empty one
-        val docsRead = storeDocsRead.getOrElse(throw new IllegalStateException(
-          s"admission store $docsTable has no epochs but its bands table does " +
-            "— the store is damaged; rebuild it"))
-        // materialized: it carries the docs read's touched set, and it
-        // is candidate-pair-sized by construction
-        val cand = candObs.localCheckpoint()
-        cand
-          .join(docs.select(col("doc_id"), col("shingles").as("sh_a")), "doc_id")
-          .join(docsRead.read(batch.sparkSession)
-            .select(col("doc_id").as("sd"), col("shingles").as("sh_b")), "sd")
-          .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-          .withColumn("uni", size(array_union(col("sh_a"), col("sh_b"))))
-          .filter(col("inter") / col("uni") >= threshold)
-          .select(col("doc_id")).distinct()
-    }
-    // dups within the batch: the shared LSH pair core; greedy pair-drop,
-    // higher id loses (q38 semantics)
-    val dupInBatch = graft.operators.TextQueries
+    // dups vs the already-admitted store (bipartite band join) and
+    // within the batch (greedy pair-drop, higher id loses: q38
+    // semantics) — the LSH gates' shared kernels
+    val dupVsStore = AdmissionStore.dupsVsStore(docs, banded, storeBandsRead,
+      Docs.at(storePath), storedDocs(all).schema, TextQueries.Jaccard,
+      threshold, maxBucket)
+    val dupInBatch = TextQueries
       .lshPairsFromDocs(docs, banded, threshold, maxBucket)
       .select(col("d2").as("doc_id")).distinct()
 

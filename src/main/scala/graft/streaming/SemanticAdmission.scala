@@ -69,9 +69,8 @@ object SemanticAdmission {
       val s = cent.sparkSession
       val path = s"$storePath/geometry"
       val fp = IndexMaintenance.centroidFingerprint(cent)
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(new org.apache.hadoop.fs.Path(path))) {
+      val hpath = new org.apache.hadoop.fs.Path(path)
+      if (graft.Publish.fsOf(hpath, s).exists(hpath)) {
         val stored = s.read.parquet(path).select("fp").head().getString(0)
         if (stored != fp) throw new IllegalStateException(
           s"semantic-admission store was scored under centroid geometry " +
@@ -84,12 +83,6 @@ object SemanticAdmission {
       new Geometry(cent, storePath)
     }
   }
-
-  private def scored(vecs: DataFrame, cent: DataFrame): DataFrame =
-    VectorQueries.assignCells(vecs, cent)
-      .join(broadcast(cent), "cell")
-      .select(col("vec_id"), col("cell"), col("embedding"),
-        cosineSim(col("embedding"), col("centroid")).as("csim"))
 
   /** One epoch against `geom`, which must be pinned to this store. */
   def admit(batch: DataFrame, batchId: Long, geom: Geometry,
@@ -109,7 +102,8 @@ object SemanticAdmission {
     // so no future batch ever re-scores admitted vectors against the
     // centroids: its rows are the scored frame's, so that is the read
     // schema.
-    val mRaw = scored(batch.select(col("vec_id"), col("embedding")), geom.cent)
+    val mRaw = VectorQueries.semRoster(VectorQueries.assignCells(
+      batch.select(col("vec_id"), col("embedding")), geom.cent), geom.cent)
     val (mObs, membersRead) = AdmissionStore.observeTouched(mRaw,
       Members.key, Members.at(storePath), mRaw.schema)
     val m = mObs.localCheckpoint()
@@ -125,15 +119,8 @@ object SemanticAdmission {
 
     // within the batch: the SemDeDup keep rule — higher csim (more
     // prototypical) drops, ties drop the larger id (q119's exact rule)
-    val dupInBatch = m.alias("a")
-      .join(m.alias("b"), col("a.cell") === col("b.cell") &&
-        col("a.vec_id") < col("b.vec_id"))
-      .filter(cosineSim(col("a.embedding"), col("b.embedding")) >= tau)
-      .select(when(col("a.csim") > col("b.csim") ||
-          (col("a.csim") === col("b.csim") &&
-            col("a.vec_id") > col("b.vec_id")), col("a.vec_id"))
-        .otherwise(col("b.vec_id")).as("vec_id"))
-      .distinct()
+    val dupInBatch = VectorQueries.semDrops(m, m,
+      col("a.vec_id") < col("b.vec_id"), tau)
 
     val kept = m
       .join(dupVsStore.unionByName(dupInBatch).distinct(),

@@ -4,10 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** AQE skew-join handling: the runtime half of the skew story (SkewTools
-  * salting is the compile-time half). A join with one hot key must come
-  * out of AQE with the skewed partition split (`skew=true` in the final
-  * SMJ) — proving the engine's answer to data skew is active, not just
+/** AQE skew-join handling: a join with one hot key must come out of AQE
+  * with the skewed partition split (`skew=true` in the final SMJ) —
+  * proving the engine's answer to data skew is active, not just
   * configured.
   */
 class AqeSkewSpec extends AnyFunSuite {

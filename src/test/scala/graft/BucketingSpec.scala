@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.SkewTools
 
 /** Bucketed co-located joins: pre-partitioning both sides of a repeated
   * join on its key removes the per-query shuffle entirely — the physical
@@ -27,12 +26,14 @@ class BucketingSpec extends AnyFunSuite with TempDirs {
   private val dir = "/root/testdata/sf0.001"
 
   test("equi-join of co-bucketed tables runs without any Exchange") {
-    SkewTools.writeBucketed(
-      Tables.orders(spark, dir).select("o_orderkey", "o_totalprice"),
-      "orders_bkt", 8, "o_orderkey")
-    SkewTools.writeBucketed(
-      Tables.lineitem(spark, dir).select("l_orderkey", "l_quantity"),
-      "lineitem_bkt", 8, "l_orderkey")
+    // both sides bucketed (and sorted) on the join key with the same
+    // bucket count: every task zips bucket i with bucket i
+    Tables.orders(spark, dir).select("o_orderkey", "o_totalprice")
+      .write.mode("overwrite").bucketBy(8, "o_orderkey").sortBy("o_orderkey")
+      .saveAsTable("orders_bkt")
+    Tables.lineitem(spark, dir).select("l_orderkey", "l_quantity")
+      .write.mode("overwrite").bucketBy(8, "l_orderkey").sortBy("l_orderkey")
+      .saveAsTable("lineitem_bkt")
 
     // force a non-broadcast join so the shuffle-elision is what's tested
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

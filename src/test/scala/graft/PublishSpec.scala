@@ -322,15 +322,30 @@ class PublishSpec extends AnyFunSuite with TempDirs {
     }
   }
 
-  test("only Publish renames, moves or exclusively creates files in src/main/scala") {
-    val banned = Seq("Files.move", "Files.createFile", "ATOMIC_MOVE", ".rename(")
+  /** src/main/scala's sources, split into graft/Publish.scala and the rest. */
+  private def mainSources: (List[Path], List[Path]) = {
     val walk = Files.walk(Paths.get("src/main/scala"))
     val sources = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally walk.close()
     assert(sources.size > 20, s"the scan found only ${sources.size} sources")
-    val (publish, rest) = sources.partition(_.endsWith(Paths.get("graft", "Publish.scala")))
+    sources.partition(_.endsWith(Paths.get("graft", "Publish.scala")))
+  }
+
+  test("only Publish renames, moves or exclusively creates files in src/main/scala") {
+    val banned = Seq("Files.move", "Files.createFile", "ATOMIC_MOVE", ".rename(")
+    val (publish, rest) = mainSources
     assert(publish.size == 1 && Files.readString(publish.head).contains(".rename("))
     val offenders = for (f <- rest; b <- banned if Files.readString(f).contains(b)) yield s"$f: $b"
     assert(offenders.isEmpty, s"publish outside graft.Publish: ${offenders.mkString("; ")}")
+  }
+
+  test("outside Publish, src/main/scala resolves filesystems from paths, never FileSystem.get") {
+    // FileSystem.get(conf) is the DEFAULT filesystem: a store on another
+    // scheme (s3a:// on an hdfs cluster) fails with "Wrong FS"; Publish.fsOf
+    // resolves the path's own. Matched across whitespace and line breaks.
+    val get = """FileSystem\s*\.\s*get\s*\(""".r
+    val (_, rest) = mainSources
+    val offenders = rest.filter(f => get.findFirstIn(Files.readString(f)).isDefined)
+    assert(offenders.isEmpty, s"FileSystem.get outside graft.Publish: ${offenders.mkString("; ")}")
   }
 }

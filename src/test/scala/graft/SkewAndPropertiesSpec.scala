@@ -4,12 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
-import graft.operators.{Elections, SkewTools}
+import graft.operators.Elections
 import graft.functions.{GeoFunctions, TextFunctions}
 
-/** Skew-tool equivalence + seeded property-style tests (fixed seeds → the
-  * scalacheck spirit without the scalatest bridge, which isn't in the
-  * offline dependency set).
+/** Seeded property-style tests (fixed seeds → the scalacheck spirit
+  * without the scalatest bridge, which isn't in the offline dependency
+  * set).
   */
 class SkewAndPropertiesSpec extends AnyFunSuite {
 
@@ -18,36 +18,6 @@ class SkewAndPropertiesSpec extends AnyFunSuite {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
-
-  test("salted count/sum equal direct groupBy on skewed data") {
-    import spark.implicits._
-    // 90% of rows share one key — the salted path must still be exact
-    val rows = (1 to 10000).map(i =>
-      (if (i % 10 == 0) s"k${i % 7}" else "hot", i.toDouble))
-    val df = rows.toDF("key", "v")
-    val direct = df.groupBy($"key").agg(count(lit(1)).as("n"),
-      sum($"v").as("total")).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    val sc = SkewTools.saltedCount(df, $"key", $"v", 16).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val ss = SkewTools.saltedSum(df, $"key", $"v", $"v", 16).collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    direct.foreach { case (k, (n, total)) =>
-      assert(sc(k) == n, s"count mismatch for $k")
-      assert(math.abs(ss(k) - total) < 1e-6, s"sum mismatch for $k")
-    }
-  }
-
-  test("salted join equals plain join on skewed key") {
-    import spark.implicits._
-    val big = (1 to 5000).map(i =>
-      (if (i % 100 == 0) i % 5 else 0, i)).toDF("k", "v")
-    val small = (0 to 5).map(k => (k, s"dim$k")).toDF("k", "name")
-    val plain = big.join(small, "k").agg(count(lit(1)), sum("v")).collect().head
-    val salted = SkewTools.saltedJoin(big, small, "k", $"v", 8)
-      .agg(count(lit(1)), sum("v")).collect().head
-    assert(plain == salted)
-  }
 
   test("property: geohash encode/decode round-trips within cell size") {
     val rnd = new Random(42)
