@@ -259,14 +259,20 @@ object ArtifactStore {
     // the artifact now lives on disk: release the checkpoint blocks of
     // the builder's intermediates found in the build plan (only THIS
     // plan's LogicalRDDs) — e.g. the pair graph's shingle/band tables
-    built.queryExecution.logical.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false))
+    releaseCheckpoints(built)
     // a target with a MISMATCHED manifest (hash collision, or a corrupt
     // half-cleaned entry) is replaced rather than trusted
     Publish.publishIfAbsent(fs, tmp, dir)(manifestOk(fs, dir, fingerprint))
     log.info(s"built: $tag")
   }
+
+  /** Release the checkpoint blocks behind `frames`: every `LogicalRDD`
+    * (a `localCheckpoint`) in their own logical plans, unpersisted
+    * without blocking. Only for frames no live plan will read again. */
+  private[graft] def releaseCheckpoints(frames: DataFrame*): Unit =
+    frames.foreach(_.queryExecution.logical.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }.foreach(_.unpersist(blocking = false)))
 
   private def lockOf(dir: Path): Path = new Path(dir.getParent, dir.getName + ".lock")
 

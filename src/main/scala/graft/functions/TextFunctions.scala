@@ -182,6 +182,13 @@ object TextFunctions {
     round((lenScore * 0.4 + punctScore * 0.3 + stopScore * 0.3), 6)
   }
 
+  /** The 10 stopwords packed as ints (each is ≤ 3 [a-z] chars, so
+    * (c1<<16)|(c2<<8)|c3-style packing is collision-free across lengths —
+    * every char ≥ 0x61): lets the fused metrics scan test stopword
+    * membership without materializing token strings. */
+  private val StopPacked: Set[Int] =
+    Stopwords.map(w => w.foldLeft(0)((a, c) => (a << 8) | c)).toSet
+
   /** One-pass compiled twin of (stopwordRatio, punctRatio, qualityScore)
     * for the per-source quality REPORT (q25): the Column forms repeat
     * the interpreted tokenizer/regex subtrees per metric (CollapseProject
@@ -195,13 +202,6 @@ object TextFunctions {
     * The DECISION consumers (q61's floor, q69's ranking, q100's gate)
     * keep the Column qualityScore — they compute it once per row anyway.
     */
-  /** The 10 stopwords packed as ints (each is ≤ 3 [a-z] chars, so
-    * (c1<<16)|(c2<<8)|c3-style packing is collision-free across lengths —
-    * every char ≥ 0x61): lets the fused metrics scan test stopword
-    * membership without materializing token strings. */
-  private val StopPacked: Set[Int] =
-    Stopwords.map(w => w.foldLeft(0)((a, c) => (a << 8) | c)).toSet
-
   def qualityMetricsScala(text: String)
       : Option[(Double, Double, Double, Double)] = {
     // all four inputs (normalized-token stopword census, non-space and

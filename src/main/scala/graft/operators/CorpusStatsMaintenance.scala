@@ -65,13 +65,40 @@ object CorpusStatsMaintenance {
   private def tokenized(docs: DataFrame): DataFrame = docs
     .select(col("doc_id"), tokens(col("text")).as("t"))
 
-  private def dfCensus(toks: DataFrame): DataFrame = toks
-    .select(explode(array_distinct(col("t"))).as("token"))
-    .groupBy(col("token")).agg(count(lit(1)).as("df"))
+  private def bigrams(docs: DataFrame): DataFrame = bigramStream(tokenized(docs))
 
   private def gramRelation(docs: DataFrame): DataFrame = docs
     .select(col("doc_id"),
       explode(array_distinct(wordNgramsUdf(5)(col("text")))).as("g"))
+
+  // ---- the text-statistics kernels, one lazy definition each, called by
+  // ---- the TextQueries artifact builders, this module and the funnel ----
+
+  /** THE document-frequency census (token, df) of a tokenized (…, t)
+    * frame — born distinct by the row-local `array_distinct`. */
+  def dfCensus(toks: DataFrame): DataFrame = toks
+    .select(explode(array_distinct(col("t"))).as("token"))
+    .groupBy(col("token")).agg(count(lit(1)).as("df"))
+
+  /** THE bigram stream (doc_id, carried…, bg) of a tokenized (doc_id,
+    * carried…, t) frame; docs with < 2 tokens have no bigrams. */
+  def bigramStream(toks: DataFrame, carried: String*): DataFrame = toks
+    .filter(size(col("t")) >= 2)
+    .select((col("doc_id") +: carried.map(col)) :+
+      explode(tokenBigrams(col("t"))).as("bg"): _*)
+
+  /** THE LM counts (c2 per bigram, c1 per first token) of a bigram stream. */
+  def lmCounts(bg: DataFrame): BigramLm = BigramLm(
+    bg.groupBy(col("bg")).agg(count(lit(1)).as("c2")),
+    bg.groupBy(substring_index(col("bg"), " ", 1).as("w1"))
+      .agg(count(lit(1)).as("c1")))
+
+  /** THE mean surprisal `s` = avg(−ln p) per `keys` of a bigram stream
+    * inner-joined with a conditional LM (bg, p). */
+  def meanSurprisal(bg: DataFrame, lm: DataFrame, keys: String*): DataFrame =
+    bg.join(lm, "bg")
+      .groupBy(keys.map(col): _*)
+      .agg(avg(-log(col("p"))).as("s"))
 
   /** Key-wise additive merge of two censuses sharing (key, count). */
   private def mergeCensus(a: DataFrame, b: DataFrame, key: String,
@@ -105,45 +132,29 @@ object CorpusStatsMaintenance {
       base.grams.unionByName(gramRelation(delta).localCheckpoint()))
   }
 
-  private def bigrams(docs: DataFrame): DataFrame = docs
-    .select(col("doc_id"), tokens(col("text")).as("t"))
-    .filter(size(col("t")) >= 2)
-    .select(col("doc_id"), explode(tokenBigrams(col("t"))).as("bg"))
-
-  /** From-scratch LM count tables — the same census math as
-    * TextQueries.corpusBigramLm, persisted as mergeable counts. */
+  /** From-scratch LM count tables, persisted as mergeable counts — the
+    * kernels TextQueries.corpusBigramLm calls. */
   def buildLm(docs: DataFrame): BigramLm = {
-    val bg = bigrams(docs).localCheckpoint()
-    BigramLm(
-      bg.groupBy(col("bg")).agg(count(lit(1)).as("c2")).localCheckpoint(),
-      bg.groupBy(substring_index(col("bg"), " ", 1).as("w1"))
-        .agg(count(lit(1)).as("c1")).localCheckpoint())
+    val counts = lmCounts(bigrams(docs).localCheckpoint())
+    BigramLm(counts.c2.localCheckpoint(), counts.c1.localCheckpoint())
   }
 
   /** Additive count refresh for an appended `delta` (doc_id, text):
     * the delta's bigram stream is censused alone and merged key-wise —
     * O(delta + touched vocab keys), no base re-scan. */
   def refreshLm(base: BigramLm, delta: DataFrame): BigramLm = {
-    val bgD = bigrams(delta).localCheckpoint()
+    val countsD = lmCounts(bigrams(delta).localCheckpoint())
     BigramLm(
-      mergeCensus(base.c2,
-        bgD.groupBy(col("bg")).agg(count(lit(1)).as("c2")), "bg", "c2")
-        .localCheckpoint(),
-      mergeCensus(base.c1,
-        bgD.groupBy(substring_index(col("bg"), " ", 1).as("w1"))
-          .agg(count(lit(1)).as("c1")), "w1", "c1")
-        .localCheckpoint())
+      mergeCensus(base.c2, countsD.c2, "bg", "c2").localCheckpoint(),
+      mergeCensus(base.c1, countsD.c1, "w1", "c1").localCheckpoint())
   }
 
   /** Per-doc mean bigram surprisal of `docs` under `lm` — the q67/q98
     * scoring kernel; score the DELTA under the refreshed LM in steady
     * state, or the whole corpus when a snapshot report must reflect the
-    * new model (the CCNet policy; see object doc). Docs with < 2 tokens
-    * have no bigrams and are absent, as everywhere in the engine. */
+    * new model (the CCNet policy; see object doc). */
   def scoreDocs(docs: DataFrame, lm: DataFrame): DataFrame =
-    bigrams(docs).join(lm, "bg")
-      .groupBy(col("doc_id"))
-      .agg(avg(-log(col("p"))).as("s"))
+    meanSurprisal(bigrams(docs), lm, "doc_id")
 
   // ---- NB quality-classifier family (q92's sufficient statistics) ----
 
@@ -175,7 +186,9 @@ object CorpusStatsMaintenance {
   final case class NbStats(docs: DataFrame, tf: DataFrame,
       dHi: Long, dLo: Long)
 
-  private def nbTf(labeled: DataFrame): DataFrame = labeled
+  /** THE train-split per-class token census (token, tf_hi, tf_lo) of a
+    * [[nbLabeled]] corpus — q92's model counts and the maintained `tf`. */
+  def nbTf(labeled: DataFrame): DataFrame = labeled
     .filter(col("split") === "train")
     .select(explode(col("toks")).as("token"), col("cls"))
     .groupBy(col("token"))
@@ -253,8 +266,6 @@ object CorpusStatsMaintenance {
     .select(col("doc_id"), col("i"),
       md5(array_join(slice(col("t"), col("i"), lit(window)), " ")).as("h"))
 
-  private def windows(docs: DataFrame): DataFrame = windowHashes(docs, 10)
-
   private def spanCensus(wins: DataFrame): DataFrame = wins
     .select(col("h"), col("doc_id")).distinct()
     .groupBy(col("h")).agg(count(lit(1)).as("ndocs"))
@@ -262,7 +273,7 @@ object CorpusStatsMaintenance {
   /** From-scratch span index over (doc_id, text) — bootstrap AND the
     * refresh's equivalence oracle. */
   def buildSpans(docs: DataFrame): SpanIndex = {
-    val w = windows(docs).localCheckpoint()
+    val w = windowHashes(docs).localCheckpoint()
     SpanIndex(w, spanCensus(w).localCheckpoint())
   }
 
@@ -272,7 +283,7 @@ object CorpusStatsMaintenance {
     * and the touched-hash set names the affected docs — O(delta +
     * touched keys + affected rows), never a base re-window. */
   def refreshSpans(base: SpanIndex, delta: DataFrame): SpanRefresh = {
-    val winsD = windows(delta).localCheckpoint()
+    val winsD = windowHashes(delta).localCheckpoint()
     val touched = winsD.select(col("h")).distinct()
     val affected = base.wins.join(touched, "h").select(col("doc_id"))
       .unionByName(winsD.select(col("doc_id")))
@@ -329,12 +340,19 @@ object CorpusStatsMaintenance {
     TextQueries.bloomWordRows(bench.select(col("g")).distinct(), m)
       .localCheckpoint()
 
+  /** THE Bloom sizing of a DISTINCT (g) gram set: count it, size the
+    * width ([[TextQueries.bloomWidthFor]]), hash every gram in (lazy). */
+  def bloomIndexOf(grams: DataFrame): BloomIndex = {
+    val n = grams.count()
+    val m = TextQueries.bloomWidthFor(n)
+    BloomIndex(TextQueries.bloomWordRows(grams, m), m, n)
+  }
+
   /** Bootstrap build over a (g) benchmark-gram frame: size the width
     * from the distinct count, hash every gram in. */
   def buildBloom(bench: DataFrame): BloomIndex = {
-    val n = bench.select(col("g")).distinct().count()
-    val m = TextQueries.bloomWidthFor(n)
-    BloomIndex(buildBloomAt(bench, m), m, n)
+    val idx = bloomIndexOf(bench.select(col("g")).distinct())
+    idx.copy(words = idx.words.localCheckpoint())
   }
 
   /** Refresh for appended benchmark grams (a new eval suite joining the

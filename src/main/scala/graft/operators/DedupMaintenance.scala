@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.TextFunctions.wordNgramsUdf
 
 /** Incremental maintenance of the near-dup pair graph — the dedup twin
   * of [[IndexMaintenance]]: when a stream appends a document segment,
@@ -48,7 +47,7 @@ object DedupMaintenance {
   private val Threshold = 0.5
 
   private def shingled(docs: DataFrame): DataFrame = docs
-    .select(col("doc_id"), wordNgramsUdf(3)(col("text")).as("shingles"))
+    .select(col("doc_id"), TextQueries.neardupShingles)
     .filter(size(col("shingles")) > 0)
     .localCheckpoint()
 

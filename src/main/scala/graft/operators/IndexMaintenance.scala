@@ -68,29 +68,26 @@ object IndexMaintenance {
   /** Per-cell sufficient statistics of an inverted file: (cell, n,
     * sumvec). One corpus pass at build time; O(nlist × dim) rows out.
     */
-  def cellStats(assigned: DataFrame): DataFrame = assigned
-    .select(col("cell"), posexplode(col("embedding")).as(Seq("dim", "x")))
+  def cellStats(assigned: DataFrame): DataFrame =
+    sumStats(assigned.withColumn("n", lit(1L)), "embedding")
+
+  /** Merge two stats tables (same dim): counts add, sum vectors add
+    * elementwise. O(nlist × dim) — never touches vectors. */
+  def mergeStats(a: DataFrame, b: DataFrame): DataFrame =
+    sumStats(a.unionByName(b), "sumvec")
+
+  /** The one sum reassembly behind both: rows (cell, n, `vec`) →
+    * (cell, n, sumvec), with n and the per-dim sums added per cell and
+    * the sums re-assembled in dim order. */
+  private def sumStats(rows: DataFrame, vec: String): DataFrame = rows
+    .select(col("cell"), col("n"), posexplode(col(vec)).as(Seq("dim", "x")))
     .groupBy(col("cell"), col("dim"))
-    .agg(sum(col("x").cast("double")).as("sx"), count(lit(1)).as("n"))
+    .agg(sum(col("x").cast("double")).as("sx"), sum(col("n")).as("n"))
     .groupBy(col("cell"))
     .agg(array_sort(collect_list(struct(col("dim"), col("sx")))).as("pairs"),
       max(col("n")).as("n"))
     .select(col("cell"), col("n"),
       expr("transform(pairs, p -> p.sx)").as("sumvec"))
-
-  /** Merge two stats tables (same dim): counts add, sum vectors add
-    * elementwise. O(nlist × dim) — never touches vectors. */
-  def mergeStats(a: DataFrame, b: DataFrame): DataFrame = {
-    val u = a.unionByName(b)
-    val ns = u.groupBy(col("cell")).agg(sum(col("n")).as("n"))
-    val sums = u
-      .select(col("cell"), posexplode(col("sumvec")).as(Seq("dim", "sx")))
-      .groupBy(col("cell"), col("dim")).agg(sum(col("sx")).as("sx"))
-      .groupBy(col("cell"))
-      .agg(array_sort(collect_list(struct(col("dim"), col("sx")))).as("pairs"))
-      .select(col("cell"), expr("transform(pairs, p -> p.sx)").as("sumvec"))
-    ns.join(sums, "cell")
-  }
 
   /** Largest per-cell 1 − cos(frozen centroid, stats mean). A cell in
     * the stats but not the centroid table (impossible for IVF-assigned

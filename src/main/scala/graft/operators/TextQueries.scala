@@ -28,21 +28,6 @@ object TextQueries {
       .distinct()
   }
 
-  /** Near-dup pairs at exact set-jaccard >= `threshold`, with candidate
-    * generation through MinHash-LSH banding instead of the exact shingle
-    * self-join. This is the scale path shared by q29/q38/q52: the band join
-    * moves only (bucket, doc_id) and its cost is Σ bucket² over docs that
-    * are actually similar, where the exact join pays Σ df(shingle)² over
-    * every doc sharing one template shingle (measured 42× at 10× corpus in
-    * round 1). Candidates are then verified with exact jaccard on the
-    * shingle sets, so the output is the same answer the exact join gives —
-    * up to banding recall, which the defaults pin at ~1: with 32 bands × 2
-    * rows, P(candidate) = 1-(1-j²)^32 is 0.9999 at the j=0.5 verify
-    * threshold and 1-6e-15 at j=0.8 (the weakest true pair in the corpus
-    * is j=0.8, DedupSpec pins zero misses). At 100 TB, template-heavy
-    * corpora would raise `rows` to sharpen the S-curve and cut marginal
-    * candidates; the verify stage keeps the answer exact either way.
-    */
   /** (doc_id, shingles) → LSH band table (bucket, doc_id). The fused
     * native expression replaces the minhashUdf→lshBandsUdf chain with
     * one codegen call; bucket keys are string-identical — see
@@ -465,6 +450,28 @@ object TextQueries {
     cross.unionByName(within)
   }
 
+  /** THE near-dup shingle set of a (…, text) doc, as column `shingles`:
+    * its distinct word 3-grams — the MinHash input of the batch pair
+    * graph ([[lshNeardupPairs]]), [[DedupMaintenance]] and the streaming
+    * near-dup gate ([[graft.streaming.NearDupAdmission]]). */
+  private[graft] def neardupShingles: Column =
+    wordNgramsUdf(3)(col("text")).as("shingles")
+
+  /** Near-dup pairs at exact set-jaccard >= `threshold`, with candidate
+    * generation through MinHash-LSH banding instead of the exact shingle
+    * self-join. This is the scale path shared by q29/q38/q52: the band join
+    * moves only (bucket, doc_id) and its cost is Σ bucket² over docs that
+    * are actually similar, where the exact join pays Σ df(shingle)² over
+    * every doc sharing one template shingle (measured 42× at 10× corpus in
+    * round 1). Candidates are then verified with exact jaccard on the
+    * shingle sets, so the output is the same answer the exact join gives —
+    * up to banding recall, which the defaults pin at ~1: with 32 bands × 2
+    * rows, P(candidate) = 1-(1-j²)^32 is 0.9999 at the j=0.5 verify
+    * threshold and 1-6e-15 at j=0.8 (the weakest true pair in the corpus
+    * is j=0.8, DedupSpec pins zero misses). At 100 TB, template-heavy
+    * corpora would raise `rows` to sharpen the S-curve and cut marginal
+    * candidates; the verify stage keeps the answer exact either way.
+    */
   private[graft] def lshNeardupPairs(s: SparkSession, dir: String,
       threshold: Double, numHashes: Int = 64, bands: Int = 32,
       rows: Int = 2): DataFrame = {
@@ -474,7 +481,7 @@ object TextQueries {
     // q29). At 100 TB this is the staged intermediate table a real dedup
     // pipeline writes anyway; localCheckpoint is its single-job stand-in.
     val docs = Tables.documents(s, dir)
-      .select(col("doc_id"), wordNgramsUdf(3)(col("text")).as("shingles"))
+      .select(col("doc_id"), neardupShingles)
       .filter(size(col("shingles")) > 0)
       .localCheckpoint()
     val cap = dedupMaxBucket(s)
@@ -523,10 +530,7 @@ object TextQueries {
     }
     val toks = docs.select(col("doc_id"), col("split"), col("cls"),
       explode(col("toks")).as("token"))
-    val tf = toks.filter(col("split") === "train")
-      .groupBy(col("token"))
-      .agg(sum(when(col("cls") === "hi", 1L).otherwise(0L)).as("tf_hi"),
-        sum(when(col("cls") === "lo", 1L).otherwise(0L)).as("tf_lo"))
+    val tf = CorpusStatsMaintenance.nbTf(docs)
     val totals = tf.agg(sum("tf_hi").as("n_hi"), sum("tf_lo").as("n_lo"),
       count(lit(1)).as("v"))
     val priors = docs.filter(col("split") === "train")
@@ -593,17 +597,9 @@ object TextQueries {
     // with a row-local explode, so no corpus-TOKEN-sized checkpoint is
     // ever materialized (writing ~5× corpus bytes per LM build was the
     // 100 TB cost).
-    val bg = lexDocsShared(s, dir)
-      .filter(size(col("t")) >= 2)
-      .select(col("doc_id"), col("lang"), col("source"),
-        explode(tokenBigrams(col("t"))).as("bg"))
-    val f2 = bg.groupBy(col("bg")).agg(count(lit(1)).as("c2"))
-    val f1 = bg.groupBy(substring_index(col("bg"), " ", 1).as("w1"))
-      .agg(count(lit(1)).as("c1"))
-    val lm = f2.withColumn("w1", substring_index(col("bg"), " ", 1))
-      .join(f1, "w1")
-      .select(col("bg"), (col("c2") / col("c1").cast("double")).as("p"))
-    (bg, lm)
+    val bg = CorpusStatsMaintenance.bigramStream(lexDocsShared(s, dir),
+      "lang", "source")
+    (bg, CorpusStatsMaintenance.lmCounts(bg).lm)
   }
 
   /** Tokenized corpus (doc_id, lang, source, t) as a persisted artifact
@@ -627,9 +623,7 @@ object TextQueries {
     * corpus — vocab-sized, the idf side of every BM25 scorer. */
   private[graft] def lexDfShared(s: SparkSession, dir: String): DataFrame =
     graft.Artifacts.frame(s, "lexdf", documentsFp(s, dir)) {
-      lexDocsShared(s, dir)
-        .select(explode(array_distinct(col("t"))).as("token"))
-        .groupBy(col("token")).agg(count(lit(1)).as("df"))
+      CorpusStatsMaintenance.dfCensus(lexDocsShared(s, dir))
     }
 
   /** Distinct per-doc 5-gram relation (doc_id, lang, g) as a persisted
@@ -738,9 +732,8 @@ object TextQueries {
   private[graft] def bloomSetShared(s: SparkSession, dir: String)
       : (DataFrame, Long) = {
     val f = graft.Artifacts.frame(s, "bloomset", documentsFp(s, dir)) {
-      val bench = benchGramsShared(s, dir)
-      val m = bloomWidthFor(bench.count())
-      bloomWordRows(bench, m).withColumn("m", lit(m))
+      val idx = CorpusStatsMaintenance.bloomIndexOf(benchGramsShared(s, dir))
+      idx.words.withColumn("m", lit(idx.m))
     }
     val mRow = f.select(col("m")).head(1)
     val m = if (mRow.isEmpty) bloomWidthFor(0L) else mRow.head.getLong(0)
@@ -826,10 +819,8 @@ object TextQueries {
     */
   private[graft] def docSurprisalShared(s: SparkSession, dir: String): DataFrame =
     graft.Artifacts.frame(s, "bigramlm", documentsFp(s, dir)) {
-      val (bg, p) = corpusBigramLm(s, dir)
-      bg.join(p, "bg")
-        .groupBy(col("doc_id"), col("lang"), col("source"))
-        .agg(avg(-log(col("p"))).as("s"))
+      val (bg, lm) = corpusBigramLm(s, dir)
+      CorpusStatsMaintenance.meanSurprisal(bg, lm, "doc_id", "lang", "source")
     }
 
   /** Per-doc longest duplicated stride-1 window run (doc_id, maxrun) as
@@ -1284,8 +1275,7 @@ object TextQueries {
       val tok = lexDocsShared(s, dir).select(col("source"), col("t"))
       val tf = tok.select(col("source"), explode(col("t")).as("token"))
         .groupBy(col("source"), col("token")).agg(count(lit(1)).as("tf"))
-      val df = tok.select(explode(array_distinct(col("t"))).as("token"))
-        .groupBy(col("token")).agg(count(lit(1)).as("df"))
+      val df = CorpusStatsMaintenance.dfCensus(tok)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("source"))
         .orderBy(col("score").desc, col("token"))

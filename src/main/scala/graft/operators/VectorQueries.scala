@@ -668,7 +668,7 @@ object VectorQueries {
     // cosine appears only round-4 in aggregate outputs.
     "q105_label_outliers" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
-      val cent = meanVectors(e, "label", "proto", toFloat = false)
+      val cent = meanVectors(e, Seq("label"), "embedding", "proto", toFloat = false)
       e.join(broadcast(cent), "label")
         .withColumn("cos",
           graft.functions.VectorFunctions.cosine(col("embedding"), col("proto")))
@@ -828,27 +828,26 @@ object VectorQueries {
 
   // ---- IVF coarse-quantizer stages (q46, q63) ----------------------------
 
-  /** Mean vector per existing cell assignment: posexplode → per-(cell,dim)
-    * mean → re-assemble in dim order.
+  /** Mean of the array column `vec` per `keys`: posexplode → per-(keys,
+    * dim) mean → re-assemble in dim order. One definition of the
+    * reassembly idiom for every mean-vector consumer (IVF centroids keyed
+    * by cell and the PQ codebook's Lloyd step keyed by (sub, code), both
+    * cast to float; q105 prototypes keyed by label kept double).
     */
-  /** Mean embedding per key: posexplode → per-(key, dim) mean →
-    * re-assemble in dim order. One definition of the reassembly idiom
-    * for every mean-vector consumer (IVF centroids keyed by cell cast
-    * to float; q105 prototypes keyed by label kept double).
-    */
-  private[graft] def meanVectors(df: DataFrame, key: String, out: String,
-      toFloat: Boolean): DataFrame = df
-    .select(col(key), posexplode(col("embedding")).as(Seq("dim", "x")))
-    .groupBy(col(key), col("dim"))
+  private[graft] def meanVectors(df: DataFrame, keys: Seq[String], vec: String,
+      out: String, toFloat: Boolean): DataFrame = df
+    .select(keys.map(col) :+ posexplode(col(vec)).as(Seq("dim", "x")): _*)
+    .groupBy(keys.map(col) :+ col("dim"): _*)
     .agg(avg(col("x").cast("double")).as("c"))
-    .groupBy(col(key))
+    .groupBy(keys.map(col): _*)
     .agg(array_sort(collect_list(struct(col("dim"), col("c")))).as("pairs"))
-    .select(col(key),
+    .select(keys.map(col) :+
       (if (toFloat) expr("transform(pairs, p -> cast(p.c as float))")
-       else expr("transform(pairs, p -> p.c)")).as(out))
+       else expr("transform(pairs, p -> p.c)")).as(out): _*)
 
+  /** Mean vector per existing cell assignment, float-cast. */
   private[graft] def cellMeans(assigned: DataFrame): DataFrame =
-    meanVectors(assigned, "cell", "centroid", toFloat = true)
+    meanVectors(assigned, Seq("cell"), "embedding", "centroid", toFloat = true)
 
   /** EXACT nearest-centroid assignment as an aggregation, not a window:
     * the round-1 row_number() form shuffled AND sorted corpus×nlist rows;
@@ -1047,10 +1046,6 @@ object VectorQueries {
   private val superCache =
     new java.util.LinkedHashMap[String, (DataFrame, DataFrame, Long)](
       32, 0.75f, /*accessOrder=*/ true)
-  private def unpersistFrames(v: (DataFrame, DataFrame, Long)): Unit =
-    Seq(v._1, v._2).foreach(_.queryExecution.logical.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false)))
   // cached value carries nlist too: the hop-2 broadcast decision needs
   // the routing-table row count on EVERY assignCells call, and a
   // per-call cellmap.count() would be a Spark job per micro-batch on
@@ -1068,7 +1063,7 @@ object VectorQueries {
         superCache.synchronized {
           Option(superCache.get(key)) match {
             case Some(winner) => // lost a derivation race: drop ours
-              unpersistFrames(fresh); winner
+              graft.ArtifactStore.releaseCheckpoints(fresh._1, fresh._2); winner
             case None =>
               superCache.put(key, fresh)
               if (superCache.size > SuperCacheMax) {
@@ -1558,20 +1553,13 @@ object VectorQueries {
       .drop("sub")
     val cb0 = broadcast(seeds).join(subvecs, "vec_id")
       .select(col("sub"), col("code"), col("subvec").as("centroid"))
-    pqAssignKeepSubvec(subvecs, cb0)
-      .select(col("sub"), col("code"), posexplode(col("subvec")).as(Seq("dim", "x")))
-      .groupBy(col("sub"), col("code"), col("dim"))
-      .agg(avg(col("x")).as("c"))
-      .groupBy(col("sub"), col("code"))
-      .agg(array_sort(collect_list(struct(col("dim"), col("c")))).as("pairs"))
-      .select(col("sub"), col("code"),
-        // FLOAT-cast centroids (FAISS's float32 codebook shape): besides
-        // the 4× table shrink, the re-round absorbs Spark's aggregation-
-        // order noise in the mean (~1e-14 rel vs 6e-8 float ulp), which is
-        // what makes the whole PQ chain — and therefore the q57/q63
-        // oracles — deterministic across engines (the q46 cellMeans
-        // argument)
-        expr("transform(pairs, p -> cast(p.c as float))").as("centroid"))
+    // FLOAT-cast centroids (FAISS's float32 codebook shape): besides the
+    // 4× table shrink, the re-round absorbs Spark's aggregation-order
+    // noise in the mean (~1e-14 rel vs 6e-8 float ulp), which is what
+    // makes the whole PQ chain — and therefore the q57/q63 oracles —
+    // deterministic across engines (the q46 cellMeans argument)
+    meanVectors(pqAssignKeepSubvec(subvecs, cb0), Seq("sub", "code"),
+      "subvec", "centroid", toFloat = true)
       .localCheckpoint()
   }
 
@@ -1618,18 +1606,16 @@ object VectorQueries {
       (math.log(Tables.rowCount(s, dir, "embeddings").toDouble) /
         math.log(2)).ceil.toInt - 3))
 
-  /** ANN band width: ceil(log₂ n) − 5 clamped to [4, 16] — buckets stay
-    * ~32-64 vectors deep at any corpus size (deeper than srpBandBits'
-    * near-dup buckets: top-k candidate generation at cos ≈ 0.3-0.4 needs
-    * candidate-rich buckets, where the ≥0.95 near-dup verify only needs
-    * the dup to collide once). The 16-bit cap matches the 16-seed stride
-    * between tables. The oracle recomputes the same width from count(*)
-    * in SQL — both sides must use THIS formula.
-    */
-  /** Bucket width sized from corpus cardinality (≈32 vectors per bucket
-    * per table at the design point, clamped to [4,16]). Exposed per-count
-    * so the SRP maintenance can ask what width a GROWN corpus would size
-    * — a width change is its rebuild signal. */
+  /** ANN band width for a corpus of n vectors: ceil(log₂ n) − 5 clamped
+    * to [4, 16] — buckets stay ~32-64 vectors deep at any corpus size
+    * (deeper than srpBandBits' near-dup buckets: top-k candidate
+    * generation at cos ≈ 0.3-0.4 needs candidate-rich buckets, where the
+    * ≥0.95 near-dup verify only needs the dup to collide once). The
+    * 16-bit cap matches the 16-seed stride between tables. The oracle
+    * recomputes the same width from count(*) in SQL — both sides must use
+    * THIS formula. Exposed per-count so the SRP maintenance can ask what
+    * width a GROWN corpus would size — a width change is its rebuild
+    * signal. */
   private[graft] def srpBitsFor(n: Long): Int =
     math.min(16, math.max(4,
       (math.log(n.toDouble) / math.log(2)).ceil.toInt - 5))
@@ -1661,20 +1647,6 @@ object VectorQueries {
         graft.functions.TextFunctions.splitAssign(col("vec_id")))
   }
 
-  /** q62's pair stage, factored out so QueriesSpec can compare it
-    * pair-for-pair against the exact-join recompute: SRP-banded
-    * candidates (3 OR-amplified tables) → dedup → exact cosine ≥ 0.95
-    * verify → cross-split filter. Shuffle key is (table, bucket);
-    * Σ bucket² bounds the join — and because a FIXED band width turns
-    * quadratic again once the corpus outgrows its bucket space, the
-    * width adapts to corpus size (≈ log₂(n)−3 bits, clamped to [8,16]):
-    * buckets stay ~8 rows deep at any scale, the way production LSH
-    * sizes its tables. At the ≥0.95 verify threshold per-plane
-    * collision ≈ 0.99, so per-pair miss is (1−0.99⁸)³ ≈ 5e-4 at 8 bits
-    * (measured lossless on the verify SFs, where the clamp keeps 8
-    * bits) and (1−0.99¹⁶)³ ≈ 3e-3 at the 16-bit cap — the documented
-    * recall/cost dial of OR-amplified banding.
-    */
   /** q45's corpus: the embeddings table plus planted perturbed duplicates
     * (every 5th vector, re-id'd +1_000_000, deterministic hash noise) —
     * the corpus has no natural near-dups at cos ≥ 0.95, so the pipeline's
@@ -1700,6 +1672,20 @@ object VectorQueries {
     srpVerifiedPairs(corpus.select(col("vec_id"), col("embedding")),
       srpBandBits(s, dir))
 
+  /** q62's pair stage, factored out so QueriesSpec can compare it
+    * pair-for-pair against the exact-join recompute: SRP-banded
+    * candidates (3 OR-amplified tables) → exact cosine ≥ 0.95 and
+    * cross-split verify → dedup ([[srpVerifiedPairs]]). Shuffle key is
+    * (table, bucket); Σ bucket² bounds the join — and because a FIXED
+    * band width turns quadratic again once the corpus outgrows its
+    * bucket space, the width adapts to corpus size (≈ log₂(n)−3 bits,
+    * clamped to [8,16]): buckets stay ~8 rows deep at any scale, the way
+    * production LSH sizes its tables. At the ≥0.95 verify threshold
+    * per-plane collision ≈ 0.99, so per-pair miss is (1−0.99⁸)³ ≈ 5e-4
+    * at 8 bits (measured lossless on the verify SFs, where the clamp
+    * keeps 8 bits) and (1−0.99¹⁶)³ ≈ 3e-3 at the 16-bit cap — the
+    * documented recall/cost dial of OR-amplified banding.
+    */
   private[graft] def embeddingLeakPairsLsh(s: SparkSession, dir: String): DataFrame =
     srpVerifiedPairs(
       leakCorpus(s, dir).select(col("vec_id"), col("embedding"), col("split")),
@@ -1729,16 +1715,6 @@ object VectorQueries {
       .dropDuplicates("d1", "d2")
   }
 
-  /** Shared CTE prefix of the q34/q37 oracles: the splitmix64-style
-    * hyperplane hash (VectorFunctions.hyperplaneComponent) recomputed in
-    * HUGEINT mod-2^64 arithmetic — multiplications split at 2^32 so the
-    * 128-bit intermediate never overflows, xors routed through the signed
-    * BIGINT bit pattern (the q30 FNV technique) — then per-vector sign
-    * buckets from IN-ORDER list dot products. Every operation is integer
-    * or IEEE double arithmetic (no transcendentals), so buckets and
-    * cosines are bit-identical across engines, which is what lets a
-    * hash-seeded LSH query be hash-checked at all.
-    */
   /** The splitmix64-style hash chain (stages s0 → x3) over whatever
     * `pj(p, j)` seed CTE precedes it: shared by the SRP-bucket replay
     * (planes 0..9) and the perturbation replay (p = seed-derived per
@@ -1788,11 +1764,19 @@ object VectorQueries {
       |      CAST(h // 2147483648 AS BIGINT)) AS x
       |    FROM m2) t)""".stripMargin
 
-  /** SRP banding replay for the ANN oracles, parameterized by table
-    * count: the adaptive band width (srpAnnBits) is recomputed IN SQL
-    * from count(*), table t's planes are the global seed range
-    * [16t, 16t+bits), and each (vec, table) row gets its sign-bit bucket.
-    * Ends with `eb(vec_id, embedding, t, bucket)`.
+  /** SRP banding replay for the ANN oracles — the shared CTE prefix of
+    * q34/q37 — parameterized by table count: the adaptive band width
+    * (srpAnnBits) is recomputed IN SQL from count(*), table t's planes
+    * are the global seed range [16t, 16t+bits), hashed by the splitmix64
+    * chain ([[splitmixStages]], VectorFunctions.hyperplaneComponent in
+    * HUGEINT mod-2^64 arithmetic: multiplications split at 2^32 so the
+    * 128-bit intermediate never overflows, xors routed through the signed
+    * BIGINT bit pattern — the q30 FNV technique), and each (vec, table)
+    * row gets its sign-bit bucket from IN-ORDER list dot products. Every
+    * operation is integer or IEEE double arithmetic (no transcendentals),
+    * so buckets and cosines are bit-identical across engines, which is
+    * what lets a hash-seeded LSH query be hash-checked at all. Ends with
+    * `eb(vec_id, embedding, t, bucket)`.
     */
   private def srpAnnCte(tables: Int): String =
     s"""WITH params AS (
@@ -1819,10 +1803,6 @@ object VectorQueries {
       |  SELECT e.vec_id, e.embedding, b.t, b.bucket
       |  FROM embeddings e JOIN tb b ON b.vec_id = e.vec_id)""".stripMargin
 
-  /** Candidate scoring + top-k tail shared by the q34/q37 oracles: exact
-    * cosine with the kernel's accumulation order (separate in-order dot
-    * and norm sums, division last), (cos DESC, vec_id) ranking.
-    */
   /** Candidate scoring + top-k tail shared by the q34/q37 oracles:
     * candidates join on (table, bucket) and dedup to one row per
     * (q_id, vec_id) — mirroring the Spark side's dropDuplicates before

@@ -1,6 +1,8 @@
 package graft.sources
 
 import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
+import graft.Publish
 
 /** Topic maintenance: segment retention, the broker-side lifecycle the
   * reference delegates to Pulsar (ledger deletion after consumption /
@@ -22,6 +24,11 @@ object LedgerMaintenance {
 
   /** Delete segments wholly below `upTo` per partition (a partition
     * absent from the map is untouched). Returns the deleted paths.
+    * Each visited partition also drops its orphaned batch merge files
+    * (`.tmp-batch-<queryId>`: a batch append that died between
+    * merge and publish; a batch query id is never retried, so nothing
+    * else deletes them). A streaming epoch's `.tmp-<queryId>-<epoch>`
+    * stays: its retry consumes it.
     * Offline maintenance: not concurrent with an active writer's commit
     * on the same partitions (single-maintainer, like the write path's
     * single-writer assumption).
@@ -30,6 +37,7 @@ object LedgerMaintenance {
     val root = LedgerSource.toLocalPath(topicPath)
     upTo.toSeq.sortBy(_._1).flatMap { case (p, cursor) =>
       val dir = root.resolve(s"partition-$p")
+      sweepBatchMerges(dir)
       LedgerSource.listLedgers(dir)
         .filter(_.ledgerId < cursor.ledgerId)
         .map(l => dir.resolve(s"ledger-${l.ledgerId}.log"))
@@ -39,6 +47,14 @@ object LedgerMaintenance {
         }
     }
   }
+
+  private def sweepBatchMerges(dir: Path): Unit =
+    if (Files.isDirectory(dir)) {
+      val names = Files.list(dir)
+      val debris = try names.iterator().asScala.filter(_.getFileName.toString
+        .startsWith(LedgerWrite.BatchMergePrefix)).toList finally names.close()
+      Publish.sweep(Publish.localFs, debris.map(LedgerWrite.hPath))
+    }
 
   /** Retain below everything a stream has committed: parse the offset
     * JSON a checkpoint holds (`{"0":[ledger,entry]}`) and drop segments

@@ -391,11 +391,6 @@ object LedgerSource {
         .map(e => s"executor_${e.host}_${e.executorId}")
     } catch { case _: Throwable => Nil }
 
-  // -------------------------------------------------------- offset (JSON)
-
-  /** {"0": [ledgerId, entryId], "1": [...]} — minimal hand-rolled JSON so
-    * no extra deps; format is stable for checkpoint recovery.
-    */
   /** Driver-side status snapshot of a topic as a LocalRelation — backs the
     * `graft_ledger_status(path)` SQL table function (GraftExtensions): the
     * pulsar-admin topics-stats / kafka-consumer-groups --describe analogue.
@@ -452,6 +447,11 @@ object LedgerSource {
     LocalRelation(out, rows, isStreaming = false)
   }
 
+  // -------------------------------------------------------- offset (JSON)
+
+  /** {"0": [ledgerId, entryId], "1": [...]} — minimal hand-rolled JSON so
+    * no extra deps; format is stable for checkpoint recovery.
+    */
   case class LedgerOffset(cursors: Map[Int, Cursor]) extends Offset {
     override def json(): String =
       cursors.toSeq.sortBy(_._1).map { case (p, c) =>

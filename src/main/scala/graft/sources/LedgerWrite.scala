@@ -59,6 +59,9 @@ object LedgerWrite {
   val StagingDirName = ".staging"
   val CommitsDirName = "_commits"
 
+  /** Name prefix of a batch append's per-partition merge file. */
+  val BatchMergePrefix = ".tmp-batch-"
+
   /** Piece descriptor: (topic partition, staged file name, row count). */
   case class Piece(partition: Int, file: String, rows: Long)
 
@@ -268,7 +271,7 @@ class LedgerBatchWrite(path: String, queryId: String, schema: StructType,
     byPartition.toSeq.sortBy(_._1).foreach { case (p, pieces) =>
       val dir = root.resolve(s"partition-$p")
       Files.createDirectories(dir)
-      val tmp = dir.resolve(s".tmp-$writeId")
+      val tmp = dir.resolve(BatchMergePrefix + queryId)
       mergePieces(staging, pieces.map(_._2).toSeq, tmp)
       val target = dir.resolve(s"ledger-${nextLedgerId(dir)}.log")
       if (!publishSegment(tmp, target)) throw new java.io.IOException(

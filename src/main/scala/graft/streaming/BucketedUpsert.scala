@@ -53,9 +53,7 @@ object BucketedUpsert {
       // cleaner's next GC-driven sweep — bounded state must not depend on
       // GC timing (the 208-batch soak's per-batch latency crept up with
       // exactly this pressure)
-      freshB.queryExecution.logical.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.foreach(_.unpersist(blocking = false))
+      graft.ArtifactStore.releaseCheckpoints(freshB)
     }
   }
 

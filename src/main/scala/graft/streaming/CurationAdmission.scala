@@ -69,9 +69,7 @@ object CurationAdmission {
     // score against the same model family it twins
     val (bg, lm) = graft.operators.TextQueries.corpusBigramLm(s, corpusDir)
     lm.write.mode("overwrite").parquet(s"$refPath/lm")
-    val per = bg.join(lm, "bg")
-      .groupBy(col("doc_id"), col("lang"))
-      .agg(avg(-log(col("p"))).as("s"))
+    val per = CorpusStatsMaintenance.meanSurprisal(bg, lm, "doc_id", "lang")
       .localCheckpoint() // ccnetTerciles reads it census-, tie- and assignment-side
     // tail cutoff = the q98 bucket-2/3 edge under the same (round-6 s,
     // doc_id) rank key, via the SAME two-phase broadcast-cutoff tercile
@@ -89,9 +87,7 @@ object CurationAdmission {
     // disk, so a long-lived session that trains the reference and then
     // drives admission doesn't pin it forever (bg is a lazy plan over the
     // lexdocs artifact: nothing of its own to release)
-    per.queryExecution.logical.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false))
+    graft.ArtifactStore.releaseCheckpoints(per)
   }
 
   /** The frozen references one stream judges against, bound once: the
@@ -169,15 +165,12 @@ object CurationAdmission {
 
     // LM gate against the frozen reference: shuffle join on the bigram
     // key; unseen bigrams pay the pinned punk penalty
-    val t = tokens(col("text"))
-    val withToks = qualOk.select(col("doc_id"), col("lang"), col("text"), t.as("t"))
-    val scorable = withToks.filter(size(col("t")) >= 2)
-    val surprisal = scorable
-      .select(col("doc_id"), col("lang"),
-        // the SAME bigram feature definition the reference LM was
-        // trained with (tokenBigrams) — a drifted inline copy here
-        // would silently miss the whole LM and punk-drop all traffic
-        explode(tokenBigrams(col("t"))).as("bg"))
+    // the SAME bigram stream the reference LM was trained on
+    // (bigramStream) — a drifted inline copy here would silently miss
+    // the whole LM and punk-drop all traffic
+    val surprisal = CorpusStatsMaintenance.bigramStream(
+        qualOk.select(col("doc_id"), col("lang"), tokens(col("text")).as("t")),
+        "lang")
       .join(ref.lm, Seq("bg"), "left")
       .withColumn("p", coalesce(col("p"), lit(ref.punk)))
       .groupBy(col("doc_id"), col("lang"))

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
-import graft.functions.TextFunctions._
 import graft.operators.TextQueries
 
 /** Streaming near-dup admission — the streaming form of q38's dedup-keep:
@@ -50,8 +49,7 @@ object NearDupAdmission {
             bands: Int = 32, rows: Int = 2, maxBucket: Int = 0,
             expectedStoreBytes: Long = 0L): Judged = {
     val all = batch
-      .select(col("doc_id"), col("text"),
-        wordNgramsUdf(3)(col("text")).as("shingles"))
+      .select(col("doc_id"), col("text"), TextQueries.neardupShingles)
       .localCheckpoint()
     // shingle-less docs (< 3 alphabetic words) cannot near-duplicate
     // anything — always admitted, exactly as the batch q38 keeps them

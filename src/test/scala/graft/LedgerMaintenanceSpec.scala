@@ -88,4 +88,27 @@ class LedgerMaintenanceSpec extends AnyFunSuite with TempDirs {
       !Files.exists(root.resolve("partition-0/ledger-3.log")),
       "partition 0 should be fully aged out below cursor (99,0)")
   }
+
+  test("retention sweeps orphaned batch merge files and keeps live writers' temp files") {
+    val root = java.nio.file.Paths.get(tmp("graft_retain_sweep"))
+    append(root, Seq((0, "a", "v0")))
+    val part = root.resolve("partition-0")
+    // a batch append that died between merge and publish
+    val orphan = Files.write(part.resolve(".tmp-batch-deadbeef"), "x".getBytes)
+    // a streaming epoch's merge file, which the epoch's retry consumes
+    val streamTmp = Files.write(part.resolve(".tmp-0f1e2d3c-7"), "x".getBytes)
+    // a live batch write's staged pieces, before its commit
+    val staged = Files.createDirectories(root.resolve(".staging/batch-live"))
+    Files.write(staged.resolve("t0-p0-0.piece"), "x".getBytes)
+
+    val deleted = LedgerMaintenance.retain(root.toString, Map(0 -> Cursor(0, 0)))
+    assert(deleted.isEmpty, deleted.toString)
+    assert(!Files.exists(orphan), "orphaned batch merge file must be swept")
+    assert(Files.exists(streamTmp), "a streaming epoch's temp file must stay")
+    assert(Files.exists(staged.resolve("t0-p0-0.piece")),
+      "a live batch write's staging dir must stay")
+    assert(Files.exists(part.resolve("ledger-0.log")))
+    assert(spark.read.format("graft-ledger").option("path", root.toString)
+      .load().select("key").collect().map(_.getString(0)).toSeq == Seq("a"))
+  }
 }

@@ -1158,7 +1158,7 @@ class QueriesSpec extends AnyFunSuite with TempDirs {
     }
     // pow()'s final-ulp wobble is absorbed by round-4 only while no share
     // sits near a rounding boundary — pin the distance (q98-style canary)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(lit(1))
+    val w = TextQueries.wholeCensus("n_tokens")
     val shares = Tables.documents(spark, dir)
       .select(col("lang"),
         size(graft.functions.TextFunctions.tokens(col("text"))).as("ntok"))
