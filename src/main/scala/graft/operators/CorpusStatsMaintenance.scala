@@ -195,13 +195,17 @@ object CorpusStatsMaintenance {
     .agg(sum(when(col("cls") === "hi", 1L).otherwise(0L)).as("tf_hi"),
       sum(when(col("cls") === "lo", 1L).otherwise(0L)).as("tf_lo"))
 
+  /** THE train-split class count (d_hi, d_lo) of a [[nbLabeled]]
+    * corpus, one row — q92's priors and the maintained ones. sum() over
+    * an empty frame is NULL, and an empty delta segment is legal —
+    * coalesce to 0 so the additive merge stays total. */
+  def nbClassCounts(labeled: DataFrame): DataFrame = labeled
+    .filter(col("split") === "train")
+    .agg(coalesce(sum(when(col("cls") === "hi", 1L).otherwise(0L)), lit(0L)).as("d_hi"),
+      coalesce(sum(when(col("cls") === "lo", 1L).otherwise(0L)), lit(0L)).as("d_lo"))
+
   private def nbPriors(labeled: DataFrame): (Long, Long) = {
-    // sum() over an empty frame is NULL, and an empty delta segment is
-    // legal — coalesce to 0 so the additive merge stays total
-    val r = labeled.filter(col("split") === "train")
-      .agg(coalesce(sum(when(col("cls") === "hi", 1L).otherwise(0L)), lit(0L)),
-        coalesce(sum(when(col("cls") === "lo", 1L).otherwise(0L)), lit(0L)))
-      .collect().head
+    val r = nbClassCounts(labeled).collect().head
     (r.getLong(0), r.getLong(1))
   }
 
@@ -304,16 +308,24 @@ object CorpusStatsMaintenance {
     * == rebuild, doc for doc). */
   def spanRuns(idx: SpanIndex, only: Option[DataFrame] = None): DataFrame = {
     val wins = only.fold(idx.wins)(docs => idx.wins.join(docs, "doc_id"))
-    wins.join(idx.census, "h").filter(col("ndocs") >= 2)
-      .select(col("doc_id"), col("i"))
-      .withColumn("grp", col("i") - org.apache.spark.sql.functions.row_number()
-        .over(org.apache.spark.sql.expressions.Window
-          .partitionBy("doc_id").orderBy("i")))
-      .groupBy(col("doc_id"), col("grp"))
-      .agg(count(lit(1)).as("run"))
+    coveredRuns(wins.join(idx.census, "h").filter(col("ndocs") >= 2)
+        .select(col("doc_id"), col("i")))
       .groupBy(col("doc_id"))
       .agg(max(col("run")).as("maxrun"))
   }
+
+  /** q117's gaps-and-islands kernel: the runs of consecutive covered
+    * window positions per doc, (doc_id, grp, run) over (doc_id, i)
+    * covered positions. ONE definition for the span audit ([[spanRuns]]
+    * takes each doc's longest run) and the streaming quote gate
+    * ([[graft.streaming.QuoteAdmission.quoteDrops]] drops docs with a
+    * run at its threshold). */
+  def coveredRuns(covered: DataFrame): DataFrame = covered
+    .withColumn("grp", col("i") - org.apache.spark.sql.functions.row_number()
+      .over(org.apache.spark.sql.expressions.Window
+        .partitionBy("doc_id").orderBy("i")))
+    .groupBy(col("doc_id"), col("grp"))
+    .agg(count(lit(1)).as("run"))
 
   /** q120's decontamination bitset as a maintained artifact: the
     * 32-bit-lane `words` table, the FROZEN width `m`, and the gram

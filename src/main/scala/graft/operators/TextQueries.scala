@@ -35,9 +35,13 @@ object TextQueries {
     */
   private[graft] def bandedOf(docs: DataFrame, numHashes: Int = 64,
       bands: Int = 32, rows: Int = 2): DataFrame =
-    docs.select(col("doc_id"),
-      explode(graft.functions.expressions.TextExpressions
-        .minhashBandKeysExpr(col("shingles"), numHashes, bands, rows)).as("bucket"))
+    docs.select(col("doc_id"), minhashBands(numHashes, bands, rows).as("bucket"))
+
+  /** A doc's exploded MinHash band keys over its `shingles` — the band-key
+    * column of [[bandedOf]] and of the streaming near-dup gate. */
+  private[graft] def minhashBands(numHashes: Int, bands: Int, rows: Int): Column =
+    explode(graft.functions.expressions.TextExpressions
+      .minhashBandKeysExpr(col("shingles"), numHashes, bands, rows))
 
   /** SimHash banding width for the production keep-decision (q124):
     * bits per band over the 64-bit signature, bands = 64/bits. A REAL
@@ -533,9 +537,7 @@ object TextQueries {
     val tf = CorpusStatsMaintenance.nbTf(docs)
     val totals = tf.agg(sum("tf_hi").as("n_hi"), sum("tf_lo").as("n_lo"),
       count(lit(1)).as("v"))
-    val priors = docs.filter(col("split") === "train")
-      .agg(sum(when(col("cls") === "hi", 1L).otherwise(0L)).as("d_hi"),
-        sum(when(col("cls") === "lo", 1L).otherwise(0L)).as("d_lo"))
+    val priors = CorpusStatsMaintenance.nbClassCounts(docs)
     // per-TYPE log-likelihood ratios (vocab-sized, broadcast) rather than
     // per-occurrence logs: identical IEEE expressions, ~tokens/vocab fewer
     // transcendental calls. Unseen tokens coalesce to the UNK constant —

@@ -15,7 +15,7 @@ import graft.operators.TextQueries.{PairKernel, dropHot}
   * results exist precisely because a silent failure would empty a
   * store) instead of a per-gate clone drifting apart. Each gate declares
   * its tables once ([[Table]]: sub-dir, blocking key, compaction fold)
-  * and derives its compact/maintain from that list ([[Store]]).
+  * and inherits its compact/maintain from that list ([[Store]]).
   *
   * BASE EPOCH: compaction folds every table's epochs into ONE base
   * epoch, `epoch=-1` ([[BaseEpoch]]). Batch ids are non-negative, so no
@@ -122,17 +122,27 @@ private[graft] object AdmissionStore {
     def at(storePath: String): String = s"$storePath/$sub"
   }
 
-  /** A gate's declared tables, and the offline maintenance derived from
-    * them. */
-  final case class Store(tables: Table*) {
+  /** A store-backed gate: its declared tables, and the ONE offline
+    * maintenance every such gate derives from them. Maintenance is
+    * offline, ENFORCED by each table's lock: a concurrent writeEpoch
+    * fails loudly against the held lock, and the publish aborts on
+    * epoch-set drift — a raced epoch is never silently swapped away with
+    * the superseded tree. A gate's own reasons (what survives, what a
+    * retry after compaction can rely on) live in its doc. */
+  trait Store {
+    protected def tables: Seq[Table]
+
     /** Fold every table's epochs into the base epoch ([[compactEpochs]]). */
     def compact(s: SparkSession, storePath: String): Unit =
       tables.foreach(t => compactEpochs(s, storePath, t.sub, t.fold))
 
-    /** Compact, then re-bucket every table whose width signal fired, each
-      * on its own blocking key ([[AdmissionStore.maintain]]). */
+    /** Compact, then re-bucket every table whose width signal says the
+      * store has outgrown its fan-out (store bytes / K past
+      * `targetBucketBytes` — the lifecycle), each on its own blocking
+      * key, the same key its pruned reads route on
+      * ([[AdmissionStore.maintain]]). */
     def maintain(s: SparkSession, storePath: String,
-        targetBucketBytes: Long): Seq[LayoutReport] = {
+        targetBucketBytes: Long = TargetBucketBytes): Seq[LayoutReport] = {
       compact(s, storePath)
       tables.flatMap(t => AdmissionStore.maintain(s, t.at(storePath), t.key,
         targetBucketBytes))

@@ -229,7 +229,7 @@ object CurationAdmission {
         counted(afterQuote.join(dropIds, Seq("doc_id"), "left_anti"), "decon_ok")
     }
     val dropDecon = nAfterQuote - admitted
-    finalKept.write.mode("overwrite").parquet(s"$keptPath/epoch=$batchId")
+    AdmissionGate.keep(finalKept, keptPath, batchId)
     QuoteAdmission.publishCensus(wins, finalKept.select(col("doc_id")),
       batchId, storePath)
 
@@ -280,13 +280,9 @@ object CurationAdmission {
              benchRefPath: Option[String] = None,
              maxHitFrac: Double = 0.05): DataStreamWriter[Row] = {
     val ref = Reference.load(docs.sparkSession, refPath, benchRefPath)
-    docs.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        admit(batch, id, ref, storePath, keptPath, auditPath,
-          qualityFloor, quoteSpan, maxHitFrac)
-        ()
-      }
+    AdmissionGate.wire(docs, checkpoint) { (batch, id) =>
+      admit(batch, id, ref, storePath, keptPath, auditPath,
+        qualityFloor, quoteSpan, maxHitFrac)
+    }
   }
 }

@@ -17,10 +17,11 @@ import graft.functions.TextFunctions.wordNgramsUdf
   * accumulated corpus, so there is no growing store and no compaction —
   * just the persisted bitset artifacts
   * ([[CorpusStatsMaintenance.BloomIndex]]: an m/32-row 32-bit-lane words
-  * table + its frozen width), built once by [[buildReference]] and
-  * broadcast to every batch. A new eval suite joins the set through
-  * [[CorpusStatsMaintenance.refreshBloom]] + a reference rewrite — the
-  * maintenance family's frozen-width/rebuild lifecycle applies verbatim.
+  * table + its frozen width), built once by [[buildReference]], bound
+  * once per stream and broadcast to every batch. A new eval suite joins
+  * the set through [[CorpusStatsMaintenance.refreshBloom]] + a reference
+  * rewrite — the maintenance family's frozen-width/rebuild lifecycle
+  * applies verbatim.
   *
   * Why a FRACTION, not any-hit: at the 16×/k=4 sizing the per-gram
   * false-positive rate is ~0.24% ((1−e^(−1/4))⁴), so a clean 1000-gram
@@ -80,20 +81,20 @@ object DecontaminationAdmission {
         sum(col("hit")).cast("long").as("n_hits"))
       .withColumn("frac", col("n_hits").cast("double") / col("n_grams"))
 
-  def admit(batch: DataFrame, batchId: Long, refPath: String,
-            keptPath: String, auditPath: String,
-            maxHitFrac: Double = 0.05): Unit = {
-    val s = batch.sparkSession
+  /** One epoch against `ref`, the benchmark bitset [[stream]] bound
+    * (or [[readReference]] read). */
+  def admit(batch: DataFrame, batchId: Long,
+            ref: CorpusStatsMaintenance.BloomIndex, keptPath: String,
+            auditPath: String, maxHitFrac: Double = 0.05): Unit = {
     val docs = batch.select(col("doc_id"), col("text")).localCheckpoint()
-    val fracs = hitFractions(docs, readReference(s, refPath))
+    val fracs = hitFractions(docs, ref)
     // gramless docs (< 5 tokens) have nothing a benchmark gram could
     // match: left join → null frac → kept
     val judged = docs.join(fracs, Seq("doc_id"), "left")
       .withColumn("drop", coalesce(col("frac") > maxHitFrac, lit(false)))
       .localCheckpoint()
-    val kept = judged.filter(!col("drop"))
-    kept.select(col("doc_id"), col("text"))
-      .write.mode("overwrite").parquet(s"$keptPath/epoch=$batchId")
+    AdmissionGate.keep(judged.filter(!col("drop")).select(col("doc_id"), col("text")),
+      keptPath, batchId)
     judged.agg(count(lit(1)).as("n_in"),
         sum(when(col("drop"), 1L).otherwise(0L)).as("n_dropped"),
         round(max(when(!col("drop"), col("frac"))), 4).as("max_kept_frac"),
@@ -102,14 +103,20 @@ object DecontaminationAdmission {
   }
 
   /** Wire as a streaming sink over a (doc_id, text) stream against the
-    * persisted benchmark bitset. */
+    * persisted benchmark bitset.
+    *
+    * The bitset is bound at stream start ([[readReference]]), not re-read
+    * per batch: every micro-batch of one run judges against the same
+    * bitset. A reference rewrite takes effect at the next start; a
+    * rewrite under a running stream fails its next batch loudly on the
+    * replaced files (the bound frame still lists the files it was read
+    * with) instead of mixing two bitsets in one run. */
   def stream(docs: DataFrame, refPath: String, keptPath: String,
              auditPath: String, checkpoint: String,
-             maxHitFrac: Double = 0.05): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        admit(batch, id, refPath, keptPath, auditPath, maxHitFrac)
-      }
+             maxHitFrac: Double = 0.05): DataStreamWriter[Row] = {
+    val ref = readReference(docs.sparkSession, refPath)
+    AdmissionGate.wire(docs, checkpoint) { (batch, id) =>
+      admit(batch, id, ref, keptPath, auditPath, maxHitFrac)
+    }
+  }
 }

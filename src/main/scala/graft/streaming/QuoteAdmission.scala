@@ -1,18 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
+import graft.operators.CorpusStatsMaintenance
 
 /** Streaming verbatim-quote admission — the streaming form of q117's
   * duplicated-span audit, complementing [[NearDupAdmission]]: LSH catches
   * documents that are MOSTLY the same, this gate catches documents that
   * CONTAIN a long exact quote of the admitted corpus (Lee et al. 2022's
   * ExactSubstr rule as an ingest policy). A document is admitted iff its
-  * longest run of consecutive stride-1 `window`-token hashes covered by
+  * longest run of consecutive stride-1 10-token window hashes covered by
   * (a) the admitted store or (b) a lower-id document of its own batch
-  * stays under `spanTokens` (runs of `spanTokens - window + 1` windows =
+  * stays under `spanTokens` (runs of `spanTokens - 10 + 1` windows =
   * a `spanTokens`-token duplicated substring; same greedy lower-id-wins
   * as the near-dup gate). Coverage is per-window ("this window exists
   * somewhere admitted"), exactly q117's census semantics — a run may
@@ -35,18 +35,28 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * partition from the store read, so a foreachBatch retry that already
   * published its census cannot self-reject (sub-threshold windows shared
   * between two docs BOTH kept in the original run would otherwise read
-  * back as covered). Compaction folds epochs into the base epoch
-  * `epoch=-1` (AdmissionStore's BASE EPOCH) — offline maintenance, not
-  * concurrent with an active stream, like the near-dup store's.
+  * back as covered).
+  *
+  * Maintenance ([[AdmissionStore.Store]]): compaction folds census
+  * epochs into the base epoch `epoch=-1` (AdmissionStore's BASE EPOCH),
+  * which lies below every batchId, so the same-epoch exclusion in
+  * [[quoteDrops]] can never alias it; offline only — a retry AFTER
+  * compaction would no longer find its epoch to exclude. Epoch
+  * structure survives the re-bucket, so the same-epoch retry exclusion
+  * keeps working.
   */
-object QuoteAdmission {
+object QuoteAdmission extends AdmissionStore.Store {
+
+  /** Window width in tokens — the census key's format: a restart under
+    * another width would test coverage against an incompatible store. */
+  private val WindowTokens = 10
 
   /** The census table: window hashes keyed by `h`. Compaction folds it
     * to DISTINCT hashes — hash existence is all coverage tests, so rows
     * repeated across epochs are dead weight in the base (`pb` is a
     * function of `h`, so the pair is distinct exactly when `h` is). */
   private val Census = AdmissionStore.Table("census", col("h"), _.distinct())
-  private val tables = AdmissionStore.Store(Census)
+  protected val tables = Seq(Census)
 
   /** One epoch's windows: `frame` = (doc_id, i, h), the stride-1
     * window hashes of the batch, materialised once (drop computation
@@ -66,8 +76,8 @@ object QuoteAdmission {
   /** The [[Windows]] of (doc_id, text) docs — q117's relation. ONE
     * window-key definition shared with the incremental span census
     * ([[graft.operators.CorpusStatsMaintenance.windowHashes]]) so the
-    * batch/stream hash can never drift. Docs shorter than `window`
-    * tokens have none and are trivially admitted. The census read
+    * batch/stream hash can never drift. Docs shorter than the window
+    * have none and are trivially admitted. The census read
     * prunes to the batch's own window-hash key buckets (AdmissionStore
     * layout, routing K from the store's stamp) — coverage only ever
     * tests hashes the batch holds, and every row of a touched hash
@@ -77,8 +87,8 @@ object QuoteAdmission {
     * admitted, so the read fails loudly and points at the recovery
     * (AdmissionStore's one aside convention).
     */
-  def windowsOf(docs: DataFrame, storePath: String, window: Int = 10): Windows = {
-    val raw = graft.operators.CorpusStatsMaintenance.windowHashes(docs, window)
+  def windowsOf(docs: DataFrame, storePath: String): Windows = {
+    val raw = CorpusStatsMaintenance.windowHashes(docs, WindowTokens)
     val (observed, census) = AdmissionStore.observeTouched(raw, Census.key,
       Census.at(storePath), censusRows(raw, raw).schema)
     Windows(observed.localCheckpoint(), census)
@@ -88,12 +98,11 @@ object QuoteAdmission {
     * threshold — covered by the store (excluding this epoch's own
     * partition, for retry safety) or by a lower-id doc of the same batch.
     */
-  def quoteDrops(wins: Windows, batchId: Long,
-                 spanTokens: Int = 20, window: Int = 10): DataFrame = {
-    require(spanTokens >= window,
-      s"spanTokens ($spanTokens) must be >= window ($window)")
+  def quoteDrops(wins: Windows, batchId: Long, spanTokens: Int = 20): DataFrame = {
+    require(spanTokens >= WindowTokens,
+      s"spanTokens ($spanTokens) must be >= the window ($WindowTokens)")
     val s = wins.frame.sparkSession
-    val runThreshold = spanTokens - window + 1
+    val runThreshold = spanTokens - WindowTokens + 1
     val stored: Option[DataFrame] = wins.census
       .map(_.read(s).filter(col("epoch") =!= batchId)) // retries skip their own output
 
@@ -114,11 +123,7 @@ object QuoteAdmission {
       .select(col("doc_id"), col("i"))
 
     // q117's gaps-and-islands kernel over the covered positions
-    storeHit.unionByName(batchHit).distinct()
-      .withColumn("grp", col("i") -
-        row_number().over(Window.partitionBy("doc_id").orderBy("i")))
-      .groupBy(col("doc_id"), col("grp"))
-      .agg(count(lit(1)).as("run"))
+    CorpusStatsMaintenance.coveredRuns(storeHit.unionByName(batchHit).distinct())
       .filter(col("run") >= runThreshold)
       .select(col("doc_id")).distinct()
   }
@@ -139,46 +144,23 @@ object QuoteAdmission {
       Census.at(storePath), batchId, expectedStoreBytes).toSeq
 
   def admit(batch: DataFrame, batchId: Long, storePath: String,
-            keptPath: String, spanTokens: Int = 20, window: Int = 10,
+            keptPath: String, spanTokens: Int = 20,
             expectedStoreBytes: Long = 0L)
       : Seq[AdmissionStore.WidthSignal] = {
     val all = batch.select(col("doc_id"), col("text")).localCheckpoint()
-    val wins = windowsOf(all, storePath, window)
-    val dropped = quoteDrops(wins, batchId, spanTokens, window)
+    val wins = windowsOf(all, storePath)
+    val dropped = quoteDrops(wins, batchId, spanTokens)
     val kept = all.join(dropped, Seq("doc_id"), "left_anti").localCheckpoint()
-    // deterministic epoch dirs: a retried batch overwrites its own output
-    kept.write.mode("overwrite").parquet(s"$keptPath/epoch=$batchId")
+    AdmissionGate.keep(kept, keptPath, batchId)
     publishCensus(wins, kept.select(col("doc_id")), batchId, storePath,
       expectedStoreBytes)
   }
-
-  /** Fold accumulated census epochs into the base epoch
-    * ([[AdmissionStore.compactEpochs]]; offline maintenance only — a
-    * retry AFTER compaction would no longer find its epoch to exclude).
-    * The base lies below every batchId, so the same-epoch exclusion in
-    * quoteDrops can never alias it. */
-  def compact(s: SparkSession, storePath: String): Unit =
-    tables.compact(s, storePath)
-
-  /** Full offline maintenance: fold epochs, then re-bucket the census
-    * when its width signal fired (the AdmissionStore lifecycle). Epoch
-    * structure survives the re-bucket, so the same-epoch retry exclusion
-    * keeps working. */
-  def maintain(s: SparkSession, storePath: String,
-      targetBucketBytes: Long = AdmissionStore.TargetBucketBytes)
-      : Seq[AdmissionStore.LayoutReport] =
-    tables.maintain(s, storePath, targetBucketBytes)
 
   /** Wire as a streaming sink over a (doc_id, text) stream. */
   def stream(docs: DataFrame, storePath: String, keptPath: String,
              checkpoint: String, spanTokens: Int = 20,
              expectedStoreBytes: Long = 0L): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        admit(batch, id, storePath, keptPath, spanTokens,
-          expectedStoreBytes = expectedStoreBytes)
-        ()
-      }
+    AdmissionGate.wire(docs, checkpoint) { (batch, id) =>
+      admit(batch, id, storePath, keptPath, spanTokens, expectedStoreBytes)
+    }
 }

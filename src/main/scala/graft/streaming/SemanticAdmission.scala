@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import graft.functions.expressions.VectorExpressions.cosineSim
@@ -44,13 +44,16 @@ import graft.operators.{IndexMaintenance, VectorQueries}
   * duplicates its own stored copy (id filter), and the kept set is
   * deterministic — a retried foreachBatch epoch replays to the same
   * state.
+  *
+  * Maintenance ([[AdmissionStore.Store]]) folds and re-buckets the
+  * members table only: the geometry pin survives untouched.
   */
-object SemanticAdmission {
+object SemanticAdmission extends AdmissionStore.Store {
 
   // The store's one table: admitted members by cell (the cell-equi
   // join's key)
   private val Members = AdmissionStore.Table("members", col("cell"))
-  private val tables = AdmissionStore.Store(Members)
+  protected val tables = Seq(Members)
 
   /** The trained geometry a stream judges against, bound to a store once
     * ([[Geometry.pin]]) instead of re-checked per batch: `cent` is the
@@ -126,30 +129,13 @@ object SemanticAdmission {
       .join(dupVsStore.unionByName(dupInBatch).distinct(),
         Seq("vec_id"), "left_anti")
       .localCheckpoint()
-    // deterministic epoch dirs: a retried batch overwrites its own
-    // output; an empty epoch publishes nothing to the store
+    // an empty epoch publishes nothing to the store
     // (AdmissionStore.writeEpoch)
-    kept.select(col("vec_id"), col("embedding"))
-      .write.mode("overwrite").parquet(s"$keptPath/epoch=$batchId")
+    AdmissionGate.keep(kept.select(col("vec_id"), col("embedding")),
+      keptPath, batchId)
     AdmissionStore.writeEpoch(kept, Members.key,
       Members.at(storePath), batchId, expectedStoreBytes).toSeq
   }
-
-  /** Fold accumulated epoch partitions into the base epoch (offline
-    * maintenance, ENFORCED by AdmissionStore's per-table lock +
-    * epoch-drift guard; rename results checked so a failure cannot
-    * silently empty the store). The geometry pin survives untouched.
-    */
-  def compact(s: SparkSession, storePath: String): Unit =
-    tables.compact(s, storePath)
-
-  /** Full offline maintenance: fold epochs, then re-bucket when the
-    * width signal fired (the AdmissionStore lifecycle); the geometry
-    * pin survives untouched. */
-  def maintain(s: SparkSession, storePath: String,
-      targetBucketBytes: Long = AdmissionStore.TargetBucketBytes)
-      : Seq[AdmissionStore.LayoutReport] =
-    tables.maintain(s, storePath, targetBucketBytes)
 
   /** Wire as a streaming sink over a (vec_id, embedding) stream against
     * a frozen trained geometry. The geometry is pinned here, at stream
@@ -160,12 +146,8 @@ object SemanticAdmission {
              tau: Double = 0.95,
              expectedStoreBytes: Long = 0L): DataStreamWriter[Row] = {
     val geom = Geometry.pin(cent, storePath)
-    vecs.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        admit(batch, id, geom, storePath, keptPath, tau, expectedStoreBytes)
-        ()
-      }
+    AdmissionGate.wire(vecs, checkpoint) { (batch, id) =>
+      admit(batch, id, geom, storePath, keptPath, tau, expectedStoreBytes)
+    }
   }
 }

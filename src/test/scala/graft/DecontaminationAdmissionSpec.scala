@@ -79,7 +79,7 @@ class DecontaminationAdmissionSpec extends AnyFunSuite with TempDirs {
     // idempotent retry: same epoch id, same verdicts, no appends
     DecontaminationAdmission.admit(
       Seq((1L, quoted), (2L, clean), (3L, tiny)).toDF("doc_id", "text"),
-      0L, ref, kept, audit)
+      0L, DecontaminationAdmission.readReference(spark, ref), kept, audit)
     assert(spark.read.parquet(kept).select("doc_id")
       .collect().map(_.getLong(0)).toSet == Set(2L, 3L))
     assert(spark.read.parquet(audit).count() == 1L)
@@ -91,7 +91,8 @@ class DecontaminationAdmissionSpec extends AnyFunSuite with TempDirs {
       (5 until 20).map(tok("s", _)).mkString(" ") +
       " post five six seven eight"
     DecontaminationAdmission.admit(
-      Seq((10L, quoted2)).toDF("doc_id", "text"), 1L, ref, kept, audit)
+      Seq((10L, quoted2)).toDF("doc_id", "text"), 1L,
+      DecontaminationAdmission.readReference(spark, ref), kept, audit)
     assert(spark.read.parquet(s"$kept/epoch=1").select("doc_id")
       .collect().map(_.getLong(0)).toSet == Set(10L),
       "new-suite quote dropped before the suite joined the set")
@@ -108,8 +109,34 @@ class DecontaminationAdmissionSpec extends AnyFunSuite with TempDirs {
     assert(DecontaminationAdmission.readReference(spark, ref).m
       == rep.widthNow, "rebuild did not resize to the recommended width")
     DecontaminationAdmission.admit(
-      Seq((10L, quoted2)).toDF("doc_id", "text"), 2L, ref, kept, audit)
+      Seq((10L, quoted2)).toDF("doc_id", "text"), 2L,
+      DecontaminationAdmission.readReference(spark, ref), kept, audit)
     assert(spark.read.parquet(s"$kept/epoch=2").count() == 0L,
       "new-suite quote admitted after the refresh")
+  }
+
+  test("the bitset is bound at stream start: a rewrite under a bound reference fails loudly") {
+    import spark.implicits._
+    val ref = tmp("dadmb_ref")
+    DecontaminationAdmission.buildReference(gramsOf(evalItem), ref)
+    val bound = DecontaminationAdmission.readReference(spark, ref)
+    val quoted2 = "pre one two three four " +
+      (5 until 20).map(tok("s", _)).mkString(" ") +
+      " post five six seven eight"
+    val batch = Seq((10L, quoted2)).toDF("doc_id", "text")
+    DecontaminationAdmission.buildReference(gramsOf(evalItem2), ref) // rewritten in place
+    val e = intercept[Exception] {
+      DecontaminationAdmission.admit(batch, 0L, bound, tmp("dadmb_kept"),
+        tmp("dadmb_audit"))
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => s"${t.getClass.getName}: ${t.getMessage}").mkString(" / ")
+    assert(chain.contains("FILE_NOT_EXIST") || chain.contains("FileNotFound"), chain)
+    // a fresh binding reads the rewritten bitset
+    val kept = tmp("dadmb_kept")
+    DecontaminationAdmission.admit(batch, 0L,
+      DecontaminationAdmission.readReference(spark, ref), kept, tmp("dadmb_audit"))
+    assert(spark.read.parquet(s"$kept/epoch=0").count() == 0L,
+      "the rewritten bitset's suite was not judged")
   }
 }

@@ -323,17 +323,12 @@ class PublishSpec extends AnyFunSuite with TempDirs {
   }
 
   /** src/main/scala's sources, split into graft/Publish.scala and the rest. */
-  private def mainSources: (List[Path], List[Path]) = {
-    val walk = Files.walk(Paths.get("src/main/scala"))
-    val sources = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    assert(sources.size > 20, s"the scan found only ${sources.size} sources")
-    sources.partition(_.endsWith(Paths.get("graft", "Publish.scala")))
-  }
+  private def publishSplit: (List[Path], List[Path]) =
+    PublishSpec.mainSources.partition(_.endsWith(Paths.get("graft", "Publish.scala")))
 
   test("only Publish renames, moves or exclusively creates files in src/main/scala") {
     val banned = Seq("Files.move", "Files.createFile", "ATOMIC_MOVE", ".rename(")
-    val (publish, rest) = mainSources
+    val (publish, rest) = publishSplit
     assert(publish.size == 1 && Files.readString(publish.head).contains(".rename("))
     val offenders = for (f <- rest; b <- banned if Files.readString(f).contains(b)) yield s"$f: $b"
     assert(offenders.isEmpty, s"publish outside graft.Publish: ${offenders.mkString("; ")}")
@@ -344,8 +339,19 @@ class PublishSpec extends AnyFunSuite with TempDirs {
     // scheme (s3a:// on an hdfs cluster) fails with "Wrong FS"; Publish.fsOf
     // resolves the path's own. Matched across whitespace and line breaks.
     val get = """FileSystem\s*\.\s*get\s*\(""".r
-    val (_, rest) = mainSources
+    val (_, rest) = publishSplit
     val offenders = rest.filter(f => get.findFirstIn(Files.readString(f)).isDefined)
     assert(offenders.isEmpty, s"FileSystem.get outside graft.Publish: ${offenders.mkString("; ")}")
+  }
+}
+
+object PublishSpec {
+  /** Every source under src/main/scala — the source-scan guards' input. */
+  def mainSources: List[Path] = {
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val sources = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    assert(sources.size > 20, s"the scan found only ${sources.size} sources")
+    sources
   }
 }

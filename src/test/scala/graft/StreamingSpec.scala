@@ -225,4 +225,14 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(byUser == Map(1L -> 3L, 2L -> 1L))
   }
+
+  test("P8 lateness audit classifies receipt skew as future, past or ok") {
+    import spark.implicits._
+    // skew_ms = value·1000 − 100000: future above 0, past below −50000,
+    // both boundaries themselves ok
+    val counts = StreamingJobs.latenessAudit(
+        Seq(101.0, 100.0, 75.0, 50.0, 49.0, 10.0).toDF("value"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(counts == Map("future" -> 1L, "ok" -> 3L, "past" -> 2L), counts.toString)
+  }
 }
