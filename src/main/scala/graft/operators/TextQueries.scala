@@ -38,10 +38,15 @@ object TextQueries {
     docs.select(col("doc_id"), minhashBands(numHashes, bands, rows).as("bucket"))
 
   /** A doc's exploded MinHash band keys over its `shingles` — the band-key
-    * column of [[bandedOf]] and of the streaming near-dup gate. */
+    * column of [[bandedOf]]. */
   private[graft] def minhashBands(numHashes: Int, bands: Int, rows: Int): Column =
-    explode(graft.functions.expressions.TextExpressions
-      .minhashBandKeysExpr(col("shingles"), numHashes, bands, rows))
+    explode(minhashBandKeys(numHashes, bands, rows))
+
+  /** A doc's MinHash band keys over its `shingles` as one array — the
+    * streaming near-dup gate's band-key column. */
+  private[graft] def minhashBandKeys(numHashes: Int, bands: Int, rows: Int): Column =
+    graft.functions.expressions.TextExpressions
+      .minhashBandKeysExpr(col("shingles"), numHashes, bands, rows)
 
   /** SimHash banding width for the production keep-decision (q124):
     * bits per band over the 64-bit signature, bands = 64/bits. A REAL

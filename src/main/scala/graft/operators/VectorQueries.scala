@@ -1421,8 +1421,12 @@ object VectorQueries {
     * hashes this struct (field names, types and order) into its store's
     * pb layout. */
   private[graft] def srpBandKeys(emb: Column, bits: Int, tables: Int): Column =
-    explode(array((0 until tables).map(t => struct(lit(t).as("t"),
-      srpBucketExpr(emb, bits, 16 * t).as("b"))): _*))
+    explode(srpBandKeyArray(emb, bits, tables))
+
+  /** [[srpBandKeys]] unexploded: one array of the `tables` keys. */
+  private[graft] def srpBandKeyArray(emb: Column, bits: Int, tables: Int): Column =
+    array((0 until tables).map(t => struct(lit(t).as("t"),
+      srpBucketExpr(emb, bits, 16 * t).as("b"))): _*)
 
   /** IVF probe-and-rerank search over an inverted file: broadcast the
     * query probe list onto the cell-partitioned corpus, exact-cosine

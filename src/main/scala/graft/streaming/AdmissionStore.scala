@@ -5,8 +5,9 @@ import scala.concurrent.duration._
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, collect_set, hash, lit, pmod}
-import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
+import org.apache.spark.sql.functions.{aggregate, bit_or, call_function, coalesce, col,
+  collect_set, hash, lit, pmod, shiftright, transform, when}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructType}
 import graft.Publish
 import graft.operators.TextQueries.{PairKernel, dropHot}
 
@@ -31,8 +32,8 @@ import graft.operators.TextQueries.{PairKernel, dropHot}
   * verdict's admission-family 100× blocker was the per-batch store SCAN:
   * the JOIN cost was bounded (band/bucket/cell-equi) but every batch
   * re-read the whole accumulated store. With the key-hash layout a batch
-  * reads its own touched pb set (≤K ints, never data-sized) off a named
-  * `collect_set` observation on the checkpoint that already materialises
+  * reads its own touched pb set (≤K ints or bits, never data-sized) off
+  * a named observation on the checkpoint that already materialises
   * its keys ([[observeTouched]] — no job of its own), and the store read
   * prunes to those partition dirs at FILE level (Spark partition
   * pruning; AdmissionPruningSpec asserts the scanned file count). The
@@ -616,25 +617,46 @@ private[graft] object AdmissionStore {
 
   /** One batch's pruned read of a store table, made by
     * [[observeTouched]]: `buckets` is the batch's touched pb set under
-    * the store's stamped K, taken from the observation on the batch's
+    * the store's stamped K, decoded from the observation on the batch's
     * materialised keys; `read` scans only those partition dirs (the
     * filter is on a partition column, so untouched dirs are never
     * listed into the scan — file-level pruning, not row filtering). */
   final class PrunedRead private[AdmissionStore] (table: String,
-      val k: Int, schema: StructType, touched: Observation) {
-    def buckets: Seq[Int] = observed(touched).getSeq[Int](0)
+      val k: Int, schema: StructType, touched: Observation, inWords: Boolean) {
+    def buckets: Seq[Int] = {
+      val row = observed(touched)
+      if (!inWords) row.getSeq[Int](0)
+      else (0 until row.length).flatMap { w =>
+        val bits = row.getLong(w)
+        (0 until 64).filter(b => (bits >>> b & 1L) == 1L).map(64 * w + _)
+      }
+    }
     def read(s: SparkSession): DataFrame =
       s.read.schema(schema).parquet(table)
         .filter(col("pb").isin(buckets: _*))
   }
 
+  /** The touched set of a row's ARRAY of blocking keys (the LSH gates'
+    * band keys, kept unexploded) as one `bit_or` word per 64 buckets —
+    * ≤K bits whatever the batch size, ⌈K/64⌉ aggregate columns. `pbs`
+    * is the row's keys' pb ints, hashed once per key; each word only
+    * shifts and masks them. */
+  private def touchedWords(pbs: Column, k: Int): Seq[Column] =
+    (0 until (k + 63) / 64).map { w =>
+      val word = aggregate(pbs, lit(0L), (acc, b) => acc.bitwiseOR(
+        when(shiftright(b, 6) === w, call_function("shiftleft", lit(1L), b.bitwiseAND(63)))
+          .otherwise(lit(0L))))
+      coalesce(bit_or(word), lit(0L)).as(s"pb$w")
+    }
+
   /** Bind a batch's blocking keys to a pruned read of `table`: returns
     * `keys` with the touched pb set (`collect_set(pb(key, K))`, K the
-    * store's stamp) attached as a named observation — the caller
-    * materialises that frame with the checkpoint it runs anyway, so the
-    * set costs no job — and the read handle. `stored` is the schema of
-    * the frame the gate writes the table from; the `pb`/`epoch`
-    * partition columns are appended, so the read infers nothing.
+    * store's stamp; [[touchedWords]] when `key` is an array of keys per
+    * row) attached as a named observation — the caller materialises
+    * that frame with the checkpoint it runs anyway, so the set costs no
+    * job — and the read handle. `stored` is the schema of the frame the
+    * gate writes the table from; the `pb`/`epoch` partition columns are
+    * appended, so the read infers nothing.
     *
     * None for a store that does not exist yet (a fresh gate) — UNLESS a
     * maintenance aside exists, which means an interrupted
@@ -654,8 +676,16 @@ private[graft] object AdmissionStore {
       val k = requireLayout(s, table)
       val touched = Observation(s"touched:$table")
       val schema = stored.add("pb", IntegerType).add("epoch", LongType)
-      (keys.observe(touched, collect_set(pb(key, k)).as("pb")),
-        Some(new PrunedRead(table, k, schema, touched)))
+      val isArray = keys.select(key).schema.head.dataType.isInstanceOf[ArrayType]
+      val observedKeys =
+        if (!isArray) keys.observe(touched, collect_set(pb(key, k)).as("pb"))
+        else {
+          val pbs = "touched_pb"
+          val words = touchedWords(col(pbs), k)
+          keys.withColumn(pbs, transform(key, pb(_, k)))
+            .observe(touched, words.head, words.tail: _*).drop(pbs)
+        }
+      (observedKeys, Some(new PrunedRead(table, k, schema, touched, isArray)))
     } else {
       refuseMidSwap(fsOf(s, table), table, "admitting")
       (keys, None)
@@ -674,7 +704,8 @@ private[graft] object AdmissionStore {
     * against the pruned payload read. Under a hot-bucket cap, hotness is
     * judged on the combined store + batch population, so a key just
     * under the cap on each side alone cannot slip through at 2× the cap
-    * combined. Returns the batch ids that duplicate a stored row. */
+    * combined. Returns the batch ids that duplicate a stored row, an id
+    * once per verified pair (the caller takes the distinct set). */
   def dupsVsStore(batch: DataFrame, banded: DataFrame,
       bands: Option[PrunedRead], payloads: String, stored: StructType,
       k: PairKernel, threshold: Double, maxBucket: Int): DataFrame =
@@ -704,7 +735,7 @@ private[graft] object AdmissionStore {
           .join(storePayloads.read(s)
             .select(col(k.id).as("sd"), col(k.payload).as("p_b")), "sd")
           .filter(k.sim(col("p_a"), col("p_b")) >= threshold)
-          .select(col(k.id)).distinct()
+          .select(col(k.id))
     }
 
   /** Read a store pruned to an explicit touched-bucket set (the caller

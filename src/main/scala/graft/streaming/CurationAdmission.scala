@@ -140,32 +140,38 @@ object CurationAdmission {
     * Every gate count is a named `Dataset.observe` metric on the
     * checkpoint that materialises that gate's survivors anyway, so
     * counting costs no Spark job; the near-dup survivors arrive in
-    * memory from [[NearDupAdmission.judge]].
+    * memory from [[NearDupAdmission.judge]]. The LM verdict rides on the
+    * near-dup gate's first checkpoint and the decontamination verdict on
+    * the quote gate's: each drop-id set is anti-joined in its gate's
+    * order and counted after its join, so attribution stays
+    * first-gate-catches.
     */
   def admit(batch: DataFrame, batchId: Long, ref: Reference,
             storePath: String, keptPath: String, auditPath: String,
             qualityFloor: Double = 0.72, quoteSpan: Int = 20,
             maxHitFrac: Double = 0.05): Row = {
     val s = batch.sparkSession
-    def counted(df: DataFrame, name: String): (DataFrame, Long) = {
-      val o = Observation(s"curation.$name:$batchId")
-      val cp = df.observe(o, count(lit(1)).as(name)).localCheckpoint()
-      (cp, AdmissionStore.observed(o).getLong(0))
-    }
-    val qualityOk = Observation(s"curation.quality_ok:$batchId")
+    def obs(name: String) = Observation(s"curation.$name:$batchId")
+    def passing(df: DataFrame, o: Observation, name: String) =
+      df.observe(o, count(lit(1)).as(name))
+    def n(o: Observation) = AdmissionStore.observed(o).getLong(0)
+
+    // gate 1: the row-local quality score, counted on the checkpoint
+    // that reads the micro-batch once (gates 1 and 2 both read it)
+    val qualityObs = obs("quality_ok")
     val scored = batch
       .withColumn("q", qualityScore(col("text")))
-      .observe(qualityOk, count(lit(1)).as("n_in"),
+      .observe(qualityObs, count(lit(1)).as("n_in"),
         count(when(col("q") >= qualityFloor, true)).as("quality_ok"))
-      .localCheckpoint() // gates 1 and 2 both read it
-    val quality = AdmissionStore.observed(qualityOk)
+      .localCheckpoint()
+    val quality = AdmissionStore.observed(qualityObs)
     val nIn = quality.getLong(0)
     val qualOk = scored.filter(col("q") >= qualityFloor)
     val dropQuality = nIn - quality.getLong(1)
 
-    // LM gate against the frozen reference: shuffle join on the bigram
-    // key; unseen bigrams pay the pinned punk penalty
-    // the SAME bigram stream the reference LM was trained on
+    // gate 2, the LM gate against the frozen reference: shuffle join on
+    // the bigram key; unseen bigrams pay the pinned punk penalty.
+    // The SAME bigram stream the reference LM was trained on
     // (bigramStream) — a drifted inline copy here would silently miss
     // the whole LM and punk-drop all traffic
     val surprisal = CorpusStatsMaintenance.bigramStream(
@@ -182,10 +188,11 @@ object CurationAdmission {
     val lmDropIds = surprisal.join(broadcast(ref.cuts), Seq("lang"), "left")
       .filter(col("cut").isNull || col("s") > col("cut"))
       .select(col("doc_id"))
-    // counted AND handed to the dedup gate
-    val (lmOk, nAfterLm) = counted(
-      qualOk.join(lmDropIds, Seq("doc_id"), "left_anti"), "lm_ok")
-    val dropLm = (nIn - dropQuality) - nAfterLm
+    // its survivors are counted on the dedup gate's own checkpoint
+    val lmObs = obs("lm_ok")
+    val lmOk = passing(qualOk.join(
+      AdmissionGate.broadcastIfSmall(lmDropIds, nIn - dropQuality),
+      Seq("doc_id"), "left_anti"), lmObs, "lm_ok")
 
     // dedup gate: the near-dup admission component, store shared as-is;
     // its survivors come back in memory, counted. The width signals ride
@@ -196,6 +203,8 @@ object CurationAdmission {
     // from degraded pruning.
     val dedup = NearDupAdmission.judge(
       lmOk.select(col("doc_id"), col("text")), batchId, storePath)
+    val nAfterLm = n(lmObs)
+    val dropLm = (nIn - dropQuality) - nAfterLm
     val dedupKept = dedup.survivors
     val dropDedup = nAfterLm - dedup.admitted
 
@@ -210,27 +219,33 @@ object CurationAdmission {
     // cannot re-enter via a paraphrase of the dropped doc either).
     val wins = QuoteAdmission.windowsOf(dedupKept, storePath)
     val quoteDropIds = QuoteAdmission.quoteDrops(wins, batchId, quoteSpan)
-    val (afterQuote, nAfterQuote) = counted(
-      dedupKept.join(quoteDropIds, Seq("doc_id"), "left_anti"), "quote_ok")
-    val dropQuote = dedup.admitted - nAfterQuote
 
     // benchmark decontamination gate (armed by ref.bench): the SAME
     // per-doc judgment DecontaminationAdmission runs (ONE definition —
-    // hitFractions; see its doc for why a fraction, not any-hit), over
-    // the quote survivors. Runs LAST so upstream gates keep their
-    // attribution; drops before the census publish, so the quote store
-    // only ever covers FINAL survivors. Unarmed, the four-gate funnel
-    // is byte-identical AND cost-identical: no extra join or checkpoint.
-    val (finalKept, admitted) = ref.bench match {
-      case None => (afterQuote, nAfterQuote)
-      case Some(bloom) =>
-        val dropIds = DecontaminationAdmission.hitFractions(afterQuote, bloom)
-          .filter(col("frac") > maxHitFrac).select(col("doc_id"))
-        counted(afterQuote.join(dropIds, Seq("doc_id"), "left_anti"), "decon_ok")
-    }
+    // hitFractions; see its doc for why a fraction, not any-hit). It
+    // judges each doc on its own, so it judges the dedup survivors in
+    // the quote gate's plan, and its drop ids are anti-joined after the
+    // quote gate's: upstream gates keep their attribution. Drops land
+    // before the census publish, so the quote store only ever covers
+    // FINAL survivors. Unarmed, the four-gate funnel runs no extra join.
+    val quoteObs = obs("quote_ok")
+    val afterQuote = passing(dedupKept.join(
+      AdmissionGate.broadcastIfSmall(quoteDropIds, dedup.admitted),
+      Seq("doc_id"), "left_anti"), quoteObs, "quote_ok")
+    val deconObs = ref.bench.map(_ => obs("decon_ok"))
+    val finalKept = ref.bench.zip(deconObs).fold(afterQuote) { case (bloom, o) =>
+      val dropIds = DecontaminationAdmission.hitFractions(dedupKept, bloom)
+        .filter(col("frac") > maxHitFrac).select(col("doc_id"))
+      passing(afterQuote.join(AdmissionGate.broadcastIfSmall(dropIds, dedup.admitted),
+        Seq("doc_id"), "left_anti"), o, "decon_ok")
+    }.localCheckpoint()
+    val nAfterQuote = n(quoteObs)
+    val dropQuote = dedup.admitted - nAfterQuote
+    val admitted = deconObs.fold(nAfterQuote)(n)
     val dropDecon = nAfterQuote - admitted
     AdmissionGate.keep(finalKept, keptPath, batchId)
-    QuoteAdmission.publishCensus(wins, finalKept.select(col("doc_id")),
+    QuoteAdmission.publishCensus(wins,
+      AdmissionGate.broadcastIfSmall(finalKept.select(col("doc_id")), admitted),
       batchId, storePath)
 
     // the audit row stays RETRY-DETERMINISTIC (a replayed epoch must

@@ -34,7 +34,8 @@ object EmbeddingAdmission extends AdmissionStore.Store {
   private val Cosine = PairKernel("vec_id", "tb", "embedding", cosineSim, "cos")
 
   private val Gate = AdmissionGate.Lsh(Cosine,
-    VectorQueries.srpBandKeys(col("embedding"), bits = 8, VectorQueries.SrpDedupTables),
+    VectorQueries.srpBandKeyArray(col("embedding"), bits = 8,
+      VectorQueries.SrpDedupTables),
     payloadSub = "vecs", bandSub = "buckets")
   protected val tables = Seq(Gate.payloads, Gate.bands)
 

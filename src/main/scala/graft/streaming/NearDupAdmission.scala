@@ -29,7 +29,7 @@ object NearDupAdmission extends AdmissionStore.Store {
   // shingle-less docs (< 3 alphabetic words) cannot near-duplicate
   // anything — always admitted, exactly as the batch q38 keeps them
   private val Gate = AdmissionGate.Lsh(TextQueries.Jaccard,
-    TextQueries.minhashBands(numHashes = 64, bands = 32, rows = 2),
+    TextQueries.minhashBandKeys(numHashes = 64, bands = 32, rows = 2),
     payloadSub = "docs", bandSub = "bands",
     pairable = size(col("shingles")) > 0)
   protected val tables = Seq(Gate.payloads, Gate.bands)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import graft.operators.CorpusStatsMaintenance
@@ -103,27 +104,26 @@ object QuoteAdmission extends AdmissionStore.Store {
       s"spanTokens ($spanTokens) must be >= the window ($WindowTokens)")
     val s = wins.frame.sparkSession
     val runThreshold = spanTokens - WindowTokens + 1
-    val stored: Option[DataFrame] = wins.census
-      .map(_.read(s).filter(col("epoch") =!= batchId)) // retries skip their own output
-
-    // covered-by-store: the window's hash has at least one admitted owner
-    // (any owner — epochs have fresh ids, so ownership can't be this doc)
-    val w = wins.frame
-    val storeHit = stored match {
-      case None => w.select(col("doc_id"), col("i")).limit(0)
-      case Some(census) =>
-        w.join(census.select(col("h")).distinct(), "h")
-          .select(col("doc_id"), col("i"))
+    val w = wins.frame.select(col("doc_id"), col("i"), col("h"))
+    // ONE pass flags the covered windows: the admitted corpus owns its
+    // census hashes under an id below every batch id (any owner — epochs
+    // have fresh ids, so ownership can't be this doc), so a window is
+    // covered iff its hash's lowest owner lies below its own doc (greedy
+    // lower-id-wins, the q38/near-dup convention). Each (doc_id, i)
+    // window is one row, so the covered positions need no distinct.
+    val owners = wins.census.fold(w) { census =>
+      w.unionByName(census.read(s)
+        .filter(col("epoch") =!= batchId) // retries skip their own output
+        .select(lit(Long.MinValue).as("doc_id"), lit(null).cast("int").as("i"),
+          col("h")))
     }
-    // covered-in-batch: a LOWER-id batch doc holds the same hash (greedy
-    // lower-id-wins, the q38/near-dup convention)
-    val minOwner = w.groupBy(col("h")).agg(min(col("doc_id")).as("mo"))
-    val batchHit = w.join(minOwner, "h")
+    val covered = owners
+      .withColumn("mo", min(col("doc_id")).over(Window.partitionBy(col("h"))))
       .filter(col("mo") < col("doc_id"))
       .select(col("doc_id"), col("i"))
 
     // q117's gaps-and-islands kernel over the covered positions
-    CorpusStatsMaintenance.coveredRuns(storeHit.unionByName(batchHit).distinct())
+    CorpusStatsMaintenance.coveredRuns(covered)
       .filter(col("run") >= runThreshold)
       .select(col("doc_id")).distinct()
   }

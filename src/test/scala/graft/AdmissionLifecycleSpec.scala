@@ -175,6 +175,32 @@ class AdmissionLifecycleSpec extends AnyFunSuite with TempDirs {
     assert(AdmissionStore.layoutK(spark, bands).contains(k2))
   }
 
+  test("touched set at a multi-word fan-out: array and scalar keys observe exactly their distinct pb set") {
+    import spark.implicits._
+    val table = tmp("lc_touched") + "/bands"
+    // hint = 256 target-buckets' worth → K = 256: the array form's
+    // touched set spans four 64-bucket words
+    AdmissionStore.writeEpoch(Seq((0L, 0L)).toDF("id", "key"), col("key"), table, 0L,
+      expectedStoreBytes = AdmissionStore.TargetBucketBytes * 256)
+    val k = AdmissionStore.layoutK(spark, table).get
+    assert(k == 256)
+    val stored = Seq((0L, 0L)).toDF("id", "key").schema
+    // rows of 0-9 keys each, one row with none (an unpairable doc)
+    val arrays = ((0L until 60L).map(i => (i, (0L until i % 10).map(j => i * 1000 + j * 7))) :+
+      ((60L, null.asInstanceOf[Seq[Long]]))).toDF("id", "keys")
+    val flat = arrays.select(col("id"), explode(col("keys")).as("key"))
+    val distinctPb = flat.select(AdmissionStore.pb(col("key"), k)).distinct()
+      .as[Int].collect().toSeq.sorted
+    assert(distinctPb.exists(_ >= 64) && distinctPb.exists(_ < 64))
+    for ((frame, key) <- Seq((arrays, col("keys")), (flat, col("key")))) {
+      val (keys, read) = AdmissionStore.observeTouched(frame, key, table, stored)
+      val cp = keys.localCheckpoint()
+      assert(cp.columns.toSeq == frame.columns.toSeq)
+      assert(read.get.buckets.sorted == distinctPb,
+        s"observed ${read.get.buckets.sorted}, distinct $distinctPb")
+    }
+  }
+
   test("a crashed epoch write leaves only invisible staged debris, and the retry completes") {
     import spark.implicits._
     val store = tmp("lc_stage_store"); val kept = tmp("lc_stage_kept")

@@ -22,7 +22,15 @@ class CurationAdmissionSpec extends AnyFunSuite with TempDirs {
 
   /** Spark jobs of one steady-state micro-batch with all five gates
     * armed (the job-budget test's second epoch). */
-  private val JobsPerBatch = 37
+  private val JobsPerBatch = 26
+
+  /** Generated classes compiled by a steady-state micro-batch (the third
+    * epoch of the compile test): a regression ceiling over the measured
+    * counts, not a target. It catches a plan that embeds per-batch
+    * values or a batch whose generated classes outgrow the codegen
+    * cache; how many classes a batch compiles also depends on where
+    * the cache's segments place them, which varies from JVM to JVM. */
+  private val SteadyStateCompiles = 140
 
   // a doc whose quality is high (>= 20 alpha tokens, no punctuation,
   // stopword-rich) but whose bigrams are ALL absent from the reference
@@ -405,25 +413,8 @@ class CurationAdmissionSpec extends AnyFunSuite with TempDirs {
       a.getAs[Long]("drop_lm") == 2, a.toString)
   }
 
-  /** Spark jobs `body` starts, counted by a job tag on this thread and a
-    * listener that matches it. */
-  private def jobsOf[T](tag: String)(body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-            .exists(_.split(",").contains(tag))) n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.addJobTag(tag)
-    try {
-      val out = body
-      org.apache.spark.ListenerBusDrain(sc)
-      (out, n.get)
-    } finally { sc.removeJobTag(tag); sc.removeSparkListener(l) }
-  }
+  private def jobsOf[T](tag: String)(body: => T): (T, Int) =
+    SparkJobs.of(spark, tag)(body)
 
   test("a micro-batch runs a pinned number of Spark jobs; the returned audit row is the persisted one") {
     import spark.implicits._
@@ -476,6 +467,80 @@ class CurationAdmissionSpec extends AnyFunSuite with TempDirs {
       assert(f.dataType == p.schema(f.name).dataType, s"type of ${f.name}")
       assert(row.getAs[Any](f.name) == p.getAs[Any](f.name), s"value of ${f.name}")
     }
+  }
+
+  test("a steady-state micro-batch reuses the funnel's generated code") {
+    import spark.implicits._
+    import graft.functions.TextFunctions._
+    val ref = tmp("curc_ref"); val deconRef = tmp("curc_decon")
+    val store = tmp("curc_store"); val kept = tmp("curc_kept")
+    val audit = tmp("curc_audit")
+    CurationAdmission.buildReference(spark, corpus, ref)
+    val (lm, cuts, punk) = loadRef(ref)
+    val score = scoreWith(lm, punk) _
+    def admissible(lang: String, text: String) =
+      score(text).exists(_ < cuts(lang) - 0.05)
+    // mutually distinct clean docs
+    val pool = Tables.documents(spark, corpus)
+      .filter(qualityScore(col("text")) >= 0.72)
+      .select("doc_id", "lang", "text").orderBy("doc_id")
+      .as[(Long, String, String)].collect()
+      .foldLeft(Vector.empty[(Long, String, String)]) { case (acc, d @ (_, lang, text)) =>
+        if (admissible(lang, text) && acc.forall(p => shingleDistinct(p._3, text)))
+          acc :+ d
+        else acc
+      }
+    assume(pool.length >= 9, s"clean pool too small: ${pool.length}")
+    // a 25-token quote of one of `srcs` (the gate drops quotes of 20
+    // tokens) that passes the LM and the near-dup gate against every
+    // pool doc and every earlier quote (the near-dup store keeps the
+    // fingerprints of quote-dropped docs)
+    def quoteOf(srcs: Seq[(Long, String, String)], earlier: Seq[String]) = {
+      val q = srcs.iterator.flatMap { case (_, lang, text) =>
+        val t = text.toLowerCase.replaceAll("[^a-z ]", " ").trim.split("\\s+")
+        (0 to t.length - 25).iterator.map(k => (lang, t.slice(k, k + 25).mkString(" ")))
+      }.find { case (lang, sn) =>
+        admissible(lang, sn) && (pool.map(_._3) ++ earlier).forall(shingleDistinct(_, sn))
+      }
+      assume(q.isDefined, "no quote fixture")
+      q.get
+    }
+    val quote1 = quoteOf(pool.take(3), Nil)
+    val quotes = Seq(quote1, quoteOf(pool.take(5), Seq(quote1._2)))
+    val planted = Seq(pool(7), pool(8))
+    graft.streaming.DecontaminationAdmission.buildReference(
+      planted.map(_._3).toDF("text")
+        .select(explode(array_distinct(wordNgramsUdf(5)(col("text")))).as("g"))
+        .distinct(), deconRef)
+    val refs = bound(ref, Some(deconRef))
+    // epoch 0 creates the stores; epochs 1 and 2 repeat the steady
+    // state: fresh docs, a clone, a quote of an admitted doc, junk, a
+    // nonsense doc and a planted benchmark doc, so every gate drops
+    def steady(e: Int) = pool.slice(2 * e + 1, 2 * e + 3) ++ Seq(
+      (9100L + e, pool(2 * e)._2, pool(2 * e)._3),
+      (9200L + e, quotes(e - 1)._1, quotes(e - 1)._2),
+      (9300L + e, "en", junk), (9400L + e, "en", nonsense),
+      planted(e - 1).copy(_1 = 9500L + e))
+    val epochs = Seq(pool.take(3) :+ ((9001L, "en", junk)), steady(1), steady(2))
+    val runs = epochs.zipWithIndex.map { case (docs, e) =>
+      SparkJobs.compilesOf(jobsOf(s"curation-compiles-$e") {
+        CurationAdmission.admit(docs.toDF("doc_id", "lang", "text"), e.toLong,
+          refs, store, kept, audit)
+      })
+    }
+    runs.drop(1).foreach { case ((row, _), _) =>
+      assert(row.getAs[Long]("n_in") == 7 && row.getAs[Long]("drop_quality") == 1 &&
+        row.getAs[Long]("drop_lm") == 1 && row.getAs[Long]("drop_dedup") == 1 &&
+        row.getAs[Long]("drop_quote") == 1 && row.getAs[Long]("drop_decon") == 1 &&
+        row.getAs[Long]("admitted") == 2, row.toString)
+    }
+    val ((_, jobs), compiles) = runs(2)
+    info(s"compiles per epoch ${runs.map(_._2).mkString(", ")}; steady-state jobs $jobs")
+    // the third epoch runs the plans the second one compiled: a plan
+    // that embeds per-batch values, or a batch whose generated classes
+    // outgrow the codegen cache, shows up here as a higher number
+    assert(compiles <= SteadyStateCompiles,
+      s"a steady-state micro-batch compiled $compiles classes, bound $SteadyStateCompiles")
   }
 
   test("references are bound at stream start: a rewrite under a bound reference fails loudly") {

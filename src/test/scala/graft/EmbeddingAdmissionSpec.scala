@@ -26,6 +26,25 @@ class EmbeddingAdmissionSpec extends AnyFunSuite with TempDirs {
   private val vC = Seq(0f, 0f, 1f, 0f, 0f, 0f, 0f, 0f)
   private val vCDup = Seq(0f, 0.01f, 0.99f, 0f, 0f, 0f, 0f, 0f)
 
+  /** Spark jobs of a steady-state epoch (the job-budget test's second). */
+  private val JobsPerEpoch = 15
+
+  test("a steady-state epoch runs a pinned number of Spark jobs") {
+    import spark.implicits._
+    val store = tmp("eadmj_store"); val kept = tmp("eadmj_kept")
+    EmbeddingAdmission.admit(Seq((1L, vA), (2L, vB)).toDF("vec_id", "embedding"),
+      0L, store, kept)
+    // a dup of the store, a novel vector and its in-batch dup
+    val ((_, jobs), compiles) = SparkJobs.compilesOf(SparkJobs.of(spark, "embedding-epoch-1") {
+      EmbeddingAdmission.admit(Seq((3L, vADup), (4L, vC), (5L, vCDup))
+        .toDF("vec_id", "embedding"), 1L, store, kept)
+    })
+    info(s"$jobs jobs, $compiles generated-code compiles")
+    assert(spark.read.parquet(s"$kept/epoch=1").select("vec_id").as[Long]
+      .collect().toSet == Set(4L))
+    assert(jobs == JobsPerEpoch, s"an epoch ran $jobs Spark jobs, pinned $JobsPerEpoch")
+  }
+
   test("admission drops near-dup vectors vs store and within batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -28,6 +28,49 @@ class NearDupAdmissionSpec extends AnyFunSuite with TempDirs {
   private val textZDup =
     "a third unrelated document discussing window functions and watermarks soon"
 
+  /** Spark jobs of a steady-state epoch (the job-budget test's second). */
+  private val JobsPerEpoch = 15
+
+  test("a steady-state epoch runs a pinned number of Spark jobs") {
+    import spark.implicits._
+    val store = tmp("ndupj_store"); val kept = tmp("ndupj_kept")
+    NearDupAdmission.admit(Seq((1L, textX), (2L, textY)).toDF("doc_id", "text"),
+      0L, store, kept)
+    // a dup of the store, a novel doc and its in-batch dup
+    val ((_, jobs), compiles) = SparkJobs.compilesOf(SparkJobs.of(spark, "neardup-epoch-1") {
+      NearDupAdmission.admit(Seq((3L, textXDup), (4L, textZ), (5L, textZDup))
+        .toDF("doc_id", "text"), 1L, store, kept)
+    })
+    info(s"$jobs jobs, $compiles generated-code compiles")
+    assert(spark.read.parquet(s"$kept/epoch=1").select("doc_id").as[Long]
+      .collect().toSet == Set(4L))
+    assert(jobs == JobsPerEpoch, s"an epoch ran $jobs Spark jobs, pinned $JobsPerEpoch")
+  }
+
+  test("a burst of identical docs keeps one, and every anti-join broadcast stays within the batch") {
+    import spark.implicits._
+    val store = tmp("ndupb_store"); val kept = tmp("ndupb_kept")
+    // m copies of one doc verify m(m-1)/2 in-batch pairs (and m store
+    // pairs next epoch); the drop-id sets a gate broadcasts must be
+    // their distinct ids, at most the batch's rows
+    val m = 40
+    def burst(from: Long) = ((from until from + m).map(i => (i, textX)) :+
+      ((from + m, textY))).toDF("doc_id", "text")
+    val (_, fresh) = SparkJobs.antiJoinBroadcastRows(spark) {
+      NearDupAdmission.admit(burst(0L), 0L, store, kept)
+    }
+    assert(spark.read.parquet(s"$kept/epoch=0").select("doc_id").as[Long]
+      .collect().toSet == Set(0L, m.toLong))
+    val (_, again) = SparkJobs.antiJoinBroadcastRows(spark) {
+      NearDupAdmission.admit(burst(100L), 1L, store, kept)
+    }
+    assert(spark.read.parquet(s"$kept/epoch=1").select("doc_id").as[Long]
+      .collect().isEmpty)
+    assert(fresh.nonEmpty && again.nonEmpty, "no broadcast anti-join ran")
+    assert((fresh ++ again).forall(_ <= m + 1),
+      s"an anti-join broadcast outgrew the ${m + 1}-row batch: ${fresh ++ again}")
+  }
+
   test("admission filter drops near-dups vs store and within batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

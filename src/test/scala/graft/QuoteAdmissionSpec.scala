@@ -27,6 +27,28 @@ class QuoteAdmissionSpec extends AnyFunSuite with TempDirs {
     spark.read.parquet(s"$keptPath/epoch=$epoch")
       .collect().map(_.getAs[Long]("doc_id")).toSet
 
+  /** Spark jobs of a steady-state epoch (the job-budget test's second). */
+  private val JobsPerEpoch = 10
+
+  test("a steady-state epoch runs a pinned number of Spark jobs") {
+    import spark.implicits._
+    val store = tmp("quotej_store"); val keptP = tmp("quotej_kept")
+    val base = (0 until 40).map(w('a', _))
+    val fill = (c: Char, n: Int) => (0 until n).map(w(c, _))
+    QuoteAdmission.admit(Seq(doc(1L, base), doc(2L, fill('b', 40)))
+      .toDF("doc_id", "text"), 0L, store, keptP)
+    // a quote of the store, a fresh doc and a doc quoting it in-batch
+    val fresh = fill('c', 40)
+    val ((_, jobs), compiles) = SparkJobs.compilesOf(SparkJobs.of(spark, "quote-epoch-1") {
+      QuoteAdmission.admit(Seq(doc(10L, fill('d', 5) ++ base.slice(5, 30)),
+        doc(11L, fresh), doc(12L, fill('e', 5) ++ fresh.take(25)))
+        .toDF("doc_id", "text"), 1L, store, keptP)
+    })
+    info(s"$jobs jobs, $compiles generated-code compiles")
+    assert(kept(keptP, 1L) == Set(11L))
+    assert(jobs == JobsPerEpoch, s"an epoch ran $jobs Spark jobs, pinned $JobsPerEpoch")
+  }
+
   test("quote gate: long quotes rejected, short pass, greedy in-batch, idempotent retry, compaction") {
     import spark.implicits._
     val store = tmp("graft_quote_store")
