@@ -157,7 +157,7 @@ object ArtifactStore {
     try {
       val data = new Path(dir, "data")
       if (!fs.exists(data)) throw new java.io.FileNotFoundException(data.toString)
-      val df = s.read.parquet(data.toString)
+      val df = Tables.readParquet(s, data.toString)
       touch(fs, dir)
       Some(df)
     } catch {

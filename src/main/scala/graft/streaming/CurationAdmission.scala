@@ -103,9 +103,9 @@ object CurationAdmission {
       * [[DecontaminationAdmission.buildReference]]) wrote. */
     def load(s: SparkSession, refPath: String,
         benchRefPath: Option[String] = None): Reference =
-      Reference(s.read.parquet(s"$refPath/lm"),
-        s.read.parquet(s"$refPath/cutoffs"),
-        s.read.parquet(s"$refPath/params").head.getDouble(0),
+      Reference(graft.Tables.readParquet(s, s"$refPath/lm"),
+        graft.Tables.readParquet(s, s"$refPath/cutoffs"),
+        graft.Tables.readParquet(s, s"$refPath/params").head.getDouble(0),
         benchRefPath.map(DecontaminationAdmission.readReference(s, _)))
   }
 

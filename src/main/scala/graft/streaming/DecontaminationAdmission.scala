@@ -60,9 +60,9 @@ object DecontaminationAdmission {
     * refreshBloom a new eval suite into them and rewrite). */
   def readReference(s: SparkSession, refPath: String)
       : CorpusStatsMaintenance.BloomIndex = {
-    val meta = s.read.parquet(s"$refPath/meta").head()
+    val meta = graft.Tables.readParquet(s, s"$refPath/meta").head()
     CorpusStatsMaintenance.BloomIndex(
-      s.read.parquet(s"$refPath/words"),
+      graft.Tables.readParquet(s, s"$refPath/words"),
       meta.getAs[Long]("m"), meta.getAs[Long]("grams"))
   }
 

@@ -74,7 +74,7 @@ object SemanticAdmission extends AdmissionStore.Store {
       val fp = IndexMaintenance.centroidFingerprint(cent)
       val hpath = new org.apache.hadoop.fs.Path(path)
       if (graft.Publish.fsOf(hpath, s).exists(hpath)) {
-        val stored = s.read.parquet(path).select("fp").head().getString(0)
+        val stored = graft.Tables.readParquet(s, path).select("fp").head().getString(0)
         if (stored != fp) throw new IllegalStateException(
           s"semantic-admission store was scored under centroid geometry " +
             s"$stored but the gate was given $fp — the index was " +
