@@ -12,22 +12,37 @@ import org.apache.spark.sql.types.StructType
   * files. At 100 TB these tables would be partitioned (e.g. lineitem by
   * l_shipdate month); the query code below is partition-agnostic —
   * pruning happens via pushed predicates either way.
+  *
+  * Every read first runs [[setup]] on its session, once per session, and
+  * that setup is session-wide: it installs [[SmallResultSort]] in the
+  * session's planner and sets `spark.sql.legacy.parquet.nanosAsLong=true`,
+  * so every later parquet read in that session, of any path, reads a
+  * TIMESTAMP(NANOS) column as long nanos.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (name == "events") {
-      // Older testdata generations write events.ts as parquet
-      // TIMESTAMP(NANOS), which Spark's vectorized reader rejects unless
-      // read as long nanos (dynamic SQLConf, safe to set on any session).
-      // Newer generations write TIMESTAMP(MICROS); the conf is then a no-op
-      // and events() normalizes on the actual dtype it finds.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    }
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     readParquet(spark, s"$dir/$name.parquet")
+
+  /** The engine's one-time session setup; every [[readParquet]] runs it,
+    * and a second call changes nothing. It prepends [[SmallResultSort]]
+    * to the session's extra planner strategies, which AQE's re-planning
+    * uses too, and sets `nanosAsLong` once, before the session's first
+    * read keys any schema: older testdata generations write events.ts as
+    * parquet TIMESTAMP(NANOS), which Spark's vectorized reader rejects
+    * unless read as long nanos. Newer generations write
+    * TIMESTAMP(MICROS); the conf is then a no-op and [[events]]
+    * normalizes on the actual dtype it finds.
+    */
+  def setup(spark: SparkSession): Unit = synchronized {
+    val ex = spark.experimental
+    if (!ex.extraStrategies.contains(SmallResultSort)) {
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      ex.extraStrategies = SmallResultSort +: ex.extraStrategies
+    }
   }
 
   // path -> (files + inference confs, schema): one entry per path, which a
@@ -44,13 +59,15 @@ object Tables {
     * files (per-file name, length and mtime, as [[parquetFingerprint]])
     * under the same `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*`
     * confs (binaryAsString, nanosAsLong, mergeSchema, ... shape what is
-    * inferred) passes that schema with `.schema`, and the scan, its
-    * pruning, pushdown and file listing stay Spark's own. The key costs
+    * inferred; [[setup]] sets nanosAsLong before the first key) passes
+    * that schema with `.schema`, and the scan, its pruning, pushdown and
+    * file listing stay Spark's own. The key costs
     * one driver listing of the same directories Spark's file index lists
     * for the read. A failed inference (an empty directory) is not cached,
     * so it fails again with Spark's own error.
     */
   def readParquet(spark: SparkSession, path: String): DataFrame = {
+    setup(spark)
     val key = fingerprintOf(spark, path) + "|" + spark.conf.getAll.toSeq
       .filter { case (k, _) =>
         k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") }

@@ -143,7 +143,8 @@ class PlanSpec extends AnyFunSuite {
       .split("== Initial Plan ==")(0)
     assert(!plan.contains("Join"), s"as-of carry-forward form must not join:\n$plan")
     // exactly one hash exchange (the user_id window shuffle); the trailing
-    // ORDER BY adds a range exchange, which is fine
+    // ORDER BY adds no hash exchange: a range exchange, or none when its
+    // measured input is small (SmallResultSort)
     val hashEx = plan.linesIterator
       .count(_.contains("Exchange hashpartitioning"))
     assert(hashEx == 1, s"expected exactly 1 hash exchange, got $hashEx:\n$plan")

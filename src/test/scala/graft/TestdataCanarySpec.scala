@@ -176,7 +176,7 @@ class TestdataCanarySpec extends AnyFunSuite with TempDirs {
 
     // encoding 1: a REAL parquet TIMESTAMP(NANOS) file, written with
     // parquet-mr directly (Spark cannot author one), so the legacy
-    // spark.sql.legacy.parquet.nanosAsLong decode that Tables.apply
+    // spark.sql.legacy.parquet.nanosAsLong decode that Tables.setup
     // enables is itself exercised — a Spark upgrade that drops or changes
     // that conf fails HERE, not in production on the next NANOS
     // regeneration.
